@@ -308,19 +308,19 @@ object BenchScale {
     else Seq(
       runCapped("q26_capped") { // q26's exact parameters + the cap
         graft.operators.Dedup.simhashNearDup(
-          spark.read.parquet(s"$outDir/documents.parquet"),
+          graft.io.ParquetIO.read(spark, s"$outDir/documents.parquet"),
           "doc_id", "text", shingleSize = 3, threshold = 0.8, numChunks = 8,
           maxBucket = Some(64L))
       },
       runCapped("q31_capped") { // q31's exact parameters + the cap
         graft.operators.Dedup.embeddingNearDup(
-          spark.read.parquet(s"$outDir/embeddings.parquet"),
+          graft.io.ParquetIO.read(spark, s"$outDir/embeddings.parquet"),
           "vec_id", "embedding", dim = 64, threshold = 0.4,
           numBits = 32, numBands = 16, maxBucket = Some(64L))
       },
       runCapped("q142_capped") { // q142's exact parameters + maxBlock
         graft.operators.Linkage.fuzzyDedupPairs(
-          spark.read.parquet(s"$outDir/customer.parquet"),
+          graft.io.ParquetIO.read(spark, s"$outDir/customer.parquet"),
           "c_custkey", "c_name",
           blocker = graft.operators.Linkage.prefixBlocker(16),
           maxDistance = 1, maxBlock = Some(64L))

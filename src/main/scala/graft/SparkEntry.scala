@@ -486,7 +486,7 @@ object SparkEntry {
     "q195_stream_dedup" -> ((s, dir) => {
       val prefix = stageLshCorpus(s, dir)
       val staged = stageOddDocs(s, dir)
-      val schema = s.read.parquet(staged).schema
+      val schema = ParquetIO.schema(s, staged)
       val out = runToCompletion(s, "q195_probe",
         EventStream.dedupProbeStream(s, staged, schema, "doc_id", "text",
           prefix, threshold = 0.7), parquetRows(s, staged))
@@ -812,7 +812,7 @@ object SparkEntry {
         s"$tmp/nation.7z", s"$tmp/out_7z")
       def stats(fmt: String, paths: Seq[java.nio.file.Path], key: String) = {
         val pq = paths.filter(_.toString.endsWith(".parquet"))
-        s.read.parquet(pq.map(_.toString): _*)
+        pq.map(p => ParquetIO.read(s, p.toString)).reduce(_ unionByName _)
           .agg(count(lit(1)).as("n_rows"),
             countDistinct(col(key)).as("n_keys"))
           .select(lit(fmt).as("archive_format"),
@@ -1391,7 +1391,7 @@ object SparkEntry {
     // in SQL. These check the stream execution path itself, not a twin.
     "q65_sessionize_stream" -> ((s, dir) => {
       val staged = stageEventsMicros(s, dir)
-      val schema = s.read.parquet(staged).schema
+      val schema = ParquetIO.schema(s, staged)
       val sessions = runToCompletion(s, "q65_sess",
         EventStream.sessionizeStream(s, staged, schema, gapMinutes = 30), parquetRows(s, staged))
       // emitted ⟺ the final watermark (max ts, ms-floored, minus the gap
@@ -1406,7 +1406,7 @@ object SparkEntry {
       // duplicate every event, then streaming-dedup on event_id: the
       // closed-set result is each event exactly once
       val staged = stageEventsMicros(s, dir, duplicate = true)
-      val schema = s.read.parquet(staged).schema
+      val schema = ParquetIO.schema(s, staged)
       val out = runToCompletion(s, "q66_dedup",
         EventStream.dedupStream(s, staged, schema, Seq("event_id")), parquetRows(s, staged))
       out.select(col("event_id"), col("user_id"), col("event_type"),
@@ -1481,9 +1481,9 @@ object SparkEntry {
     // engines replay it bit-identically before the 6-dp round
     "q221_psi_drift_stream" -> ((s, dir) => {
       val staged = stageEventsMicros(s, dir)
-      val schema = s.read.parquet(staged).schema
+      val schema = ParquetIO.schema(s, staged)
       val edges = psiStreamEdges
-      val ev = s.read.parquet(staged).filter(col("value").isNotNull)
+      val ev = ParquetIO.read(s, staged).filter(col("value").isNotNull)
       val bin = edges.foldLeft(lit(0)) { (a, e) =>
         a + when(col("value").cast("double") > e, 1).otherwise(0) }
       val counts = (0 to edges.length).map(b =>
@@ -1503,7 +1503,7 @@ object SparkEntry {
 
     "q81_hourly_stream" -> ((s, dir) => {
       val staged = stageEventsMicros(s, dir)
-      val schema = s.read.parquet(staged).schema
+      val schema = ParquetIO.schema(s, staged)
       val agg = runToCompletion(s, "q81_hourly",
         EventStream.hourlyAggStream(s, staged, schema), parquetRows(s, staged))
       agg.select(
@@ -1513,7 +1513,7 @@ object SparkEntry {
     }),
     "q67_attribution_stream" -> ((s, dir) => {
       val staged = stageEventsMicros(s, dir)
-      val schema = s.read.parquet(staged).schema
+      val schema = ParquetIO.schema(s, staged)
       val pairs = runToCompletion(s, "q67_attr",
         EventStream.attributionJoinStream(s, staged, schema, maxLagMinutes = 30), parquetRows(s, staged))
       // stream-stream inner join with both-sided watermarks emits every
@@ -1528,7 +1528,7 @@ object SparkEntry {
     // ---- stream-stream LEFT-OUTER attribution (null-emit semantics) -----
     "q176_attribution_left_stream" -> ((s, dir) => {
       val staged = stageEventsMicros(s, dir)
-      val schema = s.read.parquet(staged).schema
+      val schema = ParquetIO.schema(s, staged)
       val pairs = runToCompletion(s, "q176_attr_left",
         EventStream.attributionJoinLeftStream(s, staged, schema, maxLagMinutes = 30), parquetRows(s, staged))
       // matched rows emit like the inner join; unmatched purchases emit
@@ -5493,7 +5493,7 @@ object SparkEntry {
     // ---- sliding windows through the real stream ------------------------
     "q165_sliding_stream" -> ((s, dir) => {
       val staged = stageEventsMicros(s, dir)
-      val schema = s.read.parquet(staged).schema
+      val schema = ParquetIO.schema(s, staged)
       val agg = runToCompletion(s, "q165_sliding",
         EventStream.slidingAggStream(s, staged, schema), parquetRows(s, staged))
       agg.select(
@@ -5918,7 +5918,7 @@ object SparkEntry {
     // ---- stream-static enrichment under the oracle ----------------------
     "q73_enrich_stream" -> ((s, dir) => {
       val staged = stageEventsMicros(s, dir)
-      val schema = s.read.parquet(staged).schema
+      val schema = ParquetIO.schema(s, staged)
       val stream = s.readStream.schema(schema).parquet(staged)
       val dim = read(s, dir, "customer").select(
         col("c_custkey").as("user_id"), col("c_name"), col("c_nationkey"))
@@ -6255,14 +6255,19 @@ object SparkEntry {
   private val psiStreamEdges: Array[Double] =
     Array(5.0, 10.0, 20.0, 50.0, 100.0, 200.0)
 
-  /** Replay row count of a staged parquet dir, cached per path per JVM —
-    * a parquet `count()` is footer-metadata only, but 9 streaming queries
-    * × 3 bench passes need not repeat even that. */
-  private val stagedRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def parquetRows(s: SparkSession, path: String): Long =
-    stagedRowsCache.computeIfAbsent(path,
-      p => s.read.parquet(p).count()).longValue
+  /** Replay row count of a staged parquet dir, cached per file identity
+    * per JVM (a regenerated dir is counted afresh) — a parquet `count()` is
+    * footer-metadata only, but 9 streaming queries × 3 bench passes need
+    * not repeat even that. */
+  private val stagedRowsCache = new graft.io.IdentityCache[java.lang.Long]
+  private[graft] def parquetRows(s: SparkSession, path: String): Long = {
+    val id = ParquetIO.fileIdentity(s, path)
+    id.flatMap(stagedRowsCache.get).map(_.longValue).getOrElse {
+      val n = ParquetIO.read(s, path).count()
+      id.foreach(stagedRowsCache.put(_, n))
+      n
+    }
+  }
 
   private def runToCompletion(s: SparkSession, name: String,
       stream: DataFrame, replayRows: Long): DataFrame = {

@@ -198,7 +198,7 @@ object FooterMetadata {
   /** Stamp a freshly written output with pandas metadata derived from its own
     * schema (used by save paths that know their index columns). */
   def attachPandasMeta(spark: SparkSession, path: String, indexColumns: Seq[String]): Unit = {
-    val schema = spark.read.parquet(path).schema
+    val schema = ParquetIO.schema(spark, path)
     writeKeyValue(spark, path, Map(PandasKey -> pandasBlobFor(schema, indexColumns)))
   }
 

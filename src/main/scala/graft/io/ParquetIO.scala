@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
@@ -21,11 +22,90 @@ import scala.util.Try
   * partition — what a 1000-executor cluster needs). `writeSingleFile` exists
   * only for CLI parity with the reference's one-file-in/one-file-out model
   * and must not be used on large outputs.
+  *
+  * [[read]] is the engine's one plain-parquet reader. An inferring
+  * `spark.read.parquet(path)` runs a Spark job to read a footer; [[read]]
+  * runs it once per file identity and serves later reads of the same files
+  * with `spark.read.schema(cached).parquet(path)`, which runs no job. The
+  * schema cache contract:
+  *  - it holds metadata (the inferred `StructType`) only, never results;
+  *  - the key is the qualified path, the sorted (name, length, mtime) of
+  *    the data files (a single file is its own list; a flat Spark output
+  *    directory lists its non-hidden files), and the session confs that
+  *    change schema inference ([[SchemaConfs]]);
+  *  - it keeps one entry per qualified path: a new identity replaces the
+  *    old entry, so a pipeline that rewrites its outputs does not grow it
+  *    (and it starts over past 4,096 paths);
+  *  - a path with a subdirectory (a hive-partitioned layout, where a
+  *    supplied schema would change partition discovery) and a path
+  *    `getFileStatus` cannot resolve (a glob) bypass it and read uncached;
+  *  - stated limit: on a store whose mtime is coarser than the time between
+  *    two writes, a same-length rewrite of a fixed-name single file is not
+  *    seen. Spark output directories are safe: every write names its part
+  *    files afresh.
   */
 object ParquetIO {
 
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** Session confs that change the schema Spark infers from parquet
+    * footers (how a footer converts, and whether footers merge); a cached
+    * schema is reused only under the same values. */
+  val SchemaConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema")
+
+  private val schemaCache = new IdentityCache[StructType]
+
+  /** Read a parquet file or flat output directory, inferring its schema at
+    * most once per file identity (see the cache contract above). A miss
+    * returns the inferring read itself and keeps its schema, so the
+    * relation is never built twice. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val id = schemaIdentity(spark, path)
+    id.flatMap(schemaCache.get) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        id.foreach(schemaCache.put(_, df.schema))
+        df
+    }
+  }
+
+  /** The schema [[read]] would give `path`, from the cache when the file
+    * identity is unchanged: for callers that read a file only for its
+    * schema. */
+  def schema(spark: SparkSession, path: String): StructType =
+    schemaIdentity(spark, path).flatMap(schemaCache.get)
+      .getOrElse(read(spark, path).schema)
+
+  private def schemaIdentity(spark: SparkSession, path: String): Option[FileIdentity] =
+    fileIdentity(spark, path).map(_.copy(
+      confs = SchemaConfs.map(k => k -> spark.conf.getOption(k).orNull)))
+
+  /** The identity of a single parquet file or a flat directory of data
+    * files: qualified path plus each data file's (name, length, mtime).
+    * None for a path with a non-hidden subdirectory or one `getFileStatus`
+    * cannot resolve (a glob, a missing path). */
+  def fileIdentity(spark: SparkSession, path: String): Option[FileIdentity] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Try(fs.getFileStatus(p)).toOption.flatMap { st =>
+      val entries =
+        if (st.isDirectory) fs.listStatus(st.getPath).filterNot(c => hidden(c.getPath.getName)).toSeq
+        else Seq(st)
+      if (entries.exists(_.isDirectory)) None
+      else Some(FileIdentity(st.getPath.toString,
+        entries.map(c => (c.getPath.getName, c.getLen, c.getModificationTime)).sortBy(_._1)))
+    }
+  }
+
+  /** Names Spark's file listing skips (`HadoopFSUtils.shouldFilterOutPathName`). */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
 
   /** Multi-file scan with schema unification (reference `pa.unify_schemas`,
     * parq_concat.py:326). */
@@ -196,6 +276,32 @@ object ParquetIO {
     else fs.listStatus(p).map(_.getPath)
       .filter(c => c.getName.endsWith(".parquet") && !c.getName.startsWith("_"))
       .sortBy(_.getName).toSeq
+  }
+}
+
+/** A parquet path's file identity ([[ParquetIO.fileIdentity]]) plus the
+  * session confs a cached value depends on (empty when none). */
+final case class FileIdentity(
+    path: String,
+    files: Seq[(String, Long, Long)],
+    confs: Seq[(String, String)] = Nil)
+
+/** Metadata keyed by file identity: one entry per qualified path, valid
+  * while the identity it was stored under still matches. Lookups and
+  * stores take no lock across a computation, so the caller infers outside
+  * any map lock (get, compute, put) and a Spark job never runs while a map
+  * bin is locked; two threads missing together both compute, and the
+  * later store wins. */
+final class IdentityCache[V] {
+  private val entries = new java.util.concurrent.ConcurrentHashMap[String, (FileIdentity, V)]()
+
+  def get(id: FileIdentity): Option[V] =
+    Option(entries.get(id.path)).collect { case (k, v) if k == id => v }
+
+  def put(id: FileIdentity, value: V): Unit = {
+    // bounds a process that reads a stream of fresh temporary paths
+    if (entries.size >= 4096) entries.clear()
+    entries.put(id.path, (id, value))
   }
 }
 

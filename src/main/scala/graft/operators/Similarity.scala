@@ -706,7 +706,7 @@ object Similarity {
         explode(bestLists(col("query_vec"), centroids, math.min(nProbe, centroids.length))))
     val probedLists = probes.select(col("list_id")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val lists = spark.read.parquet(path)
+    val lists = graft.io.ParquetIO.read(spark, path)
       .filter(col("list_id").isin(probedLists.map(Integer.valueOf).toSeq: _*))
     val scored = lists.join(broadcast(probes), Seq("list_id"))
       .select(col("query_id"), col("nbr_id"),
@@ -842,7 +842,7 @@ object Similarity {
       .transform(graft.ops.ScaleOps.registerInternalPersist)
     val probed = assigned.select(col("cluster")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val corpus = spark.read.parquet(path)
+    val corpus = graft.io.ParquetIO.read(spark, path)
       .filter(col("cluster").isin(probed.map(Integer.valueOf).toSeq: _*))
     val batch = if (broadcastBatch) broadcast(assigned) else assigned
     val hits = corpus.join(batch, Seq("cluster"))
@@ -1001,7 +1001,7 @@ object Similarity {
       k: Int): DataFrame = {
     graft.io.AnnSidecar.verifyIfPresent(queries.sparkSession, path, "pq",
       Array.empty, Some(codebooks))
-    pqTopK(queries.sparkSession.read.parquet(path).select(col("id"), col("codes")),
+    pqTopK(graft.io.ParquetIO.read(queries.sparkSession, path).select(col("id"), col("codes")),
       queries, queryId, queryVec, codebooks, k)
   }
 
@@ -1107,7 +1107,7 @@ object Similarity {
       col("query_vec"), col("list_id"), centroids.map(_.clone()))
     val probes = probes0.select(col("query_id"), col("list_id"),
       VectorKernelFunctions.pqLut(qres, codebooks.map(_.map(_.clone()))).as("__lut"))
-    val codesDf = spark.read.parquet(path)
+    val codesDf = graft.io.ParquetIO.read(spark, path)
       .filter(col("list_id").isin(probedLists.map(Integer.valueOf).toSeq: _*))
       .select(col("list_id"), col("id"), col("codes"))
     val adc = (0 until m).map(j =>

@@ -817,7 +817,7 @@ object ColumnProfiler {
   def profileFile(spark: org.apache.spark.sql.SparkSession, path: String,
       columns: Option[Seq[String]] = None,
       exactDistinct: Boolean = false): TableProfile = {
-    val base = profile(spark.read.parquet(path), columns, exactDistinct)
+    val base = profile(graft.io.ParquetIO.read(spark, path), columns, exactDistinct)
     val sizes = graft.ops.MemoryOps.memoryUsage(spark, path).columns
       .map(c => c.column -> c.uncompressedBytes).toMap
     base.copy(variables = base.variables.map { case (name, p) =>

@@ -115,7 +115,7 @@ object ProfileReport {
   def columnDescriptionsFromFile(spark: org.apache.spark.sql.SparkSession,
       path: String): Map[String, String] = {
     val keys = Seq("title", "description", "units", "unit_of_measure", "source")
-    spark.read.parquet(path).schema.fields.flatMap { f =>
+    graft.io.ParquetIO.schema(spark, path).fields.flatMap { f =>
       val kv = keys.flatMap(k =>
         if (f.metadata.contains(k)) Some(k -> f.metadata.getString(k)) else None).toMap
       val d = columnDescription(kv)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.io.ParquetIO
+
 /** Canonical schemas for the test-corpus tables, and a conforming reader.
   *
   * Motivation: a dataset regeneration that re-encodes one column can strand
@@ -69,9 +71,11 @@ object CanonicalSchema {
       }
     }
 
-  /** Read `dir/table.parquet` conformed to the canonical schema. */
+  /** Read `dir/table.parquet` conformed to the canonical schema (through
+    * [[graft.io.ParquetIO.read]], so the schema is inferred once per file
+    * identity). */
   def read(spark: SparkSession, dir: String, table: String): DataFrame =
-    conform(spark.read.parquet(s"$dir/$table.parquet"), table)
+    conform(ParquetIO.read(spark, s"$dir/$table.parquet"), table)
 
   private def normalize(name: String, actual: DataType, canonical: DataType): Column = {
     val c = col(name)

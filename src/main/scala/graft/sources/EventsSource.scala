@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.io.ParquetIO
+
 /** Reader for event tables, normalizing the `ts` column to TimestampType
   * regardless of how the parquet writer encoded it. Three encodings occur in
   * the wild:
@@ -27,7 +29,7 @@ object EventsSource {
     * precision — Spark's native resolution) under any of the three parquet
     * timestamp encodings. */
   def read(spark: SparkSession, path: String, tsCol: String = "ts"): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = ParquetIO.read(spark, path)
     df.schema.find(_.name == tsCol) match {
       case Some(f) if f.dataType == LongType =>
         // integer `div`, NOT `/`: double division loses 1 µs on ~1.5% of
