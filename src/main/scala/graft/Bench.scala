@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.io.File
+
+import GraftSession.dropAllBlocks
 
 /** Per-round benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -11,18 +13,45 @@ import org.apache.spark.sql.SparkSession
   * first so JIT/classloading costs don't land on the first measured query.
   */
 object Bench {
+
+  /** The best-known baseline file for `sfDir`. BENCH_LOCAL.json is the
+    * canonical sf0.1 artifact; other sfs get BENCH_LOCAL_sf{sf}.json, so a
+    * local sf0.01 iteration run can never clobber the committed sf0.1
+    * baseline. */
+  def baselineFile(sfDir: String): File = {
+    val tag = sfTag(sfDir)
+    new File(if (tag == "0.1") "BENCH_LOCAL.json" else s"BENCH_LOCAL_sf$tag.json")
+  }
+
+  private def sfTag(sfDir: String): String = sfDir.split('/').last.stripPrefix("sf")
+
+  /** A baseline file's text, if it exists and records `sfDir`: a
+    * hand-edited or legacy file holding a different sf is ignored. */
+  private def baselineText(file: File, sfDir: String): Option[String] =
+    if (!file.exists) None
+    else {
+      val src = scala.io.Source.fromFile(file)
+      try Some(src.mkString).filter(_.contains(s""""sf":"$sfDir""""))
+      finally src.close()
+    }
+
+  /** Best-known seconds per query, read from the `queries_ms` object of a
+    * baseline file; empty when the file is missing or records another sf. */
+  def bestKnown(file: File, sfDir: String): Map[String, Double] =
+    baselineText(file, sfDir).fold(Map.empty[String, Double]) { txt =>
+      // scope the match to the queries_ms object only — "-1" failure
+      // entries are integer-valued in queries_sec too, and last-wins
+      // toMap over both would silently prefer the wrong map
+      val msObj = """"queries_ms":\{([^}]*)\}""".r
+        .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
+      """"(q\w+)":(-?\d+)""".r.findAllMatchIn(msObj)
+        .map(m => m.group(1) -> m.group(2).toDouble / 1000.0).toMap
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
 
     import scala.jdk.CollectionConverters._
     def gcMillis(): Long = java.lang.management.ManagementFactory
@@ -49,14 +78,7 @@ object Bench {
     // equivalent to q08's 1.07s).
     // Optional args narrow the run to matching query prefixes ("q89 q116")
     // for local iteration; the driver passes none and gets the full suite.
-    // clearCache drops CacheManager entries (the materialize=false LSH
-    // bases); the getPersistentRDDs sweep additionally releases checkpoint
-    // blocks (materialize=true results, graph-op labels) that live on the
-    // RDDs, not in the CacheManager — between queries NOTHING stays cached
-    def dropAllBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
+    // Between queries NOTHING stays cached.
     // Broadcast blocks are NOT released by dropAllBlocks — ContextCleaner
     // reclaims them only after the driver GCs the broadcast refs, and its
     // own periodic GC (spark.cleaner.periodicGC.interval) defaults to 30
@@ -90,11 +112,9 @@ object Bench {
     }
 
     val all = SparkEntry.queries.keys.toSeq.sorted
-    val names =
-      if (args.isEmpty) all
-      else all.filter(n => args.exists(a => n == a || n.startsWith(a + "_")))
+    val names = if (args.isEmpty) all else all.filter(GraftSession.selects(args, _))
     names.zipWithIndex.foreach { case (n, i) =>
-      run(n); dropAllBlocks(); maybeGc(i)
+      run(n); dropAllBlocks(spark); maybeGc(i)
     }
     val calibPre = calibrate()
 
@@ -112,7 +132,7 @@ object Bench {
     val resultsMin2 = names.zipWithIndex.map { case (n, i) =>
       val (a, ga) = run(n)
       val (b, gb) = run(n)
-      dropAllBlocks(); maybeGc(i)
+      dropAllBlocks(spark); maybeGc(i)
       gcOfMin(n) = if (a >= 0 && (b < 0 || a <= b)) ga else gb
       n -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
     }
@@ -129,14 +149,7 @@ object Bench {
     // collided once two catalog queries shared a number
     // (q303_jarque_bera / q303_periodogram landed on one rolling-best
     // row, so a regression in the slower member hid behind the faster
-    // member's min — VERDICT r13 item 1). Legacy short-keyed baseline
-    // files migrate on read: a stored "qN" value applies to the one
-    // catalog query with that prefix, and ambiguous prefixes drop their
-    // stale best (re-recorded by this run).
-    def qk(k: String): String = k
-    def shortKey(k: String): String =
-      "q" + k.takeWhile(_ != '_').dropWhile(!_.isDigit).toInt
-
+    // member's min — VERDICT r13 item 1).
     // Round-over-round guard (VERDICT r5 item 7, tightened per r7): the
     // stored baseline holds the BEST-KNOWN time per query at this scale
     // factor — each full run merges min(previous best, this run) rather
@@ -146,9 +159,7 @@ object Bench {
     // Reported as a count in the compact line ("regr") with details in the
     // baseline file + stderr, so a contract-cost creep is visible without
     // failing the measurement run. The baseline file is keyed by sf
-    // (BENCH_LOCAL.json is the canonical driver-scale sf0.1 artifact;
-    // other sfs get BENCH_LOCAL_sf{sf}.json) so a local sf0.01 iteration
-    // run can never clobber the committed sf0.1 baseline.
+    // (`baselineFile`).
     // Host-speed calibration (probe defined above, run pre + post): stored
     // with the baseline. Best-known times are ALL-TIME minima — recorded
     // during the host's fastest windows — so on a slower day every
@@ -160,65 +171,12 @@ object Bench {
     // never TIGHTENS it below the recorded numbers.
     val calib = math.min(calibPre, calibrate())
 
-    val sfTag = sfDir.split('/').last.stripPrefix("sf")
-    val prevFile = new java.io.File(
-      if (sfTag == "0.1") "BENCH_LOCAL.json" else s"BENCH_LOCAL_sf$sfTag.json")
-    val (prev: Map[String, Double], prevCalib: Option[Double]) =
-      if (!prevFile.exists) (Map.empty[String, Double], None)
-      else {
-        val txt = scala.io.Source.fromFile(prevFile).mkString
-        // guard against a hand-edited/legacy file holding a different sf
-        val sameSf = s""""sf":"$sfDir"""".r.findFirstIn(txt).isDefined
-        if (!sameSf) (Map.empty[String, Double], None)
-        else {
-          // scope the match to the queries_ms object only — "-1" failure
-          // entries are integer-valued in queries_sec too, and last-wins
-          // toMap over both would silently prefer the wrong map
-          val msObj = """"queries_ms":\{([^}]*)\}""".r
-            .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-          val m = """"(q\w+)":(-?\d+)""".r.findAllMatchIn(msObj)
-            .map(m => m.group(1) -> m.group(2).toDouble / 1000.0).toMap
-          val c = """"calib_ms":(\d+)""".r.findFirstMatchIn(txt)
-            .map(_.group(1).toDouble / 1000.0)
-          (m, c)
-        }
-      }
-    // legacy-file migration: stored keys may be numeric-prefix shorts.
-    // A short key resolves to the unique catalog query carrying that
-    // prefix; a prefix shared by two catalog queries (the q303/q304
-    // collision this migration exists to fix) gets NO stored best —
-    // that row's history was a min across two different queries and is
-    // not a trustworthy floor for either.
-    val uniquePrefix: Map[String, String] = all.groupBy(shortKey)
-      .collect { case (s, Seq(one)) => s -> one }
-    val prevByName: Map[String, Double] =
-      prev.filter { case (k, _) => all.contains(k) } ++
-        prev.flatMap { case (s, v) => uniquePrefix.get(s).map(_ -> v) }
-          .filterNot { case (k, _) => prev.contains(k) }
-    // Re-baseline markers: best-known minima are ALL-TIME, so a DELIBERATE
-    // design change that trades local speed for scale-safety (r10: q171's
-    // checkpoint-frozen shape was faster locally but fail-stop under block
-    // loss) would be flagged forever against a best its new shape cannot
-    // reach by design. A `"rebaseline":{"q171":"why"}` entry in the
-    // baseline file makes the NEXT full run REPLACE that query's stored
-    // best with the fresh measurement (instead of min-merging) and report
-    // it as a re-baseline, not a regression; the marker is consumed by
-    // that run (one-shot — it cannot silently absorb later regressions).
-    val rebaseline: Map[String, String] = {
-      val raw =
-        if (!prevFile.exists) Map.empty[String, String]
-        else {
-          val txt = scala.io.Source.fromFile(prevFile).mkString
-          """"rebaseline":\{([^}]*)\}""".r.findFirstMatchIn(txt)
-            .map(m => """"(q\w+)":"([^"]*)"""".r.findAllMatchIn(m.group(1))
-              .map(x => x.group(1) -> x.group(2)).toMap)
-            .getOrElse(Map.empty[String, String])
-        }
-      // same legacy-short migration as the best-known map
-      raw.filter { case (k, _) => all.contains(k) } ++
-        raw.flatMap { case (s, v) => uniquePrefix.get(s).map(_ -> v) }
-          .filterNot { case (k, _) => raw.contains(k) }
-    }
+    val tag = sfTag(sfDir)
+    val prevFile = baselineFile(sfDir)
+    val prev = bestKnown(prevFile, sfDir)
+    val prevCalib = baselineText(prevFile, sfDir)
+      .flatMap(""""calib_ms":(\d+)""".r.findFirstMatchIn(_))
+      .map(_.group(1).toDouble / 1000.0)
     // Interference normalization. Two estimators of "how much slower is
     // this run's environment than the conditions the minima were recorded
     // under", and the bar relaxes by the LARGER of the two:
@@ -238,7 +196,7 @@ object Bench {
     //      probe factor; reported in the artifact as median_ratio.
     lazy val medianRatio: Double = {
       val ratios = resultsMin2.flatMap { case (k, v) =>
-        prevByName.get(k).filter(_ > 0).filter(_ => v > 0).map(p => v / p)
+        prev.get(k).filter(_ > 0).filter(_ => v > 0).map(p => v / p)
       }.sorted
       // a narrowed local run has too few ratios for a meaningful median —
       // and a 1-query subset's median IS that query, which must not
@@ -255,16 +213,12 @@ object Bench {
       prevCalib.map(pc => f" (stored ${pc}%.3fs, probe factor $calibFactor%.2fx)")
         .getOrElse(" (no stored calib)") +
       f", suite median ratio $medianRatio%.2fx -> host factor $hostFactor%.2fx")
-    // two guards beyond the 1.5x ratio: a 0.5s minimum ABSOLUTE delta
+    // one guard beyond the 1.5x ratio: a 0.5s minimum ABSOLUTE delta
     // (sub-second queries live inside scheduler noise — a 0.2s -> 0.45s
-    // move is not signal) and the one-shot rebaseline markers (design
-    // changes that intentionally moved a query's floor)
-    def flagged(k: String, v: Double): Boolean = prevByName.get(k) match {
-      case Some(p0) =>
-        val p = p0 * hostFactor
-        p0 > 0 && v > 0 && v > p * 1.5 && v - p > 0.5 &&
-          !rebaseline.contains(qk(k))
-      case None => false
+    // move is not signal)
+    def flagged(k: String, v: Double): Boolean = prev.get(k).exists { p0 =>
+      val p = p0 * hostFactor
+      p0 > 0 && v > 0 && v > p * 1.5 && v - p > 0.5
     }
     // Best-of-three ONLY for queries the guard would flag: one extra
     // measurement discriminates a host-wide stall (round 6: 8 contiguous
@@ -273,27 +227,27 @@ object Bench {
     val results = resultsMin2.map { case (k, v) =>
       if (!flagged(k, v)) k -> v
       else {
-        val (c, gc) = run(k); dropAllBlocks()
+        val (c, gc) = run(k); dropAllBlocks(spark)
         if (c >= 0 && c < v) gcOfMin(k) = gc
         k -> (if (c < 0) v else math.min(v, c))
       }
     }
     val regressions = results.flatMap { case (k, v) =>
       if (flagged(k, v)) {
-        val p = prevByName(k) * hostFactor
+        val p = prev(k) * hostFactor
         System.err.println(
-          f"[bench] REGRESSION ${qk(k)}: $p%.3fs (host-normalized) -> $v%.3fs (${v / p}%.2fx)")
-        Some(qk(k))
+          f"[bench] REGRESSION $k: $p%.3fs (host-normalized) -> $v%.3fs (${v / p}%.2fx)")
+        Some(k)
       } else None
     }
 
     val total = results.map(_._2).filter(_ >= 0).sum
-    val qsVerbose = results.map { case (k, v) => "\"" + qk(k) + "\":" + ms(v) }
+    val qsVerbose = results.map { case (k, v) => "\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
-    // Verbose artifact (qN keys, seconds, regression list) for in-repo
+    // Verbose artifact (full-name keys, seconds, regression list) for in-repo
     // trend tracking; the stdout line is the driver-facing compact form.
     val verbose = results.map { case (k, v) =>
-      "\"" + qk(k) + "\":" + (if (v < 0) "-1" else f"$v%.3f")
+      "\"" + k + "\":" + (if (v < 0) "-1" else f"$v%.3f")
     }.mkString("{", ",", "}")
     val regJson = regressions.map("\"" + _ + "\"").mkString("[", ",", "]")
     // only a FULL-suite run may rewrite the baseline: a prefix-narrowed
@@ -307,42 +261,19 @@ object Bench {
     // the next run is otherwise intentional signal, not noise.
     if (args.isEmpty) {
       val best: Map[String, Double] = results.map { case (k, v) =>
-        val merged = (prevByName.get(k), v) match {
-          // a consumed rebaseline marker REPLACES the stored best with this
-          // run's measurement — the honest floor for the new design
-          case (_, cur) if cur > 0 && rebaseline.contains(qk(k)) =>
-            System.err.println(f"[bench] REBASELINE ${qk(k)}: " +
-              f"${prevByName.getOrElse(k, -1.0)}%.3fs -> $cur%.3fs " +
-              f"(${rebaseline(qk(k))})")
-            cur
+        k -> ((prev.get(k), v) match {
           case (Some(p), cur) if p > 0 && cur > 0 => math.min(p, cur)
           // a transient failure (-1) must NOT clobber a known-good best —
           // that would blind the guard for this query on every later run
-          case (Some(p), cur) if p > 0 && cur <= 0 => p
+          case (Some(p), _) if p > 0 => p
           case (_, cur) => cur
-        }
-        qk(k) -> merged
+        })
       }.toMap
-      val rebasedJson = results.flatMap { case (k, v) =>
-        if (v > 0 && rebaseline.contains(qk(k)))
-          Some("\"" + qk(k) + "\":\"" + rebaseline(qk(k)) + "\"")
-        else None
-      }.mkString("{", ",", "}")
-      // markers whose query FAILED this round (cur = -1) were not consumed
-      // (the stored best stayed at the old unreachable floor) — write them
-      // back under "rebaseline" so the next successful full run can
-      // consume them instead of dropping the marker and flagging forever
-      val consumed = results.collect {
-        case (k, v) if v > 0 && rebaseline.contains(qk(k)) => qk(k)
-      }.toSet
-      val carriedJson = (rebaseline -- consumed).map { case (q, why) =>
-        "\"" + q + "\":\"" + why + "\""
-      }.mkString("{", ",", "}")
-      val bestMs = results.map { case (k, _) => "\"" + qk(k) + "\":" + ms(best(qk(k))) }
+      val bestMs = results.map { case (k, _) => "\"" + k + "\":" + ms(best(k)) }
         .mkString("{", ",", "}")
       val bestSec = results.map { case (k, _) =>
-        val v = best(qk(k))
-        "\"" + qk(k) + "\":" + (if (v < 0) "-1" else f"$v%.3f")
+        val v = best(k)
+        "\"" + k + "\":" + (if (v < 0) "-1" else f"$v%.3f")
       }.mkString("{", ",", "}")
       // calib_ms: the MIN of stored and current — best-known host speed,
       // same ratchet direction as the per-query minima it normalizes. On
@@ -355,14 +286,11 @@ object Bench {
       // run — the instrument for separating real plan regressions from
       // collector interference when a query sits >2× its best-known
       val gcJson = results.map { case (k, _) =>
-        "\"" + qk(k) + "\":" + gcOfMin.getOrElse(k, 0L)
+        "\"" + k + "\":" + gcOfMin.getOrElse(k, 0L)
       }.mkString("{", ",", "}")
-      // "rebaselined" records markers THIS run consumed (audit trail);
-      // "rebaseline" carries forward only UNCONSUMED markers (failed
-      // measurement this round) — a consumed marker stays one-shot
       val fw = new java.io.PrintWriter(prevFile)
       try fw.println(
-        s"""{"total_sec":${f"$total%.3f"},"sf":"$sfDir","calib_ms":$calibMs,"regressions":$regJson,"rebaseline":$carriedJson,"rebaselined":$rebasedJson,"queries_ms":$bestMs,"queries_sec":$bestSec,"last_run_ms":$qsVerbose,"last_run_gc_ms":$gcJson}""")
+        s"""{"total_sec":${f"$total%.3f"},"sf":"$sfDir","calib_ms":$calibMs,"regressions":$regJson,"queries_ms":$bestMs,"queries_sec":$bestSec,"last_run_ms":$qsVerbose,"last_run_gc_ms":$gcJson}""")
       finally fw.close()
       // Per-ROUND per-query snapshot (additions-only; VERDICT r14 item 2):
       // BENCH_LOCAL.json is a rolling best-known ratchet that every full
@@ -370,9 +298,9 @@ object Bench {
       // round-over-round and 8-vs-32-core scaling comparisons. This file
       // holds THIS run's seconds verbatim, keyed by cpu count so the
       // driver's low-core pass doesn't clobber the main one.
-      val runFw = new java.io.PrintWriter(s"BENCH_RUN_sf${sfTag}_c$cpus.json")
+      val runFw = new java.io.PrintWriter(s"BENCH_RUN_sf${tag}_c$cpus.json")
       try runFw.println(
-        s"""{"sf":"$sfTag","cpus":$cpus,"total_sec":${f"$total%.3f"},"calib_pre_ms":${math.round(calibPre * 1000)},"calib_min_ms":${math.round(calib * 1000)},"queries_sec":$verbose}""")
+        s"""{"sf":"$tag","cpus":$cpus,"total_sec":${f"$total%.3f"},"calib_pre_ms":${math.round(calibPre * 1000)},"calib_min_ms":${math.round(calib * 1000)},"queries_sec":$verbose}""")
       finally runFw.close()
     }
 
@@ -387,7 +315,7 @@ object Bench {
     // Per-query times live in the queries_file artifact (last_run_ms =
     // this run, queries_ms = best-known minima) — committed to the repo,
     // so nothing is lost by keeping the contract line fixed-size.
-    println(s"""{"metric":"total","value":${f"$total%.1f"},"unit":"sec","n_queries":${results.size},"n_failed":${results.count(_._2 < 0)},"regr":${regressions.size},"queries_file":"${prevFile.getName}","run_file":"BENCH_RUN_sf${sfTag}_c$cpus.json","sf":"$sfTag"}""")
+    println(s"""{"metric":"total","value":${f"$total%.1f"},"unit":"sec","n_queries":${results.size},"n_failed":${results.count(_._2 < 0)},"regr":${regressions.size},"queries_file":"${prevFile.getName}","run_file":"BENCH_RUN_sf${tag}_c$cpus.json","sf":"$tag"}""")
     spark.stop()
   }
 }

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import GraftSession.dropAllBlocks
+
 /** Scale-cliff spot bench (r10 VERDICT item 6): local sf0.1 cannot surface
   * cliffs that appear when the data stops fitting one machine's page cache
   * (the Σdf² pair cores, the blocked linkage). The driver ships no sf1
@@ -134,18 +136,18 @@ object BenchScale {
     * (q60's capped Σdf² core is sub-linear at 0.89× despite the same
     * duplication). */
   private val outputQuadratic: Map[String, String] = Map(
-    "q26" -> ("pair output ~45x per near-dup cluster of 10 (simhash " +
-      "buckets); production mode = the oracle-pinned maxBucket cap — " +
-      "see catalog twin q346 and q26_capped below"),
-    "q31" -> ("identical replica vectors: 45 cosine pairs per original " +
-      "vector; production mode = the oracle-pinned maxBucket cap — see " +
-      "catalog twin q347 and q31_capped below"),
-    "q20" -> ("near-dup shingle sets: candidate+output pairs grow " +
-      "~quadratically; production mode = the oracle-pinned maxDocFreq " +
-      "df cap — see catalog twin q64"),
-    "q142" -> ("replica names collide in blocks: linkage pairs grow " +
-      "~quadratically; production mode = the maxBlock cap — see catalog " +
-      "twin q246 and q142_capped below"))
+    "q26_simhash_pairs" -> ("pair output ~45x per near-dup cluster of 10 " +
+      "(simhash buckets); production mode = the oracle-pinned maxBucket " +
+      "cap — see catalog twin q346 and q26_capped below"),
+    "q31_embedding_neardup" -> ("identical replica vectors: 45 cosine " +
+      "pairs per original vector; production mode = the oracle-pinned " +
+      "maxBucket cap — see catalog twin q347 and q31_capped below"),
+    "q20_ngram_jaccard" -> ("near-dup shingle sets: candidate+output " +
+      "pairs grow ~quadratically; production mode = the oracle-pinned " +
+      "maxDocFreq df cap — see catalog twin q64"),
+    "q142_fuzzy_join" -> ("replica names collide in blocks: linkage pairs " +
+      "grow ~quadratically; production mode = the maxBlock cap — see " +
+      "catalog twin q246 and q142_capped below"))
 
   def materialize(spark: SparkSession, srcDir: String, outDir: String,
       factor: Int): Unit = {
@@ -181,44 +183,16 @@ object BenchScale {
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTOR", "10").toInt
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
 
     if (!new java.io.File(s"$outDir/_GRAFT_MATERIALIZED").exists()) {
       System.err.println(s"[bench-sf1] materializing ${factor}x of $srcDir -> $outDir")
       materialize(spark, srcDir, outDir, factor)
     }
 
-    // sf0.1 best-knowns for the linear-extrapolation denominator.
-    // BENCH_LOCAL.json keys by full query name since the r14 tracker fix;
-    // a legacy short-keyed ("qN") file still resolves via the numeric
-    // prefix as long as it is unambiguous.
-    val sf01Raw: Map[String, Double] = {
-      val txt = scala.io.Source.fromFile("BENCH_LOCAL.json").mkString
-      val msObj = """"queries_ms":\{([^}]*)\}""".r
-        .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-      """"(q\w+)":(-?\d+)""".r.findAllMatchIn(msObj)
-        .map(m => m.group(1) -> m.group(2).toDouble / 1000.0).toMap
-    }
-    def shortKey(k: String): String =
-      "q" + k.takeWhile(_ != '_').dropWhile(!_.isDigit).toInt
-    def sf01Best(name: String): Double =
-      sf01Raw.getOrElse(name, sf01Raw.getOrElse(shortKey(name), -1.0))
-    // note keys stay numeric-prefix shorthand (unique within the spot set)
-    def qk(k: String): String = shortKey(k)
-
-    def dropAllBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
+    // the source sf's best-knowns for the linear-extrapolation denominator
+    val sf01Best = Bench.bestKnown(Bench.baselineFile(srcDir), srcDir)
     def run(name: String): Double = {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, outDir)
@@ -237,8 +211,7 @@ object BenchScale {
     // re-measure, like the driver-era behavior.
     val toRun =
       if (args.isEmpty) spotQueries
-      else spotQueries.filter(n =>
-        args.exists(a => n == a || n.startsWith(a + "_")))
+      else spotQueries.filter(GraftSession.selects(args, _))
     // rows carried from the previous artifact for spot queries NOT in
     // this run (sec / sf01_best_sec / vs_linear verbatim; notes refresh
     // from the current outputQuadratic map on re-emit)
@@ -250,21 +223,17 @@ object BenchScale {
         val row =
           (""""(q\w+)":\{"sec":(-?[\d.]+),"sf01_best_sec":(-?[\d.]+),""" +
             """"vs_linear":(-?[\d.]+|"[^"]*")""").r
-        val byKey = row.findAllMatchIn(txt).map(m =>
+        row.findAllMatchIn(txt).map(m =>
           m.group(1) -> ((m.group(2), m.group(3), m.group(4)))).toMap
-        // legacy short keys resolve via unique numeric prefix
-        spotQueries.flatMap { n =>
-          byKey.get(n).orElse(byKey.get(qk(n))).map(n -> _)
-        }.toMap
       }
     }
     // one warm pass (unmeasured), then min-of-2
-    toRun.foreach { n => run(n); dropAllBlocks() }
+    toRun.foreach { n => run(n); dropAllBlocks(spark) }
     val results = spotQueries.map { n =>
       if (!toRun.contains(n)) n -> -2.0 // sentinel: carry the stored row
       else {
-        val a = run(n); dropAllBlocks()
-        val b = run(n); dropAllBlocks()
+        val a = run(n); dropAllBlocks(spark)
+        val b = run(n); dropAllBlocks(spark)
         val v = if (a < 0 || b < 0) -1.0 else math.min(a, b)
         System.err.println(f"[bench-sf1] $n%-30s $v%.3fs")
         n -> v
@@ -274,7 +243,7 @@ object BenchScale {
     // queries: same operators, maxBucket = 64 — the production knob for a
     // replica-heavy corpus. Times land in the artifact as qNN_capped so
     // the vs-linear story shows both the uncapped cost and the remedy.
-    def runCapped(tag: String)(body: => org.apache.spark.sql.DataFrame)
+    def runCapped(tag: String)(body: => DataFrame)
         : (String, Double) = {
       def once(): Double = {
         val t0 = System.nanoTime()
@@ -285,22 +254,23 @@ object BenchScale {
         }
         (System.nanoTime() - t0) / 1e9
       }
-      val a = once(); dropAllBlocks()
-      val b = once(); dropAllBlocks()
+      val a = once(); dropAllBlocks(spark)
+      val b = once(); dropAllBlocks(spark)
       val v = if (a < 0 || b < 0) -1.0 else math.min(a, b)
       System.err.println(f"[bench-sf1] $tag%-30s $v%.3fs")
       tag -> v
     }
-    import org.apache.spark.sql.functions.col
     // capped counterfactuals re-measure only on a full run; a narrowed
-    // run carries their stored rows like any unmeasured spot query
+    // run carries their stored rows like any unmeasured spot query. Spot
+    // queries whose names end in _capped (q346, q347) are rows above.
     val cappedCarried: Map[String, Double] = {
       val f = new java.io.File("BENCH_SF1.json")
       if (!f.exists) Map.empty
       else {
         val txt = scala.io.Source.fromFile(f).mkString
         """"(q\w+_capped)":\{"sec":(-?[\d.]+)""".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+          .map(m => m.group(1) -> m.group(2).toDouble)
+          .filterNot { case (k, _) => spotQueries.contains(k) }.toMap
       }
     }
     val capped = if (args.nonEmpty)
@@ -329,14 +299,14 @@ object BenchScale {
     // (sentinel -2) re-emit the stored sec/sf01_best/vs_linear with the
     // CURRENT note map (so note updates don't require a re-measure)
     val rows = results.flatMap { case (n, v) =>
-      val note = outputQuadratic.get(qk(n))
+      val note = outputQuadratic.get(n)
         .map(s => ",\"note\":\"" + s + "\"").getOrElse("")
       if (v == -2.0) carried.get(n).map { case (sec, best, vsl) =>
         (n, sec.toDouble,
           "\"" + n + "\":{\"sec\":" + sec + ",\"sf01_best_sec\":" + best +
             ",\"vs_linear\":" + vsl + note + "}")
       } else {
-        val best = sf01Best(n)
+        val best = sf01Best.getOrElse(n, -1.0)
         val vsLinear =
           if (v > 0 && best > 0) f"${v / (best * factor)}%.3f" else "-1"
         Some((n, v,

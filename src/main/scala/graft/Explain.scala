@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper: prints the formatted physical plan of named
   * SparkEntry queries without executing them.
   *
@@ -12,16 +10,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Explain <sfDir> <query> [query...]")
     val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val all = SparkEntry.queries.keys.toSeq.sorted
-    val names = all.filter(n => args.tail.exists(a => n == a || n.startsWith(a + "_")))
+    val spark = GraftSession.local(32)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(GraftSession.selects(args.tail, _))
     names.foreach { n =>
       println(s"==== $n ====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -6283,13 +6283,11 @@ object SparkEntry {
     // real deployment raises for throughput). Measured at sf0.1 (100k
     // rows → 2 partitions): same numbers as the previous hand-tuned
     // constant 2, which this derivation replaces (a constant only made
-    // sense at exactly this bench scale). The env override keeps odd
-    // replays tunable without a rebuild.
+    // sense at exactly this bench scale).
     val derived = math.max(1L, math.min(
       s.sessionState.conf.numShufflePartitions.toLong,
       (replayRows + 65535) / 65536))
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_PARTS", derived.toString))
+    s.conf.set("spark.sql.shuffle.partitions", derived.toString)
     try {
       val q = stream.writeStream.outputMode("append")
         .format("memory").queryName(name).start()

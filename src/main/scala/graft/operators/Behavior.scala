@@ -1486,15 +1486,9 @@ object Behavior {
               val next = scoreAt(theta)
               grad = next._1; info = next._2; ll = next._3
               accepted = true
-              if (sys.env.contains("GRAFT_AFT_DEBUG"))
-                System.err.println(f"[aft] it=$it acc=$t ll=$ll%.6f gmax=${grad.map(math.abs).max}%.3e lam=$lambda%.1e th=${theta.mkString(",")}")
             case None =>
               // 3 windows ≈ the old 30-try ladder before declaring a stall
-              if (window >= 2) {
-                stalled = true
-                if (sys.env.contains("GRAFT_AFT_DEBUG"))
-                  System.err.println(s"[aft] it=$it STALLED")
-              }
+              if (window >= 2) stalled = true
               window += 1
           }
         }

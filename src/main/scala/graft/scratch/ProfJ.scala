@@ -1,20 +1,13 @@
 package graft.scratch
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+
+import graft.GraftSession
 
 object ProfJ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
     val t0ref = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
@@ -31,8 +24,7 @@ object ProfJ {
     // warm
     graft.SparkEntry.queries(n)(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    GraftSession.dropAllBlocks(spark)
     spark.sparkContext.addSparkListener(listener)
     Thread.sleep(300)
     t0ref.set(System.nanoTime())

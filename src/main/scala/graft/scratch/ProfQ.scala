@@ -1,7 +1,8 @@
 package graft.scratch
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+
+import graft.GraftSession
 
 /** Per-query job/task/stage profiler: runs each named query twice (first
   * warm), reports wall seconds, job count, task count, and summed task
@@ -9,19 +10,7 @@ import org.apache.spark.sql.SparkSession
 object ProfQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("PF", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("ADV", "64m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32)
     @volatile var jobs = 0
     @volatile var tasks = 0
     @volatile var taskMs = 0L
@@ -33,17 +22,13 @@ object ProfQ {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    def dropAllBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
-    val all = graft.SparkEntry.queries.keys.toSeq.sorted
-    val names = all.filter(n => args.exists(a => n == a || n.startsWith(a + "_")))
+    val names = graft.SparkEntry.queries.keys.toSeq.sorted
+      .filter(GraftSession.selects(args, _))
     names.foreach { n =>
       try {
         graft.SparkEntry.queries(n)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        dropAllBlocks()
+        GraftSession.dropAllBlocks(spark)
         Thread.sleep(200)
         jobs = 0; tasks = 0; taskMs = 0
         val t0 = System.nanoTime()
@@ -52,7 +37,7 @@ object ProfQ {
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(200)
         println(f"[profq] $n%-34s wall=$wall%7.3fs jobs=$jobs%4d tasks=$tasks%5d taskTime=${taskMs / 1000.0}%8.2fs")
-        dropAllBlocks()
+        GraftSession.dropAllBlocks(spark)
       } catch { case e: Throwable =>
         println(s"[profq] $n FAILED: ${e.getMessage}")
       }

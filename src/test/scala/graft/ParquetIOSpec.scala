@@ -14,7 +14,8 @@ import graft.ops.SchemaOps
 import graft.sources.{CanonicalSchema, EventsSource}
 
 /** The per-file-identity schema cache behind `ParquetIO.read`, and the
-  * rule that plain parquet reads go through it. */
+  * src/main rules that plain parquet reads go through it and that sessions
+  * are built only by `GraftSession`. */
 class ParquetIOSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -105,6 +106,12 @@ class ParquetIOSpec extends SparkSpecBase {
     assert(ParquetIO.schema(spark, path)("depth").metadata.getString("unit") == "m")
   }
 
+  test("the shared test session carries the GraftSession.local(4) confs") {
+    // the confs every cached schema above was inferred under
+    assert(Seq("spark.sql.session.timeZone", EventsSource.NanosAsLongConf,
+      "spark.sql.shuffle.partitions").map(spark.conf.get) == Seq("UTC", "true", "4"))
+  }
+
   test("a session with different schema-conversion confs does not reuse the cached schema") {
     val events = s"${corpusCopy("events")}/events.parquet"
     ParquetIO.read(spark, events)
@@ -161,16 +168,36 @@ class ParquetIOSpec extends SparkSpecBase {
       // q341 and q193 read hive-partitioned layouts back; `entry` is the
       // fixed flagship smoke read
       "graft/SparkEntry.scala" -> 3)
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
     val plainRead = """\.read\s*\.parquet\(""".r
-    val found = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .map(p => root.relativize(p).toString.replace('\\', '/') ->
-        plainRead.findAllMatchIn(Files.readString(p)).size)
+    val found = mainSources
+      .map { case (f, text) => f -> plainRead.findAllMatchIn(text).size }
       .filter { case (f, n) => n > 0 && f != "graft/io/ParquetIO.scala" }
-      .toMap
     assert(found == allowed,
       s"direct .read.parquet( outside ParquetIO: $found; allowed: $allowed")
+  }
+
+  test("SparkSession.builder is called in src/main only by GraftSession") {
+    val builder = """SparkSession\s*\.builder\b""".r
+    // scaladoc and line comments may name the builder without calling it
+    def isComment(line: String): Boolean =
+      Seq("*", "//", "/*").exists(line.trim.startsWith)
+    val found = mainSources
+      .map { case (f, text) =>
+        f -> text.linesIterator.filterNot(isComment)
+          .count(builder.findFirstIn(_).isDefined)
+      }
+      .filter(_._2 > 0)
+    assert(found == Map("graft/GraftSession.scala" -> 1),
+      s"SparkSession.builder outside GraftSession: $found")
+  }
+
+  /** Every src/main Scala file's text, keyed by its path under src/main/scala. */
+  private def mainSources: Map[String, String] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString.replace('\\', '/') -> Files.readString(p))
+      .toMap
   }
 }
