@@ -219,7 +219,7 @@ object BenchScale {
       val f = new java.io.File("BENCH_SF1.json")
       if (!f.exists) Map.empty
       else {
-        val txt = scala.io.Source.fromFile(f).mkString
+        val txt = scala.io.Source.fromFile(f, "UTF-8").mkString
         val row =
           (""""(q\w+)":\{"sec":(-?[\d.]+),"sf01_best_sec":(-?[\d.]+),""" +
             """"vs_linear":(-?[\d.]+|"[^"]*")""").r
@@ -267,7 +267,7 @@ object BenchScale {
       val f = new java.io.File("BENCH_SF1.json")
       if (!f.exists) Map.empty
       else {
-        val txt = scala.io.Source.fromFile(f).mkString
+        val txt = scala.io.Source.fromFile(f, "UTF-8").mkString
         """"(q\w+_capped)":\{"sec":(-?[\d.]+)""".r.findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble)
           .filterNot { case (k, _) => spotQueries.contains(k) }.toMap
@@ -322,7 +322,7 @@ object BenchScale {
       "\"" + n + "\":{\"sec\":" + (if (v < 0) "-1" else f"$v%.3f") +
         ",\"note\":\"maxBucket=64 counterfactual for the uncapped twin\"}"
     }).mkString("{", ",", "}")
-    val fw = new java.io.PrintWriter("BENCH_SF1.json")
+    val fw = new java.io.PrintWriter("BENCH_SF1.json", java.nio.charset.StandardCharsets.UTF_8)
     try fw.println(
       s"""{"factor":$factor,"src":"$srcDir","total_sec":${f"$total%.3f"},"n_failed":$nFailed,"queries":$qjson}""")
     finally fw.close()

@@ -86,7 +86,9 @@ final class Hash128Set(initialCapacity: Int) {
     }
   }
 
-  /** Apply `f` to every stored pair (the zero pair included if present). */
+  /** Apply `f` to every stored pair (the zero pair included if present),
+    * in slot order. Slot order depends on this instance's probe `seed`, so
+    * two sets holding the same pairs visit them in different orders. */
   def foreachPair(f: (Long, Long) => Unit): Unit = {
     if (hasZero) f(0L, 0L)
     var i = 0
@@ -159,6 +161,11 @@ case class DistinctCountAgg(
 
   override def eval(buf: Hash128Set): Any = buf.size.toLong
 
+  /** Pair order in the bytes follows [[Hash128Set.foreachPair]], which
+    * depends on the buffer's per-instance probe seed: the same logical
+    * partial (a retried task, say) can serialize to different bytes. That
+    * is safe because the only consumer is [[merge]], a set union, which
+    * is insensitive to insertion order. */
   override def serialize(buf: Hash128Set): Array[Byte] = {
     val bytesNeeded = 4L + 16L * buf.size
     if (bytesNeeded > Int.MaxValue - 8)

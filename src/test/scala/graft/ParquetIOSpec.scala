@@ -149,10 +149,10 @@ class ParquetIOSpec extends SparkSpecBase {
   test("the staged row-count cache sees a regenerated directory") {
     val path = tmpDir("pqio_rows") + "/staged"
     ParquetIO.write((1L to 5L).toDF("k"), path)
-    assert(SparkEntry.parquetRows(spark, path) == 5L)
-    assert(jobs(SparkEntry.parquetRows(spark, path)) == 0)
+    assert(catalog.Streaming.parquetRows(spark, path) == 5L)
+    assert(jobs(catalog.Streaming.parquetRows(spark, path)) == 0)
     ParquetIO.write((1L to 8L).toDF("k"), path)
-    assert(SparkEntry.parquetRows(spark, path) == 8L)
+    assert(catalog.Streaming.parquetRows(spark, path) == 8L)
   }
 
   test("plain parquet reads in src/main go through ParquetIO.read") {
@@ -165,9 +165,8 @@ class ParquetIOSpec extends SparkSpecBase {
       "graft/ops/LayoutOps.scala" -> 1,
       // BenchScale.materialize: the scale generator's copies of the sources
       "graft/BenchScale.scala" -> 2,
-      // q341 and q193 read hive-partitioned layouts back; `entry` is the
-      // fixed flagship smoke read
-      "graft/SparkEntry.scala" -> 3)
+      // q341 and q193 read hive-partitioned layouts back
+      "graft/catalog/ScansJoins.scala" -> 2)
     val plainRead = """\.read\s*\.parquet\(""".r
     val found = mainSources
       .map { case (f, text) => f -> plainRead.findAllMatchIn(text).size }

@@ -317,7 +317,7 @@ class PlanSpec extends SparkSpecBase {
       // direct operator call (materialize = false): the catalog query
       // checkpoints its result, which would hide the probe plan
       import org.apache.spark.sql.functions.col
-      val prefix = SparkEntry.stageLshCorpus(spark, "/root/testdata/sf0.001")
+      val prefix = catalog.Support.stageLshCorpus(spark, "/root/testdata/sf0.001")
       val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       val df = graft.operators.Dedup.minhashLshProbeStored(
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
@@ -352,7 +352,7 @@ class PlanSpec extends SparkSpecBase {
     // filter and select at most 2 of the 16 list directories — bytes read
     // scale with probed lists, not corpus size
     import org.apache.spark.sql.functions.col
-    val (path, centroids) = SparkEntry.stageIvfLists(spark, "/root/testdata/sf0.001")
+    val (path, centroids) = catalog.Retrieval.stageIvfLists(spark, "/root/testdata/sf0.001")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 2)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -385,7 +385,7 @@ class PlanSpec extends SparkSpecBase {
     // with probed lists) AND q196's ReadSchema (only id + codes — the
     // vectors never ride the probe)
     import org.apache.spark.sql.functions.col
-    val (path, cents, cbs) = SparkEntry.stageIvfPq(spark, "/root/testdata/sf0.001")
+    val (path, cents, cbs) = catalog.Retrieval.stageIvfPq(spark, "/root/testdata/sf0.001")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.filter(col("vec_id") < 2)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
@@ -417,7 +417,7 @@ class PlanSpec extends SparkSpecBase {
     // listing must select only the probed clusters — bytes read scale
     // with the batch's cluster spread, not corpus size
     import org.apache.spark.sql.functions.col
-    val (path, seeds) = SparkEntry.stageSemDedupClusters(spark, "/root/testdata/sf0.001")
+    val (path, seeds) = catalog.Retrieval.stageSemDedupClusters(spark, "/root/testdata/sf0.001")
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val batch = emb.filter(col("vec_id").isin(11, 13))
     val df = graft.operators.Similarity.semDedupProbeStored(

@@ -331,7 +331,7 @@ class RegressionSpec extends SparkSpecBase {
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val withSh = docs.join(SparkEntry.md5Simhash48(docs, "doc_id", "text"),
+    val withSh = docs.join(catalog.DedupLinkage.md5Simhash48(docs, "doc_id", "text"),
       col("doc_id") === col("__sid")).drop("__sid")
     def simhashRun(cap: Option[Long]) = pairSet(
       graft.operators.Dedup.simhashNearDup(withSh, "doc_id", "text",
