@@ -318,15 +318,21 @@ object BenchScale {
     }
     val total = rows.map(_._2).filter(_ >= 0).sum
     val nFailed = rows.count(_._2 < 0)
+    // spot queries with no row at all (outside this narrowed run and
+    // never stored): named, so the artifact says what it does not cover
+    val unmeasured = results.collect {
+      case (n, v) if v == -2.0 && !carried.contains(n) => n }
+    val unmeasuredJson = unmeasured.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qjson = (rows.map(_._3) ++ capped.map { case (n, v) =>
       "\"" + n + "\":{\"sec\":" + (if (v < 0) "-1" else f"$v%.3f") +
         ",\"note\":\"maxBucket=64 counterfactual for the uncapped twin\"}"
     }).mkString("{", ",", "}")
     val fw = new java.io.PrintWriter("BENCH_SF1.json", java.nio.charset.StandardCharsets.UTF_8)
     try fw.println(
-      s"""{"factor":$factor,"src":"$srcDir","total_sec":${f"$total%.3f"},"n_failed":$nFailed,"queries":$qjson}""")
+      s"""{"factor":$factor,"src":"$srcDir","total_sec":${f"$total%.3f"},"n_failed":$nFailed,""" +
+        s""""unmeasured":$unmeasuredJson,"queries":$qjson}""")
     finally fw.close()
-    println(s"""{"metric":"sf1_total","value":${f"$total%.1f"},"unit":"sec","n_queries":${rows.size},"n_failed":$nFailed,"factor":$factor}""")
+    println(s"""{"metric":"sf1_total","value":${f"$total%.1f"},"unit":"sec","n_queries":${rows.size},"n_failed":$nFailed,"n_unmeasured":${unmeasured.size},"factor":$factor}""")
     spark.stop()
   }
 }

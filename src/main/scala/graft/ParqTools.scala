@@ -58,7 +58,7 @@ final case class ParqTools(spark: SparkSession) {
   def reindexParquet(input: String, output: String, newIndex: DataFrame,
       sortAfterReindex: Boolean = true, singleFile: Boolean = false): Unit = {
     val out = IndexOps.reindex(newIndex, ParquetIO.read(spark, input), sortAfterReindex)
-    if (singleFile) ParquetIO.writeSingleFile(out, output) else ParquetIO.write(out, output)
+    ParquetIO.write(out, output, singleFile)
   }
 
   def validateIndexAlignment(dfs: Seq[DataFrame], indexColumns: Seq[String]): Unit =
@@ -68,7 +68,7 @@ final case class ParqTools(spark: SparkSession) {
       indexColumns: Seq[String], orderColumns: Seq[String] = Nil,
       singleFile: Boolean = false): Unit = {
     val out = IndexOps.dedupFirstWins(ParquetIO.read(spark, input), indexColumns, orderColumns)
-    if (singleFile) ParquetIO.writeSingleFile(out, output) else ParquetIO.write(out, output)
+    ParquetIO.write(out, output, singleFile)
   }
 
   // ---- parq_schema_tools.rename_and_update_metadata --------------------

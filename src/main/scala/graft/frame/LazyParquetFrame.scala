@@ -285,8 +285,7 @@ final class LazyParquetFrame private (
     val fs = p.getFileSystem(conf)
     if (fs.exists(p) && !allowOverwrite)
       throw new IllegalArgumentException(s"Output exists and allow_overwrite is false: $output")
-    if (singleFile) ParquetIO.writeSingleFile(current, output)
-    else ParquetIO.write(current, output)
+    ParquetIO.write(current, output, singleFile)
     // Preserve the logical index across the round-trip (reference
     // to_parquet keeps the pandas index — lazy_parquet.py:480-524).
     if (index.nonEmpty)

@@ -129,9 +129,11 @@ object ParquetIO {
 
   /** Scalable write: directory of part files, atomic via Spark's output
     * committer (the reference's atomic_output_file temp-then-rename,
-    * utils/file_utils.py:15-42, is built into Spark). */
-  def write(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
+    * utils/file_utils.py:15-42, is built into Spark). With `singleFile`
+    * the output is one file instead ([[writeSingleFile]]). */
+  def write(df: DataFrame, path: String, singleFile: Boolean = false): Unit =
+    if (singleFile) writeSingleFile(df, path)
+    else df.write.mode("overwrite").parquet(path)
 
   /** Hive-partitioned write. With `dynamic = true` (the default), an
     * overwrite replaces ONLY the partition directories present in `df` —

@@ -1115,121 +1115,64 @@ object Behavior {
       s"exponentialAft needs 1..8 covariates, got ${covariates.size}")
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val d = covariates.size
+    val dim = d + 1
     val terms = "intercept" +: covariates
-    val xCols = covariates.indices.map(i => s"__x$i")
-    val base = durations
-      .filter(col(durationCol).isNotNull && col(censoredCol).isNotNull &&
-        covariates.map(col(_).isNotNull).reduce(_ && _))
-      .select((col(durationCol).cast("long").as("__t") +:
-        (lit(1L) - col(censoredCol).cast("long")).as("__d") +:
-        covariates.zipWithIndex.map { case (c, i) =>
-          col(c).cast("decimal(8,4)").as(xCols(i)) }): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try graft.ops.ParamFrame.withFixedPlan(durations.sparkSession) {
-      val spark = durations.sparkSession
-      import spark.implicits._
-      def nullRows(n: Long, ne: Long) = terms.map(t =>
-        (t, n, ne, Option.empty[Double], Option.empty[Double],
-          Option.empty[Double], Option.empty[Double]))
+    val spark = durations.sparkSession
+    import spark.implicits._
+    def table(n: Long, ne: Long, w: Seq[NewtonFit.Wald]) =
+      terms.zip(w).map { case (t, (b, se, z, p)) => (t, n, ne, b, se, z, p) }
         .toDF("term", "n", "n_events", "beta", "se", "z", "p_value")
+    NewtonFit.withPersistedBase(survivalDesign(durations, durationCol,
+        censoredCol, covariates)) { base =>
       val yAggs = count(lit(1)).as("__n") +: sum(col("__d")).as("__sd") +:
         sum(col("__t")).as("__st") +: min(col("__t")).as("__tmin") +:
-        covariates.indices.map(i =>
-          sum(col("__d").cast("decimal(12,0)") * col(xCols(i)))
-            .as(s"__sdx$i"))
+        (1 to d).map(i =>
+          sum(col("__d").cast("decimal(12,0)") * NewtonFit.xDec(i))
+            .as(s"__sdx${i - 1}"))
       val yRow = base.agg(yAggs.head, yAggs.tail: _*).head()
       val n = yRow.getLong(0)
-      if (n == 0) return nullRows(0, 0)
+      if (n == 0) return table(0, 0, NewtonFit.nullRows(dim))
       val sd = yRow.getLong(1); val st = yRow.getLong(2)
       require(yRow.getLong(3) >= 0L,
         s"exponentialAft needs durations >= 0, got min ${yRow.getLong(3)}")
-      if (sd == 0 || st == 0) return nullRows(n, sd)
+      if (sd == 0 || st == 0) return table(n, sd, NewtonFit.nullRows(dim))
       // n is on the driver: narrow every Newton pass to as many tasks as
       // the cached base warrants (see [[graft.ops.ParamFrame.compactForIteration]])
       val baseIt = graft.ops.ParamFrame.compactForIteration(base, n)
-      val sdx = covariates.indices.map(i =>
-        BigDecimal(yRow.getDecimal(4 + i)).toDouble)
-      val dim = d + 1
-      val pairIdx = for { i <- 0 until dim; j <- i until dim } yield (i, j)
-      var beta = Array.fill(dim)(0.0)
-      beta(0) = round12d(math.log(sd.toDouble / st))
-      var lastInfo: Option[Array[Array[Double]]] = None
-      var singular = false
-      var it = 0
-      // iterations stepping passes + ONE no-step pass: SE at reported β
-      while (it < iterations + 1 && !singular) {
-        val finalPass = it == iterations
+      val sdx = (0 until d).map(i => NewtonFit.dec(yRow, 4 + i))
+      val pairIdx = NewtonFit.pairs(dim)
+      val start = Array.fill(dim)(0.0)
+      start(0) = NewtonFit.round12(math.log(sd.toDouble / st))
+      val x = NewtonFit.xDbl _
+      val fit = NewtonFit.run(start, iterations, trailing = true) { beta =>
         // β via a broadcast one-row parameter frame (not literals) so the
         // generated code is iteration-invariant — see [[graft.ops.ParamFrame]]
-        val eta = covariates.indices.foldLeft(graft.ops.ParamFrame.p("__eb", 0)) { (acc, i) =>
-          acc + col(xCols(i)).cast("double") * graft.ops.ParamFrame.p("__eb", i + 1)
-        }
-        val w = col("__t").cast("double") * exp(eta)
-        def xD(i: Int): Column =
-          if (i == 0) lit(1.0) else col(xCols(i - 1)).cast("double")
+        val w = col("__t").cast("double") * exp(NewtonFit.eta(d, "__eb"))
         val aggs = pairIdx.map { case (i, j) =>
-          sum(round(w * xD(i) * xD(j), 12).cast("decimal(28,12)"))
+          sum(round(w * x(i) * x(j), 12).cast("decimal(28,12)"))
             .as(s"__s_${i}_$j")
-        } :+ sum(when(round(w, 12).cast("decimal(28,12)").isNull &&
-            col("__t") > 0, 1L).otherwise(0L)).as("__overflowed")
+        } :+ NewtonFit.countWhere(round(w, 12).cast("decimal(28,12)").isNull &&
+            col("__t") > 0).as("__overflowed")
         val r = graft.ops.ParamFrame.attach(baseIt, beta.toSeq, "__eb")
           .agg(aggs.head, aggs.tail: _*).head()
         require(r.getLong(pairIdx.size) == 0L,
           s"exponentialAft: ${r.getLong(pairIdx.size)} rows t*exp(eta) " +
             "overflowed DECIMAL(28,12) — feature-scale the covariates")
-        val s = pairIdx.indices.map(p =>
-          if (r.isNullAt(p)) 0.0 else BigDecimal(r.getDecimal(p)).toDouble)
-        val info = Array.ofDim[Double](dim, dim)
-        pairIdx.zipWithIndex.foreach { case ((i, j), p) =>
-          info(i)(j) = s(p); info(j)(i) = s(p)
-        }
-        val grad = Array.tabulate(dim)(i =>
-          if (i == 0) sd - info(0)(0) else sdx(i - 1) - info(0)(i))
-        lastInfo = Some(info.map(_.clone()))
-        if (!finalPass) {
-          val step: Option[Array[Double]] =
-            if (dim == 2) {
-              // the closed-form 2×2 solve the oracle mirrors verbatim
-              val det = info(0)(0) * info(1)(1) - info(0)(1) * info(0)(1)
-              if (det <= 0) None
-              else Some(Array(
-                (info(1)(1) * grad(0) - info(0)(1) * grad(1)) / det,
-                (info(0)(0) * grad(1) - info(0)(1) * grad(0)) / det))
-            } else LinearModel.solveSpd(info.map(_.clone()),
-              grad.clone())
-          step match {
-            case None => singular = true
-            case Some(stp) =>
-              beta = beta.zip(stp).map { case (b, v) => round12d(b + v) }
-          }
-        }
-        it += 1
+        val info = NewtonFit.symmetric(dim)(NewtonFit.dec(r, _))
+        (Array.tabulate(dim)(i =>
+          if (i == 0) sd - info(0)(0) else sdx(i - 1) - info(0)(i)), info)
       }
-      val seOpt: Seq[Option[Double]] = lastInfo match {
-        case _ if singular => Seq.fill(dim)(None)
-        case Some(info) if dim == 2 =>
-          val det = info(0)(0) * info(1)(1) - info(0)(1) * info(0)(1)
-          if (det <= 0) Seq.fill(dim)(None)
-          else Seq(Some(math.sqrt(info(1)(1) / det)),
-            Some(math.sqrt(info(0)(0) / det)))
-        case Some(info) =>
-          LinearModel.invertSpd(info.map(_.clone())) match {
-            case Some(inv) => (0 until dim).map(i =>
-              if (inv(i)(i) > 0) Some(math.sqrt(inv(i)(i))) else None)
-            case None => Seq.fill(dim)(None)
-          }
-        case None => Seq.fill(dim)(None)
-      }
-      terms.zipWithIndex.map { case (t, i) =>
-        val b = if (singular) None else Some(beta(i))
-        val se = seOpt(i)
-        val z = for (bv <- b; s <- se if s > 0) yield bv / s
-        (t, n, sd, b, se, z,
-          z.map(x => math.min(1.0,
-            2.0 * graft.profile.Drift.normalSfAS(math.abs(x)))))
-      }.toDF("term", "n", "n_events", "beta", "se", "z", "p_value")
-    } finally base.unpersist(false)
+      table(n, sd, NewtonFit.waldRows(fit.coefs, fit.se()))
+    }
   }
+
+  /** The parametric survival fits' rows: duration as long `__t`, event
+    * indicator `__d` = 1 − censored, quantized covariates. */
+  private def survivalDesign(durations: DataFrame, durationCol: String,
+      censoredCol: String, covariates: Seq[String]): DataFrame =
+    NewtonFit.design(durations, Seq(durationCol, censoredCol),
+      Seq(col(durationCol).cast("long").as("__t"),
+        (lit(1L) - col(censoredCol).cast("long")).as("__d")), covariates)
 
   /** Weibull accelerated-failure-time regression — the NON-constant-
     * hazard parametric survival model completing the shelf
@@ -1276,8 +1219,15 @@ object Behavior {
       s"weibullAft needs 1..6 covariates, got ${covariates.size}")
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val d = covariates.size
+    val dim = d + 2 // mu, betas, s = ln sigma
     val terms = ("intercept" +: covariates) :+ "ln_scale"
-    val xCols = covariates.indices.map(i => s"__x$i")
+    val spark = durations.sparkSession
+    import spark.implicits._
+    def table(n: Long, ne: Long, w: Seq[NewtonFit.Wald],
+        grad: Option[Array[Double]]) =
+      terms.zip(w).zipWithIndex.map { case ((t, (b, se, z, p)), i) =>
+        (t, n, ne, b, se, z, p, grad.map(_(i))) }
+        .toDF("term", "n", "n_events", "beta", "se", "z", "p_value", "grad")
     // materialize ONCE with the lineage CUT (localCheckpoint, the kCore /
     // cumsum convention) rather than persist: ~35 Newton passes each
     // re-analyze the frame's logical plan, and over the raw upstream tree
@@ -1286,23 +1236,9 @@ object Behavior {
     // The blocks release in the finally through the registry sweep;
     // `reliable` swaps in a durable checkpoint (this base is data-sized,
     // so executor loss under localCheckpoint fails the whole fit).
-    val base = graft.ops.ScaleOps.cutLineageBounded(durations
-      .filter(col(durationCol).isNotNull && col(censoredCol).isNotNull &&
-        covariates.map(col(_).isNotNull).reduce(_ && _))
-      .select((col(durationCol).cast("long").as("__t") +:
-        (lit(1L) - col(censoredCol).cast("long")).as("__d") +:
-        covariates.zipWithIndex.map { case (c, i) =>
-          col(c).cast("decimal(8,4)").as(xCols(i)) }): _*), reliable)
-    try graft.ops.ParamFrame.withFixedPlan(durations.sparkSession) {
-      val spark = durations.sparkSession
-      import spark.implicits._
-      val dim = d + 2 // mu, betas, s = ln sigma
-      def nullRows(n: Long, ne: Long) = terms.map(t =>
-        (t, n, ne, Option.empty[Double], Option.empty[Double],
-          Option.empty[Double], Option.empty[Double],
-          Option.empty[Double]))
-        .toDF("term", "n", "n_events", "beta", "se", "z", "p_value",
-          "grad")
+    NewtonFit.withBase(graft.ops.ScaleOps.cutLineageBounded(
+        survivalDesign(durations, durationCol, censoredCol, covariates),
+        reliable), graft.ops.ScaleOps.releaseCheckpointBlocks) { base =>
       // positivity guard + event-moment warm start (exact sums of
       // 12-dp-quantized ln t over events)
       val lnT = log(col("__t").cast("double"))
@@ -1314,11 +1250,11 @@ object Behavior {
             .otherwise(0.0).cast("decimal(28,9)")).as("__sll"))
         .head()
       val n = w0.getLong(0)
-      if (n == 0) return nullRows(0, 0)
+      if (n == 0) return table(0, 0, NewtonFit.nullRows(dim), None)
       require(w0.getLong(2) > 0L,
         s"weibullAft needs durations > 0, got min ${w0.getLong(2)}")
       val ne = w0.getLong(1)
-      if (ne < 2) return nullRows(n, ne)
+      if (ne < 2) return table(n, ne, NewtonFit.nullRows(dim), None)
       // n is now on the driver: narrow every Newton pass to as many
       // tasks as the cached base actually warrants (guide §2 — derive
       // partitioning from input size, not the session constant)
@@ -1330,12 +1266,11 @@ object Behavior {
       // Gumbel residual: sd(ln T) = sigma * pi / sqrt(6)
       val s0 = 0.5 * math.log(varLn * 6.0 / (math.Pi * math.Pi))
       var theta = Array.fill(dim)(0.0)
-      theta(0) = round12d(mu0)
-      theta(dim - 1) = round12d(s0)
-      val pairIdx = for { i <- 0 until dim; j <- i until dim } yield (i, j)
+      theta(0) = NewtonFit.round12(mu0)
+      theta(dim - 1) = NewtonFit.round12(s0)
+      val pairIdx = NewtonFit.pairs(dim)
       val dD = col("__d").cast("double")
-      def xD(i: Int): Column =
-        if (i == 0) lit(1.0) else col(xCols(i - 1)).cast("double")
+      val xD = NewtonFit.xDbl _
       def t12(c: Column, scale: Int = 12) =
         sum(round(c, scale).cast(s"decimal(28,$scale)"))
       // θ enters every pass through a BROADCAST one-row parameter frame,
@@ -1352,7 +1287,7 @@ object Behavior {
       def zColP(p: Int => Column): (Column, Column) = {
         val sig = exp(p(dim - 1))
         val eta = covariates.indices.foldLeft(p(0)) { (acc, i) =>
-          acc + col(xCols(i)).cast("double") * p(i + 1)
+          acc + col(s"__x$i").cast("double") * p(i + 1)
         }
         ((lnT - eta) / sig, sig)
       }
@@ -1382,14 +1317,9 @@ object Behavior {
       val blockW = dim + pairIdx.size + 1
       def decodeBlock(r: org.apache.spark.sql.Row, off: Int)
           : (Array[Double], Array[Array[Double]], Double) = {
-        def dec(o: Int): Double =
-          if (r.isNullAt(off + o)) 0.0
-          else BigDecimal(r.getDecimal(off + o)).toDouble
+        def dec(o: Int): Double = NewtonFit.dec(r, off + o)
         val grad = Array.tabulate(dim)(i => dec(i))
-        val info = Array.ofDim[Double](dim, dim)
-        pairIdx.zipWithIndex.foreach { case ((i, j), p) =>
-          info(i)(j) = dec(dim + p); info(j)(i) = info(i)(j)
-        }
+        val info = NewtonFit.symmetric(dim)(p => dec(dim + p))
         // ℓ NULL (decimal overflow far from the optimum) reads −∞: such a
         // candidate can never be accepted, matching the old llAt guard
         (grad, info,
@@ -1469,8 +1399,8 @@ object Behavior {
             val ridged = Array.tabulate(dim, dim)((i, j) =>
               if (i == j) info(i)(j) + lam * math.max(info(i)(i), 1e-8)
               else info(i)(j))
-            LinearModel.solveSpd(ridged, grad.clone()).map(st =>
-              theta.zip(st).map { case (b, v) => round12d(b + v) })
+            NewtonFit.solveSpd(ridged, grad.clone()).map(st =>
+              theta.zip(st).map { case (b, v) => NewtonFit.round12(b + v) })
           }
           // padding failed solves with the current θ keeps the batch shape
           // (and so the compiled plan) fixed; they are never accepted
@@ -1494,27 +1424,9 @@ object Behavior {
         }
         it += 1
       }
-      val singular = false
-      val lastInfo = Some(info)
-      val lastGrad = Some(grad)
-      val seOpt: Seq[Option[Double]] =
-        if (singular) Seq.fill(dim)(None)
-        else lastInfo.flatMap(LinearModel.invertSpd) match {
-          case Some(inv) => (0 until dim).map(i =>
-            if (inv(i)(i) > 0) Some(math.sqrt(inv(i)(i))) else None)
-          case None => Seq.fill(dim)(None)
-        }
-      terms.zipWithIndex.map { case (t, i) =>
-        val b = if (singular) None else Some(theta(i))
-        val se = seOpt(i)
-        val zS = for (bv <- b; s <- se if s > 0) yield bv / s
-        (t, n, ne, b, se, zS,
-          zS.map(x => math.min(1.0,
-            2.0 * graft.profile.Drift.normalSfAS(math.abs(x)))),
-          if (singular) None else lastGrad.map(_(i)))
-      }.toDF("term", "n", "n_events", "beta", "se", "z", "p_value",
-        "grad")
-    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(base)
+      table(n, ne, NewtonFit.waldRows(Some(theta),
+        NewtonFit.standardErrors(info)), Some(grad))
+    }
   }
 
   /** Cox proportional-hazards regression with Breslow tie handling — the
@@ -1584,41 +1496,31 @@ object Behavior {
       s"coxPH needs 1..8 covariates, got ${covariates.size}")
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val d = covariates.size
-    val xCols = covariates.indices.map(i => s"__x$i")
-    val base = durations
-      .filter(col(durationCol).isNotNull &&
-        covariates.map(col(_).isNotNull).reduce(_ && _))
-      .select((col(durationCol).cast("long").as("__life") +:
-        (lit(1L) - coalesce(col(censoredCol), lit(false)).cast("long"))
-          .as("__ev") +:
-        covariates.zipWithIndex.map { case (c, i) =>
-          col(c).cast("decimal(8,4)").as(xCols(i)) }): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try graft.ops.ParamFrame.withFixedPlan(durations.sparkSession) {
-      val spark = durations.sparkSession
-      import spark.implicits._
-      def nullRows(n: Long, nEvents: Long) = {
-        val df0 = covariates.map(c =>
-          (c, n, nEvents, Option.empty[Double], Option.empty[Double],
-            Option.empty[Double], Option.empty[Double],
-            Option.empty[Double]))
-          .toDF("covariate", "n", "n_events", "beta", "se", "z", "p_value",
-            "grad")
-        if (includeGradient) df0 else df0.drop("grad")
-      }
-      var beta = Array.fill(d)(0.0)
-      var lastInfo: Option[(Array[Array[Double]], Long, Long)] = None
-      var lastGrad: Array[Double] = Array.fill(d)(0.0)
-      var it = 0
-      var singular = false
+    val spark = durations.sparkSession
+    import spark.implicits._
+    def table(n: Long, nEvents: Long, w: Seq[NewtonFit.Wald],
+        grad: Option[Array[Double]]) = {
+      val out = covariates.zip(w).zipWithIndex.map {
+        case ((c, (b, se, z, p)), i) =>
+          (c, n, nEvents, b, se, z, p, grad.map(_(i))) }
+        .toDF("covariate", "n", "n_events", "beta", "se", "z", "p_value",
+          "grad")
+      if (includeGradient) out else out.drop("grad")
+    }
+    NewtonFit.withPersistedBase(NewtonFit.design(durations, Seq(durationCol),
+        Seq(col(durationCol).cast("long").as("__life"),
+          (lit(1L) - coalesce(col(censoredCol), lit(false)).cast("long"))
+            .as("__ev")), covariates)) { base =>
       // the subject count is iteration-invariant (base is persisted):
       // counting it once instead of once per pass saves a job per step
       val n = base.count()
       val baseIt = graft.ops.ParamFrame.compactForIteration(base, n)
+      val pairIdx = NewtonFit.pairs(d)
+      var nEvents = 0L
       // iterations stepping passes + ONE no-step pass that re-evaluates
       // the observed information at the converged β for the SEs
-      while (it < iterations + 1 && !singular) {
-        val finalPass = it == iterations
+      val fit = NewtonFit.run(Array.fill(d)(0.0), iterations,
+          trailing = true) { beta =>
         // β enters through a broadcast one-row parameter frame, NOT as
         // literals — see [[graft.ops.ParamFrame]]: literal β regenerated
         // the whole-stage codegen source every Newton pass. The dot
@@ -1626,22 +1528,20 @@ object Behavior {
         // covariates — the identical expression (and values) the oracle
         // writes — then quantizes so every sum below is exact
         val dot = covariates.indices.map(i =>
-          col(xCols(i)).cast("double") * graft.ops.ParamFrame.p("__cb", i))
+          col(s"__x$i").cast("double") * graft.ops.ParamFrame.p("__cb", i))
           .reduce(_ + _)
         val s = exp(dot).cast("decimal(20,12)")
-        val pairIdx = for { i <- 0 until d; j <- i until d } yield (i, j)
         val aggs =
           sum(col("__ev")).as("__d") +:
           (covariates.indices.map(i =>
-            sum(col("__ev").cast("decimal(8,0)") * col(xCols(i)))
+            sum(col("__ev").cast("decimal(8,0)") * col(s"__x$i"))
               .as(s"__sx$i")) ++
            Seq(sum(s).as("__s0")) ++
            covariates.indices.map(i =>
-             sum(s * col(xCols(i))).as(s"__s1_$i")) ++
+             sum(s * col(s"__x$i")).as(s"__s1_$i")) ++
            pairIdx.map { case (i, j) =>
-             sum(s * col(xCols(i)) * col(xCols(j))).as(s"__s2_${i}_$j") } ++
-           Seq(sum(when(s.isNull, lit(1L)).otherwise(lit(0L)))
-             .as("__overflowed")))
+             sum(s * col(s"__x$i") * col(s"__x$j")).as(s"__s2_${i}_$j") } ++
+           Seq(NewtonFit.countWhere(s.isNull).as("__overflowed")))
         val perLife = graft.ops.ParamFrame.attach(baseIt, beta.toSeq, "__cb")
           .groupBy(col("__life"))
           .agg(aggs.head, aggs.tail: _*)
@@ -1662,8 +1562,8 @@ object Behavior {
             covariates.indices.map(i => BigDecimal(r.getDecimal(3 + d + i))),
             pairIdx.indices.map(p => BigDecimal(r.getDecimal(3 + 2 * d + p))))
         }.sortBy(-_._1)
-        val nEvents = rows.map(_._2).sum
-        if (nEvents == 0) return nullRows(n, 0)
+        nEvents = rows.map(_._2).sum
+        if (nEvents == 0) return table(n, 0, NewtonFit.nullRows(d), None)
         var s0 = BigDecimal(0)
         val s1 = Array.fill(d)(BigDecimal(0))
         val s2 = Array.fill(pairIdx.size)(BigDecimal(0))
@@ -1691,102 +1591,12 @@ object Behavior {
             }
           }
         }
-        val grad = covariates.indices.map(i =>
-          sxSum(i).toDouble - gradTerm(i).toDouble).toArray
-        val info = Array.ofDim[Double](d, d)
-        pairIdx.zipWithIndex.foreach { case ((i, j), p) =>
-          info(i)(j) = infoTerm(p).toDouble; info(j)(i) = info(i)(j)
-        }
-        lastInfo = Some((info.map(_.clone()), n, nEvents))
-        lastGrad = grad.clone()
-        if (!finalPass) {
-          val step: Option[Array[Double]] =
-            if (d == 2) {
-              // the closed-form 2×2 solve the oracle mirrors verbatim
-              val det = info(0)(0) * info(1)(1) - info(0)(1) * info(0)(1)
-              if (det <= 0) None
-              else Some(Array(
-                (info(1)(1) * grad(0) - info(0)(1) * grad(1)) / det,
-                (info(0)(0) * grad(1) - info(0)(1) * grad(0)) / det))
-            } else solveSym(info.map(_.clone()), grad.clone())
-          step match {
-            case None => singular = true
-            case Some(st) =>
-              beta = beta.zip(st).map { case (b, x) => round12d(b + x) }
-          }
-        }
-        it += 1
+        (covariates.indices.map(i =>
+          sxSum(i).toDouble - gradTerm(i).toDouble).toArray,
+          NewtonFit.symmetric(d)(infoTerm(_).toDouble))
       }
-      val (info, _, nEvents) = lastInfo.getOrElse(
-        return nullRows(n, 0))
-      val seOpt: Seq[Option[Double]] =
-        if (singular) Seq.fill(d)(None)
-        else if (d == 2) {
-          val det = info(0)(0) * info(1)(1) - info(0)(1) * info(0)(1)
-          if (det <= 0) Seq.fill(d)(None)
-          else Seq(Some(math.sqrt(info(1)(1) / det)),
-            Some(math.sqrt(info(0)(0) / det)))
-        } else {
-          val inv = invertSym(info.map(_.clone()))
-          inv.map(m => covariates.indices.map(i =>
-            if (m(i)(i) > 0) Some(math.sqrt(m(i)(i)))
-            else Option.empty[Double]).toSeq)
-            .getOrElse(Seq.fill(d)(None))
-        }
-      val out = covariates.zipWithIndex.map { case (c, i) =>
-        val b = if (singular) None else Some(beta(i))
-        val se = seOpt(i)
-        val z = for (bv <- b; s <- se if s > 0) yield bv / s
-        (c, n, nEvents, b, se, z,
-          z.map(x => math.min(1.0,
-            2.0 * graft.profile.Drift.normalSfAS(math.abs(x)))),
-          if (singular) Option.empty[Double] else Some(lastGrad(i)))
-      }.toDF("covariate", "n", "n_events", "beta", "se", "z", "p_value",
-        "grad")
-      if (includeGradient) out else out.drop("grad")
-    } finally base.unpersist(false)
-  }
-
-  private def round12d(v: Double): Double =
-    BigDecimal(v).setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** Solve A·x = b for a small symmetric positive-definite A by in-place
-    * Gaussian elimination with partial pivoting; None when singular. */
-  private def solveSym(a: Array[Array[Double]],
-      b: Array[Double]): Option[Array[Double]] = {
-    val d = a.length
-    for (c <- 0 until d) {
-      val piv = (c until d).maxBy(r => math.abs(a(r)(c)))
-      if (math.abs(a(piv)(c)) < 1e-300) return None
-      if (piv != c) { val t = a(piv); a(piv) = a(c); a(c) = t
-        val tb = b(piv); b(piv) = b(c); b(c) = tb }
-      for (r <- c + 1 until d) {
-        val f = a(r)(c) / a(c)(c)
-        for (k <- c until d) a(r)(k) -= f * a(c)(k)
-        b(r) -= f * b(c)
-      }
+      table(n, nEvents, NewtonFit.waldRows(fit.coefs, fit.se()),
+        if (fit.singular) None else Some(fit.grad))
     }
-    val x = new Array[Double](d)
-    for (r <- (d - 1) to 0 by -1) {
-      var acc = b(r)
-      for (k <- r + 1 until d) acc -= a(r)(k) * x(k)
-      x(r) = acc / a(r)(r)
-    }
-    Some(x)
-  }
-
-  /** Full inverse of a small symmetric positive-definite matrix via
-    * [[solveSym]] against basis vectors; None when singular. */
-  private def invertSym(a: Array[Array[Double]])
-      : Option[Array[Array[Double]]] = {
-    val d = a.length
-    val cols = (0 until d).map { j =>
-      val e = new Array[Double](d); e(j) = 1.0
-      solveSym(a.map(_.clone()), e) match {
-        case Some(x) => x
-        case None => return None
-      }
-    }
-    Some(Array.tabulate(d, d)((i, j) => cols(j)(i)))
   }
 }

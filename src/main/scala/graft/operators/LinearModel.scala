@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.ParamFrame
+import NewtonFit.{dec, round12}
 
 /** Distributed training of a linear (logistic-regression) text classifier
   * over hashed token features — the quality-/domain-classifier step of a
@@ -31,7 +33,7 @@ import org.apache.spark.sql.functions._
   * residual rounding — and logistic regression is SMOOTH (no argmin/
   * threshold branches), so that noise stays O(1e−12) instead of flipping
   * discrete decisions. Inter-iteration 12-dp weight rounding is the
-  * [[graft.SparkEntry]] pageRank-oracle pattern.
+  * pageRank-oracle pattern of [[graft.catalog.DedupLinkage]] (q180).
   *
   * Scale shape: the token stream reduces once to per-(doc, bucket) counts
   * (map-side combined, bounded by B per doc); each iteration joins those
@@ -79,7 +81,7 @@ object LinearModel {
     val yv = yv0.repartition(pT, col("id"))
     xc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     yv.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try graft.ops.ParamFrame.withFixedPlan(spark) {
+    try ParamFrame.withFixedPlan(spark) {
       val n = yv.count().toDouble
       var w = Array.fill(numBuckets)(0.0)
       for (_ <- 1 to iterations) {
@@ -861,9 +863,6 @@ object LinearModel {
     (xc, yv)
   }
 
-  private def round12(v: Double): Double =
-    BigDecimal(v).setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** Poisson GLM (log link) by Newton–Raphson — the COUNT-outcome
     * regression ([[logregTrainHashed]] models a binary label; event/
     * defect/token counts want a rate model): y ~ Poisson(exp(β₀ + βᵀx)),
@@ -919,140 +918,41 @@ object LinearModel {
       s"poissonGlm needs 1..8 covariates, got ${covariates.size}")
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val d = covariates.size
+    val dim = d + 1
     val terms = "intercept" +: covariates
-    val xCols = covariates.indices.map(i => s"__x$i")
-    val base = df
-      .filter(col(yCol).isNotNull &&
-        covariates.map(col(_).isNotNull).reduce(_ && _))
-      .select((col(yCol).cast("long").as("__y") +:
-        covariates.zipWithIndex.map { case (c, i) =>
-          col(c).cast("decimal(8,4)").as(xCols(i)) }): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try graft.ops.ParamFrame.withFixedPlan(df.sparkSession) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      def nullRows(n: Long) =
-        if (quasi) terms.map(t =>
-          (t, n, Option.empty[Double], Option.empty[Double],
-            Option.empty[Double], Option.empty[Double],
-            Option.empty[Double]))
-          .toDF("term", "n", "phi", "beta", "se", "z", "p_value")
-        else terms.map(t =>
-          (t, n, Option.empty[Double], Option.empty[Double],
-            Option.empty[Double], Option.empty[Double]))
-          .toDF("term", "n", "beta", "se", "z", "p_value")
-      // iteration-independent response sums (exact: long + decimal)
-      val yAggs = count(lit(1)).as("__n") +: sum(col("__y")).as("__sy") +:
-        covariates.indices.map(i =>
-          sum(col("__y").cast("decimal(12,0)") * col(xCols(i)))
-            .as(s"__syx$i"))
-      val yRow = base.agg(yAggs.head, yAggs.tail: _*).head()
-      val n = yRow.getLong(0)
-      if (n == 0) return nullRows(0)
-      val sy = yRow.getLong(1).toDouble
-      if (sy == 0) return nullRows(n)
-      val syx = covariates.indices.map(i =>
-        BigDecimal(yRow.getDecimal(2 + i)).toDouble)
-      val baseIt = graft.ops.ParamFrame.compactForIteration(base, n)
-      val dim = d + 1
-      val pairIdx = for { i <- 0 until dim; j <- i until dim } yield (i, j)
+    val spark = df.sparkSession
+    import spark.implicits._
+    def table(n: Long, phi: Option[Double], w: Seq[NewtonFit.Wald]) = {
+      val out = terms.zip(w).map { case (t, (b, se, z, p)) =>
+        (t, n, phi, b, se, z, p) }
+        .toDF("term", "n", "phi", "beta", "se", "z", "p_value")
+      if (quasi) out else out.drop("phi")
+    }
+    NewtonFit.withPersistedBase(NewtonFit.design(df, Seq(yCol),
+        Seq(col(yCol).cast("long").as("__y")), covariates)) { base =>
+      val (n, sy, syx) = countSums(base, d)
+      if (n == 0 || sy == 0) return table(n, None, NewtonFit.nullRows(dim))
+      val baseIt = ParamFrame.compactForIteration(base, n)
       // standard GLM start — intercept at ln(ȳ), slopes 0: from β = 0 a
       // first Newton step overshoots by ln(ȳ) and then crawls back ~1
       // per iteration (measured: 25 steps to converge vs 4 from here)
-      var beta = Array.fill(dim)(0.0)
-      beta(0) = round12(math.log(sy / n))
-      var lastInfo: Option[Array[Array[Double]]] = None
-      var singular = false
-      var it = 0
-      // iterations stepping passes + ONE no-step pass that re-evaluates
-      // the expected information at the converged β for the SEs (reusing
-      // the in-loop information would price the SE at the penultimate β)
-      while (it < iterations + 1 && !singular) {
-        val finalPass = it == iterations
-        // η = β₀ + Σ βₖxₖ accumulated left-to-right in double — the
-        // identical expression (and values) the oracle writes — then μ
-        // quantized so every sum below is exact. β arrives via a
-        // broadcast one-row parameter frame, not literals, so the
-        // generated code is iteration-invariant ([[graft.ops.ParamFrame]])
-        val eta = covariates.indices.foldLeft(graft.ops.ParamFrame.p("__pb", 0)) { (acc, i) =>
-          acc + col(xCols(i)).cast("double") * graft.ops.ParamFrame.p("__pb", i + 1)
-        }
-        val mu = exp(eta).cast("decimal(20,12)")
-        def x(i: Int): Column =
-          if (i == 0) lit(1).cast("decimal(2,0)") else col(xCols(i - 1))
-        val aggs = (sum(mu).as("__s_0_0") +:
-          pairIdx.tail.map { case (i, j) =>
-            (if (i == 0) sum(mu * x(j)) else sum(mu * x(i) * x(j)))
-              .as(s"__s_${i}_$j")
-          }) :+ sum(when(mu.isNull, lit(1L)).otherwise(lit(0L)))
-            .as("__overflowed")
-        val r = graft.ops.ParamFrame.attach(baseIt, beta.toSeq, "__pb")
-          .agg(aggs.head, aggs.tail: _*).head()
-        // fail loudly on the non-ANSI decimal overflow: a NULL μ would
-        // silently drop its row from every moment sum and bias β/SE
-        require(r.getLong(pairIdx.size) == 0L,
-          s"poissonGlm: ${r.getLong(pairIdx.size)} row means exp(eta) " +
+      val start = Array.fill(dim)(0.0)
+      start(0) = round12(math.log(sy / n))
+      val fit = NewtonFit.run(start, iterations, trailing = true)(
+        poissonPass(baseIt, d, sy, syx, "__pb", k =>
+          s"poissonGlm: $k row means exp(eta) " +
             "overflowed DECIMAL(20,12) (|eta| > ~18.4) — feature-scale " +
-            "the covariates")
-        val s = pairIdx.indices.map(p =>
-          if (r.isNullAt(p)) 0.0 else BigDecimal(r.getDecimal(p)).toDouble)
-        val info = Array.ofDim[Double](dim, dim)
-        pairIdx.zipWithIndex.foreach { case ((i, j), p) =>
-          info(i)(j) = s(p); info(j)(i) = s(p)
-        }
-        val grad = Array.tabulate(dim)(i =>
-          if (i == 0) sy - info(0)(0) else syx(i - 1) - info(0)(i))
-        lastInfo = Some(info.map(_.clone()))
-        if (!finalPass) {
-          val step: Option[Array[Double]] =
-            if (dim == 2) {
-              // the closed-form 2×2 solve the oracle mirrors verbatim
-              val det = info(0)(0) * info(1)(1) - info(0)(1) * info(0)(1)
-              if (det <= 0) None
-              else Some(Array(
-                (info(1)(1) * grad(0) - info(0)(1) * grad(1)) / det,
-                (info(0)(0) * grad(1) - info(0)(1) * grad(0)) / det))
-            } else solveSpd(info.map(_.clone()), grad.clone())
-          step match {
-            case None => singular = true
-            case Some(st) =>
-              beta = beta.zip(st).map { case (b, v) => round12(b + v) }
-          }
-        }
-        it += 1
-      }
-      val seOpt: Seq[Option[Double]] = lastInfo match {
-        case _ if singular => Seq.fill(dim)(None)
-        case Some(info) if dim == 2 =>
-          val det = info(0)(0) * info(1)(1) - info(0)(1) * info(0)(1)
-          if (det <= 0) Seq.fill(dim)(None)
-          else Seq(Some(math.sqrt(info(1)(1) / det)),
-            Some(math.sqrt(info(0)(0) / det)))
-        case Some(info) =>
-          invertSpd(info.map(_.clone())) match {
-            case Some(inv) => (0 until dim).map(i =>
-              if (inv(i)(i) > 0) Some(math.sqrt(inv(i)(i))) else None)
-            case None => Seq.fill(dim)(None)
-          }
-        case None => Seq.fill(dim)(None)
-      }
-      if (!quasi) {
-        terms.zipWithIndex.map { case (t, i) =>
-          val b = if (singular) None else Some(beta(i))
-          val se = seOpt(i)
-          val z = for (bv <- b; s <- se if s > 0) yield bv / s
-          (t, n, b, se, z,
-            z.map(x => math.min(1.0,
-              2.0 * graft.profile.Drift.normalSfAS(math.abs(x)))))
-        }.toDF("term", "n", "beta", "se", "z", "p_value")
-      } else {
+            "the covariates"))
+      if (!quasi) table(n, None, NewtonFit.waldRows(fit.coefs, fit.se()))
+      else {
         // Pearson dispersion at the final β: one more reduce, each term
         // 12-dp-rounded before the exact decimal sum
+        val beta = fit.beta
         val phiOpt: Option[Double] =
-          if (singular || n <= dim) None
+          if (fit.singular || n <= dim) None
           else {
             val etaF = covariates.indices.foldLeft(lit(beta(0))) { (acc, i) =>
-              acc + col(xCols(i)).cast("double") * lit(beta(i + 1))
+              acc + col(s"__x$i").cast("double") * lit(beta(i + 1))
             }
             val muD = exp(etaF).cast("decimal(20,12)").cast("double")
             val yD = col("__y").cast("double")
@@ -1062,17 +962,57 @@ object LinearModel {
             if (x2Row.isNullAt(0)) None
             else Some(BigDecimal(x2Row.getDecimal(0)).toDouble / (n - dim))
           }
-        terms.zipWithIndex.map { case (t, i) =>
-          val b = if (singular) None else Some(beta(i))
-          val seQ = for (s <- seOpt(i); p <- phiOpt if p > 0)
-            yield s * math.sqrt(p)
-          val z = for (bv <- b; s <- seQ if s > 0) yield bv / s
-          (t, n, phiOpt, b, seQ, z,
-            z.map(x => math.min(1.0,
-              2.0 * graft.profile.Drift.normalSfAS(math.abs(x)))))
-        }.toDF("term", "n", "phi", "beta", "se", "z", "p_value")
+        // √φ̂ multiplies AFTER the Poisson SE: √(a/det)·√φ̂ is not
+        // bitwise √(φ̂·a/det)
+        val seQ = fit.se().map(se =>
+          for (s <- se; p <- phiOpt if p > 0) yield s * math.sqrt(p))
+        table(n, phiOpt, NewtonFit.waldRows(fit.coefs, seQ))
       }
-    } finally base.unpersist(false)
+    }
+  }
+
+  /** The count models' response pass: (n, Σy, Σy·xₖ), exact long and
+    * decimal sums over the design base; (0, 0, empty) when n = 0. */
+  private def countSums(base: DataFrame, d: Int)
+      : (Long, Double, IndexedSeq[Double]) = {
+    val yAggs = count(lit(1)).as("__n") +: sum(col("__y")).as("__sy") +:
+      (0 until d).map(i =>
+        sum(col("__y").cast("decimal(12,0)") * col(s"__x$i"))
+          .as(s"__syx$i"))
+    val yRow = base.agg(yAggs.head, yAggs.tail: _*).head()
+    val n = yRow.getLong(0)
+    if (n == 0) (0L, 0.0, IndexedSeq.empty)
+    else (n, yRow.getLong(1).toDouble, (0 until d).map(i => dec(yRow, 2 + i)))
+  }
+
+  /** One Poisson Newton pass at β (parameter prefix `pfx`): the decimal
+    * means μ = exp(η) as DECIMAL(20,12) and ONE whole-table reduce to
+    * the exact moments Σμ·xᵢ·xⱼ — the expected information — with the
+    * gradient (Σy·xᵢ − Σμ·xᵢ) read off its first row. Throws
+    * `overflow(count)` when any mean overflowed the decimal. */
+  private def poissonPass(baseIt: DataFrame, d: Int, sy: Double,
+      syx: IndexedSeq[Double], pfx: String, overflow: Long => String)(
+      beta: Array[Double]): (Array[Double], Array[Array[Double]]) = {
+    val dim = d + 1
+    val pairIdx = NewtonFit.pairs(dim)
+    // η accumulated left-to-right in double — the identical expression
+    // (and values) the oracle writes — then μ quantized so every sum
+    // below is exact
+    val mu = exp(NewtonFit.eta(d, pfx)).cast("decimal(20,12)")
+    val x = NewtonFit.xDec _
+    val aggs = (sum(mu).as("__s_0_0") +:
+      pairIdx.tail.map { case (i, j) =>
+        (if (i == 0) sum(mu * x(j)) else sum(mu * x(i) * x(j)))
+          .as(s"__s_${i}_$j")
+      }) :+ NewtonFit.countWhere(mu.isNull).as("__overflowed")
+    val r = ParamFrame.attach(baseIt, beta.toSeq, pfx)
+      .agg(aggs.head, aggs.tail: _*).head()
+    // fail loudly on the non-ANSI decimal overflow: a NULL μ would
+    // silently drop its row from every moment sum and bias β/SE
+    require(r.getLong(pairIdx.size) == 0L, overflow(r.getLong(pairIdx.size)))
+    val info = NewtonFit.symmetric(dim)(dec(r, _))
+    (Array.tabulate(dim)(i =>
+      if (i == 0) sy - info(0)(0) else syx(i - 1) - info(0)(i)), info)
   }
 
   /** Negative-binomial (NB2) GLM — the overdispersion-honest COUNT
@@ -1106,181 +1046,72 @@ object LinearModel {
     require(iterations >= 1 && poissonIterations >= 1,
       "iterations must be >= 1")
     val d = covariates.size
+    val dim = d + 1
     val terms = "intercept" +: covariates
-    val xCols = covariates.indices.map(i => s"__x$i")
-    val base = df
-      .filter(col(yCol).isNotNull &&
-        covariates.map(col(_).isNotNull).reduce(_ && _))
-      .select((col(yCol).cast("long").as("__y") +:
-        covariates.zipWithIndex.map { case (c, i) =>
-          col(c).cast("decimal(8,4)").as(xCols(i)) }): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try graft.ops.ParamFrame.withFixedPlan(df.sparkSession) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      def nullRows(n: Long) = terms.map(t =>
-        (t, n, Option.empty[Double], Option.empty[Double],
-          Option.empty[Double], Option.empty[Double],
-          Option.empty[Double]))
+    val spark = df.sparkSession
+    import spark.implicits._
+    def table(n: Long, alpha: Option[Double], w: Seq[NewtonFit.Wald]) =
+      terms.zip(w).map { case (t, (b, se, z, p)) => (t, n, alpha, b, se, z, p) }
         .toDF("term", "n", "alpha", "beta", "se", "z", "p_value")
-      val yAggs = count(lit(1)).as("__n") +: sum(col("__y")).as("__sy") +:
-        covariates.indices.map(i =>
-          sum(col("__y").cast("decimal(12,0)") * col(xCols(i)))
-            .as(s"__syx$i"))
-      val yRow = base.agg(yAggs.head, yAggs.tail: _*).head()
-      val n = yRow.getLong(0)
-      if (n == 0) return nullRows(0)
-      val sy = yRow.getLong(1).toDouble
-      if (sy == 0) return nullRows(n)
-      val syx = covariates.indices.map(i =>
-        BigDecimal(yRow.getDecimal(2 + i)).toDouble)
-      val baseIt = graft.ops.ParamFrame.compactForIteration(base, n)
-      val dim = d + 1
-      val pairIdx = for { i <- 0 until dim; j <- i until dim } yield (i, j)
+    NewtonFit.withPersistedBase(NewtonFit.design(df, Seq(yCol),
+        Seq(col(yCol).cast("long").as("__y")), covariates)) { base =>
+      val (n, sy, syx) = countSums(base, d)
+      if (n == 0 || sy == 0) return table(n, None, NewtonFit.nullRows(dim))
+      val baseIt = ParamFrame.compactForIteration(base, n)
+      val pairIdx = NewtonFit.pairs(dim)
       // β via a broadcast one-row parameter frame (not literals) so the
       // generated code is iteration-invariant ([[graft.ops.ParamFrame]]);
       // call sites attach the current β with nbAt(beta)
-      def etaOf() =
-        covariates.indices.foldLeft(graft.ops.ParamFrame.p("__nb", 0)) { (acc, i) =>
-          acc + col(xCols(i)).cast("double") * graft.ops.ParamFrame.p("__nb", i + 1)
-        }
-      def muOf() = exp(etaOf()).cast("decimal(20,12)")
-      def nbAt(beta: Array[Double]) =
-        graft.ops.ParamFrame.attach(baseIt, beta.toSeq, "__nb")
-      def xD(i: Int): Column =
-        if (i == 0) lit(1.0) else col(xCols(i - 1)).cast("double")
+      def muOf() = exp(NewtonFit.eta(d, "__nb")).cast("decimal(20,12)")
+      def nbAt(beta: Array[Double]) = ParamFrame.attach(baseIt, beta.toSeq, "__nb")
+      def overflow(k: Long) = s"negativeBinomialGlm: $k row means exp(eta) " +
+        "overflowed DECIMAL(20,12) — feature-scale the covariates"
       def guard(r: org.apache.spark.sql.Row, o: Int): Unit =
-        require(r.getLong(o) == 0L,
-          s"negativeBinomialGlm: ${r.getLong(o)} row means exp(eta) " +
-            "overflowed DECIMAL(20,12) — feature-scale the covariates")
-      // ---- Poisson warm-up: the poissonGlm Newton loop verbatim ----
-      var beta = Array.fill(dim)(0.0)
-      beta(0) = round12(math.log(sy / n))
-      var singular = false
-      var it = 0
-      while (it < poissonIterations && !singular) {
-        val mu = muOf()
-        def x(i: Int): Column =
-          if (i == 0) lit(1).cast("decimal(2,0)") else col(xCols(i - 1))
-        val aggs = (sum(mu).as("__s_0_0") +:
-          pairIdx.tail.map { case (i, j) =>
-            (if (i == 0) sum(mu * x(j)) else sum(mu * x(i) * x(j)))
-              .as(s"__s_${i}_$j")
-          }) :+ sum(when(mu.isNull, lit(1L)).otherwise(lit(0L)))
-            .as("__overflowed")
-        val r = nbAt(beta).agg(aggs.head, aggs.tail: _*).head()
-        guard(r, pairIdx.size)
-        val s = pairIdx.indices.map(p =>
-          if (r.isNullAt(p)) 0.0 else BigDecimal(r.getDecimal(p)).toDouble)
-        val info = Array.ofDim[Double](dim, dim)
-        pairIdx.zipWithIndex.foreach { case ((i, j), p) =>
-          info(i)(j) = s(p); info(j)(i) = s(p)
-        }
-        val grad = Array.tabulate(dim)(i =>
-          if (i == 0) sy - info(0)(0) else syx(i - 1) - info(0)(i))
-        val step =
-          if (dim == 2) {
-            val det = info(0)(0) * info(1)(1) - info(0)(1) * info(0)(1)
-            if (det <= 0) None
-            else Some(Array(
-              (info(1)(1) * grad(0) - info(0)(1) * grad(1)) / det,
-              (info(0)(0) * grad(1) - info(0)(1) * grad(0)) / det))
-          } else solveSpd(info.map(_.clone()), grad.clone())
-        step match {
-          case None => singular = true
-          case Some(st) =>
-            beta = beta.zip(st).map { case (b, v) => round12(b + v) }
-        }
-        it += 1
-      }
-      if (singular) return nullRows(n)
+        require(r.getLong(o) == 0L, overflow(r.getLong(o)))
+      // ---- Poisson warm-up: the poissonGlm pass, no trailing pass ----
+      val start = Array.fill(dim)(0.0)
+      start(0) = round12(math.log(sy / n))
+      val warm = NewtonFit.run(start, poissonIterations, trailing = false)(
+        poissonPass(baseIt, d, sy, syx, "__nb", overflow))
+      if (warm.singular) return table(n, None, NewtonFit.nullRows(dim))
       // ---- moment dispersion at the Poisson fit ----
       val alpha = {
         val mu = muOf()
         val muD = mu.cast("double"); val yD = col("__y").cast("double")
-        val r = nbAt(beta).agg(
+        val r = nbAt(warm.beta).agg(
           sum(round((yD - muD) * (yD - muD) - muD, 12)
             .cast("decimal(28,12)")).as("__num"),
           sum(round(muD * muD, 12).cast("decimal(28,12)")).as("__den"),
-          sum(when(mu.isNull, lit(1L)).otherwise(lit(0L)))
-            .as("__overflowed")).head()
+          NewtonFit.countWhere(mu.isNull).as("__overflowed")).head()
         guard(r, 2)
-        val den = if (r.isNullAt(1)) 0.0
-          else BigDecimal(r.getDecimal(1)).toDouble
+        val den = dec(r, 1)
         if (den <= 0) 0.0
         else round12(math.max(0.0,
           BigDecimal(r.getDecimal(0)).toDouble / den))
       }
       // ---- NB2 Fisher scoring at fixed alpha, from the Poisson beta ----
-      var lastInfo: Option[Array[Array[Double]]] = None
-      it = 0
-      while (it < iterations + 1 && !singular) {
-        val finalPass = it == iterations
+      val x = NewtonFit.xDbl _
+      val fit = NewtonFit.run(warm.beta, iterations, trailing = true) { beta =>
         val mu = muOf()
         val muD = mu.cast("double"); val yD = col("__y").cast("double")
         val denomW = lit(1.0) + lit(alpha) * muD
         val gradAggs = (0 until dim).map(i =>
-          sum(round((yD - muD) / denomW * xD(i), 12)
+          sum(round((yD - muD) / denomW * x(i), 12)
             .cast("decimal(28,12)")).as(s"__g$i"))
         val infoAggs = pairIdx.map { case (i, j) =>
-          sum(round(muD / denomW * xD(i) * xD(j), 12)
+          sum(round(muD / denomW * x(i) * x(j), 12)
             .cast("decimal(28,12)")).as(s"__h_${i}_$j")
         }
         val aggs = (gradAggs ++ infoAggs) :+
-          sum(when(mu.isNull, lit(1L)).otherwise(lit(0L)))
-            .as("__overflowed")
+          NewtonFit.countWhere(mu.isNull).as("__overflowed")
         val r = nbAt(beta).agg(aggs.head, aggs.tail: _*).head()
         guard(r, dim + pairIdx.size)
-        def dec(o: Int): Double =
-          if (r.isNullAt(o)) 0.0 else BigDecimal(r.getDecimal(o)).toDouble
-        val grad = Array.tabulate(dim)(dec)
-        val info = Array.ofDim[Double](dim, dim)
-        pairIdx.zipWithIndex.foreach { case ((i, j), p) =>
-          info(i)(j) = dec(dim + p); info(j)(i) = info(i)(j)
-        }
-        lastInfo = Some(info.map(_.clone()))
-        if (!finalPass) {
-          val step =
-            if (dim == 2) {
-              // the closed-form 2×2 solve the oracle mirrors verbatim
-              val det = info(0)(0) * info(1)(1) - info(0)(1) * info(0)(1)
-              if (det <= 0) None
-              else Some(Array(
-                (info(1)(1) * grad(0) - info(0)(1) * grad(1)) / det,
-                (info(0)(0) * grad(1) - info(0)(1) * grad(0)) / det))
-            } else solveSpd(info.map(_.clone()), grad.clone())
-          step match {
-            case None => singular = true
-            case Some(st) =>
-              beta = beta.zip(st).map { case (b, v) => round12(b + v) }
-          }
-        }
-        it += 1
+        (Array.tabulate(dim)(dec(r, _)),
+          NewtonFit.symmetric(dim)(p => dec(r, dim + p)))
       }
-      val seOpt: Seq[Option[Double]] = lastInfo match {
-        case _ if singular => Seq.fill(dim)(None)
-        case Some(info) if dim == 2 =>
-          val det = info(0)(0) * info(1)(1) - info(0)(1) * info(0)(1)
-          if (det <= 0) Seq.fill(dim)(None)
-          else Seq(Some(math.sqrt(info(1)(1) / det)),
-            Some(math.sqrt(info(0)(0) / det)))
-        case Some(info) =>
-          invertSpd(info.map(_.clone())) match {
-            case Some(inv) => (0 until dim).map(i =>
-              if (inv(i)(i) > 0) Some(math.sqrt(inv(i)(i))) else None)
-            case None => Seq.fill(dim)(None)
-          }
-        case None => Seq.fill(dim)(None)
-      }
-      terms.zipWithIndex.map { case (t, i) =>
-        val b = if (singular) None else Some(beta(i))
-        val se = seOpt(i)
-        val z = for (bv <- b; s <- se if s > 0) yield bv / s
-        (t, n, if (singular) None else Some(alpha), b, se, z,
-          z.map(x => math.min(1.0,
-            2.0 * graft.profile.Drift.normalSfAS(math.abs(x)))))
-      }.toDF("term", "n", "alpha", "beta", "se", "z", "p_value")
-    } finally base.unpersist(false)
+      table(n, if (fit.singular) None else Some(alpha),
+        NewtonFit.waldRows(fit.coefs, fit.se()))
+    }
   }
 
   /** Gamma GLM (log link) by Fisher scoring — the POSITIVE-CONTINUOUS
@@ -1317,128 +1148,74 @@ object LinearModel {
       s"gammaGlm needs 1..8 covariates, got ${covariates.size}")
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val d = covariates.size
+    val dim = d + 1
     val terms = "intercept" +: covariates
-    val xCols = covariates.indices.map(i => s"__x$i")
-    val base = df
-      .filter(col(yCol).isNotNull &&
-        covariates.map(col(_).isNotNull).reduce(_ && _))
-      .select((col(yCol).cast("decimal(18,6)").as("__y") +:
-        covariates.zipWithIndex.map { case (c, i) =>
-          col(c).cast("decimal(8,4)").as(xCols(i)) }): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try graft.ops.ParamFrame.withFixedPlan(df.sparkSession) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      def nullRows(n: Long) = terms.map(t =>
-        (t, n, Option.empty[Double], Option.empty[Double],
-          Option.empty[Double], Option.empty[Double],
-          Option.empty[Double]))
+    val spark = df.sparkSession
+    import spark.implicits._
+    def table(n: Long, phi: Option[Double], w: Seq[NewtonFit.Wald]) =
+      terms.zip(w).map { case (t, (b, se, z, p)) => (t, n, phi, b, se, z, p) }
         .toDF("term", "n", "phi", "beta", "se", "z", "p_value")
-      val dim = d + 1
-      val pairIdx = for { i <- 0 until dim; j <- i until dim } yield (i, j)
-      def x(i: Int): Column =
-        if (i == 0) lit(1).cast("decimal(2,0)") else col(xCols(i - 1))
-      def xD(i: Int): Column =
-        if (i == 0) lit(1.0) else col(xCols(i - 1)).cast("double")
+    NewtonFit.withPersistedBase(NewtonFit.design(df, Seq(yCol),
+        Seq(col(yCol).cast("decimal(18,6)").as("__y")), covariates)) { base =>
+      val x = NewtonFit.xDec _
       // one pass: n, Σy (exact), min y (the positivity guard), and the
       // constant XᵀX — the Fisher information is iteration-independent
       val aggs0 = count(lit(1)).as("__n") +: sum(col("__y")).as("__sy") +:
         min(col("__y")).as("__ymin") +:
-        pairIdx.map { case (i, j) => sum(x(i) * x(j)).as(s"__s_${i}_$j") }
+        NewtonFit.pairs(dim).map { case (i, j) =>
+          sum(x(i) * x(j)).as(s"__s_${i}_$j") }
       val r0 = base.agg(aggs0.head, aggs0.tail: _*).head()
       val n = r0.getLong(0)
-      if (n == 0) return nullRows(0)
+      if (n == 0) return table(0, None, NewtonFit.nullRows(dim))
       require(BigDecimal(r0.getDecimal(2)) > 0,
         s"gammaGlm needs y > 0, got min(y) = ${r0.getDecimal(2)}")
       val sy = BigDecimal(r0.getDecimal(1)).toDouble
-      val baseIt = graft.ops.ParamFrame.compactForIteration(base, n)
-      val info = Array.ofDim[Double](dim, dim)
-      pairIdx.zipWithIndex.foreach { case ((i, j), p) =>
-        val v = if (r0.isNullAt(3 + p)) 0.0
-          else BigDecimal(r0.getDecimal(3 + p)).toDouble
-        info(i)(j) = v; info(j)(i) = v
-      }
-      if (n <= dim) return nullRows(n)
-      var beta = Array.fill(dim)(0.0)
-      beta(0) = round12(math.log(sy / n))
-      var singular = false
-      var it = 0
+      val baseIt = ParamFrame.compactForIteration(base, n)
+      val info = NewtonFit.symmetric(dim)(p => dec(r0, 3 + p))
+      if (n <= dim) return table(n, None, NewtonFit.nullRows(dim))
+      val start = Array.fill(dim)(0.0)
+      start(0) = round12(math.log(sy / n))
       // β via a broadcast one-row parameter frame (not literals) so the
       // generated code is iteration-invariant ([[graft.ops.ParamFrame]])
-      def etaOf() =
-        covariates.indices.foldLeft(graft.ops.ParamFrame.p("__gb", 0)) { (acc, i) =>
-          acc + col(xCols(i)).cast("double") * graft.ops.ParamFrame.p("__gb", i + 1)
-        }
-      while (it < iterations && !singular) {
+      def etaOf() = NewtonFit.eta(d, "__gb")
+      val yD = col("__y").cast("double")
+      // each scoring pass reduces only the score Σ(y/μ − 1)·x; the step
+      // solves against the constant XᵀX (φ cancels in the step)
+      val fit = NewtonFit.run(start, iterations, trailing = false) { beta =>
         val muD = exp(etaOf()).cast("decimal(20,12)").cast("double")
-        val yD = col("__y").cast("double")
-        val scoreAggs = covariates.indices.map(i =>
-          sum(round((yD / muD - lit(1.0)) * xD(i + 1), 12)
-            .cast("decimal(28,12)")).as(s"__g${i + 1}")) :+
+        val scoreAggs = (1 to d).map(i =>
+          sum(round((yD / muD - lit(1.0)) * NewtonFit.xDbl(i), 12)
+            .cast("decimal(28,12)")).as(s"__g$i")) :+
           sum(round(yD / muD - lit(1.0), 12).cast("decimal(28,12)"))
             .as("__g0") :+
-          sum(when(exp(etaOf()).cast("decimal(20,12)").isNull, 1L)
-            .otherwise(0L)).as("__overflowed")
-        val r = graft.ops.ParamFrame.attach(baseIt, beta.toSeq, "__gb")
+          NewtonFit.countWhere(exp(etaOf()).cast("decimal(20,12)").isNull)
+            .as("__overflowed")
+        val r = ParamFrame.attach(baseIt, beta.toSeq, "__gb")
           .agg(scoreAggs.head, scoreAggs.tail: _*).head()
         require(r.getLong(d + 1) == 0L,
           s"gammaGlm: ${r.getLong(d + 1)} row means exp(eta) overflowed " +
             "DECIMAL(20,12) (|eta| > ~18.4) — feature-scale the covariates")
-        def dec(o: Int): Double =
-          if (r.isNullAt(o)) 0.0 else BigDecimal(r.getDecimal(o)).toDouble
-        val grad = Array.tabulate(dim)(i =>
-          if (i == 0) dec(d) else dec(i - 1))
-        val step: Option[Array[Double]] =
-          if (dim == 2) {
-            // the closed-form 2×2 solve the oracle mirrors verbatim
-            val det = info(0)(0) * info(1)(1) - info(0)(1) * info(0)(1)
-            if (det <= 0) None
-            else Some(Array(
-              (info(1)(1) * grad(0) - info(0)(1) * grad(1)) / det,
-              (info(0)(0) * grad(1) - info(0)(1) * grad(0)) / det))
-          } else solveSpd(info.map(_.clone()), grad.clone())
-        step match {
-          case None => singular = true
-          case Some(st) =>
-            beta = beta.zip(st).map { case (b, v) => round12(b + v) }
-        }
-        it += 1
+        (Array.tabulate(dim)(i => if (i == 0) dec(r, d) else dec(r, i - 1)),
+          info)
       }
-      if (singular) return nullRows(n)
+      if (fit.singular) return table(n, None, NewtonFit.nullRows(dim))
       // trailing pass at the REPORTED β: Pearson dispersion for gamma,
       // Σ((y−μ)/μ)² — each term 12-dp-rounded before the exact sum
       val muF = exp(etaOf()).cast("decimal(20,12)").cast("double")
-      val yD = col("__y").cast("double")
-      val x2Row = graft.ops.ParamFrame.attach(baseIt, beta.toSeq, "__gb").agg(
+      val x2Row = ParamFrame.attach(baseIt, fit.beta.toSeq, "__gb").agg(
         sum(round((yD - muF) * (yD - muF) / (muF * muF), 12)
           .cast("decimal(28,12)")).as("__x2"),
-        sum(when(exp(etaOf()).cast("decimal(20,12)").isNull, 1L)
-          .otherwise(0L)).as("__ovf")).head()
+        NewtonFit.countWhere(exp(etaOf()).cast("decimal(20,12)").isNull)
+          .as("__ovf")).head()
       require(x2Row.getLong(1) == 0L,
         "gammaGlm: final-pass exp(eta) overflowed DECIMAL(20,12)")
       val phi =
         if (x2Row.isNullAt(0)) 0.0
         else BigDecimal(x2Row.getDecimal(0)).toDouble / (n - dim)
-      val seOpt: Seq[Option[Double]] =
-        if (dim == 2) {
-          val det = info(0)(0) * info(1)(1) - info(0)(1) * info(0)(1)
-          if (det <= 0 || phi <= 0) Seq.fill(dim)(None)
-          else Seq(Some(math.sqrt(phi * info(1)(1) / det)),
-            Some(math.sqrt(phi * info(0)(0) / det)))
-        } else invertSpd(info.map(_.clone())) match {
-          case Some(inv) if phi > 0 => (0 until dim).map(i =>
-            if (inv(i)(i) > 0) Some(math.sqrt(phi * inv(i)(i))) else None)
-          case _ => Seq.fill(dim)(None)
-        }
-      terms.zipWithIndex.map { case (t, i) =>
-        val b = Some(beta(i))
-        val se = seOpt(i)
-        val z = for (bv <- b; s <- se if s > 0) yield bv / s
-        (t, n, if (phi > 0) Some(phi) else None, b, se, z,
-          z.map(x => math.min(1.0,
-            2.0 * graft.profile.Drift.normalSfAS(math.abs(x)))))
-      }.toDF("term", "n", "phi", "beta", "se", "z", "p_value")
-    } finally base.unpersist(false)
+      // SE = √(φ̂·(XᵀX)⁻¹ⱼⱼ)
+      table(n, if (phi > 0) Some(phi) else None,
+        NewtonFit.waldRows(fit.coefs, fit.se(phi)))
+    }
   }
 
   /** Binomial (logistic) GLM by Newton–Raphson/IRLS — the plain
@@ -1476,124 +1253,67 @@ object LinearModel {
       s"binomialGlm needs 1..8 covariates, got ${covariates.size}")
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     val d = covariates.size
+    val dim = d + 1
     val terms = "intercept" +: covariates
-    val xCols = covariates.indices.map(i => s"__x$i")
-    val base = df
-      .filter(col(yCol).isNotNull &&
-        covariates.map(col(_).isNotNull).reduce(_ && _))
-      .select((col(yCol).cast("long").as("__y") +:
-        covariates.zipWithIndex.map { case (c, i) =>
-          col(c).cast("decimal(8,4)").as(xCols(i)) }): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try graft.ops.ParamFrame.withFixedPlan(df.sparkSession) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      def nullRows(n: Long) = terms.map(t =>
-        (t, n, Option.empty[Double], Option.empty[Double],
-          Option.empty[Double], Option.empty[Double]))
+    val spark = df.sparkSession
+    import spark.implicits._
+    def table(n: Long, w: Seq[NewtonFit.Wald]) =
+      terms.zip(w).map { case (t, (b, se, z, p)) => (t, n, b, se, z, p) }
         .toDF("term", "n", "beta", "se", "z", "p_value")
+    NewtonFit.withPersistedBase(NewtonFit.design(df, Seq(yCol),
+        Seq(col(yCol).cast("long").as("__y")), covariates)) { base =>
       val yAggs = count(lit(1)).as("__n") +: sum(col("__y")).as("__sy") +:
         min(col("__y")).as("__ymin") +: max(col("__y")).as("__ymax") +:
-        covariates.indices.map(i =>
-          sum(col("__y").cast("decimal(12,0)") * col(xCols(i)))
-            .as(s"__syx$i"))
+        (1 to d).map(i =>
+          sum(col("__y").cast("decimal(12,0)") * NewtonFit.xDec(i))
+            .as(s"__syx${i - 1}"))
       val yRow = base.agg(yAggs.head, yAggs.tail: _*).head()
       val n = yRow.getLong(0)
-      if (n == 0) return nullRows(0)
+      if (n == 0) return table(0, NewtonFit.nullRows(dim))
       require(yRow.getLong(2) >= 0L && yRow.getLong(3) <= 1L,
         s"binomialGlm needs a 0/1 response, got values in " +
           s"[${yRow.getLong(2)}, ${yRow.getLong(3)}]")
       val sy = yRow.getLong(1).toDouble
-      if (sy == 0 || sy == n) return nullRows(n)
-      val syx = covariates.indices.map(i =>
-        BigDecimal(yRow.getDecimal(4 + i)).toDouble)
-      val baseIt = graft.ops.ParamFrame.compactForIteration(base, n)
-      val dim = d + 1
-      val pairIdx = for { i <- 0 until dim; j <- i until dim } yield (i, j)
-      var beta = Array.fill(dim)(0.0)
-      beta(0) = round12(math.log(sy / (n - sy)))
-      var lastInfo: Option[Array[Array[Double]]] = None
-      var singular = false
-      var it = 0
-      // iterations stepping passes + ONE no-step pass: SE at reported β
-      while (it < iterations + 1 && !singular) {
-        val finalPass = it == iterations
+      if (sy == 0 || sy == n) return table(n, NewtonFit.nullRows(dim))
+      val syx = (0 until d).map(i => dec(yRow, 4 + i))
+      val baseIt = ParamFrame.compactForIteration(base, n)
+      val pairIdx = NewtonFit.pairs(dim)
+      val start = Array.fill(dim)(0.0)
+      start(0) = round12(math.log(sy / (n - sy)))
+      val fit = NewtonFit.run(start, iterations, trailing = true) { beta =>
         // β via a broadcast one-row parameter frame (not literals) so the
-        // generated code is iteration-invariant ([[graft.ops.ParamFrame]])
-        val eta = covariates.indices.foldLeft(graft.ops.ParamFrame.p("__bb", 0)) { (acc, i) =>
-          acc + col(xCols(i)).cast("double") * graft.ops.ParamFrame.p("__bb", i + 1)
-        }
+        // generated code is iteration-invariant ([[graft.ops.ParamFrame]]).
         // μ rounds to 12 dp BEFORE every use, so both engines derive the
         // IRLS weight w = μ(1−μ) from the identical decimal
-        val mu = round(lit(1.0) / (lit(1.0) + exp(-eta)), 12)
+        val mu = round(lit(1.0) / (lit(1.0) + exp(-NewtonFit.eta(d, "__bb"))), 12)
           .cast("decimal(14,12)")
         val muD = mu.cast("double")
-        def x(i: Int): Column =
-          if (i == 0) lit(1).cast("decimal(2,0)") else col(xCols(i - 1))
-        def xD(i: Int): Column =
-          if (i == 0) lit(1.0) else col(xCols(i - 1)).cast("double")
+        val x = NewtonFit.xDbl _
         // gradient moments: Σμ and Σμxₖ, exact decimal sums
         val gradAggs = sum(mu).as("__g0") +:
-          covariates.indices.map(i => sum(mu * x(i + 1)).as(s"__g${i + 1}"))
+          (1 to d).map(i => sum(mu * NewtonFit.xDec(i)).as(s"__g$i"))
         // information: w·xᵢ·xⱼ rounded to 12 dp per row, exact decimal sum
         val infoAggs = pairIdx.map { case (i, j) =>
-          sum(round(muD * (lit(1.0) - muD) * xD(i) * xD(j), 12)
+          sum(round(muD * (lit(1.0) - muD) * x(i) * x(j), 12)
             .cast("decimal(28,12)")).as(s"__h_${i}_$j")
         }
         val aggs = gradAggs ++ infoAggs
-        val r = graft.ops.ParamFrame.attach(baseIt, beta.toSeq, "__bb")
+        val r = ParamFrame.attach(baseIt, beta.toSeq, "__bb")
           .agg(aggs.head, aggs.tail: _*).head()
-        def dec(o: Int): Double =
-          if (r.isNullAt(o)) 0.0 else BigDecimal(r.getDecimal(o)).toDouble
-        val grad = Array.tabulate(dim)(i =>
-          (if (i == 0) sy else syx(i - 1)) - dec(i))
-        val info = Array.ofDim[Double](dim, dim)
-        pairIdx.zipWithIndex.foreach { case ((i, j), p) =>
-          info(i)(j) = dec(dim + p); info(j)(i) = info(i)(j)
-        }
-        lastInfo = Some(info.map(_.clone()))
-        if (!finalPass) {
-          val step: Option[Array[Double]] =
-            if (dim == 2) {
-              // the closed-form 2×2 solve the oracle mirrors verbatim
-              val det = info(0)(0) * info(1)(1) - info(0)(1) * info(0)(1)
-              if (det <= 0) None
-              else Some(Array(
-                (info(1)(1) * grad(0) - info(0)(1) * grad(1)) / det,
-                (info(0)(0) * grad(1) - info(0)(1) * grad(0)) / det))
-            } else solveSpd(info.map(_.clone()), grad.clone())
-          step match {
-            case None => singular = true
-            case Some(st) =>
-              beta = beta.zip(st).map { case (b, v) => round12(b + v) }
-          }
-        }
-        it += 1
+        (Array.tabulate(dim)(i => (if (i == 0) sy else syx(i - 1)) - dec(r, i)),
+          NewtonFit.symmetric(dim)(p => dec(r, dim + p)))
       }
-      val seOpt: Seq[Option[Double]] = lastInfo match {
-        case _ if singular => Seq.fill(dim)(None)
-        case Some(info) if dim == 2 =>
-          val det = info(0)(0) * info(1)(1) - info(0)(1) * info(0)(1)
-          if (det <= 0) Seq.fill(dim)(None)
-          else Seq(Some(math.sqrt(info(1)(1) / det)),
-            Some(math.sqrt(info(0)(0) / det)))
-        case Some(info) =>
-          invertSpd(info.map(_.clone())) match {
-            case Some(inv) => (0 until dim).map(i =>
-              if (inv(i)(i) > 0) Some(math.sqrt(inv(i)(i))) else None)
-            case None => Seq.fill(dim)(None)
-          }
-        case None => Seq.fill(dim)(None)
-      }
-      terms.zipWithIndex.map { case (t, i) =>
-        val b = if (singular) None else Some(beta(i))
-        val se = seOpt(i)
-        val z = for (bv <- b; s <- se if s > 0) yield bv / s
-        (t, n, b, se, z,
-          z.map(x => math.min(1.0,
-            2.0 * graft.profile.Drift.normalSfAS(math.abs(x)))))
-      }.toDF("term", "n", "beta", "se", "z", "p_value")
-    } finally base.unpersist(false)
+      table(n, NewtonFit.waldRows(fit.coefs, fit.se()))
+    }
+  }
+
+  /** The [[binomialGlm]] propensity fit of `treatCol` on `covariates`:
+    * β by term, None when the fit degenerates (NULL β). */
+  private def propensityBetas(cc: DataFrame, treatCol: String,
+      covariates: Seq[String], iterations: Int): Option[Map[String, Double]] = {
+    val rows = binomialGlm(cc, treatCol, covariates, iterations).collect()
+    if (rows.exists(r => r.isNullAt(r.fieldIndex("beta")))) None
+    else Some(rows.map(r => r.getString(0) -> r.getAs[Double]("beta")).toMap)
   }
 
   /** Inverse-propensity-weighted average treatment effect (Hájek) — the
@@ -1632,14 +1352,11 @@ object LinearModel {
     val cc = df.filter(col(treatCol).isNotNull &&
       col(outcomeCol).isNotNull &&
       covariates.map(col(_).isNotNull).reduce(_ && _))
-    val fit = binomialGlm(cc, treatCol, covariates, iterations)
-      .collect().map(r => r.getString(0) ->
-        (if (r.isNullAt(r.fieldIndex("beta"))) None
-         else Some(r.getAs[Double]("beta")))).toMap
+    val fitOpt = propensityBetas(cc, treatCol, covariates, iterations)
     val n0 = cc.count()
-    if (fit.values.exists(_.isEmpty)) return nullRow(n0, -1L)
-    val b0 = fit("intercept").get
-    val bs = covariates.map(c => fit(c).get)
+    val fit = fitOpt.getOrElse(return nullRow(n0, -1L))
+    val b0 = fit("intercept")
+    val bs = covariates.map(fit)
     val xCols = covariates.indices.map(i => s"__x$i")
     val base = cc.select((col(treatCol).cast("long").as("__t") +:
       col(outcomeCol).cast("double").as("__yo") +:
@@ -1675,11 +1392,9 @@ object LinearModel {
       .head()
     val sphi = if (v.isNullAt(0)) 0.0 else BigDecimal(v.getDecimal(0)).toDouble
     val se = math.sqrt(math.max(sphi, 0.0)) / n
-    val z = if (se > 0) Some(ate / se) else None
-    Seq((n, nt, Some(mu1), Some(mu0), Some(ate),
-        if (se > 0) Some(se) else None, z,
-        z.map(x => math.min(1.0,
-          2.0 * graft.profile.Drift.normalSfAS(math.abs(x))))))
+    val (ateW, seW, z, pv) =
+      NewtonFit.wald(Some(ate), if (se > 0) Some(se) else None)
+    Seq((n, nt, Some(mu1), Some(mu0), ateW, seW, z, pv))
       .toDF("n", "n_treated", "mu_treated", "mu_control", "ate", "se",
         "z", "p_value")
   }
@@ -1720,16 +1435,12 @@ object LinearModel {
       .toDF("n", "n_treated", "ate", "se", "z", "p_value")
     val cc = df.filter(col(treatCol).isNotNull &&
       col(outcomeCol).isNotNull && col(covariate).isNotNull)
-    val fit = binomialGlm(cc, treatCol, Seq(covariate), iterations)
-      .collect().map(r => r.getString(0) ->
-        (if (r.isNullAt(r.fieldIndex("beta"))) None
-         else Some(r.getAs[Double]("beta")))).toMap
+    val fitOpt = propensityBetas(cc, treatCol, Seq(covariate), iterations)
     val base = cc.select(col(treatCol).cast("long").as("__t"),
       col(outcomeCol).cast("long").as("__yo"),
       col(covariate).cast("decimal(8,4)").as("__x"))
-    if (fit.values.exists(_.isEmpty))
-      return nullRow(base.count(), -1L)
-    val (b0, b1) = (fit("intercept").get, fit(covariate).get)
+    val fit = fitOpt.getOrElse(return nullRow(base.count(), -1L))
+    val (b0, b1) = (fit("intercept"), fit(covariate))
     // per-arm OLS moments in one exact reduce
     val tD = col("__t")
     def armAggs(t1: Boolean) = {
@@ -1789,10 +1500,9 @@ object LinearModel {
     val ate = round12(sp / n)
     val se = math.sqrt(math.max(sp2 - 2.0 * ate * sp + n * ate * ate,
       0.0)) / n
-    val z = if (se > 0) Some(ate / se) else None
-    Seq((n, n1, Some(ate), if (se > 0) Some(se) else None, z,
-        z.map(x => math.min(1.0,
-          2.0 * graft.profile.Drift.normalSfAS(math.abs(x))))))
+    val (ateW, seW, z, pv) =
+      NewtonFit.wald(Some(ate), if (se > 0) Some(se) else None)
+    Seq((n, n1, ateW, seW, z, pv))
       .toDF("n", "n_treated", "ate", "se", "z", "p_value")
   }
 
@@ -1839,12 +1549,9 @@ object LinearModel {
         "p_value")
     val cc = df.filter(col(treatCol).isNotNull &&
       col(outcomeCol).isNotNull && col(covariate).isNotNull)
-    val fit = binomialGlm(cc, treatCol, Seq(covariate), iterations)
-      .collect().map(r => r.getString(0) ->
-        (if (r.isNullAt(r.fieldIndex("beta"))) None
-         else Some(r.getAs[Double]("beta")))).toMap
-    if (fit.values.exists(_.isEmpty)) return nullRow(cc.count(), -1L, 0L)
-    val (b0, b1) = (fit("intercept").get, fit(covariate).get)
+    val fit = propensityBetas(cc, treatCol, Seq(covariate), iterations)
+      .getOrElse(return nullRow(cc.count(), -1L, 0L))
+    val (b0, b1) = (fit("intercept"), fit(covariate))
     val base = cc.select(col(treatCol).cast("long").as("__t"),
         col(outcomeCol).cast("long").as("__yo"),
         col(covariate).cast("decimal(8,4)").as("__x"))
@@ -1886,11 +1593,8 @@ object LinearModel {
         else math.max((sy0 - sy0.toDouble * sy0 / n0) / (n0 - 1.0), 0.0)
       w * w * (v1 / n1 + v0 / n0)
     }.sum
-    val seOpt: Option[Double] = Some(math.sqrt(v))
-    val z = for (s <- seOpt if s > 0) yield att / s
-    Seq((n, nt, strata.toLong, usable.length.toLong, Some(att), seOpt, z,
-        z.map(x => math.min(1.0,
-          2.0 * graft.profile.Drift.normalSfAS(math.abs(x))))))
+    val (attW, seW, z, pv) = NewtonFit.wald(Some(att), Some(math.sqrt(v)))
+    Seq((n, nt, strata.toLong, usable.length.toLong, attW, seW, z, pv))
       .toDF("n", "n_treated", "k_strata", "k_used", "att", "se", "z",
         "p_value")
   }
@@ -1934,49 +1638,6 @@ object LinearModel {
       .select(col("id"), col("category"),
         ((col("__syg") - col("__y") + lit(smoothing) * lit(prior)) /
           (col("__ng") - 1 + lit(smoothing))).as("encoded"))
-  }
-
-  /** Solve A·x = b for a small symmetric positive-definite A by in-place
-    * Gaussian elimination with partial pivoting; None when singular. */
-  private[operators] def solveSpd(a: Array[Array[Double]],
-      b: Array[Double]): Option[Array[Double]] = {
-    val dm = a.length
-    for (c <- 0 until dm) {
-      var piv = c
-      for (r <- c + 1 until dm) if (math.abs(a(r)(c)) > math.abs(a(piv)(c))) piv = r
-      if (a(piv)(c) == 0.0) return None
-      if (piv != c) {
-        val tmp = a(piv); a(piv) = a(c); a(c) = tmp
-        val tb = b(piv); b(piv) = b(c); b(c) = tb
-      }
-      for (r <- c + 1 until dm) {
-        val f = a(r)(c) / a(c)(c)
-        for (k <- c until dm) a(r)(k) -= f * a(c)(k)
-        b(r) -= f * b(c)
-      }
-    }
-    val x = new Array[Double](dm)
-    for (r <- dm - 1 to 0 by -1) {
-      var acc = b(r)
-      for (k <- r + 1 until dm) acc -= a(r)(k) * x(k)
-      x(r) = acc / a(r)(r)
-    }
-    Some(x)
-  }
-
-  /** Invert a small symmetric positive-definite matrix column by column
-    * via [[solveSpd]]; None when singular. */
-  private[operators] def invertSpd(a: Array[Array[Double]])
-      : Option[Array[Array[Double]]] = {
-    val dm = a.length
-    val cols = (0 until dm).map { j =>
-      val e = Array.tabulate(dm)(i => if (i == j) 1.0 else 0.0)
-      solveSpd(a.map(_.clone()), e) match {
-        case Some(c) => c
-        case None => return None
-      }
-    }
-    Some(Array.tabulate(dm, dm)((i, j) => cols(j)(i)))
   }
 
   /** Split-conformal prediction interval for a 1-D linear predictor —

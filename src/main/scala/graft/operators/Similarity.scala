@@ -815,14 +815,11 @@ object Similarity {
     *
     * Plan shape: bytes read ∝ probed clusters (`PartitionFilters` on the
     * scan — asserted in PlanSpec), comparisons Σ_c |batch_c|·|corpus_c|.
-    * With `broadcastBatch` (the typical incremental-ingestion shape:
-    * batch ≪ corpus) the pruned corpus scan takes NO shuffle at all; for
-    * corpus-sized batches pass false and the join shuffles both sides on
-    * the cluster key instead. */
+    * The batch is broadcast (the incremental-ingestion shape: batch ≪
+    * corpus), so the pruned corpus scan takes NO shuffle at all. */
   def semDedupProbeStored(newDf: DataFrame, idCol: String, vecCol: String,
       path: String, centroids: Array[Array[Double]], tau: Double,
-      clusterDims: Int, roundTo: Int = 4,
-      broadcastBatch: Boolean = true): DataFrame = {
+      clusterDims: Int, roundTo: Int = 4): DataFrame = {
     require(centroids.nonEmpty, "at least one centroid required")
     require(tau >= -1 && tau <= 1, s"tau must be a cosine threshold: $tau")
     val spark = newDf.sparkSession
@@ -844,8 +841,7 @@ object Similarity {
       .collect().map(_.getInt(0)).sorted
     val corpus = graft.io.ParquetIO.read(spark, path)
       .filter(col("cluster").isin(probed.map(Integer.valueOf).toSeq: _*))
-    val batch = if (broadcastBatch) broadcast(assigned) else assigned
-    val hits = corpus.join(batch, Seq("cluster"))
+    val hits = corpus.join(broadcast(assigned), Seq("cluster"))
       .select(col("id"),
         VectorKernelFunctions.cosineSimilarity(col("__v"), col("corpus_vec"))
           .as("__cos"),

@@ -58,21 +58,22 @@ object ConcatOps {
       columns: Option[Seq[String]] = None,
       indexColumns: Seq[String] = Nil,
       singleFile: Boolean = false): Unit = {
-    writeOut(tall(files.map(ParquetIO.read(spark, _)), filterQuery, columns, indexColumns),
-      output, singleFile)
+    ParquetIO.write(tall(files.map(ParquetIO.read(spark, _)), filterQuery, columns,
+      indexColumns), output, singleFile)
     // Pandas-interop contract: merged `pandas` footer blob rides to the
     // output (reference parq_concat.py:408-416, test_tall.py:141-172).
     FooterMetadata.propagatePandasMeta(spark, files, output)
   }
 
   /** Column-wise concat: equi-join of N index-aligned datasets on the index
-    * columns. Duplicate non-index column names across inputs are an error. */
+    * columns. Duplicate non-index column names across inputs are an error,
+    * and the inputs' index alignment is always validated
+    * ([[IndexOps.validateIndexAlignment]]). */
   def wide(
       dfs: Seq[DataFrame],
       indexColumns: Seq[String],
       filterQuery: Option[String] = None,
-      columns: Option[Seq[String]] = None,
-      validateAlignment: Boolean = true): DataFrame = {
+      columns: Option[Seq[String]] = None): DataFrame = {
     require(dfs.nonEmpty, "concat of zero datasets")
     require(indexColumns.nonEmpty, "wide concat requires index columns")
     dfs.zipWithIndex.foreach { case (df, i) =>
@@ -86,7 +87,7 @@ object ConcatOps {
     if (dups.nonEmpty)
       throw new IllegalArgumentException(
         s"Duplicate non-index columns across datasets: ${dups.toSeq.sorted.mkString(", ")}")
-    if (validateAlignment) IndexOps.validateIndexAlignment(dfs, indexColumns)
+    IndexOps.validateIndexAlignment(dfs, indexColumns)
     val joined = dfs.reduce((a, b) => a.join(b, indexColumns, "inner"))
     val filtered = filterQuery match {
       case Some(q) => joined.filter(SparkCompiler.compileValidated(q, joined))
@@ -103,8 +104,8 @@ object ConcatOps {
       filterQuery: Option[String] = None,
       columns: Option[Seq[String]] = None,
       singleFile: Boolean = false): Unit = {
-    writeOut(wide(files.map(ParquetIO.read(spark, _)), indexColumns, filterQuery, columns),
-      output, singleFile)
+    ParquetIO.write(wide(files.map(ParquetIO.read(spark, _)), indexColumns, filterQuery,
+      columns), output, singleFile)
     // reference parq_concat.py:353-359, test_wide.py:133-166
     FooterMetadata.propagatePandasMeta(spark, files, output)
   }
@@ -131,7 +132,4 @@ object ConcatOps {
     // side never shuffles.
     fileDf.join(broadcast(mem), indexColumns, "left")
   }
-
-  private def writeOut(df: DataFrame, output: String, singleFile: Boolean): Unit =
-    if (singleFile) ParquetIO.writeSingleFile(df, output) else ParquetIO.write(df, output)
 }

@@ -61,7 +61,6 @@ object FilterOps {
       indexColumns: Seq[String] = Nil,
       singleFile: Boolean = false): Unit = {
     val out = filter(ParquetIO.read(spark, input), filterExpression, columns, indexColumns)
-    if (singleFile) ParquetIO.writeSingleFile(out, output)
-    else ParquetIO.write(out, output)
+    ParquetIO.write(out, output, singleFile)
   }
 }

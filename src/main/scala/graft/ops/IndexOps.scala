@@ -24,7 +24,7 @@ object IndexOps {
   def sortFile(spark: SparkSession, input: String, output: String,
       columns: Seq[String], singleFile: Boolean = false): Unit = {
     val out = sort(ParquetIO.read(spark, input), columns)
-    if (singleFile) ParquetIO.writeSingleFile(out, output) else ParquetIO.write(out, output)
+    ParquetIO.write(out, output, singleFile)
   }
 
   /** Reindex = left outer join of the new index against the data, with typed

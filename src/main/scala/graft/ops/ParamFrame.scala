@@ -39,6 +39,24 @@ private[graft] object ParamFrame {
 
   def p(pfx: String, i: Int): Column = col(s"$pfx$i")
 
+  /** Run a driver-sequenced fit loop with AQE OFF, restoring the setting
+    * after. Every Newton/IRLS pass is a tiny global aggregate over the
+    * compacted base whose final stage is SinglePartition REGARDLESS of
+    * adaptive planning — AQE buys nothing on that shape, but charges 1-2
+    * extra sequential stage-materialization jobs (driver round-trips) per
+    * pass, a real slice of the measured ~125 ms/pass floor once codegen
+    * and task counts were fixed. Plans and arithmetic are value-identical
+    * with AQE off for these global aggregates. Scoped per loop: queries
+    * outside the fit keep adaptive execution. Two callers: the Newton-fit
+    * base bracket (`graft.operators.NewtonFit.withBase`) and
+    * [[graft.operators.LinearModel.logregTrainHashed]]. */
+  def withFixedPlan[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try body finally spark.conf.set(key, prev)
+  }
+
   /** Scale-adaptive task-count compaction for a PERSISTED iteration base
     * whose row count is already on the driver (every Newton/IRLS fit
     * counts its base before looping).
@@ -56,22 +74,6 @@ private[graft] object ParamFrame {
     * same cached blocks. Aggregation-only consumers lose nothing from
     * the reduced parallelism by construction (rowsPerTask of per-row
     * kernel work is far below one task's scheduling quantum). */
-  /** Run a driver-sequenced fit loop with AQE OFF, restoring the setting
-    * after. Every Newton/IRLS pass is a tiny global aggregate over the
-    * compacted base whose final stage is SinglePartition REGARDLESS of
-    * adaptive planning — AQE buys nothing on that shape, but charges 1-2
-    * extra sequential stage-materialization jobs (driver round-trips) per
-    * pass, a real slice of the measured ~125 ms/pass floor once codegen
-    * and task counts were fixed. Plans and arithmetic are value-identical
-    * with AQE off for these global aggregates. Scoped per loop: queries
-    * outside the fit keep adaptive execution. */
-  def withFixedPlan[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, prev)
-  }
-
   def compactForIteration(df: DataFrame, rows: Long,
       rowsPerTask: Long = 262144L): DataFrame = {
     if (rows <= 0) df

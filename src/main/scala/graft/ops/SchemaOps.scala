@@ -44,7 +44,7 @@ object SchemaOps {
   def renameFile(spark: SparkSession, input: String, output: String,
       renames: Map[String, String], singleFile: Boolean = false): Unit = {
     val out = rename(ParquetIO.read(spark, input), renames)
-    if (singleFile) ParquetIO.writeSingleFile(out, output) else ParquetIO.write(out, output)
+    ParquetIO.write(out, output, singleFile)
   }
 
   /** Attach per-column metadata (reference parq_schema_tools.py:71-85). */
@@ -92,7 +92,7 @@ object SchemaOps {
     var df = ParquetIO.read(spark, input)
     if (renames.nonEmpty) df = rename(df, renames)
     if (columnMetadata.nonEmpty) df = withColumnMetadata(df, columnMetadata)
-    if (singleFile) ParquetIO.writeSingleFile(df, output) else ParquetIO.write(df, output)
+    ParquetIO.write(df, output, singleFile)
     if (tableMetadata.nonEmpty)
       FooterMetadata.writeKeyValue(spark, output, tableMetadata)
   }

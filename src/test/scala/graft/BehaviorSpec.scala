@@ -849,5 +849,37 @@ class BehaviorSpec extends SparkSpecBase {
       "dur", "cens", Seq("x")).collect().head
     assert(none.getAs[Long]("n_events") == 0L &&
       none.isNullAt(none.fieldIndex("beta")))
+    // two covariates: the d ≥ 2 Gaussian-elimination step and SE path
+    val data2 = Seq(
+      (10L, false, 1.0, 0.0), (25L, false, 1.0, 1.0), (40L, true, 1.0, 0.0),
+      (8L, false, 2.0, 1.0), (12L, false, 2.0, 0.0), (30L, true, 2.0, 1.0),
+      (50L, false, 0.0, 0.0), (70L, true, 0.0, 1.0), (65L, false, 0.0, 1.0),
+      (20L, false, 1.5, 0.0), (45L, false, 0.5, 1.0), (35L, true, 0.5, 0.0))
+    val df2 = data2.toDF("dur", "cens", "x1", "x2")
+    val out2 = Behavior.exponentialAft(df2, "dur", "cens", Seq("x1", "x2"))
+      .collect().map(r => r.getString(0) -> r).toMap
+    val events2 = data2.filter(!_._2)
+    val sdx2 = NewtonRef.score(events2.map { case (_, _, x1, x2) =>
+      (1.0, Seq(x1, x2)) })
+    val (b2, h2) = NewtonRef.newton(Array(r12(math.log(
+        events2.size.toDouble / data2.map(_._1).sum)), 0.0, 0.0), 4) { b =>
+      val w = data2.map { case (t, _, x1, x2) =>
+        (t * math.exp(b(0) + b(1) * x1 + b(2) * x2), Seq(x1, x2)) }
+      (sdx2.zip(NewtonRef.score(w)).map { case (a, c) => a - c },
+        NewtonRef.outer(w))
+    }
+    val se2 = NewtonRef.se(h2)
+    assert(out2("intercept").getAs[Long]("n_events") == events2.size.toLong)
+    Seq("intercept", "x1", "x2").zipWithIndex.foreach { case (t, i) =>
+      assert(math.abs(out2(t).getAs[Double]("beta") - b2(i)) < 1e-6,
+        s"beta $t: ${out2(t)} vs ${b2(i)}")
+      assert(math.abs(out2(t).getAs[Double]("se") - se2(i)) < 1e-6,
+        s"se $t: ${out2(t)} vs ${se2(i)}")
+    }
+    // a duplicated covariate makes the information singular: NULL β, SE
+    val dup = Behavior.exponentialAft(df2.withColumn("xd", col("x1")),
+      "dur", "cens", Seq("x1", "xd")).collect()
+    assert(dup.length == 3 && dup.forall(r =>
+      r.isNullAt(r.fieldIndex("beta")) && r.isNullAt(r.fieldIndex("se"))))
   }
 }

@@ -1,10 +1,33 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.operators.LinearModel
 
 class LinearModelSpec extends SparkSpecBase {
   import spark.implicits._
+
+  private def byTerm(fit: DataFrame): Map[String, Row] =
+    fit.collect().map(r => r.getString(0) -> r).toMap
+
+  /** β and SE of each term within `tol` of the reference. */
+  private def assertFit(out: Map[String, Row], terms: Seq[String],
+      beta: Array[Double], se: Array[Double], tol: Double): Unit =
+    terms.zipWithIndex.foreach { case (t, i) =>
+      assert(math.abs(out(t).getAs[Double]("beta") - beta(i)) < tol,
+        s"beta $t: ${out(t)} vs ${beta(i)}")
+      assert(math.abs(out(t).getAs[Double]("se") - se(i)) < tol,
+        s"se $t: ${out(t)} vs ${se(i)}")
+    }
+
+  /** A duplicated covariate makes the information singular: every term
+    * comes back with NULL β and SE. */
+  private def assertNullFit(fit: DataFrame): Unit = {
+    val rows = fit.collect()
+    assert(rows.length == 3)
+    rows.foreach(r => assert(r.isNullAt(r.fieldIndex("beta")) &&
+      r.isNullAt(r.fieldIndex("se")), s"singular fit must be NULL: $r"))
+  }
 
   test("logreg training: two gradient steps match the hand computation") {
     // bucket(aa) = (2*31+97) % 4 = 3 (positive class), bucket(bb) = 0
@@ -494,6 +517,26 @@ class LinearModelSpec extends SparkSpecBase {
       LinearModel.binomialGlm(bad, "y", Seq("x")).collect()
     }
     assert(e.getMessage.contains("0/1 response"))
+    // two covariates: the d ≥ 2 Gaussian-elimination step and SE path
+    val data2 = Seq(
+      (0L, -2.0, 1.0), (0L, -1.5, 0.0), (1L, -1.0, 1.0), (0L, -1.0, 0.0),
+      (0L, -0.5, 0.0), (1L, -0.5, 1.0), (0L, 0.0, 0.0), (1L, 0.0, 1.0),
+      (0L, 0.5, 1.0), (1L, 0.5, 0.0), (1L, 1.0, 0.0), (0L, 1.0, 1.0),
+      (1L, 1.5, 1.0), (0L, 2.0, 0.0), (1L, 2.0, 0.0), (1L, 2.5, 1.0))
+    val df2 = data2.toDF("y", "x1", "x2")
+    val out2 = byTerm(LinearModel.binomialGlm(df2, "y", Seq("x1", "x2")))
+    val sy2 = data2.map(_._1).sum.toDouble
+    val (b2, h2) = NewtonRef.newton(Array(
+        NewtonRef.r12(math.log(sy2 / (data2.size - sy2))), 0.0, 0.0), 4) { b =>
+      val mus = data2.map { case (y, x1, x2) =>
+        (y, 1.0 / (1.0 + math.exp(-(b(0) + b(1) * x1 + b(2) * x2))),
+          Seq(x1, x2)) }
+      (NewtonRef.score(mus.map { case (y, mu, xs) => (y - mu, xs) }),
+        NewtonRef.outer(mus.map { case (_, mu, xs) => (mu * (1 - mu), xs) }))
+    }
+    assertFit(out2, Seq("intercept", "x1", "x2"), b2, NewtonRef.se(h2), 1e-6)
+    assertNullFit(LinearModel.binomialGlm(df2.withColumn("xd", col("x1")),
+      "y", Seq("x1", "xd")))
   }
 
   test("negativeBinomialGlm: alpha=0 degenerates to Poisson; overdispersion widens SEs") {
@@ -537,6 +580,43 @@ class LinearModelSpec extends SparkSpecBase {
       .collect().head
     assert(rz.isNullAt(rz.fieldIndex("alpha")) &&
       rz.isNullAt(rz.fieldIndex("beta")))
+    // two covariates, overdispersed: replay the Poisson warm-up, the
+    // moment alpha and the NB2 scoring through the d ≥ 2 solve path
+    val data2 = Seq((0L, 0.0, 0.0), (3L, 0.0, 1.0), (1L, 0.0, 0.0),
+      (9L, 0.0, 1.0), (0L, 1.0, 0.0), (2L, 1.0, 1.0), (7L, 1.0, 0.0),
+      (14L, 1.0, 1.0), (1L, 2.0, 0.0), (0L, 2.0, 1.0), (11L, 2.0, 0.0),
+      (23L, 2.0, 1.0))
+    val df2 = data2.toDF("y", "x1", "x2")
+    val out2 = byTerm(LinearModel.negativeBinomialGlm(df2, "y",
+      Seq("x1", "x2")))
+    def means(b: Array[Double]) = data2.map { case (y, x1, x2) =>
+      (y.toDouble, math.exp(b(0) + b(1) * x1 + b(2) * x2), Seq(x1, x2)) }
+    val b0 = Array(NewtonRef.r12(math.log(
+      data2.map(_._1).sum.toDouble / data2.size)), 0.0, 0.0)
+    var bp = b0
+    for (_ <- 1 to 4) {
+      val m = means(bp)
+      val st = NewtonRef.solve(
+        NewtonRef.outer(m.map { case (_, mu, xs) => (mu, xs) }),
+        NewtonRef.score(m.map { case (y, mu, xs) => (y - mu, xs) }))
+      bp = bp.zip(st).map { case (v, s) => NewtonRef.r12(v + s) }
+    }
+    val mp = means(bp)
+    val alpha = NewtonRef.r12(math.max(0.0,
+      mp.map { case (y, mu, _) => (y - mu) * (y - mu) - mu }.sum /
+        mp.map { case (_, mu, _) => mu * mu }.sum))
+    assert(alpha > 0.1, s"overdispersed design must give alpha > 0: $alpha")
+    val (bn, hn) = NewtonRef.newton(bp, 4) { b =>
+      val m = means(b)
+      (NewtonRef.score(m.map { case (y, mu, xs) =>
+          ((y - mu) / (1 + alpha * mu), xs) }),
+        NewtonRef.outer(m.map { case (_, mu, xs) =>
+          (mu / (1 + alpha * mu), xs) }))
+    }
+    assert(math.abs(out2("x1").getAs[Double]("alpha") - alpha) < 1e-9)
+    assertFit(out2, Seq("intercept", "x1", "x2"), bn, NewtonRef.se(hn), 1e-6)
+    assertNullFit(LinearModel.negativeBinomialGlm(
+      df2.withColumn("xd", col("x2")), "y", Seq("x2", "xd")))
   }
 
   test("ipwAte: de-biases a confounded treatment; definitional replay") {
@@ -741,6 +821,31 @@ class LinearModelSpec extends SparkSpecBase {
       Seq((1.0, 3.0), (2.0, 3.0), (4.0, 3.0), (8.0, 3.0)).toDF("y", "x"),
       "y", Seq("x")).collect().head
     assert(const.isNullAt(const.fieldIndex("beta")))
+    // two covariates: constant XᵀX through the d ≥ 2 solve and the
+    // φ-scaled inverse diagonal
+    val noisy2 = Seq((10.0, 0.0, 1.0), (14.0, 0.0, 0.0), (22.0, 1.0, 1.0),
+      (18.0, 1.0, 0.0), (35.0, 2.0, 1.0), (28.0, 2.0, 0.0),
+      (8.0, -1.0, 0.0), (11.0, -1.0, 1.0), (16.0, 0.5, 0.0),
+      (25.0, 1.5, 1.0))
+    val df2 = noisy2.toDF("y", "x1", "x2")
+    val out2 = byTerm(LinearModel.gammaGlm(df2, "y", Seq("x1", "x2")))
+    val xtx = NewtonRef.outer(noisy2.map { case (_, x1, x2) =>
+      (1.0, Seq(x1, x2)) })
+    def mu2(b: Array[Double], x1: Double, x2: Double) =
+      math.exp(b(0) + b(1) * x1 + b(2) * x2)
+    val (bg, _) = NewtonRef.newton(Array(r12(math.log(
+        noisy2.map(_._1).sum / noisy2.size)), 0.0, 0.0), 4) { b =>
+      (NewtonRef.score(noisy2.map { case (y, x1, x2) =>
+        (y / mu2(b, x1, x2) - 1.0, Seq(x1, x2)) }), xtx)
+    }
+    val phi2 = noisy2.map { case (y, x1, x2) =>
+      val mu = mu2(bg, x1, x2); r12((y - mu) * (y - mu) / (mu * mu))
+    }.sum / (noisy2.size - 3)
+    assert(math.abs(out2("x1").getAs[Double]("phi") - phi2) < 1e-9)
+    assertFit(out2, Seq("intercept", "x1", "x2"), bg,
+      NewtonRef.se(xtx, phi2), 1e-8)
+    assertNullFit(LinearModel.gammaGlm(df2.withColumn("xd", col("x1")),
+      "y", Seq("x1", "xd")))
   }
 
   test("aipwAte: definitional replay; outcome model absorbs confounding") {
