@@ -625,21 +625,16 @@ object Behavior {
       .head()
     graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
     val spark = durations.sparkSession
-    def dNull = lit(null).cast("double")
-    if (row.isNullAt(0)) {
-      return spark.range(1).select(lit(ga).as("group_a"), lit(gb).as("group_b"),
-        lit(nA).as("n_a"), lit(nB).as("n_b"), lit(0L).as("events_a"),
-        lit(0L).as("events_b"), dNull.as("expected_a"), dNull.as("var_a"),
-        dNull.as("chi2"))
-    }
-    val (oa, ob) = (row.getLong(0), row.getLong(1))
-    val (eaV, vaV) = (row.getDouble(2), row.getDouble(3))
-    val chi2: Option[Double] =
-      if (vaV > 0) Some((oa - eaV) * (oa - eaV) / vaV) else None
-    spark.range(1).select(lit(ga).as("group_a"), lit(gb).as("group_b"),
-      lit(nA).as("n_a"), lit(nB).as("n_b"), lit(oa).as("events_a"),
-      lit(ob).as("events_b"), lit(eaV).as("expected_a"), lit(vaV).as("var_a"),
-      chi2.map(lit(_).cast("double")).getOrElse(dNull).as("chi2"))
+    import spark.implicits._
+    // no event at all: zero observed counts, NULL moments
+    val events = !row.isNullAt(0)
+    val (oa, ob) = if (events) (row.getLong(0), row.getLong(1)) else (0L, 0L)
+    val ev = Option.when(events)((row.getDouble(2), row.getDouble(3)))
+    val chi2 = ev.collect { case (eaV, vaV) if vaV > 0 =>
+      (oa - eaV) * (oa - eaV) / vaV }
+    Seq((ga, gb, nA, nB, oa, ob, ev.map(_._1), ev.map(_._2), chi2))
+      .toDF("group_a", "group_b", "n_a", "n_b", "events_a", "events_b",
+        "expected_a", "var_a", "chi2")
   }
 
   def kmCurve(durations: DataFrame, durationCol: String,

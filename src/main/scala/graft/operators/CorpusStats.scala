@@ -629,28 +629,20 @@ object CorpusStats {
       .head()
     graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
     val spark = df.sparkSession
-    if (row.isNullAt(0)) {
-      // empty input: NULL row (n_keys 0), same shape as before
-      return spark.range(1).select(
-        lit(null).cast("long").as("n_rows"), lit(nKeys).as("n_keys"),
-        lit(null).cast("double").as("gini"),
-        lit(null).cast("double").as("hhi"),
-        lit(null).cast("double").as("top_share"))
-    }
-    val t = row.getLong(0); val s = row.getDouble(1); val q = row.getDouble(2)
-    val mx = row.getLong(3)
+    import spark.implicits._
+    // empty input: NULL stats (n_keys 0)
+    val t = Option.when(!row.isNullAt(0))(row.getLong(0))
+    val tD = t.map(_.toDouble)
     // same arithmetic order as the previous in-plan expressions (gini's
     // 2s/(k·t) − (k+1)/k; hhi in double to dodge long t² overflow at
     // billions of rows)
-    val gini: java.lang.Double =
-      if (nKeys > 1) 2.0 * s / (nKeys.toDouble * t.toDouble) -
-        (nKeys + 1).toDouble / nKeys.toDouble
-      else null
-    spark.range(1).select(
-      lit(t).as("n_rows"), lit(nKeys).as("n_keys"),
-      lit(gini).cast("double").as("gini"),
-      lit(q / (t.toDouble * t.toDouble)).as("hhi"),
-      lit(mx.toDouble / t.toDouble).as("top_share"))
+    Seq((t, nKeys,
+        tD.filter(_ => nKeys > 1).map(td =>
+          2.0 * row.getDouble(1) / (nKeys.toDouble * td) -
+            (nKeys + 1).toDouble / nKeys.toDouble),
+        tD.map(td => row.getDouble(2) / (td * td)),
+        tD.map(td => row.getLong(3).toDouble / td)))
+      .toDF("n_rows", "n_keys", "gini", "hhi", "top_share")
   }
 
   /** Out-of-vocabulary rate per language against a reference vocabulary —
@@ -831,19 +823,16 @@ object CorpusStats {
       .limit(k + 1)
       .collect() // k+1 rows by construction — a bounded-table collect
     val spark = docs.sparkSession
-    def dNull = lit(null).cast("double")
-    if (top.length < k + 1) {
-      return spark.range(1).select(lit(k).as("k"),
-        lit(null).cast("long").as("x_tail"), dNull.as("alpha"))
-    }
+    import spark.implicits._
     val xs = top.map(_.getLong(1))
-    val xTail = xs.last
+    val xTail = Option.when(top.length >= k + 1)(xs.last)
     // deterministic summation order: the (count desc, term asc) collect
     // order, matching the oracle's ORDER BY inside its aggregate
-    val lnSum = xs.take(k).map(x => math.log(x.toDouble / xTail)).sum
-    val alpha: Option[Double] = if (lnSum > 0) Some(k / lnSum) else None
-    spark.range(1).select(lit(k).as("k"), lit(xTail).as("x_tail"),
-      alpha.map(lit(_).cast("double")).getOrElse(dNull).as("alpha"))
+    val alpha = xTail.flatMap { xt =>
+      val lnSum = xs.take(k).map(x => math.log(x.toDouble / xt)).sum
+      Option.when(lnSum > 0)(k / lnSum)
+    }
+    Seq((k, xTail, alpha)).toDF("k", "x_tail", "alpha")
   }
 
   /** Per-group lexical diversity — type-token ratio and hapax share, the

@@ -313,11 +313,12 @@ object LinearModel {
     val (n, cuts) = graft.ops.ScaleOps.rankCutpoints(counts, "s", "c",
       graft.ops.ScaleOps.quantileRanks(bins))
     val spark = scored.sparkSession
-    def dNull = lit(null).cast("double")
-    def nulls(n: Long, nb: Long) = spark.range(1).select(lit(n).as("n"),
-      lit(nb).as("n_bins"), dNull.as("hl"), lit((bins - 2).toLong).as("df"),
-      dNull.as("p_value"))
-    if (n == 0) return nulls(0, 0)
+    import spark.implicits._
+    def out(nBins: Long, hl: Option[Double]) =
+      Seq((n, nBins, hl, (bins - 2).toLong,
+          hl.map(graft.profile.Drift.chi2Survival(bins - 2, _))))
+        .toDF("n", "n_bins", "hl", "df", "p_value")
+    if (n == 0) return out(0L, None)
     val bin = cuts.foldLeft(lit(0)) { (acc, c) =>
       acc + when(col("s") > c, 1).otherwise(0)
     }
@@ -331,13 +332,8 @@ object LinearModel {
           pow(col("o1") - col("e1"), 2) /
             (col("e1") * (lit(1.0) - col("e1") / col("nb"))))).as("hl"))
       .head()
-    val nBins = agg.getLong(0)
-    if (agg.isNullAt(1) || agg.getDouble(1) <= 0 || agg.isNullAt(2))
-      return nulls(n, nBins)
-    val hl = agg.getDouble(2)
-    spark.range(1).select(lit(n).as("n"), lit(nBins).as("n_bins"),
-      lit(hl).as("hl"), lit((bins - 2).toLong).as("df"),
-      lit(graft.profile.Drift.chi2Survival(bins - 2, hl)).as("p_value"))
+    out(agg.getLong(0), Option.when(!(agg.isNullAt(1) ||
+      agg.getDouble(1) <= 0 || agg.isNullAt(2)))(agg.getDouble(2)))
   }
 
   /** Expected / maximum calibration error — the one-number summaries of
@@ -606,17 +602,12 @@ object LinearModel {
       sum(col("__pos")).cast("long").as("_p")).head()
     graft.ops.ScaleOps.releaseCheckpointBlocks(ranked)
     val spark = scored.sparkSession
-    def dNull = lit(null).cast("double")
+    import spark.implicits._
     val p = if (row.isNullAt(1)) 0L else row.getLong(1)
     val neg = n - p
-    if (p == 0 || neg == 0) {
-      return spark.range(1).select(lit(n).as("n"), lit(p).as("n_pos"),
-        dNull.as("auc"), dNull.as("gini"))
-    }
-    val auc = (row.getDouble(0) - p.toDouble * (p + 1) / 2.0) /
-      (p.toDouble * neg)
-    spark.range(1).select(lit(n).as("n"), lit(p).as("n_pos"),
-      lit(auc).as("auc"), lit(2.0 * auc - 1.0).as("gini"))
+    val auc = Option.when(p > 0 && neg > 0)(
+      (row.getDouble(0) - p.toDouble * (p + 1) / 2.0) / (p.toDouble * neg))
+    Seq((n, p, auc, auc.map(2.0 * _ - 1.0))).toDF("n", "n_pos", "auc", "gini")
   }
 
   /** DeLong AUC with its standard error and 95% CI — [[aucRoc]] plus the
@@ -645,11 +636,16 @@ object LinearModel {
       Seq("__posBelow", "__negBelow"))
     val p = grand(0); val nn = grand(1)
     val spark = scored.sparkSession
-    def dNull = lit(null).cast("double")
+    import spark.implicits._
+    val zc = 1.959963984540054
+    def out(auc: Option[Double], se: Option[Double]) =
+      Seq((p + nn, p, auc, se,
+          for (a <- auc; v <- se) yield math.max(0.0, a - zc * v),
+          for (a <- auc; v <- se) yield math.min(1.0, a + zc * v)))
+        .toDF("n", "n_pos", "auc", "se", "ci_lo", "ci_hi")
     if (p == 0 || nn == 0) {
       graft.ops.ScaleOps.releaseCheckpointBlocks(ranked)
-      return spark.range(1).select(lit(p + nn).as("n"), lit(p).as("n_pos"),
-        dNull.as("auc"), dNull.as("se"), dNull.as("ci_lo"), dNull.as("ci_hi"))
+      return out(None, None)
     }
     val v10 = (col("__negBelow") + col("__neg") / lit(2.0)) / nn
     val v01 = (lit(p) - col("__posBelow") - col("__pos") / lit(2.0)) / p
@@ -659,21 +655,11 @@ object LinearModel {
       sum(col("__pos") * pow(v10 - auc, 2)).as("_m10"),
       sum(col("__neg") * pow(v01 - auc, 2)).as("_m01")).head()
     graft.ops.ScaleOps.releaseCheckpointBlocks(ranked)
-    val se: Option[Double] =
-      if (p < 2 || nn < 2) None
-      else {
-        val s10 = moments.getDouble(0) / (p - 1)
-        val s01 = moments.getDouble(1) / (nn - 1)
-        Some(math.sqrt(s10 / p + s01 / nn))
-      }
-    val zc = 1.959963984540054
-    spark.range(1).select(lit(p + nn).as("n"), lit(p).as("n_pos"),
-      lit(auc).as("auc"),
-      se.map(v => lit(v).cast("double")).getOrElse(dNull).as("se"),
-      se.map(v => lit(math.max(0.0, auc - zc * v)).cast("double"))
-        .getOrElse(dNull).as("ci_lo"),
-      se.map(v => lit(math.min(1.0, auc + zc * v)).cast("double"))
-        .getOrElse(dNull).as("ci_hi"))
+    out(Some(auc), Option.when(p >= 2 && nn >= 2) {
+      val s10 = moments.getDouble(0) / (p - 1)
+      val s01 = moments.getDouble(1) / (nn - 1)
+      math.sqrt(s10 / p + s01 / nn)
+    })
   }
 
   /** Murphy decomposition of the Brier score — WHY is the probability
@@ -753,15 +739,20 @@ object LinearModel {
         sum(when(col("__y") === 0, 1L).otherwise(0L))).as("t0"))
       .head()
     val spark = scored.sparkSession
-    def dNull = lit(null).cast("double")
-    if (tRow.isNullAt(0) || tRow.isNullAt(1)) {
-      // one label class absent: no joint to estimate
-      return spark.range(1).select(
-        lit(0L).as("n"), dNull.as("t0"), dNull.as("t1"),
-        lit(0L).as("n_00"), lit(0L).as("n_01"), lit(0L).as("n_10"),
-        lit(0L).as("n_11"), dNull.as("noise_0_to_1"),
-        dNull.as("noise_1_to_0"))
+    import spark.implicits._
+    // t = (t0, t1); the n_ij sums are NULL when no row is confident
+    def out(n: Long, t: Option[(Double, Double)], n00: Option[Long],
+        n01: Option[Long], n10: Option[Long], n11: Option[Long]) = {
+      def rate(num: Option[Long], other: Option[Long]) =
+        for (a <- num; b <- other if b + a > 0) yield a.toDouble / (b + a)
+      Seq((n, t.map(_._1), t.map(_._2), n00, n01, n10, n11,
+          rate(n01, n00), rate(n10, n11)))
+        .toDF("n", "t0", "t1", "n_00", "n_01", "n_10", "n_11",
+          "noise_0_to_1", "noise_1_to_0")
     }
+    // one label class absent: no joint to estimate
+    if (tRow.isNullAt(0) || tRow.isNullAt(1))
+      return out(0L, None, Some(0L), Some(0L), Some(0L), Some(0L))
     val (t0, t1) = (tRow.getDouble(1), tRow.getDouble(0))
     // suggested class: 1 when s >= t1, 0 when 1-s >= t0; both -> the
     // larger margin (s - t1 vs (1-s) - t0); neither -> abstain
@@ -770,7 +761,7 @@ object LinearModel {
     val sug = when(conf1 && conf0,
         when(col("__s") - t1 >= (lit(1.0) - col("__s")) - t0, 1).otherwise(0))
       .when(conf1, 1).when(conf0, 0)
-    base.withColumn("__sug", sug)
+    val r = base.withColumn("__sug", sug)
       .filter(col("__sug").isNotNull)
       .agg(
         count(lit(1)).as("n"),
@@ -782,14 +773,9 @@ object LinearModel {
           .as("n_10"),
         sum(when(col("__y") === 1 && col("__sug") === 1, 1L).otherwise(0L))
           .as("n_11"))
-      .select(col("n"), lit(t0).as("t0"), lit(t1).as("t1"),
-        col("n_00"), col("n_01"), col("n_10"), col("n_11"),
-        when(col("n_00") + col("n_01") > 0,
-          col("n_01").cast("double") / (col("n_00") + col("n_01")))
-          .as("noise_0_to_1"),
-        when(col("n_10") + col("n_11") > 0,
-          col("n_10").cast("double") / (col("n_10") + col("n_11")))
-          .as("noise_1_to_0"))
+      .head()
+    def cnt(o: Int) = Option.when(!r.isNullAt(o))(r.getLong(o))
+    out(r.getLong(0), Some((t0, t1)), cnt(1), cnt(2), cnt(3), cnt(4))
   }
 
   /** Gains/lift table — the campaign-economics view of a scored set
@@ -1344,17 +1330,20 @@ object LinearModel {
     require(clip > 0 && clip < 0.5, s"clip must be in (0, 0.5): $clip")
     val spark = df.sparkSession
     import spark.implicits._
-    def nullRow(n: Long, nt: Long) = Seq((n, nt, Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Double],
-        Option.empty[Double], Option.empty[Double]))
-      .toDF("n", "n_treated", "mu_treated", "mu_control", "ate", "se",
-        "z", "p_value")
+    // mus = (mu_treated, mu_control) of two weighted arms
+    def out(n: Long, nt: Long, mus: Option[(Double, Double)],
+        se: Option[Double]) = {
+      val (ate, seW, z, pv) =
+        NewtonFit.wald(mus.map { case (mu1, mu0) => round12(mu1 - mu0) }, se)
+      Seq((n, nt, mus.map(_._1), mus.map(_._2), ate, seW, z, pv))
+        .toDF("n", "n_treated", "mu_treated", "mu_control", "ate", "se",
+          "z", "p_value")
+    }
     val cc = df.filter(col(treatCol).isNotNull &&
       col(outcomeCol).isNotNull &&
       covariates.map(col(_).isNotNull).reduce(_ && _))
-    val fitOpt = propensityBetas(cc, treatCol, covariates, iterations)
-    val n0 = cc.count()
-    val fit = fitOpt.getOrElse(return nullRow(n0, -1L))
+    val fit = propensityBetas(cc, treatCol, covariates, iterations)
+      .getOrElse(return out(cc.count(), -1L, None, None))
     val b0 = fit("intercept")
     val bs = covariates.map(fit)
     val xCols = covariates.indices.map(i => s"__x$i")
@@ -1381,10 +1370,9 @@ object LinearModel {
     def dec(o: Int): Double =
       if (s1.isNullAt(o)) 0.0 else BigDecimal(s1.getDecimal(o)).toDouble
     val (sw1, swy1, sw0, swy0) = (dec(2), dec(3), dec(4), dec(5))
-    if (sw1 <= 0 || sw0 <= 0) return nullRow(n, nt)
+    if (sw1 <= 0 || sw0 <= 0) return out(n, nt, None, None)
     val mu1 = round12(swy1 / sw1)
     val mu0 = round12(swy0 / sw0)
-    val ate = round12(mu1 - mu0)
     val phi = tD * (col("__yo") - lit(mu1)) / e -
       (lit(1.0) - tD) * (col("__yo") - lit(mu0)) / (lit(1.0) - e)
     val v = base.agg(
@@ -1392,11 +1380,7 @@ object LinearModel {
       .head()
     val sphi = if (v.isNullAt(0)) 0.0 else BigDecimal(v.getDecimal(0)).toDouble
     val se = math.sqrt(math.max(sphi, 0.0)) / n
-    val (ateW, seW, z, pv) =
-      NewtonFit.wald(Some(ate), if (se > 0) Some(se) else None)
-    Seq((n, nt, Some(mu1), Some(mu0), ateW, seW, z, pv))
-      .toDF("n", "n_treated", "mu_treated", "mu_control", "ate", "se",
-        "z", "p_value")
+    out(n, nt, Some((mu1, mu0)), Some(se).filter(_ > 0))
   }
 
   /** Augmented inverse-propensity-weighted (AIPW) average treatment
@@ -1430,16 +1414,18 @@ object LinearModel {
     require(clip > 0 && clip < 0.5, s"clip must be in (0, 0.5): $clip")
     val spark = df.sparkSession
     import spark.implicits._
-    def nullRow(n: Long, nt: Long) = Seq((n, nt, Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Double]))
-      .toDF("n", "n_treated", "ate", "se", "z", "p_value")
+    def out(n: Long, nt: Long, ate: Option[Double], se: Option[Double]) = {
+      val (ateW, seW, z, pv) = NewtonFit.wald(ate, se)
+      Seq((n, nt, ateW, seW, z, pv))
+        .toDF("n", "n_treated", "ate", "se", "z", "p_value")
+    }
     val cc = df.filter(col(treatCol).isNotNull &&
       col(outcomeCol).isNotNull && col(covariate).isNotNull)
     val fitOpt = propensityBetas(cc, treatCol, Seq(covariate), iterations)
     val base = cc.select(col(treatCol).cast("long").as("__t"),
       col(outcomeCol).cast("long").as("__yo"),
       col(covariate).cast("decimal(8,4)").as("__x"))
-    val fit = fitOpt.getOrElse(return nullRow(base.count(), -1L))
+    val fit = fitOpt.getOrElse(return out(base.count(), -1L, None, None))
     val (b0, b1) = (fit("intercept"), fit(covariate))
     // per-arm OLS moments in one exact reduce
     val tD = col("__t")
@@ -1465,7 +1451,7 @@ object LinearModel {
     val (n0, sx0, sy0, sxy0, sxx0) = (lg(5), dc(6), lg(7).toDouble,
       dc(8), dc(9))
     val n = n1 + n0
-    if (n1 < 3 || n0 < 3) return nullRow(n, n1)
+    if (n1 < 3 || n0 < 3) return out(n, n1, None, None)
     def ols(na: Long, sx: Double, sy: Double, sxy: Double,
         sxx: Double): Option[(Double, Double)] = {
       val den = sxx - sx * sx / na
@@ -1477,7 +1463,7 @@ object LinearModel {
     }
     val (m1, m0) = (ols(n1, sx1, sy1, sxy1, sxx1),
       ols(n0, sx0, sy0, sxy0, sxx0))
-    if (m1.isEmpty || m0.isEmpty) return nullRow(n, n1)
+    if (m1.isEmpty || m0.isEmpty) return out(n, n1, None, None)
     val (a1c, b1c) = m1.get; val (a0c, b0c) = m0.get
     val xD = col("__x").cast("double")
     val eta = lit(b0) + xD * lit(b1)
@@ -1500,10 +1486,7 @@ object LinearModel {
     val ate = round12(sp / n)
     val se = math.sqrt(math.max(sp2 - 2.0 * ate * sp + n * ate * ate,
       0.0)) / n
-    val (ateW, seW, z, pv) =
-      NewtonFit.wald(Some(ate), if (se > 0) Some(se) else None)
-    Seq((n, n1, ateW, seW, z, pv))
-      .toDF("n", "n_treated", "ate", "se", "z", "p_value")
+    out(n, n1, Some(ate), Some(se).filter(_ > 0))
   }
 
   /** Propensity-score stratification ATT — the subclassification
@@ -1542,15 +1525,19 @@ object LinearModel {
       s"strata must be in [2, 64]: $strata")
     val spark = df.sparkSession
     import spark.implicits._
-    def nullRow(n: Long, nt: Long, used: Long) = Seq((n, nt,
-        strata.toLong, used, Option.empty[Double], Option.empty[Double],
-        Option.empty[Double], Option.empty[Double]))
-      .toDF("n", "n_treated", "k_strata", "k_used", "att", "se", "z",
-        "p_value")
+    // attSe = (att, se) over the usable strata
+    def out(n: Long, nt: Long, used: Long,
+        attSe: Option[(Double, Double)]) = {
+      val (att, se, z, pv) =
+        NewtonFit.wald(attSe.map(_._1), attSe.map(_._2))
+      Seq((n, nt, strata.toLong, used, att, se, z, pv))
+        .toDF("n", "n_treated", "k_strata", "k_used", "att", "se", "z",
+          "p_value")
+    }
     val cc = df.filter(col(treatCol).isNotNull &&
       col(outcomeCol).isNotNull && col(covariate).isNotNull)
     val fit = propensityBetas(cc, treatCol, Seq(covariate), iterations)
-      .getOrElse(return nullRow(cc.count(), -1L, 0L))
+      .getOrElse(return out(cc.count(), -1L, 0L, None))
     val (b0, b1) = (fit("intercept"), fit(covariate))
     val base = cc.select(col(treatCol).cast("long").as("__t"),
         col(outcomeCol).cast("long").as("__yo"),
@@ -1562,7 +1549,7 @@ object LinearModel {
     val counts = base.groupBy(col("__e")).agg(count(lit(1)).as("__c"))
     val (n, cuts) = graft.ops.ScaleOps.rankCutpoints(counts, "__e", "__c",
       graft.ops.ScaleOps.quantileRanks(strata))
-    if (n == 0) return nullRow(0, 0, 0)
+    if (n == 0) return out(0L, 0L, 0L, None)
     val stratum = cuts.foldLeft(lit(1)) { (acc, cv) =>
       acc + when(col("__e") > lit(cv), 1).otherwise(0)
     }
@@ -1577,7 +1564,7 @@ object LinearModel {
     val nt = per.map(_._2).sum
     val usable = per.filter(p => p._2 > 0 && p._3 > 0)
     val n1u = usable.map(_._2).sum
-    if (usable.isEmpty || n1u == 0) return nullRow(n, nt, 0L)
+    if (usable.isEmpty || n1u == 0) return out(n, nt, 0L, None)
     val att = usable.map { case (_, n1, n0, sy1, sy0) =>
       (n1.toDouble / n1u) * (sy1.toDouble / n1 - sy0.toDouble / n0)
     }.sum
@@ -1593,10 +1580,7 @@ object LinearModel {
         else math.max((sy0 - sy0.toDouble * sy0 / n0) / (n0 - 1.0), 0.0)
       w * w * (v1 / n1 + v0 / n0)
     }.sum
-    val (attW, seW, z, pv) = NewtonFit.wald(Some(att), Some(math.sqrt(v)))
-    Seq((n, nt, strata.toLong, usable.length.toLong, attW, seW, z, pv))
-      .toDF("n", "n_treated", "k_strata", "k_used", "att", "se", "z",
-        "p_value")
+    out(n, nt, usable.length.toLong, Some((att, math.sqrt(v))))
   }
 
   /** Leave-one-out target encoding with additive smoothing — the
@@ -1678,18 +1662,21 @@ object LinearModel {
         sum(col("x") * col("y")).as("sxy"))
       .head()
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
+    import spark.implicits._
     val nTrain = fitRow.getLong(0)
-    def emptyOut(nt: Long) = spark.range(1).select(
-      lit(nt).as("n_train"), lit(0L).as("n_cal"), lit(0L).as("n_test"),
-      lit(alpha).as("alpha"), dNull.as("intercept"), dNull.as("slope"),
-      dNull.as("q_hat"), dNull.as("coverage"))
-    if (nTrain < 2) return emptyOut(nTrain)
+    // fit = (intercept, slope) of the train split
+    def out(nCal: Long, nTest: Long, fit: Option[(Double, Double)],
+        qHat: Option[Double], coverage: Option[Double]) =
+      Seq((nTrain, nCal, nTest, alpha, fit.map(_._1), fit.map(_._2), qHat,
+          coverage))
+        .toDF("n_train", "n_cal", "n_test", "alpha", "intercept", "slope",
+          "q_hat", "coverage")
+    if (nTrain < 2) return out(0L, 0L, None, None, None)
     val n = nTrain.toDouble
     val sx = fitRow.getDouble(1); val sy = fitRow.getDouble(2)
     val sxx = fitRow.getDouble(3); val sxy = fitRow.getDouble(4)
     val den = sxx - sx * sx / n
-    if (den <= 0) return emptyOut(nTrain)
+    if (den <= 0) return out(0L, 0L, None, None, None)
     val b = (sxy - sx * sy / n) / den
     val a = sy / n - b * sx / n
     val resid = abs(col("y") - (lit(a) + lit(b) * col("x")))
@@ -1716,12 +1703,9 @@ object LinearModel {
         .head()
     }
     val nTest = cov.getLong(0)
-    spark.range(1).select(
-      lit(nTrain).as("n_train"), lit(nCal).as("n_cal"), lit(nTest).as("n_test"),
-      lit(alpha).as("alpha"), lit(a).as("intercept"), lit(b).as("slope"),
-      qHat.map(v => lit(v).cast("double")).getOrElse(dNull).as("q_hat"),
-      (if (nTest == 0) dNull
-       else if (qHat.isEmpty) lit(1.0)
-       else lit(cov.getDouble(1))).as("coverage"))
+    out(nCal, nTest, Some((a, b)), qHat,
+      if (nTest == 0) None
+      else if (qHat.isEmpty) Some(1.0)
+      else Some(cov.getDouble(1)))
   }
 }

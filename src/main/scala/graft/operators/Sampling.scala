@@ -310,16 +310,13 @@ object Sampling {
         sum(round(c * w * w, 9).cast("decimal(28,9)")).as("__s2"))
       .head()
     val n = if (r.isNullAt(0)) 0L else r.getLong(0)
-    def nullRow = Seq((n, Option.empty[Double], Option.empty[Double],
-        Option.empty[Double], Option.empty[Double]))
-      .toDF("n_units", "sum_w", "deff", "n_eff", "cv_weights")
-    if (n == 0) return nullRow
-    val s1 = BigDecimal(r.getDecimal(1)).toDouble
-    val s2 = BigDecimal(r.getDecimal(2)).toDouble
-    if (s1 <= 0 || s2 <= 0) return nullRow
-    val deff = n * s2 / (s1 * s1)
-    Seq((n, Some(s1), Some(deff), Some(s1 * s1 / s2),
-        Some(math.sqrt(math.max(deff - 1.0, 0.0)))))
+    // (Σw, Σw²) once the weights carry mass
+    val s = Option.when(n > 0)((BigDecimal(r.getDecimal(1)).toDouble,
+        BigDecimal(r.getDecimal(2)).toDouble))
+      .filter { case (s1, s2) => s1 > 0 && s2 > 0 }
+    val deff = s.map { case (s1, s2) => n * s2 / (s1 * s1) }
+    Seq((n, s.map(_._1), deff, s.map { case (s1, s2) => s1 * s1 / s2 },
+        deff.map(d => math.sqrt(math.max(d - 1.0, 0.0)))))
       .toDF("n_units", "sum_w", "deff", "n_eff", "cv_weights")
   }
 
@@ -354,12 +351,15 @@ object Sampling {
           .as("swy"))
       .head()
     val n = r.getLong(0)
-    def nullRow = Seq((n, Option.empty[Double], Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Double]))
-      .toDF("n", "sum_w", "wmean", "se", "ci_lo", "ci_hi")
-    if (n == 0 || r.isNullAt(1)) return nullRow
+    // stats = (sum_w, wmean, se) once the weights carry mass
+    def out(stats: Option[(Double, Double, Double)]) =
+      Seq((n, stats.map(_._1), stats.map(_._2), stats.map(_._3),
+          stats.map(st => st._2 - zCrit * st._3),
+          stats.map(st => st._2 + zCrit * st._3)))
+        .toDF("n", "sum_w", "wmean", "se", "ci_lo", "ci_hi")
+    if (n == 0 || r.isNullAt(1)) return out(None)
     val sw = BigDecimal(r.getDecimal(1)).toDouble
-    if (sw <= 0) return nullRow
+    if (sw <= 0) return out(None)
     val swy = BigDecimal(r.getDecimal(2)).toDouble
     val wmean = BigDecimal(swy / sw)
       .setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -367,10 +367,7 @@ object Sampling {
     val v = base.agg(sum(round(resid * resid, 9).cast("decimal(28,9)"))
       .as("sr")).head()
     val sr = if (v.isNullAt(0)) 0.0 else BigDecimal(v.getDecimal(0)).toDouble
-    val se = math.sqrt(math.max(sr, 0.0)) / sw
-    Seq((n, Some(sw), Some(wmean), Some(se),
-        Some(wmean - zCrit * se), Some(wmean + zCrit * se)))
-      .toDF("n", "sum_w", "wmean", "se", "ci_lo", "ci_hi")
+    out(Some((sw, wmean, math.sqrt(math.max(sr, 0.0)) / sw)))
   }
 
   /** Neyman-optimal stratified sampling allocation — how to SPEND a

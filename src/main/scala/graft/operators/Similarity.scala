@@ -1437,11 +1437,10 @@ object Similarity {
       case r => r.getInt(0)
     }
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
-    if (da == 0) {
-      return spark.range(1).select(lit(0L).as("n"), lit(0).as("dim_a"),
-        lit(0).as("dim_b"), dNull.as("cka"))
-    }
+    import spark.implicits._
+    def out(n: Long, db: Int, cka: Option[Double]) =
+      Seq((n, da, db, cka)).toDF("n", "dim_a", "dim_b", "cka")
+    if (da == 0) return out(0L, 0, None)
     val row = base
       .select(concat(col(colA), col(colB)).as("_cat"))
       .agg(graft.functions.kernels.VectorMomentsAgg
@@ -1462,11 +1461,7 @@ object Similarity {
     for (i <- 0 until da; j <- 0 until da) { val c = cov(i, j); faa += c * c }
     for (i <- da until d; j <- da until d) { val c = cov(i, j); fbb += c * c }
     for (i <- 0 until da; j <- da until d) { val c = cov(i, j); fab += c * c }
-    val cka: Option[Double] =
-      if (faa > 0 && fbb > 0) Some(fab / math.sqrt(faa * fbb)) else None
-    spark.range(1).select(lit(n).as("n"), lit(da).as("dim_a"),
-      lit(db).as("dim_b"),
-      cka.map(lit(_).cast("double")).getOrElse(dNull).as("cka"))
+    out(n, db, Option.when(faa > 0 && fbb > 0)(fab / math.sqrt(faa * fbb)))
   }
 
   /** Mahalanobis distance per vector — the covariance-aware outlier

@@ -228,13 +228,14 @@ object QualityOps {
     val k = kn.getLong(0)
     val n = if (kn.isNullAt(1)) 0L else kn.getLong(1)
     val spark = df.sparkSession
-    if (n == 0 || k < 2) {
-      // a 0/1-value sensitive domain: every class matches trivially
-      return spark.range(1).select(lit(n).as("n_rows"),
-        lit(0L).as("n_classes"), lit(0.0).as("t_closeness"),
-        lit(0L).as("n_classes_above_t"), lit(0L).as("n_rows_at_risk"),
-        lit(0.0).as("risk_share"), lit(true).as("pass"))
-    }
+    import spark.implicits._
+    def out(nRows: Long, nClasses: Long, tClose: Double, nAbove: Long,
+        nAtRisk: Long, riskShare: Double, pass: Boolean) =
+      Seq((nRows, nClasses, tClose, nAbove, nAtRisk, riskShare, pass))
+        .toDF("n_rows", "n_classes", "t_closeness", "n_classes_above_t",
+          "n_rows_at_risk", "risk_share", "pass")
+    // a 0/1-value sensitive domain: every class matches trivially
+    if (n == 0 || k < 2) return out(n, 0L, 0.0, 0L, 0L, 0.0, pass = true)
     val (cum, _) = graft.ops.ScaleOps.withExclusiveRunningSums(
       globalCounts, col("__v"), Seq("__g"), Seq("__gBelow"),
       persistInput = false)
@@ -254,7 +255,7 @@ object QualityOps {
       .withColumn("__qCum", sum(col("__c")).over(w).cast("double") / col("__cn"))
       .groupBy(quasiCols.map(col) :+ col("__cn").as("__n"): _*)
       .agg((sum(abs(col("__qCum") - col("__pCum"))) / (k - 1)).as("__emd"))
-    perClass.agg(
+    val r = perClass.agg(
         sum(col("__n")).cast("long").as("n_rows"),
         count(lit(1)).as("n_classes"),
         max(col("__emd")).as("t_closeness"),
@@ -265,6 +266,9 @@ object QualityOps {
       .withColumn("risk_share",
         round(col("n_rows_at_risk").cast("double") / col("n_rows"), 6))
       .withColumn("pass", col("t_closeness") <= t)
+      .head()
+    out(r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3),
+      r.getLong(4), r.getDouble(5), r.getBoolean(6))
   }
 
   /** Benford first-digit test — the classic synthetic-/fabricated-data

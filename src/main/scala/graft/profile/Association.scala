@@ -471,18 +471,21 @@ object Association {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
-    def nulls(k: Long, n: Long) = spark.range(1).select(
-      lit(k).as("n_strata"), lit(n).as("n"), dNull.as("or_mh"),
-      dNull.as("bd_chi2"), lit(math.max(k - 1, 0)).as("df"),
-      dNull.as("p_value"))
+    import spark.implicits._
     val k = rows.length.toLong
     val nTot = rows.map(_._5).sum
-    if (k < 2) return nulls(k, nTot)
+    // stats = (or_mh, bd_chi2, contributing strata kEff)
+    def out(stats: Option[(Double, Double, Long)]) =
+      Seq((k, nTot, stats.map(_._1), stats.map(_._2),
+          stats.fold(math.max(k - 1, 0))(_._3 - 1),
+          stats.map { case (_, bd, kEff) =>
+            graft.profile.Drift.chi2Survival((kEff - 1).toInt, bd) }))
+        .toDF("n_strata", "n", "or_mh", "bd_chi2", "df", "p_value")
+    if (k < 2) return out(None)
     def q12(v: Double): Long = math.round(v * 1e12)
     val orn = rows.map { case (a, _, _, d, n) => q12(a.toDouble * d / n) }.sum
     val ord = rows.map { case (_, b, c, _, n) => q12(b.toDouble * c / n) }.sum
-    if (ord == 0) return nulls(k, nTot)
+    if (ord == 0) return out(None)
     val psi = orn.toDouble / ord
     // A stratum contributes iff a STRICTLY in-bounds root exists (at a
     // boundary stratum — expected cell exactly at max(0, r1+c1−n) or
@@ -519,13 +522,7 @@ object Association {
         }
       }
     }
-    if (kEff < 2) return nulls(k, nTot)
-    val bd = bdQ / 1e9
-    spark.range(1).select(lit(k).as("n_strata"), lit(nTot).as("n"),
-      lit(psi).as("or_mh"), lit(bd).as("bd_chi2"),
-      lit(kEff - 1).as("df"),
-      lit(graft.profile.Drift.chi2Survival((kEff - 1).toInt, bd))
-        .as("p_value"))
+    out(Option.when(kEff >= 2)((psi, bdQ / 1e9, kEff)))
   }
 
   /** McNemar's test — did a CHANGE help, on PAIRED binary outcomes
@@ -584,14 +581,19 @@ object Association {
         sum(when(!x && !y, 1L).otherwise(0L)).as("a00"))
       .head()
     val spark = df.sparkSession
-    if (row.isNullAt(0)) {
-      return spark.range(1).select(
-        lit(0L).as("a11"), lit(0L).as("a10"), lit(0L).as("a01"),
-        lit(0L).as("a00"), lit(null).cast("double").as("odds_ratio"),
-        lit(null).cast("double").as("p_two_sided"),
-        lit(null).cast("double").as("p_greater"),
-        lit(null).cast("double").as("p_less"))
-    }
+    import spark.implicits._
+    // tails = (p_two_sided, p_greater, p_less) of a non-empty table
+    def out(a11: Long, a10: Long, a01: Long, a00: Long,
+        tails: Option[(Double, Double, Double)]) =
+      Seq((a11, a10, a01, a00,
+          Option.when(a10 > 0 && a01 > 0)(
+            a11.toDouble * a00 / (a10.toDouble * a01)),
+          tails.map(t => math.min(1.0, t._1)),
+          tails.map(t => math.min(1.0, t._2)),
+          tails.map(t => math.min(1.0, t._3))))
+        .toDF("a11", "a10", "a01", "a00", "odds_ratio", "p_two_sided",
+          "p_greater", "p_less")
+    if (row.isNullAt(0)) return out(0L, 0L, 0L, 0L, None)
     val a11 = row.getLong(0); val a10 = row.getLong(1)
     val a01 = row.getLong(2); val a00 = row.getLong(3)
     val r1 = a11 + a10; val r2 = a01 + a00
@@ -613,17 +615,8 @@ object Association {
       sum(when(col("k") >= a11.toDouble, exp(col("lp"))).otherwise(0.0)).as("pg"),
       sum(when(col("k") <= a11.toDouble, exp(col("lp"))).otherwise(0.0)).as("pl"))
       .head()
-    val or: Option[Double] =
-      if (a10 > 0 && a01 > 0) Some(a11.toDouble * a00 / (a10.toDouble * a01))
-      else None
-    spark.range(1).select(
-      lit(a11).as("a11"), lit(a10).as("a10"), lit(a01).as("a01"),
-      lit(a00).as("a00"),
-      or.map(v => lit(v).cast("double")).getOrElse(lit(null).cast("double"))
-        .as("odds_ratio"),
-      lit(math.min(1.0, tails.getDouble(0))).as("p_two_sided"),
-      lit(math.min(1.0, tails.getDouble(1))).as("p_greater"),
-      lit(math.min(1.0, tails.getDouble(2))).as("p_less"))
+    out(a11, a10, a01, a00,
+      Some((tails.getDouble(0), tails.getDouble(1), tails.getDouble(2))))
   }
 
   /** Cochran–Armitage trend test — "does the failure rate RISE along an
@@ -686,11 +679,10 @@ object Association {
       .filter(col("b").isNotNull && col("t").isNotNull && col("v").isNotNull)
     val k = base.select(col("t")).distinct().count().toInt
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
-    if (k < 2) {
-      return spark.range(1).select(lit(0L).as("n_blocks"),
-        lit(k).as("k"), dNull.as("chi2"), lit(k - 1).as("dof"))
-    }
+    import spark.implicits._
+    def out(nBlocks: Long, chi2: Option[Double]) =
+      Seq((nBlocks, k, chi2, k - 1)).toDF("n_blocks", "k", "chi2", "dof")
+    if (k < 2) return out(0L, None)
     // complete blocks only: exactly one value per (block, treatment)
     val perCell = base.groupBy(col("b"), col("t")).agg(avg(col("v")).as("v"))
     val complete = perCell.groupBy(col("b")).agg(count(lit(1)).as("__kc"))
@@ -721,20 +713,13 @@ object Association {
       sum(col("rj") * col("rj")).as("rj2"),
       sum(col("r2j")).as("a2")).head()
     val nBlocks = cells.count() / k
-    if (nBlocks == 0) {
-      return spark.range(1).select(lit(0L).as("n_blocks"),
-        lit(k).as("k"), dNull.as("chi2"), lit(k - 1).as("dof"))
-    }
+    if (nBlocks == 0) return out(0L, None)
     val nD = nBlocks.toDouble; val kD = k.toDouble
     val cC = nD * kD * (kD + 1) * (kD + 1) / 4
     val a2 = agg.getDouble(3)
     val rj2 = agg.getDouble(2)
     val num = (kD - 1) * (rj2 - nD * nD * kD * (kD + 1) * (kD + 1) / 4)
-    val chi2: Option[Double] =
-      if (a2 - cC > 0) Some(num / (a2 - cC)) else None
-    spark.range(1).select(lit(nBlocks).as("n_blocks"), lit(k).as("k"),
-      chi2.map(v => lit(v).cast("double")).getOrElse(dNull).as("chi2"),
-      lit(k - 1).as("dof"))
+    out(nBlocks, Option.when(a2 - cC > 0)(num / (a2 - cC)))
   }
 
   /** Partial correlation r(x,y | z) — does the x–y relationship SURVIVE
@@ -829,11 +814,12 @@ object Association {
       .agg(max(col(successCol).cast("int")).as("x"))
     val k = cells.agg(count_distinct(col("j"))).head().getLong(0)
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
-    def nulls(nItems: Long) = spark.range(1).select(
-      lit(nItems).as("n_items"), lit(k).as("k"), dNull.as("q"),
-      lit(math.max(k - 1, 0)).as("df"), dNull.as("p_value"))
-    if (k < 2) return nulls(0)
+    import spark.implicits._
+    def out(nItems: Long, q: Option[Double]) =
+      Seq((nItems, k, q, math.max(k - 1, 0),
+          q.map(v => Drift.chi2Survival((k - 1).toInt, v))))
+        .toDF("n_items", "k", "q", "df", "p_value")
+    if (k < 2) return out(0L, None)
     val complete = cells.groupBy(col("i"))
       .agg(count(lit(1)).as("_cnt"), sum(col("x")).as("ri"))
       .filter(col("_cnt") === k)
@@ -843,16 +829,13 @@ object Association {
       sum(col("ri")).cast("double").as("st"),
       sum(col("ri") * col("ri")).cast("double").as("sr2")).head()
     val nItems = rowAgg.getLong(0)
-    if (nItems == 0) return nulls(0)
+    if (nItems == 0) return out(0L, None)
     val colAgg = kept.groupBy(col("j")).agg(sum(col("x")).as("tj"))
       .agg(sum(col("tj") * col("tj")).cast("double").as("stj2")).head()
     val st = rowAgg.getDouble(1); val sr2 = rowAgg.getDouble(2)
     val denom = k * st - sr2
-    if (denom <= 0) return nulls(nItems)
-    val q = (k - 1) * (k * colAgg.getDouble(0) - st * st) / denom
-    val p = Drift.chi2Survival((k - 1).toInt, q)
-    spark.range(1).select(lit(nItems).as("n_items"), lit(k).as("k"),
-      lit(q).as("q"), lit(k - 1).as("df"), lit(p).as("p_value"))
+    out(nItems, Option.when(denom > 0)(
+      (k - 1) * (k * colAgg.getDouble(0) - st * st) / denom))
   }
 
   /** G-test (likelihood-ratio) of independence — the χ² companion that
@@ -885,22 +868,15 @@ object Association {
           * 2).as("g"))
       .head()
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
-    if (row.isNullAt(0)) {
-      return spark.range(1).select(lit(0L).as("n"), lit(0L).as("k_a"),
-        lit(0L).as("k_b"), dNull.as("g"), lit(0L).as("df"), dNull.as("p_value"))
-    }
-    val n = row.getDouble(0).toLong
-    val (ka, kb) = (row.getLong(1), row.getLong(2))
-    val dof = (ka - 1) * (kb - 1)
-    if (dof < 1) {
-      return spark.range(1).select(lit(n).as("n"), lit(ka).as("k_a"),
-        lit(kb).as("k_b"), dNull.as("g"), lit(dof).as("df"), dNull.as("p_value"))
-    }
-    val g = row.getDouble(3)
-    spark.range(1).select(lit(n).as("n"), lit(ka).as("k_a"), lit(kb).as("k_b"),
-      lit(g).as("g"), lit(dof).as("df"),
-      lit(Drift.chi2Survival(dof.toInt, g)).as("p_value"))
+    import spark.implicits._
+    // an empty table has no first row: zero counts and df
+    val empty = row.isNullAt(0)
+    val n = if (empty) 0L else row.getDouble(0).toLong
+    val (ka, kb) = if (empty) (0L, 0L) else (row.getLong(1), row.getLong(2))
+    val dof = if (empty) 0L else (ka - 1) * (kb - 1)
+    val g = Option.when(dof >= 1)(row.getDouble(3))
+    Seq((n, ka, kb, g, dof, g.map(Drift.chi2Survival(dof.toInt, _))))
+      .toDF("n", "k_a", "k_b", "g", "df", "p_value")
   }
 
   /** Cronbach's α — internal-consistency reliability of k parallel item
@@ -927,22 +903,17 @@ object Association {
         sum(col(s"x$i") * col(s"x$i")).as(s"q$i")))
     val row = base.agg(aggs.head, aggs.tail: _*).head()
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
+    import spark.implicits._
     val n = if (row.isNullAt(0)) 0L else row.getLong(0)
-    if (n < 2) {
-      return spark.range(1).select(lit(n).as("n"), lit(k.toLong).as("k"),
-        dNull.as("sum_item_var"), dNull.as("total_var"), dNull.as("alpha"))
-    }
     def sampleVar(s: Double, q: Double): Double = (q - s * s / n) / (n - 1)
-    val varT = sampleVar(row.getDouble(1), row.getDouble(2))
-    val sumVarI = (0 until k).map(i =>
-      sampleVar(row.getDouble(3 + 2 * i), row.getDouble(4 + 2 * i))).sum
-    val alpha: Option[Double] =
-      if (varT > 0) Some(k.toDouble / (k - 1) * (1.0 - sumVarI / varT))
-      else None
-    spark.range(1).select(lit(n).as("n"), lit(k.toLong).as("k"),
-      lit(sumVarI).as("sum_item_var"), lit(varT).as("total_var"),
-      alpha.map(lit(_).cast("double")).getOrElse(dNull).as("alpha"))
+    // (sum_item_var, total_var) for n ≥ 2
+    val vars = Option.when(n >= 2)(((0 until k).map(i =>
+        sampleVar(row.getDouble(3 + 2 * i), row.getDouble(4 + 2 * i))).sum,
+      sampleVar(row.getDouble(1), row.getDouble(2))))
+    Seq((n, k.toLong, vars.map(_._1), vars.map(_._2),
+        vars.collect { case (sumVarI, varT) if varT > 0 =>
+          k.toDouble / (k - 1) * (1.0 - sumVarI / varT) }))
+      .toDF("n", "k", "sum_item_var", "total_var", "alpha")
   }
 
   /** Weighted Cohen's κ for ORDINAL ratings — a one-step disagreement
@@ -976,11 +947,12 @@ object Association {
     val spark = df.sparkSession
     import spark.implicits._
     val k = levels.length
-    def dNull = lit(null).cast("double")
-    if (k == 0) {
-      return spark.range(1).select(lit(0L).as("n"), lit(0L).as("k"),
-        dNull.as("obs_penalty"), dNull.as("exp_penalty"), dNull.as("kappa_w"))
-    }
+    // stats = (obs_penalty, exp_penalty, kappa_w)
+    def out(n: Long, stats: Option[(Double, Double, Option[Double])]) =
+      Seq((n, k.toLong, stats.map(_._1), stats.map(_._2),
+          stats.flatMap(_._3)))
+        .toDF("n", "k", "obs_penalty", "exp_penalty", "kappa_w")
+    if (k == 0) return out(0L, None)
     val idx = broadcast(levels.zipWithIndex.toSeq.toDF("v", "i"))
     val cells = base
       .join(idx.select(col("v").as("va"), col("i").as("ia")), Seq("va"))
@@ -998,11 +970,8 @@ object Association {
     val exp = ma.crossJoin(broadcast(mb))
       .agg(sum(col("ra") * col("cb") * pen(col("ia"), col("ib"))))
       .head().getDouble(0) / nTot
-    val kap: Option[Double] =
-      if (exp > 0) Some(1.0 - obs / exp) else None
-    spark.range(1).select(lit(nTot.toLong).as("n"), lit(k.toLong).as("k"),
-      lit(obs / nTot).as("obs_penalty"), lit(exp / nTot).as("exp_penalty"),
-      kap.map(lit(_).cast("double")).getOrElse(dNull).as("kappa_w"))
+    out(nTot.toLong, Some((obs / nTot, exp / nTot,
+      Option.when(exp > 0)(1.0 - obs / exp))))
   }
 
   /** Mutual information between two NUMERIC columns over rank-exact
@@ -1046,11 +1015,13 @@ object Association {
         graft.ops.ScaleOps.quantileRanks(bins))._2
     }
     val (ca, cb) = (cuts("va"), cuts("vb"))
-    def dNull = lit(null).cast("double")
+    import spark.implicits._
+    def out(n: Long, binsA: Long, binsB: Long, mi: Option[Double],
+        nmi: Option[Double]) = Seq((n, binsA, binsB, mi, nmi))
+      .toDF("n", "bins_a", "bins_b", "mi_nats", "nmi")
     if (ca.isEmpty && cb.isEmpty && pairCells.isEmpty) {
       graft.ops.ScaleOps.deregisterInternalPersist(pairCells)
-      return spark.range(1).select(lit(0L).as("n"), lit(0L).as("bins_a"),
-        lit(0L).as("bins_b"), dNull.as("mi_nats"), dNull.as("nmi"))
+      return out(0L, 0L, 0L, None, None)
     }
     def binOf(c: String, cs: Seq[Double]) =
       cs.foldLeft(lit(0)) { (acc, cut) =>
@@ -1068,7 +1039,7 @@ object Association {
     val mb = cells.groupBy(col("bb")).agg(sum(col("o")).as("cb2"))
     val totals = cells.agg(sum(col("o")).as("nn"),
       count_distinct(col("ba")).as("ka"), count_distinct(col("bb")).as("kb"))
-    cells.join(broadcast(ma), "ba").join(broadcast(mb), "bb")
+    val r = cells.join(broadcast(ma), "ba").join(broadcast(mb), "bb")
       .crossJoin(broadcast(totals))
       .agg(first(col("nn")).cast("long").as("n"),
         first(col("ka")).as("bins_a"), first(col("kb")).as("bins_b"),
@@ -1085,6 +1056,9 @@ object Association {
       .select(col("n"), col("bins_a"), col("bins_b"), col("mi_nats"),
         when(col("_ha") > 0 && col("_hb") > 0,
           col("mi_nats") / sqrt(col("_ha") * col("_hb"))).as("nmi"))
+      .head()
+    def opt(o: Int) = Option.when(!r.isNullAt(o))(r.getDouble(o))
+    out(r.getLong(0), r.getLong(1), r.getLong(2), opt(3), opt(4))
   }
 
   /** Fleiss' κ — chance-corrected agreement for MANY raters per item

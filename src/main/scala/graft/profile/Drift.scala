@@ -444,13 +444,14 @@ object Drift {
       splitsHint, persistInput = splitsHint.isEmpty)
     val (na, nb) = (grand(0), grand(1))
     val spark = a.sparkSession
+    import spark.implicits._
+    // stats = (t, t_expected, z) once both sides hold values
+    def out(stats: Option[(Double, Double, Option[Double])]) =
+      Seq((na, nb, stats.map(_._1), stats.map(_._2), stats.flatMap(_._3)))
+        .toDF("n_a", "n_b", "t", "t_expected", "z")
     if (na == 0 || nb == 0) {
       graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-      return spark.range(1).select(
-        lit(na).as("n_a"), lit(nb).as("n_b"),
-        lit(null).cast("double").as("t"),
-        lit(null).cast("double").as("t_expected"),
-        lit(null).cast("double").as("z"))
+      return out(None)
     }
     val fa = (col("_beforeA") + col("n_a")).cast("double") / na
     val fb = (col("_beforeB") + col("n_b")).cast("double") / nb
@@ -464,13 +465,7 @@ object Drift {
     val et = (1 + 1 / bigN) / 6
     val varT = (bigN + 1) / (45 * bigN * bigN) *
       (4 * m * nn * bigN - 3 * (m * m + nn * nn) - 2 * m * nn) / (4 * m * nn)
-    val z: Option[Double] =
-      if (varT > 0) Some((t - et) / math.sqrt(varT)) else None
-    spark.range(1).select(
-      lit(na).as("n_a"), lit(nb).as("n_b"), lit(t).as("t"),
-      lit(et).as("t_expected"),
-      z.map(v => lit(v).cast("double")).getOrElse(lit(null).cast("double"))
-        .as("z"))
+    out(Some((t, et, Option.when(varT > 0)((t - et) / math.sqrt(varT)))))
   }
 
 
@@ -509,13 +504,13 @@ object Drift {
       splitsHint, persistInput = splitsHint.isEmpty)
     val (na, nb) = (grand(0), grand(1))
     val spark = a.sparkSession
+    import spark.implicits._
+    def out(w1: Option[Double], w1Norm: Option[Double]) =
+      Seq((na, nb, grand(2), w1, w1Norm))
+        .toDF("n_a", "n_b", "n_values", "w1", "w1_norm")
     if (na == 0 || nb == 0) {
       graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-      return spark.range(1).select(
-        lit(na).as("n_a"), lit(nb).as("n_b"),
-        lit(grand(2)).as("n_values"),
-        lit(null).cast("double").as("w1"),
-        lit(null).cast("double").as("w1_norm"))
+      return out(None, None)
     }
     val cur = cum.select(col("v"), col("_rank"),
       ((col("_beforeA") + col("n_a")).cast("double") / na).as("_fa"),
@@ -527,18 +522,11 @@ object Drift {
         min(col("v")).as("_lo"), max(col("_vNext")).as("_hi"))
       .head()
     graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-    if (agg.isNullAt(0)) {
-      // a single merged distinct value: zero mass distance by definition
-      return spark.range(1).select(
-        lit(na).as("n_a"), lit(nb).as("n_b"), lit(grand(2)).as("n_values"),
-        lit(0.0).as("w1"), lit(null).cast("double").as("w1_norm"))
-    }
+    // a single merged distinct value: zero mass distance by definition
+    if (agg.isNullAt(0)) return out(Some(0.0), None)
     val w1 = agg.getDouble(0)
     val range = agg.getDouble(2) - agg.getDouble(1)
-    spark.range(1).select(
-      lit(na).as("n_a"), lit(nb).as("n_b"), lit(grand(2)).as("n_values"),
-      lit(w1).as("w1"),
-      (if (range > 0) lit(w1 / range) else lit(null).cast("double")).as("w1_norm"))
+    out(Some(w1), Option.when(range > 0)(w1 / range))
   }
 
 
@@ -610,11 +598,13 @@ object Drift {
       Seq("_beforeA", "_beforeB", "_rank"))
     val (na, nb) = (grand(0), grand(1))
     val spark = a.sparkSession
+    import spark.implicits._
+    def out(e2: Option[Double]) =
+      Seq((na, nb, e2, e2.map(v => math.sqrt(math.max(0.0, v)))))
+        .toDF("n_a", "n_b", "e2", "e")
     if (na == 0 || nb == 0) {
       graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-      return spark.range(1).select(
-        lit(na).as("n_a"), lit(nb).as("n_b"),
-        lit(null).cast("double").as("e2"), lit(null).cast("double").as("e"))
+      return out(None)
     }
     val cur = cum.select(col("v"), col("_rank"),
       ((col("_beforeA") + col("n_a")).cast("double") / na).as("_fa"),
@@ -625,10 +615,7 @@ object Drift {
         .as("_i"))
       .head()
     graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-    val e2 = if (agg.isNullAt(0)) 0.0 else 2 * agg.getDouble(0)
-    spark.range(1).select(
-      lit(na).as("n_a"), lit(nb).as("n_b"),
-      lit(e2).as("e2"), lit(math.sqrt(math.max(0.0, e2))).as("e"))
+    out(Some(if (agg.isNullAt(0)) 0.0 else 2 * agg.getDouble(0)))
   }
 
 
@@ -757,12 +744,13 @@ object Drift {
       persistInput = splitsHint.isEmpty)
     val (ta, tb) = (grand(0), grand(1))
     val spark = a.sparkSession
-    def dNull = lit(null).cast("double")
-    if (ta == 0 || tb == 0) {
-      return spark.range(1).select(lit(ta).as("n_a"), lit(tb).as("n_b"),
-        dNull.as("d_plus"), dNull.as("d_minus"), dNull.as("v"),
-        dNull.as("p_value"))
-    }
+    import spark.implicits._
+    // stats = (d_plus, d_minus, v, p_value) once both sides hold values
+    def out(stats: Option[(Double, Double, Double, Double)]) =
+      Seq((ta, tb, stats.map(_._1), stats.map(_._2), stats.map(_._3),
+          stats.map(_._4)))
+        .toDF("n_a", "n_b", "d_plus", "d_minus", "v", "p_value")
+    if (ta == 0 || tb == 0) return out(None)
     val gap = (col("_ea") + col("n_a")) / lit(ta).cast("double") -
       (col("_eb") + col("n_b")) / lit(tb).cast("double")
     val row = cum.withColumn("_g", gap)
@@ -786,9 +774,7 @@ object Drift {
       }
       math.min(1.0, math.max(0.0, 2.0 * acc))
     }
-    spark.range(1).select(lit(ta).as("n_a"), lit(tb).as("n_b"),
-      lit(dp).as("d_plus"), lit(dm).as("d_minus"), lit(v).as("v"),
-      lit(p).as("p_value"))
+    out(Some((dp, dm, v, p)))
   }
 
 
@@ -827,10 +813,12 @@ object Drift {
     val (na, nb) = (grand(0), grand(1))
     val bigN = na + nb
     val spark = a.sparkSession
-    def dNull = lit(null).cast("double")
-    def nulls = spark.range(1).select(lit(na).as("n_a"), lit(nb).as("n_b"),
-      dNull.as("a2"), dNull.as("sigma"), dNull.as("t_stat"))
-    if (na == 0 || nb == 0) return nulls
+    import spark.implicits._
+    // stats = (a2, sigma, t_stat) of a non-constant pooled column
+    def out(stats: Option[(Double, Double, Double)]) =
+      Seq((na, nb, stats.map(_._1), stats.map(_._2), stats.map(_._3)))
+        .toDF("n_a", "n_b", "a2", "sigma", "t_stat")
+    if (na == 0 || nb == 0) return out(None)
     val l = col("n_a") + col("n_b")
     val bj = col("_ea") + col("_eb") + l
     val ba = bj - l / lit(2.0)
@@ -841,7 +829,7 @@ object Drift {
       sum(when(denom > 0,
         l * pow(lit(bigN.toDouble) * ma - lit(n.toDouble) * ba, 2) / denom))
     val row = cum.agg(side(maA, na).as("sa"), side(maB, nb).as("sb")).head()
-    if (row.isNullAt(0) || row.isNullAt(1)) return nulls // constant column
+    if (row.isNullAt(0) || row.isNullAt(1)) return out(None) // constant column
     val a2 = (bigN - 1.0) / bigN *
       (row.getDouble(0) / na + row.getDouble(1) / nb) / bigN
     // Scholz–Stephens harmonic constants in O(1): h = H_{N−1} = ψ(N)+γ,
@@ -864,11 +852,8 @@ object Drift {
     val nD = bigN.toDouble
     val var2 = (ca * nD * nD * nD + cb * nD * nD + cc * nD + cd) /
       ((nD - 1) * (nD - 2) * (nD - 3))
-    if (var2 <= 0) return nulls
     val sigma = math.sqrt(var2)
-    spark.range(1).select(lit(na).as("n_a"), lit(nb).as("n_b"),
-      lit(a2).as("a2"), lit(sigma).as("sigma"),
-      lit((a2 - (k - 1)) / sigma).as("t_stat"))
+    out(Option.when(!(var2 <= 0))((a2, sigma, (a2 - (k - 1)) / sigma)))
   }
 
 
@@ -898,11 +883,10 @@ object Drift {
     val counts = refV.groupBy(col("v")).agg(count(lit(1)).as("c"))
     val (n, cuts) = graft.ops.ScaleOps.rankCutpoints(counts, "v", "c",
       graft.ops.ScaleOps.quantileRanks(bins))
-    def dNull = lit(null).cast("double")
-    if (n == 0) {
-      return spark.range(1).select(lit(0L).as("n_a"), lit(0L).as("n_b"),
-        lit(0L).as("n_bins"), dNull.as("psi"))
-    }
+    import spark.implicits._
+    def out(nA: Long, nB: Long, nBins: Long, psi: Option[Double]) =
+      Seq((nA, nB, nBins, psi)).toDF("n_a", "n_b", "n_bins", "psi")
+    if (n == 0) return out(0L, 0L, 0L, None)
     val bin = cuts.foldLeft(lit(0)) { (acc, c) =>
       acc + when(col("v") > c, 1).otherwise(0)
     }
@@ -918,12 +902,13 @@ object Drift {
     // aggregate would have run)
     val pb = greatest(when(col("_tb") > 0, col("nb") / col("_tb"))
       .otherwise(lit(0.0)), lit(eps))
-    joined.crossJoin(broadcast(totals))
+    val r = joined.crossJoin(broadcast(totals))
       .agg(first(col("_ta")).cast("long").as("n_a"),
         first(col("_tb")).cast("long").as("n_b"),
         first(col("_k")).cast("long").as("n_bins"),
         sum((pa - pb) * log(pa / pb)).as("psi"))
-      .select(col("n_a"), col("n_b"), col("n_bins"),
-        when(col("n_b") > 0, col("psi")).as("psi"))
+      .head()
+    out(r.getLong(0), r.getLong(1), r.getLong(2),
+      Option.when(r.getLong(1) > 0)(r.getDouble(3)))
   }
 }

@@ -23,6 +23,11 @@ import Drift.{chi2Survival, normalSfAS}
   * ONE partial-aggregated moment/count pass, value- or group-bounded
   * intermediate tables, and closed-form driver algebra — no data-sized
   * driver state, no unkeyed windows.
+  *
+  * Output convention: a one-row statistic names its columns once, in one
+  * `Seq((…)).toDF(…)`; a degenerate input (an empty side, too few rows,
+  * zero variance) leaves the affected stats `None`, so its row has the
+  * same columns and types as a normal one.
   */
 object StatTests {
 
@@ -116,25 +121,21 @@ object StatTests {
     val (n1, n0) = (lg(0), lg(1))
     val (sPre1, sPost1, sPre0, sPost0) = (lg(2), lg(3), lg(4), lg(5))
     val (sdd1, sdd0) = (lg(6), lg(7))
-    def nullRow = Seq((n1, n0, Option.empty[Double], Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Double]))
-      .toDF("n_treated", "n_control", "pre_treated", "post_treated",
-        "pre_control", "post_control", "did", "se", "z", "p_value")
-    if (n1 < 2 || n0 < 2) return nullRow
-    val d1 = (sPost1 - sPre1).toDouble / n1
-    val d0 = (sPost0 - sPre0).toDouble / n0
-    val did = d1 - d0
+    val ok = n1 >= 2 && n0 >= 2
+    def mean(s: Long, n: Long) = Option.when(ok)(s.toDouble / n)
+    val did = for (d1 <- mean(sPost1 - sPre1, n1);
+        d0 <- mean(sPost0 - sPre0, n0)) yield d1 - d0
     // Welch: per-arm sample variance of d from exact Σd, Σd²
     val v1 = (sdd1 - (sPost1 - sPre1).toDouble * (sPost1 - sPre1) / n1) /
       (n1 - 1.0)
     val v0 = (sdd0 - (sPost0 - sPre0).toDouble * (sPost0 - sPre0) / n0) /
       (n0 - 1.0)
-    val se = math.sqrt(math.max(v1, 0.0) / n1 + math.max(v0, 0.0) / n0)
-    val z = if (se > 0) Some(did / se) else None
-    Seq((n1, n0, Some(sPre1.toDouble / n1), Some(sPost1.toDouble / n1),
-        Some(sPre0.toDouble / n0), Some(sPost0.toDouble / n0), Some(did),
-        if (se > 0) Some(se) else None, z,
+    val se = Option.when(ok)(
+      math.sqrt(math.max(v1, 0.0) / n1 + math.max(v0, 0.0) / n0))
+      .filter(_ > 0)
+    val z = for (d <- did; s <- se) yield d / s
+    Seq((n1, n0, mean(sPre1, n1), mean(sPost1, n1), mean(sPre0, n0),
+        mean(sPost0, n0), did, se, z,
         z.map(x => math.min(1.0, 2.0 * normalSfAS(math.abs(x))))))
       .toDF("n_treated", "n_control", "pre_treated", "post_treated",
         "pre_control", "post_control", "did", "se", "z", "p_value")
@@ -172,28 +173,20 @@ object StatTests {
     val (na, nb, sa, sb) = (r.getLong(0), r.getLong(1),
       if (r.isNullAt(2)) 0L else r.getLong(2),
       if (r.isNullAt(3)) 0L else r.getLong(3))
-    def nullRow = Seq((na, nb, Option.empty[Double], Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Long],
-        Option.empty[Double]))
-      .toDF("n_a", "n_b", "p_a", "p_b", "delta", "mde",
-        "n_required_per_arm", "power_at_n")
-    if (na == 0 || nb == 0) return nullRow
     val pA = sa.toDouble / na; val pB = sb.toDouble / nb
     val pPool = (sa + sb).toDouble / (na + nb)
     val v = pPool * (1.0 - pPool) * (1.0 / na + 1.0 / nb)
-    if (v <= 0) return nullRow
+    val ok = na > 0 && nb > 0 && v > 0
     val se = math.sqrt(v)
     val delta = pB - pA
-    val mde = (zAlpha + zPower) * se
-    val nReq: Option[Long] =
-      if (delta == 0) None
-      else Some(math.ceil((zAlpha + zPower) * (zAlpha + zPower) * 2.0 *
+    val nReq = Option.when(ok && delta != 0)(math.ceil(
+      (zAlpha + zPower) * (zAlpha + zPower) * 2.0 *
         pPool * (1.0 - pPool) / (delta * delta)).toLong)
     // Φ(q) = 1 − SF(q); the SF reflects for q < 0, so both engines
     // replay the same polynomial whichever side of zero q lands on
-    val power = 1.0 - normalSfAS(math.abs(delta) / se - zAlpha)
-    Seq((na, nb, Some(pA), Some(pB), Some(delta), Some(mde), nReq,
-        Some(power)))
+    Seq((na, nb, Option.when(ok)(pA), Option.when(ok)(pB),
+        Option.when(ok)(delta), Option.when(ok)((zAlpha + zPower) * se), nReq,
+        Option.when(ok)(1.0 - normalSfAS(math.abs(delta) / se - zAlpha))))
       .toDF("n_a", "n_b", "p_a", "p_b", "delta", "mde",
         "n_required_per_arm", "power_at_n")
   }
@@ -358,15 +351,6 @@ object StatTests {
       dc(3), dc(4))
     val (nb, sxb, syb, sxyb, sxxb) = (lg(5), dc(6), lg(7).toDouble,
       dc(8), dc(9))
-    def nullRow = Seq((na, nb,
-        if (na > 0) Some(sya / na) else None,
-        if (nb > 0) Some(syb / nb) else None,
-        if (na > 0 && nb > 0) Some(sya / na - syb / nb) else None,
-        Option.empty[Double], Option.empty[Double],
-        Option.empty[Double]))
-      .toDF("n_a", "n_b", "mean_a", "mean_b", "gap", "explained",
-        "unexplained", "pct_explained")
-    if (na < 3 || nb < 3) return nullRow
     def ols(nn: Long, sx: Double, sy: Double, sxy: Double,
         sxx: Double): Option[(Double, Double)] = {
       val den = sxx - sx * sx / nn
@@ -376,18 +360,17 @@ object StatTests {
         Some((sy / nn - b * sx / nn, b))
       }
     }
-    (ols(na, sxa, sya, sxya, sxxa), ols(nb, sxb, syb, sxyb, sxxb)) match {
-      case (Some((aA, bA)), Some((aB, bB))) =>
-        val gap = sya / na - syb / nb
-        val explained = bB * (sxa / na - sxb / nb)
-        val unexplained = (aA - aB) + (sxa / na) * (bA - bB)
-        Seq((na, nb, Some(sya / na), Some(syb / nb), Some(gap),
-            Some(explained), Some(unexplained),
-            if (gap != 0) Some(explained / gap) else None))
-          .toDF("n_a", "n_b", "mean_a", "mean_b", "gap", "explained",
-            "unexplained", "pct_explained")
-      case _ => nullRow
-    }
+    val fits = if (na < 3 || nb < 3) None
+      else ols(na, sxa, sya, sxya, sxxa).zip(ols(nb, sxb, syb, sxyb, sxxb))
+    val gap = Option.when(na > 0 && nb > 0)(sya / na - syb / nb)
+    val explained = fits.map { case (_, (_, bB)) => bB * (sxa / na - sxb / nb) }
+    val unexplained = fits.map { case ((aA, bA), (aB, bB)) =>
+      (aA - aB) + (sxa / na) * (bA - bB) }
+    Seq((na, nb, Option.when(na > 0)(sya / na),
+        Option.when(nb > 0)(syb / nb), gap, explained, unexplained,
+        for (e <- explained; g <- gap if g != 0) yield e / g))
+      .toDF("n_a", "n_b", "mean_a", "mean_b", "gap", "explained",
+        "unexplained", "pct_explained")
   }
 
   /** Page's trend test — the ORDERED-alternative twin of Friedman
@@ -428,11 +411,17 @@ object StatTests {
     val k = conds.length
     require(k <= maxConditions,
       s"pageTrend: $k conditions exceed maxConditions $maxConditions")
-    def nullRow(b: Long) = Seq((b, k.toLong, Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Double],
-        Option.empty[Double]))
-      .toDF("n_items", "k", "l_stat", "mean_l", "var_l", "z", "p_value")
-    if (k < 3) return nullRow(0)
+    // l = L once at least 2 complete blocks exist
+    def out(bN: Long, l: Option[Double]) = {
+      val kD = k.toDouble
+      val meanL = bN * kD * (kD + 1) * (kD + 1) / 4.0
+      val varL = bN * kD * kD * (kD + 1) * (kD + 1) * (kD - 1) / 144.0
+      val z = l.map(v => (v - meanL) / math.sqrt(varL))
+      Seq((bN, k.toLong, l, l.map(_ => meanL), l.map(_ => varL), z,
+          z.map(v => math.min(1.0, normalSfAS(v)))))
+        .toDF("n_items", "k", "l_stat", "mean_l", "var_l", "z", "p_value")
+    }
+    if (k < 3) return out(0, None)
     val condIdx = conds.zipWithIndex.map { case (c, i) => c -> (i + 1L) }
     // complete blocks only: the item appears under ALL k conditions
     val complete = pv.groupBy(col("__it"))
@@ -453,15 +442,7 @@ object StatTests {
         countDistinct(col("__it")).as("__b"))
       .head()
     val bN = agg.getLong(1)
-    if (bN < 2) return nullRow(bN)
-    val l = agg.getLong(0).toDouble / 2.0
-    val kD = k.toDouble
-    val meanL = bN * kD * (kD + 1) * (kD + 1) / 4.0
-    val varL = bN * kD * kD * (kD + 1) * (kD + 1) * (kD - 1) / 144.0
-    val z = (l - meanL) / math.sqrt(varL)
-    Seq((bN, k.toLong, Some(l), Some(meanL), Some(varL), Some(z),
-        Some(math.min(1.0, normalSfAS(z)))))
-      .toDF("n_items", "k", "l_stat", "mean_l", "var_l", "z", "p_value")
+    out(bN, Option.when(bN >= 2)(agg.getLong(0).toDouble / 2.0))
   }
 
   /** Newcombe hybrid-Wilson confidence interval for a proportion
@@ -496,13 +477,6 @@ object StatTests {
     val (na, nb, sa, sb) = (r.getLong(0), r.getLong(1),
       if (r.isNullAt(2)) 0L else r.getLong(2),
       if (r.isNullAt(3)) 0L else r.getLong(3))
-    def nullRow = Seq((na, nb, Option.empty[Double], Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Double],
-        Option.empty[Double]))
-      .toDF("n_a", "n_b", "p_a", "p_b", "wilson_lo_a", "wilson_hi_a",
-        "wilson_lo_b", "wilson_hi_b", "delta", "ci_lo", "ci_hi")
-    if (na == 0 || nb == 0) return nullRow
     val z2 = zCrit * zCrit
     def wilson(s: Long, n: Long): (Double, Double, Double) = {
       val p = s.toDouble / n
@@ -518,8 +492,9 @@ object StatTests {
       (uA - pA) * (uA - pA))
     val hi = delta + math.sqrt((uB - pB) * (uB - pB) +
       (pA - lA) * (pA - lA))
-    Seq((na, nb, Some(pA), Some(pB), Some(lA), Some(uA), Some(lB),
-        Some(uB), Some(delta), Some(lo), Some(hi)))
+    def stat(v: Double) = Option.when(na > 0 && nb > 0)(v)
+    Seq((na, nb, stat(pA), stat(pB), stat(lA), stat(uA), stat(lB),
+        stat(uB), stat(delta), stat(lo), stat(hi)))
       .toDF("n_a", "n_b", "p_a", "p_b", "wilson_lo_a", "wilson_hi_a",
         "wilson_lo_b", "wilson_hi_b", "delta", "ci_lo", "ci_hi")
   }
@@ -556,26 +531,23 @@ object StatTests {
         sum(col("__x").cast("decimal(38,0)") * col("__y")).as("sxy"))
       .head()
     val n = r.getLong(0)
-    def nullRow(mx: Option[Double], my: Option[Double]) = Seq((n, mx, my,
-        Option.empty[Double], Option.empty[Double], Option.empty[Double]))
-      .toDF("n", "mean_x", "mean_y", "slope", "intercept", "pearson_r")
-    if (n < 2) return nullRow(None, None)
-    def dec(o: Int): Double = BigDecimal(r.getDecimal(o)).toDouble
+    val ok = n >= 2
+    def dec(o: Int): Double =
+      if (r.isNullAt(o)) 0.0 else BigDecimal(r.getDecimal(o)).toDouble
     val (sx, sy, sxx, syy, sxy) = (dec(1), dec(2), dec(3), dec(4), dec(5))
     val nD = n.toDouble
     val cxx = sxx - sx * sx / nD
     val cyy = syy - sy * sy / nD
     val cxy = sxy - sx * sy / nD
     val mx = sx / nD; val my = sy / nD
-    val rOpt = if (cxx > 0 && cyy > 0)
-      Some(cxy / math.sqrt(cxx * cyy)) else None
-    if (cxy == 0) return Seq((n, Some(mx), Some(my),
-        Option.empty[Double], Option.empty[Double], rOpt))
-      .toDF("n", "mean_x", "mean_y", "slope", "intercept", "pearson_r")
-    val d = cyy - lambda * cxx
-    val slope = (d + math.sqrt(d * d + 4.0 * lambda * cxy * cxy)) /
-      (2.0 * cxy)
-    Seq((n, Some(mx), Some(my), Some(slope), Some(my - slope * mx), rOpt))
+    val rOpt = Option.when(ok && cxx > 0 && cyy > 0)(
+      cxy / math.sqrt(cxx * cyy))
+    val slope = Option.when(ok && cxy != 0) {
+      val d = cyy - lambda * cxx
+      (d + math.sqrt(d * d + 4.0 * lambda * cxy * cxy)) / (2.0 * cxy)
+    }
+    Seq((n, Option.when(ok)(mx), Option.when(ok)(my), slope,
+        slope.map(b => my - b * mx), rOpt))
       .toDF("n", "mean_x", "mean_y", "slope", "intercept", "pearson_r")
   }
 
@@ -611,13 +583,8 @@ object StatTests {
         sum(col("__x").cast("decimal(38,0)") * col("__y")).as("sxy"))
       .head()
     val n = r.getLong(0)
-    def nullAll = Seq((n, Option.empty[Double], Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Double],
-        Option.empty[Double], Option.empty[Double]))
-      .toDF("n", "mean_x", "mean_y", "ccc", "pearson_r", "bias",
-        "loa_lo", "loa_hi")
-    if (n < 2) return nullAll
-    def dec(o: Int): Double = BigDecimal(r.getDecimal(o)).toDouble
+    def dec(o: Int): Double =
+      if (r.isNullAt(o)) 0.0 else BigDecimal(r.getDecimal(o)).toDouble
     val (sx, sy, sxx, syy, sxy) = (dec(1), dec(2), dec(3), dec(4), dec(5))
     val nD = n.toDouble
     val mx = sx / nD; val my = sy / nD
@@ -626,16 +593,18 @@ object StatTests {
     val vy = syy / nD - my * my
     val cxy = sxy / nD - mx * my
     val cccDen = vx + vy + (mx - my) * (mx - my)
-    val ccc = if (cccDen > 0) Some(2.0 * cxy / cccDen) else None
-    val rP = if (vx > 0 && vy > 0) Some(cxy / math.sqrt(vx * vy)) else None
+    def stat(v: Double) = Option.when(n >= 2)(v)
+    val ccc = Option.when(n >= 2 && cccDen > 0)(2.0 * cxy / cccDen)
+    val rP = Option.when(n >= 2 && vx > 0 && vy > 0)(
+      cxy / math.sqrt(vx * vy))
     val bias = my - mx
     // sample variance of the paired differences from the same moments
     val sdd = syy - 2.0 * sxy + sxx
     val sd2 = sy - sx
     val varD = (sdd - sd2 * sd2 / nD) / (nD - 1.0)
     val sdD = math.sqrt(math.max(varD, 0.0))
-    Seq((n, Some(mx), Some(my), ccc, rP, Some(bias),
-        Some(bias - 1.959963985 * sdD), Some(bias + 1.959963985 * sdD)))
+    Seq((n, stat(mx), stat(my), ccc, rP, stat(bias),
+        stat(bias - 1.959963985 * sdD), stat(bias + 1.959963985 * sdD)))
       .toDF("n", "mean_x", "mean_y", "ccc", "pearson_r", "bias",
         "loa_lo", "loa_hi")
   }
@@ -673,15 +642,10 @@ object StatTests {
     val (n1, n0) = (r.getLong(0), r.getLong(1))
     val a = if (r.isNullAt(2)) 0L else r.getLong(2)
     val c = if (r.isNullAt(3)) 0L else r.getLong(3)
-    def nullRow = Seq((n1, n0, Option.empty[Double], Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Double]))
-      .toDF("n_exposed", "n_unexposed", "rr", "rr_lo", "rr_hi",
-        "e_value", "e_value_ci")
     // a == n1 / c == n0 (risk exactly 1 in an arm) stays DEFINED: the
     // Wald term 1/a − 1/n1 just vanishes — only an empty margin or an
     // event-free arm (log of 0) is degenerate, mirroring the oracle
-    if (n1 == 0 || n0 == 0 || a == 0 || c == 0)
-      return nullRow
+    def stat(v: Double) = Option.when(n1 > 0 && n0 > 0 && a > 0 && c > 0)(v)
     val rr = (a.toDouble / n1) / (c.toDouble / n0)
     val seLn = math.sqrt(1.0 / a - 1.0 / n1 + 1.0 / c - 1.0 / n0)
     val lo = math.exp(math.log(rr) - 1.959963985 * seLn)
@@ -695,7 +659,7 @@ object StatTests {
       if (lo <= 1.0 && hi >= 1.0) 1.0
       else if (rr >= 1.0) eOf(lo)
       else eOf(hi)
-    Seq((n1, n0, Some(rr), Some(lo), Some(hi), Some(eOf(rr)), Some(eCi)))
+    Seq((n1, n0, stat(rr), stat(lo), stat(hi), stat(eOf(rr)), stat(eCi)))
       .toDF("n_exposed", "n_unexposed", "rr", "rr_lo", "rr_hi",
         "e_value", "e_value_ci")
   }
@@ -731,22 +695,16 @@ object StatTests {
     val (na, nb, sa, sb) = (r.getLong(0), r.getLong(1),
       if (r.isNullAt(2)) 0L else r.getLong(2),
       if (r.isNullAt(3)) 0L else r.getLong(3))
-    def nullRow = Seq((na, nb, Option.empty[Double], Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Double],
-        Option.empty[Boolean]))
-      .toDF("n_a", "n_b", "p_a", "p_b", "delta", "lambda_stat",
-        "p_always", "reject_05")
-    if (na == 0 || nb == 0) return nullRow
     val pA = sa.toDouble / na; val pB = sb.toDouble / nb
     val pPool = (sa + sb).toDouble / (na + nb)
     val v = pPool * (1.0 - pPool) * (1.0 / na + 1.0 / nb)
-    if (v <= 0) return nullRow
+    def stat[T](x: T) = Option.when(na > 0 && nb > 0 && v > 0)(x)
     val delta = pB - pA
     val lambda = math.sqrt(v / (v + tau)) *
       math.exp(delta * delta * tau / (2.0 * v * (v + tau)))
     val pAlways = math.min(1.0, 1.0 / lambda)
-    Seq((na, nb, Some(pA), Some(pB), Some(delta), Some(lambda),
-        Some(pAlways), Some(pAlways < 0.05)))
+    Seq((na, nb, stat(pA), stat(pB), stat(delta), stat(lambda),
+        stat(pAlways), stat(pAlways < 0.05)))
       .toDF("n_a", "n_b", "p_a", "p_b", "delta", "lambda_stat",
         "p_always", "reject_05")
   }
@@ -821,10 +779,6 @@ object StatTests {
       outcomeCol: String, covariateCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    def nullRow(n: Long) = Seq((n, Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Double],
-        Option.empty[Double]))
-      .toDF("n", "ate", "se", "z", "p_value", "beta_covariate")
     val base = df.filter(col(treatCol).isNotNull &&
         col(outcomeCol).isNotNull && col(covariateCol).isNotNull)
       .select(col(treatCol).cast("long").as("__t"),
@@ -842,7 +796,15 @@ object StatTests {
         sum(col("__y") * col("__y")).as("syy"))
       .head()
     val n = r.getLong(0)
-    if (n <= 3) return nullRow(n)
+    // fit = (ate, se, beta_covariate) of a full-rank design
+    def out(fit: Option[(Double, Double, Double)]) = {
+      val se = fit.map(_._2).filter(_ > 0)
+      val z = for ((ate, _, _) <- fit; s <- se) yield ate / s
+      Seq((n, fit.map(_._1), se, z, z.map(x => math.min(1.0,
+          2.0 * Drift.normalSfAS(math.abs(x)))), fit.map(_._3)))
+        .toDF("n", "ate", "se", "z", "p_value", "beta_covariate")
+    }
+    if (n <= 3) return out(None)
     require(base.agg(max(col("__t")), min(col("__t"))).head() match {
         case m => m.getLong(0) <= 1L && m.getLong(1) >= 0L
       }, "regressionAdjustedAte needs a 0/1 treatment")
@@ -861,18 +823,13 @@ object StatTests {
     val cXY = sxy - sx * sy / nD
     val cYY = syy - sy * sy / nD
     val det = cTT * cXX - cTX * cTX
-    if (det <= 0) return nullRow(n)
-    val ate = (cTY * cXX - cTX * cXY) / det
-    val bx = (cXY * cTT - cTX * cTY) / det
-    val rss = cYY - ate * cTY - bx * cXY
-    val sigma2 = math.max(rss, 0.0) / (n - 3.0)
-    val se = math.sqrt(sigma2 * cXX / det)
-    val z = if (se > 0) Some(ate / se) else None
-    Seq((n, Some(ate), if (se > 0) Some(se) else None, z,
-        z.map(x => math.min(1.0,
-          2.0 * Drift.normalSfAS(math.abs(x)))),
-        Some(bx)))
-      .toDF("n", "ate", "se", "z", "p_value", "beta_covariate")
+    out(Option.when(det > 0) {
+      val ate = (cTY * cXX - cTX * cXY) / det
+      val bx = (cXY * cTT - cTX * cTY) / det
+      val rss = cYY - ate * cTY - bx * cXY
+      val sigma2 = math.max(rss, 0.0) / (n - 3.0)
+      (ate, math.sqrt(sigma2 * cXX / det), bx)
+    })
   }
 
   /** Hodges–Lehmann shift estimate with the Lehmann (Moses) rank CI —
@@ -912,18 +869,18 @@ object StatTests {
       .groupBy(col("vb")).agg(count(lit(1)).as("wb")))
     val spark = a.sparkSession
     import spark.implicits._
-    def nullRow(na: Long, nb: Long) = {
-      graft.ops.ScaleOps.releaseCheckpointBlocks(ca)
-      graft.ops.ScaleOps.releaseCheckpointBlocks(cb)
-      Seq((na, nb, 0L,
-        Option.empty[Double], Option.empty[Double], Option.empty[Double]))
-        .toDF("n_a", "n_b", "n_pairs", "hl_shift", "ci_lo", "ci_hi")
-    }
     val sizes = ca.agg(sum(col("wa")), count(lit(1))).head()
     val sizesB = cb.agg(sum(col("wb")), count(lit(1))).head()
     val na = if (sizes.isNullAt(0)) 0L else sizes.getLong(0)
     val nb = if (sizesB.isNullAt(0)) 0L else sizesB.getLong(0)
-    if (na == 0 || nb == 0) return nullRow(na, nb)
+    def out(nPairs: Long, hl: Option[Double], lo: Option[Double],
+        hi: Option[Double]) = Seq((na, nb, nPairs, hl, lo, hi))
+      .toDF("n_a", "n_b", "n_pairs", "hl_shift", "ci_lo", "ci_hi")
+    if (na == 0 || nb == 0) {
+      graft.ops.ScaleOps.releaseCheckpointBlocks(ca)
+      graft.ops.ScaleOps.releaseCheckpointBlocks(cb)
+      return out(0L, None, None, None)
+    }
     val cellsA = sizes.getLong(1); val cellsB = sizesB.getLong(1)
     require(cellsA * cellsB <= maxPairCells,
       s"hodgesLehmann: $cellsA x $cellsB difference cells exceed " +
@@ -949,9 +906,7 @@ object StatTests {
       osAgg(kLo, "olo"), osAgg(kHi, "ohi")).head()
     graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
     val hl = (row.getDouble(0) + row.getDouble(1)) / 2.0
-    Seq((na, nb, nPairs, Some(hl), Some(row.getDouble(2)),
-        Some(row.getDouble(3))))
-      .toDF("n_a", "n_b", "n_pairs", "hl_shift", "ci_lo", "ci_hi")
+    out(nPairs, Some(hl), Some(row.getDouble(2)), Some(row.getDouble(3)))
   }
 
   /** Delete-one-group jackknife SE for a RATIO metric — the honest error
@@ -979,9 +934,6 @@ object StatTests {
       s"buckets must be in [2, 4096]: $buckets")
     val spark = df.sparkSession
     import spark.implicits._
-    def nullRow(n: Long) = Seq((n, buckets, Option.empty[Double],
-        Option.empty[Double], Option.empty[Double], Option.empty[Double]))
-      .toDF("n", "buckets", "ratio", "se", "ci_lo", "ci_hi")
     val b = conv(substring(md5(concat(lit(s"jk$salt:"),
         col(idCol).cast("string"))), 1, 8), 16, 10)
       .cast("long") % buckets
@@ -994,28 +946,25 @@ object StatTests {
         d12(col(denCol)).as("__sd"))
       .collect()
     val n = per.map(_.getLong(1)).sum
-    if (per.isEmpty) return nullRow(0)
     // bucket order fixes the (tiny) double-summation order of the
     // replicate mean/variance — deterministic across reruns
     val ord = per.sortBy(_.getLong(0))
     val sn = ord.map(r => BigDecimal(r.getDecimal(2)))
     val sd = ord.map(r => BigDecimal(r.getDecimal(3)))
     val tn = sn.sum; val td = sd.sum
-    if (td.toDouble <= 0) return nullRow(n)
     val ratio = tn.toDouble / td.toDouble
     // replicate ratios from EXACT leave-one-out decimal sums
-    val reps = per.indices.map { i =>
-      val dd = (td - sd(i)).toDouble
-      if (dd <= 0) return nullRow(n)
-      (tn - sn(i)).toDouble / dd
-    }
-    val bN = reps.size
+    val dds = sd.map(s => (td - s).toDouble)
+    val reps = sn.zip(dds).map { case (s, dd) => (tn - s).toDouble / dd }
+    val bN = reps.length
     val rBar = reps.sum / bN
     val se = math.sqrt(
       (bN - 1.0) / bN * reps.map(r => (r - rBar) * (r - rBar)).sum)
-    Seq((n, buckets, Some(ratio), Some(se),
-        Some(ratio - 1.959963984540054 * se),
-        Some(ratio + 1.959963984540054 * se)))
+    def stat(v: Double) =
+      Option.when(td.toDouble > 0 && dds.forall(_ > 0))(v)
+    Seq((n, buckets, stat(ratio), stat(se),
+        stat(ratio - 1.959963984540054 * se),
+        stat(ratio + 1.959963984540054 * se)))
       .toDF("n", "buckets", "ratio", "se", "ci_lo", "ci_hi")
   }
 
@@ -1049,11 +998,13 @@ object StatTests {
     val n = grand(0)
     val spark = df.sparkSession
     import spark.implicits._
+    // shares = (gini, top1, top10) once the total mass is positive
+    def out(total: Option[Long], shares: Option[(Double, Double, Double)]) =
+      Seq((n, total, shares.map(_._1), shares.map(_._2), shares.map(_._3)))
+        .toDF("n", "total", "gini", "top1_share", "top10_share")
     if (n < 2) {
       graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-      return Seq((n, Option.empty[Long], Option.empty[Double],
-          Option.empty[Double], Option.empty[Double]))
-        .toDF("n", "total", "gini", "top1_share", "top10_share")
+      return out(None, None)
     }
     def dec(c: Column) = c.cast("decimal(38,0)")
     val vD = dec(col("v")); val cD = dec(col("c")); val bD = dec(col("b"))
@@ -1081,18 +1032,12 @@ object StatTests {
     def bd(o: Int): BigDecimal =
       if (row.isNullAt(o)) BigDecimal(0) else BigDecimal(row.getDecimal(o))
     val t = bd(0); val num = bd(1)
-    if (t <= 0)
-      return Seq((n, Some(t.toLong), Option.empty[Double],
-          Option.empty[Double], Option.empty[Double]))
-        .toDF("n", "total", "gini", "top1_share", "top10_share")
-    val gini = 2.0 * num.toDouble / (n.toDouble * t.toDouble) -
-      (n + 1.0) / n
     // exact integer subtraction first, ONE double division — the order
     // an external 128-bit-integer engine reproduces
-    val top1 = (t - bd(2)).toDouble / t.toDouble
-    val top10 = (t - bd(3)).toDouble / t.toDouble
-    Seq((n, Some(t.toLong), Some(gini), Some(top1), Some(top10)))
-      .toDF("n", "total", "gini", "top1_share", "top10_share")
+    out(Some(t.toLong), Option.when(t > 0)((
+      2.0 * num.toDouble / (n.toDouble * t.toDouble) - (n + 1.0) / n,
+      (t - bd(2)).toDouble / t.toDouble,
+      (t - bd(3)).toDouble / t.toDouble)))
   }
 
 
@@ -1143,26 +1088,21 @@ object StatTests {
       .head()
     graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
     val spark = a.sparkSession
-    if (na == 0 || nb == 0 || n < 2) {
-      return spark.range(1).select(
-        lit(na).as("n_a"), lit(nb).as("n_b"),
-        lit(null).cast("double").as("u_a"), lit(null).cast("double").as("u_b"),
-        lit(null).cast("double").as("u"), lit(null).cast("double").as("z"))
+    import spark.implicits._
+    // (u_a, u_b, z) once both sides hold values
+    val stats = Option.when(na > 0 && nb > 0 && n >= 2) {
+      val ra = agg.getDouble(0)
+      val ties = agg.getDouble(1)
+      val ua = ra - na.toDouble * (na + 1) / 2.0
+      val ub = na.toDouble * nb - ua
+      val mu = na.toDouble * nb / 2.0
+      val sigma2 = na.toDouble * nb / 12.0 *
+        ((n + 1).toDouble - ties / (n.toDouble * (n - 1)))
+      (ua, ub, Option.when(sigma2 > 0)((ua - mu) / math.sqrt(sigma2)))
     }
-    val ra = agg.getDouble(0)
-    val ties = agg.getDouble(1)
-    val ua = ra - na.toDouble * (na + 1) / 2.0
-    val ub = na.toDouble * nb - ua
-    val mu = na.toDouble * nb / 2.0
-    val sigma2 =
-      na.toDouble * nb / 12.0 * ((n + 1).toDouble - ties / (n.toDouble * (n - 1)))
-    val z: Option[Double] =
-      if (sigma2 > 0) Some((ua - mu) / math.sqrt(sigma2)) else None
-    spark.range(1).select(
-      lit(na).as("n_a"), lit(nb).as("n_b"),
-      lit(ua).as("u_a"), lit(ub).as("u_b"),
-      lit(math.min(ua, ub)).as("u"),
-      z.map(v => lit(v).cast("double")).getOrElse(lit(null).cast("double")).as("z"))
+    Seq((na, nb, stats.map(_._1), stats.map(_._2),
+        stats.map(s => math.min(s._1, s._2)), stats.flatMap(_._3)))
+      .toDF("n_a", "n_b", "u_a", "u_b", "u", "z")
   }
 
 
@@ -1391,44 +1331,54 @@ object StatTests {
     * sums; everything downstream is two scalar rows combined on the
     * driver. */
   def welchTTest(a: DataFrame, b: DataFrame, column: String): DataFrame = {
-    // moments, not var_samp: Σv and Σv² are EXACT for integer-valued data
-    // (< 2^53), so mean and variance derive from the identical closed
-    // formula on any engine — var_samp's partial-merge accumulation order
-    // is not cross-engine reproducible at the rounding precision
-    def side(df: DataFrame) = df
-      .select(col(column).cast("double").as("v"))
+    val (na, sa, qa) = sideMoments(a, column)
+    val (nb, sb, qb) = sideMoments(b, column)
+    val spark = a.sparkSession
+    import spark.implicits._
+    val (ma, mb) = (sa / na, sb / nb)
+    val va = (qa - sa * sa / na) / (na - 1)
+    val vb = (qb - sb * sb / nb) / (nb - 1)
+    val (wa, wb) = (va / na, vb / nb)
+    val se2 = wa + wb
+    val ok = na >= 2 && nb >= 2
+    val sp2 = ((na - 1) * va + (nb - 1) * vb) / (na + nb - 2).toDouble
+    Seq((na, nb, Option.when(na > 0)(ma), Option.when(nb > 0)(mb),
+        Option.when(ok && se2 > 0)((ma - mb) / math.sqrt(se2)),
+        Option.when(ok && se2 > 0)(
+          se2 * se2 / (wa * wa / (na - 1) + wb * wb / (nb - 1))),
+        Option.when(ok && sp2 > 0)((ma - mb) / math.sqrt(sp2))))
+      .toDF("n_a", "n_b", "mean_a", "mean_b", "t", "df", "cohens_d")
+  }
+
+  /** One side's `(n, Σv, Σv²)` over the non-null values of `column` (the
+    * sums read 0 when n = 0) — the moment pass of the two-sample tests.
+    * Moments, not var_samp: Σv and Σv² are EXACT for integer-valued data
+    * (< 2^53), so mean and variance derive from the identical closed
+    * formula on any engine — var_samp's partial-merge accumulation order
+    * is not cross-engine reproducible at the rounding precision. */
+  private def sideMoments(df: DataFrame,
+      column: String): (Long, Double, Double) = {
+    val r = df.select(col(column).cast("double").as("v"))
       .filter(col("v").isNotNull)
       .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
         sum(col("v") * col("v")).as("q"))
       .head()
-    val (ra, rb) = (side(a), side(b))
-    val (na, nb) = (ra.getLong(0), rb.getLong(0))
-    val spark = a.sparkSession
-    def dNull = lit(null).cast("double")
-    if (na < 2 || nb < 2) {
-      return spark.range(1).select(lit(na).as("n_a"), lit(nb).as("n_b"),
-        (if (na > 0) lit(ra.getDouble(1) / na) else dNull).as("mean_a"),
-        (if (nb > 0) lit(rb.getDouble(1) / nb) else dNull).as("mean_b"),
-        dNull.as("t"), dNull.as("df"), dNull.as("cohens_d"))
-    }
-    val (ma, mb) = (ra.getDouble(1) / na, rb.getDouble(1) / nb)
-    val va = (ra.getDouble(2) - ra.getDouble(1) * ra.getDouble(1) / na) / (na - 1)
-    val vb = (rb.getDouble(2) - rb.getDouble(1) * rb.getDouble(1) / nb) / (nb - 1)
-    val (wa, wb) = (va / na, vb / nb)
-    val se2 = wa + wb
-    val t: Option[Double] =
-      if (se2 > 0) Some((ma - mb) / math.sqrt(se2)) else None
-    val dfw: Option[Double] =
-      if (se2 > 0) Some(se2 * se2 /
-        (wa * wa / (na - 1) + wb * wb / (nb - 1))) else None
-    val sp2 = ((na - 1) * va + (nb - 1) * vb) / (na + nb - 2).toDouble
-    val d: Option[Double] =
-      if (sp2 > 0) Some((ma - mb) / math.sqrt(sp2)) else None
-    def out(o: Option[Double]) = o.map(lit(_).cast("double")).getOrElse(dNull)
-    spark.range(1).select(lit(na).as("n_a"), lit(nb).as("n_b"),
-      lit(ma).as("mean_a"), lit(mb).as("mean_b"),
-      out(t).as("t"), out(dfw).as("df"), out(d).as("cohens_d"))
+    def d(o: Int) = if (r.isNullAt(o)) 0.0 else r.getDouble(o)
+    (r.getLong(0), d(1), d(2))
   }
+
+  /** Per-group `(g, ng, s, q)` = (label, count, Σv, Σv²) of `valueCol`
+    * by the string-cast `groupCol`, complete cases only — the one moment
+    * pass of the k-group tests (a partial aggregation, so the shuffle is
+    * bounded by the group count). */
+  private def groupMoments(df: DataFrame, groupCol: String,
+      valueCol: String): DataFrame = df
+    .select(col(groupCol).cast("string").as("g"),
+      col(valueCol).cast("double").as("v"))
+    .filter(col("g").isNotNull && col("v").isNotNull)
+    .groupBy(col("g"))
+    .agg(count(lit(1)).as("ng"), sum(col("v")).as("s"),
+      sum(col("v") * col("v")).as("q"))
 
 
   /** One-way ANOVA F — "do these k slices share a mean?" for k > 2 (the
@@ -1445,35 +1395,24 @@ object StatTests {
     * are exact (no subtraction of near-equal grand means per row) and
     * evaluate identically on any engine for integer-valued data. */
   def anovaF(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val byG = df
-      .select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
-      .groupBy(col("g"))
-      .agg(count(lit(1)).as("ng"), sum(col("v")).as("s"),
-        sum(col("v") * col("v")).as("q"))
-    val row = byG.agg(
+    val row = groupMoments(df, groupCol, valueCol).agg(
       sum(col("ng")).as("n"), count(lit(1)).as("k"),
       sum(col("s") * col("s") / col("ng")).as("_sg"),
       sum(col("s")).as("_st"), sum(col("q")).as("_qt"))
       .head()
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
-    if (row.isNullAt(0) || row.getLong(0) == 0) {
-      return spark.range(1).select(lit(0L).as("n"), lit(0L).as("k"),
-        dNull.as("ss_between"), dNull.as("ss_within"), dNull.as("f"))
+    import spark.implicits._
+    val n = if (row.isNullAt(0)) 0L else row.getLong(0)
+    val k = row.getLong(1)
+    // (ss_between, ss_within) once any value is present
+    val ss = Option.when(n > 0) {
+      val sg = row.getDouble(2); val st = row.getDouble(3)
+      (sg - st * st / n, row.getDouble(4) - sg)
     }
-    val n = row.getLong(0); val k = row.getLong(1)
-    val sg = row.getDouble(2); val st = row.getDouble(3)
-    val qt = row.getDouble(4)
-    val ssb = sg - st * st / n
-    val ssw = qt - sg
-    val f: Option[Double] =
-      if (k >= 2 && n > k && ssw > 0)
-        Some((ssb / (k - 1)) / (ssw / (n - k))) else None
-    spark.range(1).select(lit(n).as("n"), lit(k).as("k"),
-      lit(ssb).as("ss_between"), lit(ssw).as("ss_within"),
-      f.map(lit(_).cast("double")).getOrElse(dNull).as("f"))
+    val f = ss.collect { case (ssb, ssw) if k >= 2 && n > k && ssw > 0 =>
+      (ssb / (k - 1)) / (ssw / (n - k)) }
+    Seq((n, k, ss.map(_._1), ss.map(_._2), f))
+      .toDF("n", "k", "ss_between", "ss_within", "f")
   }
 
 
@@ -1493,41 +1432,35 @@ object StatTests {
     * algebra over the k-bounded collected group table (sorted by group
     * label: a deterministic driver sum order). */
   def welchAnova(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val byG = df
-      .select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
-      .groupBy(col("g"))
-      .agg(count(lit(1)).as("ng"), sum(col("v")).as("s"),
-        sum(col("v") * col("v")).as("q"))
+    val byG = groupMoments(df, groupCol, valueCol)
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
       .sortBy(_._1)
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
+    import spark.implicits._
     val n = byG.map(_._2).sum
     val k = byG.length
-    def nulls = spark.range(1).select(lit(n).as("n"), lit(k.toLong).as("k"),
-      dNull.as("f"), lit(math.max(k - 1, 0).toLong).as("df1"),
-      dNull.as("df2"))
-    if (k < 2 || byG.exists(_._2 < 2)) return nulls
     val stats = byG.map { case (_, ng, s, q) =>
       val m = s / ng
       val v = (q - s * s / ng) / (ng - 1)
       (ng.toDouble, m, v)
     }
-    if (stats.exists(_._3 <= 0)) return nulls
-    val wi = stats.map { case (ng, _, v) => ng / v }
-    val ww = wi.sum
-    val mbar = wi.zip(stats).map { case (w, (_, m, _)) => w * m }.sum / ww
-    val a = wi.zip(stats).map { case (w, (_, m, _)) =>
-      w * (m - mbar) * (m - mbar) }.sum / (k - 1)
-    val h = wi.zip(stats).map { case (w, (ng, _, _)) =>
-      (1 - w / ww) * (1 - w / ww) / (ng - 1) }.sum
-    val f = a / (1 + 2.0 * (k - 2) / (k.toDouble * k - 1) * h)
-    val df2 = (k.toDouble * k - 1) / (3 * h)
-    spark.range(1).select(lit(n).as("n"), lit(k.toLong).as("k"),
-      lit(f).as("f"), lit((k - 1).toLong).as("df1"), lit(df2).as("df2"))
+    // (f, df2) when every group has n ≥ 2 and a positive variance
+    val fit = Option.when(k >= 2 && !byG.exists(_._2 < 2) &&
+        !stats.exists(_._3 <= 0)) {
+      val wi = stats.map { case (ng, _, v) => ng / v }
+      val ww = wi.sum
+      val mbar = wi.zip(stats).map { case (w, (_, m, _)) => w * m }.sum / ww
+      val a = wi.zip(stats).map { case (w, (_, m, _)) =>
+        w * (m - mbar) * (m - mbar) }.sum / (k - 1)
+      val h = wi.zip(stats).map { case (w, (ng, _, _)) =>
+        (1 - w / ww) * (1 - w / ww) / (ng - 1) }.sum
+      (a / (1 + 2.0 * (k - 2) / (k.toDouble * k - 1) * h),
+        (k.toDouble * k - 1) / (3 * h))
+    }
+    Seq((n, k.toLong, fit.map(_._1), math.max(k - 1, 0).toLong,
+        fit.map(_._2)))
+      .toDF("n", "k", "f", "df1", "df2")
   }
 
 
@@ -1545,43 +1478,27 @@ object StatTests {
     * Scale: the [[anovaF]] single moment pass plus Σnᵢ² from the same
     * group-bounded table. */
   def icc1(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val byG = df
-      .select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
-      .groupBy(col("g"))
-      .agg(count(lit(1)).as("ng"), sum(col("v")).as("s"),
-        sum(col("v") * col("v")).as("q"))
-    val row = byG.agg(
+    val row = groupMoments(df, groupCol, valueCol).agg(
       sum(col("ng")).as("n"), count(lit(1)).as("k"),
       sum(col("s") * col("s") / col("ng")).as("_sg"),
       sum(col("s")).as("_st"), sum(col("q")).as("_qt"),
       sum(col("ng").cast("double") * col("ng")).as("_n2"))
       .head()
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
-    if (row.isNullAt(0) || row.getLong(0) == 0) {
-      return spark.range(1).select(lit(0L).as("n"), lit(0L).as("k"),
-        dNull.as("k0"), dNull.as("ms_between"), dNull.as("ms_within"),
-        dNull.as("icc1"))
+    import spark.implicits._
+    val n = if (row.isNullAt(0)) 0L else row.getLong(0)
+    val k = row.getLong(1)
+    // (k0, ms_between, ms_within) when k ≥ 2 and n > k
+    val ms = Option.when(n > 0 && k >= 2 && n > k) {
+      val sg = row.getDouble(2); val st = row.getDouble(3)
+      ((n - row.getDouble(5) / n) / (k - 1), (sg - st * st / n) / (k - 1),
+        (row.getDouble(4) - sg) / (n - k))
     }
-    val n = row.getLong(0); val k = row.getLong(1)
-    val sg = row.getDouble(2); val st = row.getDouble(3)
-    val qt = row.getDouble(4); val n2 = row.getDouble(5)
-    if (k < 2 || n <= k) {
-      return spark.range(1).select(lit(n).as("n"), lit(k).as("k"),
-        dNull.as("k0"), dNull.as("ms_between"), dNull.as("ms_within"),
-        dNull.as("icc1"))
-    }
-    val msb = (sg - st * st / n) / (k - 1)
-    val msw = (qt - sg) / (n - k)
-    val k0 = (n - n2 / n) / (k - 1)
-    val icc: Option[Double] =
-      if (msb + (k0 - 1) * msw > 0) Some((msb - msw) / (msb + (k0 - 1) * msw))
-      else None
-    spark.range(1).select(lit(n).as("n"), lit(k).as("k"),
-      lit(k0).as("k0"), lit(msb).as("ms_between"), lit(msw).as("ms_within"),
-      icc.map(lit(_).cast("double")).getOrElse(dNull).as("icc1"))
+    val icc = ms.collect { case (k0, msb, msw)
+        if msb + (k0 - 1) * msw > 0 =>
+      (msb - msw) / (msb + (k0 - 1) * msw) }
+    Seq((n, k, ms.map(_._1), ms.map(_._2), ms.map(_._3), icc))
+      .toDF("n", "k", "k0", "ms_between", "ms_within", "icc1")
   }
 
 
@@ -1648,22 +1565,17 @@ object StatTests {
       .head()
     graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
-    if (n < 2 || row.isNullAt(0) || row.getLong(0) < 2) {
-      val k = if (row.isNullAt(0)) 0L else row.getLong(0)
-      return spark.range(1).select(lit(n).as("n"), lit(k).as("k"),
-        dNull.as("h"), dNull.as("tie_correction"))
-    }
-    val k = row.getLong(0)
-    val sr = row.getDouble(1)
-    val ties = row.getDouble(2)
+    import spark.implicits._
+    val k = if (row.isNullAt(0)) 0L else row.getLong(0)
     val nD = n.toDouble
-    val c = 1.0 - ties / (nD * nD * nD - nD)
-    val hRaw = 12.0 / (nD * (nD + 1)) * sr - 3.0 * (nD + 1)
-    val h: Option[Double] = if (c > 0) Some(hRaw / c) else None
-    spark.range(1).select(lit(n).as("n"), lit(k).as("k"),
-      h.map(lit(_).cast("double")).getOrElse(dNull).as("h"),
-      lit(c).as("tie_correction"))
+    // (h, tie_correction) once n ≥ 2 and k ≥ 2
+    val stats = Option.when(n >= 2 && k >= 2) {
+      val c = 1.0 - row.getDouble(2) / (nD * nD * nD - nD)
+      val hRaw = 12.0 / (nD * (nD + 1)) * row.getDouble(1) - 3.0 * (nD + 1)
+      (Option.when(c > 0)(hRaw / c), c)
+    }
+    Seq((n, k, stats.flatMap(_._1), stats.map(_._2)))
+      .toDF("n", "k", "h", "tie_correction")
   }
 
 
@@ -1788,13 +1700,18 @@ object StatTests {
     require(groups.distinct.size == groups.size,
       s"groupOrder has duplicates: $groupOrder")
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
+    import spark.implicits._
     val k = groups.size
-    if (k == 0) {
-      return spark.range(1).select(lit(0L).as("n"), lit(0L).as("k"),
-        dNull.as("j_stat"), dNull.as("mean_j"), dNull.as("var_j"),
-        dNull.as("z"), dNull.as("p_value"))
+    // stats = (j_stat, mean_j, var_j) once any value is present
+    def out(n: Long, stats: Option[(Double, Double, Option[Double])]) = {
+      val z = for ((j, meanJ, varJ) <- stats; v <- varJ)
+        yield (j - meanJ) / math.sqrt(v)
+      Seq((n, k.toLong, stats.map(_._1), stats.map(_._2),
+          stats.flatMap(_._3), z,
+          z.map(x => math.min(1.0, 2.0 * normalSfAS(math.abs(x))))))
+        .toDF("n", "k", "j_stat", "mean_j", "var_j", "z", "p_value")
     }
+    if (k == 0) return out(0L, None)
     if (groupOrder.nonEmpty) {
       val observed = gv.select(col("g")).distinct().collect()
         .map(_.getString(0)).toSet
@@ -1832,11 +1749,7 @@ object StatTests {
         sum(t * (t - 1)).as("t3"))
       .head()
     graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-    if (n == 0 || row.isNullAt(0)) {
-      return spark.range(1).select(lit(n).as("n"), lit(k.toLong).as("k"),
-        dNull.as("j_stat"), dNull.as("mean_j"), dNull.as("var_j"),
-        dNull.as("z"), dNull.as("p_value"))
-    }
+    if (n == 0 || row.isNullAt(0)) return out(n, None)
     val j = row.getDouble(0)
     val (t1, t2, t3) = (row.getDouble(1), row.getDouble(2), row.getDouble(3))
     val nD = n.toDouble
@@ -1851,13 +1764,7 @@ object StatTests {
         c / (8.0 * nD * (nD - 1))
       if (v > 0) Some(v) else None
     } else None
-    def out(o: Option[Double]) = o.map(lit(_).cast("double")).getOrElse(dNull)
-    val z = varJ.map(v => (j - meanJ) / math.sqrt(v))
-    spark.range(1).select(lit(n).as("n"), lit(k.toLong).as("k"),
-      lit(j).as("j_stat"), lit(meanJ).as("mean_j"), out(varJ).as("var_j"),
-      out(z).as("z"),
-      out(z.map(x => math.min(1.0, 2.0 * normalSfAS(math.abs(x)))))
-        .as("p_value"))
+    out(n, Some((j, meanJ, varJ)))
   }
 
 
@@ -1900,22 +1807,15 @@ object StatTests {
       .head()
     graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
     val spark = a.sparkSession
-    if (na == 0 || nb == 0) {
-      return spark.range(1).select(
-        lit(na).as("n_a"), lit(nb).as("n_b"),
-        lit(null).cast("double").as("gt"), lit(null).cast("double").as("lt"),
-        lit(null).cast("double").as("ties"),
-        lit(null).cast("double").as("delta"),
-        lit(null).cast("double").as("p_superiority"))
-    }
-    val gt = agg.getDouble(0); val lt = agg.getDouble(1)
-    val ties = agg.getDouble(2)
+    import spark.implicits._
+    // (gt, lt, ties) once both sides hold values
+    val c = Option.when(na > 0 && nb > 0)(
+      (agg.getDouble(0), agg.getDouble(1), agg.getDouble(2)))
     val pairs = na.toDouble * nb.toDouble
-    spark.range(1).select(
-      lit(na).as("n_a"), lit(nb).as("n_b"),
-      lit(gt).as("gt"), lit(lt).as("lt"), lit(ties).as("ties"),
-      lit((gt - lt) / pairs).as("delta"),
-      lit((gt + 0.5 * ties) / pairs).as("p_superiority"))
+    Seq((na, nb, c.map(_._1), c.map(_._2), c.map(_._3),
+        c.map { case (gt, lt, _) => (gt - lt) / pairs },
+        c.map { case (gt, _, ties) => (gt + 0.5 * ties) / pairs }))
+      .toDF("n_a", "n_b", "gt", "lt", "ties", "delta", "p_superiority")
   }
 
 
@@ -1950,12 +1850,14 @@ object StatTests {
       byAbs, col("v"), Seq("cnt"), Seq("_before"))
     val n = grand.head
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
+    import spark.implicits._
+    // w = (w_plus, w_minus, z) once a difference is non-zero
+    def out(w: Option[(Double, Double, Option[Double])]) =
+      Seq((nPairs, n, w.map(_._1), w.map(_._2), w.flatMap(_._3)))
+        .toDF("n_pairs", "n_nonzero", "w_plus", "w_minus", "z")
     if (n == 0) {
       graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-      return spark.range(1).select(
-        lit(nPairs).as("n_pairs"), lit(0L).as("n_nonzero"),
-        dNull.as("w_plus"), dNull.as("w_minus"), dNull.as("z"))
+      return out(None)
     }
     val avgRank = col("_before") + (col("cnt") + 1) / lit(2.0)
     val cntD = col("cnt").cast("double")
@@ -1970,12 +1872,8 @@ object StatTests {
     val wm = nD * (nD + 1) / 2 - wp
     val mu = nD * (nD + 1) / 4
     val sigma2 = nD * (nD + 1) * (2 * nD + 1) / 24 - ties / 48
-    val z: Option[Double] =
-      if (sigma2 > 0) Some((wp - mu) / math.sqrt(sigma2)) else None
-    spark.range(1).select(
-      lit(nPairs).as("n_pairs"), lit(n).as("n_nonzero"),
-      lit(wp).as("w_plus"), lit(wm).as("w_minus"),
-      z.map(v => lit(v).cast("double")).getOrElse(dNull).as("z"))
+    out(Some((wp, wm,
+      Option.when(sigma2 > 0)((wp - mu) / math.sqrt(sigma2)))))
   }
 
 
@@ -2051,49 +1949,46 @@ object StatTests {
         sum(x * x * x * x).as("s4"))
       .head()
     val spark = df.sparkSession
-    def nulls(n: Long) = spark.range(1).select(
-      lit(n).as("n"), lit(null).cast("double").as("g1"),
-      lit(null).cast("double").as("b2"),
-      lit(null).cast("double").as("z_skew"),
-      lit(null).cast("double").as("z_kurt"),
-      lit(null).cast("double").as("k2"),
-      lit(null).cast("double").as("p_value"))
+    import spark.implicits._
     val n = row.getLong(0)
-    if (n < 9) return nulls(n)
-    val nd = n.toDouble
-    val s1 = row.getDouble(1); val s2 = row.getDouble(2)
-    val s3 = row.getDouble(3); val s4 = row.getDouble(4)
-    val m = s1 / nd
-    val m2 = s2 / nd - m * m
-    if (m2 <= 0) return nulls(n)
-    val m3 = (s3 - 3 * m * s2 + 2 * nd * m * m * m) / nd
-    val m4 = (s4 - 4 * m * s3 + 6 * m * m * s2 - 3 * nd * m * m * m * m) / nd
-    val g1 = m3 / math.pow(m2, 1.5)
-    val b2 = m4 / (m2 * m2)
-    // skewness: D'Agostino's normalizing transform
-    val y = g1 * math.sqrt((nd + 1) * (nd + 3) / (6 * (nd - 2)))
-    val beta2 = 3.0 * (nd * nd + 27 * nd - 70) * (nd + 1) * (nd + 3) /
-      ((nd - 2) * (nd + 5) * (nd + 7) * (nd + 9))
-    val w2 = -1 + math.sqrt(2 * (beta2 - 1))
-    val delta = 1.0 / math.sqrt(math.log(math.sqrt(w2)))
-    val alpha = math.sqrt(2.0 / (w2 - 1))
-    val z1 = delta * math.log(y / alpha + math.sqrt(y * y / (alpha * alpha) + 1))
-    // kurtosis: Anscombe–Glynn's cube-root transform
-    val eb2 = 3.0 * (nd - 1) / (nd + 1)
-    val vb2 = 24.0 * nd * (nd - 2) * (nd - 3) /
-      ((nd + 1) * (nd + 1) * (nd + 3) * (nd + 5))
-    val xk = (b2 - eb2) / math.sqrt(vb2)
-    val sb1 = 6.0 * (nd * nd - 5 * nd + 2) / ((nd + 7) * (nd + 9)) *
-      math.sqrt(6.0 * (nd + 3) * (nd + 5) / (nd * (nd - 2) * (nd - 3)))
-    val aa = 6.0 + 8.0 / sb1 * (2.0 / sb1 + math.sqrt(1 + 4.0 / (sb1 * sb1)))
-    val z2 = ((1 - 2.0 / (9 * aa)) -
-      math.cbrt((1 - 2.0 / aa) / (1 + xk * math.sqrt(2.0 / (aa - 4))))) /
-      math.sqrt(2.0 / (9 * aa))
-    val k2 = z1 * z1 + z2 * z2
-    spark.range(1).select(
-      lit(n).as("n"), lit(g1).as("g1"), lit(b2).as("b2"),
-      lit(z1).as("z_skew"), lit(z2).as("z_kurt"), lit(k2).as("k2"),
-      lit(math.exp(-k2 / 2)).as("p_value"))
+    // (g1, b2, z_skew, z_kurt, k2) for n ≥ 9 and a non-constant column
+    val stats = if (n < 9) None else {
+      val nd = n.toDouble
+      val s1 = row.getDouble(1); val s2 = row.getDouble(2)
+      val s3 = row.getDouble(3); val s4 = row.getDouble(4)
+      val m = s1 / nd
+      val m2 = s2 / nd - m * m
+      Option.when(!(m2 <= 0)) {
+        val m3 = (s3 - 3 * m * s2 + 2 * nd * m * m * m) / nd
+        val m4 = (s4 - 4 * m * s3 + 6 * m * m * s2 - 3 * nd * m * m * m * m) / nd
+        val g1 = m3 / math.pow(m2, 1.5)
+        val b2 = m4 / (m2 * m2)
+        // skewness: D'Agostino's normalizing transform
+        val y = g1 * math.sqrt((nd + 1) * (nd + 3) / (6 * (nd - 2)))
+        val beta2 = 3.0 * (nd * nd + 27 * nd - 70) * (nd + 1) * (nd + 3) /
+          ((nd - 2) * (nd + 5) * (nd + 7) * (nd + 9))
+        val w2 = -1 + math.sqrt(2 * (beta2 - 1))
+        val delta = 1.0 / math.sqrt(math.log(math.sqrt(w2)))
+        val alpha = math.sqrt(2.0 / (w2 - 1))
+        val z1 = delta * math.log(y / alpha + math.sqrt(y * y / (alpha * alpha) + 1))
+        // kurtosis: Anscombe–Glynn's cube-root transform
+        val eb2 = 3.0 * (nd - 1) / (nd + 1)
+        val vb2 = 24.0 * nd * (nd - 2) * (nd - 3) /
+          ((nd + 1) * (nd + 1) * (nd + 3) * (nd + 5))
+        val xk = (b2 - eb2) / math.sqrt(vb2)
+        val sb1 = 6.0 * (nd * nd - 5 * nd + 2) / ((nd + 7) * (nd + 9)) *
+          math.sqrt(6.0 * (nd + 3) * (nd + 5) / (nd * (nd - 2) * (nd - 3)))
+        val aa = 6.0 + 8.0 / sb1 * (2.0 / sb1 + math.sqrt(1 + 4.0 / (sb1 * sb1)))
+        val z2 = ((1 - 2.0 / (9 * aa)) -
+          math.cbrt((1 - 2.0 / aa) / (1 + xk * math.sqrt(2.0 / (aa - 4))))) /
+          math.sqrt(2.0 / (9 * aa))
+        (g1, b2, z1, z2, z1 * z1 + z2 * z2)
+      }
+    }
+    Seq((n, stats.map(_._1), stats.map(_._2), stats.map(_._3),
+        stats.map(_._4), stats.map(_._5),
+        stats.map(st => math.exp(-st._5 / 2))))
+      .toDF("n", "g1", "b2", "z_skew", "z_kurt", "k2", "p_value")
   }
 
 
@@ -2127,15 +2022,15 @@ object StatTests {
       sum(col("y") * col("y")).as("s2")).head()
     val n = stats.getLong(0)
     val spark = series.sparkSession
-    def nulls = spark.range(1).select(
-      lit(n).as("n"), lit(maxLag).as("lags"),
-      lit(null).cast("double").as("r1"),
-      lit(null).cast("double").as("q_stat"),
-      lit(null).cast("double").as("p_value"))
-    if (n < maxLag + 2) return nulls
+    import spark.implicits._
+    // q = (r1, q_stat, p_value) of a long enough, non-constant series
+    def out(q: Option[(Double, Double, Double)]) =
+      Seq((n, maxLag, q.map(_._1), q.map(_._2), q.map(_._3)))
+        .toDF("n", "lags", "r1", "q_stat", "p_value")
+    if (n < maxLag + 2) return out(None)
     val mu = stats.getDouble(1) / n
     val ss = stats.getDouble(2) - n * mu * mu
-    if (ss <= 0) return nulls
+    if (ss <= 0) return out(None)
     val spine = spark.range(1, maxLag + 1).select(col("id").as("k"))
     val shifted = s.crossJoin(broadcast(spine))
       .select(col("k"), (col("t") - col("k")).as("tj"),
@@ -2152,10 +2047,7 @@ object StatTests {
     // chi2(m) survival, m even: exp(-q/2) * Σ_{j=0}^{m/2-1} (q/2)^j / j!
     var term = 1.0; var acc = 1.0
     for (j <- 1 until maxLag / 2) { term *= (q / 2) / j; acc += term }
-    val p = math.min(1.0, math.exp(-q / 2) * acc)
-    spark.range(1).select(
-      lit(n).as("n"), lit(maxLag).as("lags"), lit(r1).as("r1"),
-      lit(q).as("q_stat"), lit(p).as("p_value"))
+    out(Some((r1, q, math.min(1.0, math.exp(-q / 2) * acc))))
   }
 
 
@@ -2196,26 +2088,22 @@ object StatTests {
       sum(col("dy") * col("dy")).as("syy")).head()
     val n = m.getLong(0)
     val spark = series.sparkSession
-    def dNull = lit(null).cast("double")
-    def nulls = spark.range(1).select(lit(n).as("n"), dNull.as("gamma"),
-      dNull.as("se_gamma"), dNull.as("df_stat"),
-      lit(null).cast("boolean").as("stationary_5pct"))
-    if (n < 4) return nulls
-    val (sx, sy, sxx, sxy, syy) =
-      (m.getLong(1), m.getLong(2), m.getLong(3), m.getLong(4), m.getLong(5))
-    val nd = n.toDouble
-    val cxx = sxx - sx.toDouble * sx / nd
-    val cxy = sxy - sx.toDouble * sy / nd
-    val cyy = syy - sy.toDouble * sy / nd
-    if (cxx <= 0) return nulls
-    val gamma = cxy / cxx
-    val rss = cyy - gamma * cxy
-    val se = math.sqrt(math.max(rss / (nd - 2.0), 0.0) / cxx)
-    if (se == 0) return nulls
-    val stat = gamma / se
-    spark.range(1).select(lit(n).as("n"), lit(gamma).as("gamma"),
-      lit(se).as("se_gamma"), lit(stat).as("df_stat"),
-      lit(stat < -2.86).as("stationary_5pct"))
+    import spark.implicits._
+    // (gamma, se_gamma) for n ≥ 4, a non-constant yₜ₋₁ and a non-zero SE
+    val fit = Option.when(n >= 4) {
+      val (sx, sy, sxx, sxy, syy) =
+        (m.getLong(1), m.getLong(2), m.getLong(3), m.getLong(4), m.getLong(5))
+      val nd = n.toDouble
+      val cxx = sxx - sx.toDouble * sx / nd
+      val cxy = sxy - sx.toDouble * sy / nd
+      val cyy = syy - sy.toDouble * sy / nd
+      val gamma = cxy / cxx
+      val rss = cyy - gamma * cxy
+      (cxx, gamma, math.sqrt(math.max(rss / (nd - 2.0), 0.0) / cxx))
+    }.collect { case (cxx, gamma, se) if cxx > 0 && se != 0 => (gamma, se) }
+    val stat = fit.map { case (gamma, se) => gamma / se }
+    Seq((n, fit.map(_._1), fit.map(_._2), stat, stat.map(_ < -2.86)))
+      .toDF("n", "gamma", "se_gamma", "df_stat", "stationary_5pct")
   }
 
 
@@ -2245,13 +2133,15 @@ object StatTests {
       persistInput = false)
     val (sn, n) = (grand(0), grand(1))
     val spark = series.sparkSession
-    def dNull = lit(null).cast("double")
+    import spark.implicits._
+    // best = (change_at, k, stat, S_k) of the argmax split
+    def out(best: Option[(Long, Long, Double, Double)]) =
+      Seq((n, best.map(_._1), best.map(_._2), best.map(_._3),
+          best.map(b => b._4 / b._2), best.map(b => (sn - b._4) / (n - b._2))))
+        .toDF("n", "change_at", "k", "stat", "mean_before", "mean_after")
     if (n < 3) {
       graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-      return spark.range(1).select(lit(n).as("n"),
-        lit(null).cast("long").as("change_at"),
-        lit(null).cast("long").as("k"), dNull.as("stat"),
-        dNull.as("mean_before"), dNull.as("mean_after"))
+      return out(None)
     }
     val k = col("_ek") + 1
     val sk = (col("_ey") + col("y")).cast("double")
@@ -2264,11 +2154,8 @@ object StatTests {
       .orderBy(col("stat").desc, col("t").asc)
       .limit(1).head()
     graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-    val (kBest, skBest) = (best.getLong(1), best.getDouble(2))
-    spark.range(1).select(lit(n).as("n"), lit(best.getLong(0)).as("change_at"),
-      lit(kBest).as("k"), lit(best.getDouble(3)).as("stat"),
-      lit(skBest / kBest).as("mean_before"),
-      lit((sn - skBest) / (n - kBest)).as("mean_after"))
+    out(Some((best.getLong(0), best.getLong(1), best.getDouble(3),
+      best.getDouble(2))))
   }
 
 
@@ -2370,33 +2257,29 @@ object StatTests {
       .head()
     val n = m.getLong(0)
     val spark = series.sparkSession
-    def dNull = lit(null).cast("double")
-    def nulls = spark.range(1).select(lit(n).as("n"), dNull.as("beta_own"),
-      dNull.as("beta_cross"), dNull.as("f"),
-      lit(null).cast("long").as("df2"),
-      lit(null).cast("boolean").as("granger_5pct"))
-    if (n < 5) return nulls
-    val nd = n.toDouble
-    def lg(i: Int) = m.getLong(i)
-    val (sz, sw, sv) = (lg(1), lg(2), lg(3))
-    val czz = lg(4) - sz.toDouble * sz / nd
-    val cww = lg(5) - sw.toDouble * sw / nd
-    val cvv = lg(6) - sv.toDouble * sv / nd
-    val czw = lg(7) - sz.toDouble * sw / nd
-    val czv = lg(8) - sz.toDouble * sv / nd
-    val cwv = lg(9) - sw.toDouble * sv / nd
-    if (cww <= 0) return nulls
-    val rssR = czz - czw / cww * czw
-    val det = cww * cvv - cwv * cwv
-    if (det <= 0) return nulls
-    val bOwn = (cvv * czw - cwv * czv) / det
-    val bCross = (cww * czv - cwv * czw) / det
-    val rssU = czz - bOwn * czw - bCross * czv
-    if (rssU <= 0) return nulls
-    val f = (rssR - rssU) * (nd - 3.0) / rssU
-    spark.range(1).select(lit(n).as("n"), lit(bOwn).as("beta_own"),
-      lit(bCross).as("beta_cross"), lit(f).as("f"),
-      lit(n - 3).as("df2"), lit(f > 3.8415).as("granger_5pct"))
+    import spark.implicits._
+    // (beta_own, beta_cross, f) of a full-rank design with a positive RSS
+    val fit = Option.when(n >= 5) {
+      val nd = n.toDouble
+      def lg(i: Int) = m.getLong(i)
+      val (sz, sw, sv) = (lg(1), lg(2), lg(3))
+      val czz = lg(4) - sz.toDouble * sz / nd
+      val cww = lg(5) - sw.toDouble * sw / nd
+      val cvv = lg(6) - sv.toDouble * sv / nd
+      val czw = lg(7) - sz.toDouble * sw / nd
+      val czv = lg(8) - sz.toDouble * sv / nd
+      val cwv = lg(9) - sw.toDouble * sv / nd
+      val rssR = czz - czw / cww * czw
+      val det = cww * cvv - cwv * cwv
+      val bOwn = (cvv * czw - cwv * czv) / det
+      val bCross = (cww * czv - cwv * czw) / det
+      val rssU = czz - bOwn * czw - bCross * czv
+      (cww > 0 && det > 0 && rssU > 0, bOwn, bCross,
+        (rssR - rssU) * (nd - 3.0) / rssU)
+    }.collect { case (true, bOwn, bCross, f) => (bOwn, bCross, f) }
+    Seq((n, fit.map(_._1), fit.map(_._2), fit.map(_._3), fit.map(_ => n - 3),
+        fit.map(_._3 > 3.8415)))
+      .toDF("n", "beta_own", "beta_cross", "f", "df2", "granger_5pct")
   }
 
 
@@ -2473,35 +2356,35 @@ object StatTests {
     val tMin = s.agg(min(col("t"))).head()
     val spark = series.sparkSession
     import spark.implicits._
-    def emptyOut = Seq.empty[(Int, Long, Double, Option[Double], Option[Double])]
-      .toDF("b", "n_blocks", "mean_rs", "hurst", "r2")
-    if (tMin.isNullAt(0)) return emptyOut
-    val t0 = tMin.getLong(0)
-    val spine = blockSizes.toDF("b")
-    import org.apache.spark.sql.expressions.Window
-    val tagged = s.crossJoin(broadcast(spine))
-      .withColumn("__blk", floor((col("t") - t0) / col("b")))
-    val wBlk = Window.partitionBy(col("b"), col("__blk")).orderBy(col("t"))
-    val wAll = Window.partitionBy(col("b"), col("__blk"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val perBlock = tagged
-      .withColumn("__bn", count(lit(1)).over(wAll))
-      .filter(col("__bn") === col("b")) // full blocks only
-      .withColumn("__mu", avg(col("y")).over(wAll))
-      .withColumn("__cum", sum(col("y") - col("__mu")).over(
-        wBlk.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("b"), col("__blk"))
-      .agg((max(col("__cum")) - least(min(col("__cum")), lit(0.0))).as("__r"),
-        // population sigma; clamped at 0 against float-cancellation noise
-        sqrt(greatest(avg(col("y") * col("y")) - pow(avg(col("y")), 2),
-          lit(0.0))).as("__s"))
-      .filter(col("__s") > 0)
-    val perSize = perBlock.groupBy(col("b"))
-      .agg(count(lit(1)).as("n_blocks"), avg(col("__r") / col("__s")).as("mean_rs"))
-      .collect()
-      .map(r => (r.getAs[Int]("b"), r.getAs[Long]("n_blocks"),
-        r.getAs[Double]("mean_rs")))
-      .sortBy(_._1)
+    // an empty series has no blocks: zero rows, same columns
+    val perSize = if (tMin.isNullAt(0)) Array.empty[(Int, Long, Double)] else {
+      val t0 = tMin.getLong(0)
+      val spine = blockSizes.toDF("b")
+      import org.apache.spark.sql.expressions.Window
+      val tagged = s.crossJoin(broadcast(spine))
+        .withColumn("__blk", floor((col("t") - t0) / col("b")))
+      val wBlk = Window.partitionBy(col("b"), col("__blk")).orderBy(col("t"))
+      val wAll = Window.partitionBy(col("b"), col("__blk"))
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val perBlock = tagged
+        .withColumn("__bn", count(lit(1)).over(wAll))
+        .filter(col("__bn") === col("b")) // full blocks only
+        .withColumn("__mu", avg(col("y")).over(wAll))
+        .withColumn("__cum", sum(col("y") - col("__mu")).over(
+          wBlk.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .groupBy(col("b"), col("__blk"))
+        .agg((max(col("__cum")) - least(min(col("__cum")), lit(0.0))).as("__r"),
+          // population sigma; clamped at 0 against float-cancellation noise
+          sqrt(greatest(avg(col("y") * col("y")) - pow(avg(col("y")), 2),
+            lit(0.0))).as("__s"))
+        .filter(col("__s") > 0)
+      perBlock.groupBy(col("b"))
+        .agg(count(lit(1)).as("n_blocks"), avg(col("__r") / col("__s")).as("mean_rs"))
+        .collect()
+        .map(r => (r.getAs[Int]("b"), r.getAs[Long]("n_blocks"),
+          r.getAs[Double]("mean_rs")))
+        .sortBy(_._1)
+    }
     val pts = perSize.filter(p => p._3 > 0)
       .map(p => (math.log(p._1.toDouble), math.log(p._3)))
     val fit: Option[(Double, Double)] =
@@ -2540,19 +2423,15 @@ object StatTests {
       .agg(count(lit(1)).as("n"), avg(c).as("m"), var_samp(c).as("v"))
       .head()
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
+    import spark.implicits._
     val n = row.getLong(0)
-    if (n < 2 || row.isNullAt(1) || row.getDouble(1) <= 0) {
-      return spark.range(1).select(lit(n).as("n"), dNull.as("mean"),
-        dNull.as("variance"), dNull.as("dispersion"), dNull.as("chi2"),
-        dNull.as("z"))
-    }
-    val m = row.getDouble(1); val v = row.getDouble(2)
-    val chi2 = (n - 1) * v / m
-    val z = math.sqrt(2 * chi2) - math.sqrt(2.0 * (n - 1) - 1)
-    spark.range(1).select(lit(n).as("n"), lit(m).as("mean"),
-      lit(v).as("variance"), lit(v / m).as("dispersion"),
-      lit(chi2).as("chi2"), lit(z).as("z"))
+    // (mean, variance) for n ≥ 2 and a positive mean
+    val mv = Option.when(n >= 2 && !row.isNullAt(1) && row.getDouble(1) > 0)(
+      (row.getDouble(1), row.getDouble(2)))
+    val chi2 = mv.map { case (m, v) => (n - 1) * v / m }
+    Seq((n, mv.map(_._1), mv.map(_._2), mv.map { case (m, v) => v / m },
+        chi2, chi2.map(c => math.sqrt(2 * c) - math.sqrt(2.0 * (n - 1) - 1))))
+      .toDF("n", "mean", "variance", "dispersion", "chi2", "z")
   }
 
 
@@ -2583,15 +2462,12 @@ object StatTests {
       avg(abs(col("y") - col("ys"))).as("ms"),
       avg(abs(col("y") - col("y1"))).as("m1")).head()
     val spark = series.sparkSession
-    def dNull = lit(null).cast("double")
-    if (agg.getLong(0) == 0) {
-      return spark.range(1).select(lit(n).as("n"), lit(0L).as("n_scored"),
-        dNull.as("mae_seasonal"), dNull.as("mae_naive1"), dNull.as("mase"))
-    }
-    val ms = agg.getDouble(1); val m1 = agg.getDouble(2)
-    spark.range(1).select(lit(n).as("n"), lit(agg.getLong(0)).as("n_scored"),
-      lit(ms).as("mae_seasonal"), lit(m1).as("mae_naive1"),
-      (if (m1 > 0) lit(ms / m1) else dNull).as("mase"))
+    import spark.implicits._
+    val ns = agg.getLong(0)
+    val mae = Option.when(ns > 0)((agg.getDouble(1), agg.getDouble(2)))
+    Seq((n, ns, mae.map(_._1), mae.map(_._2),
+        mae.collect { case (ms, m1) if m1 > 0 => ms / m1 }))
+      .toDF("n", "n_scored", "mae_seasonal", "mae_naive1", "mase")
   }
 
 
@@ -2621,17 +2497,16 @@ object StatTests {
       percentile(col("s"), lit(0.5)).as("m")).head()
     val nDays = days.count()
     val spark = df.sparkSession
-    if (nDays < 2) {
-      return spark.range(1).select(lit(nDays).as("n_days"),
-        lit(0L).as("n_pairs"), lit(null).cast("double").as("slope"),
-        lit(null).cast("double").as("intercept"))
-    }
+    import spark.implicits._
+    // fewer than 2 days have no pair (n_pairs 0) and no slope
+    def out(fit: Option[(Double, Double)]) =
+      Seq((nDays, sRow.getLong(0), fit.map(_._1), fit.map(_._2)))
+        .toDF("n_days", "n_pairs", "slope", "intercept")
+    if (nDays < 2) return out(None)
     val slope = sRow.getDouble(1)
     val iRow = days.agg(
       percentile(col("y") - lit(slope) * col("x"), lit(0.5)).as("i")).head()
-    spark.range(1).select(lit(nDays).as("n_days"),
-      lit(sRow.getLong(0)).as("n_pairs"), lit(slope).as("slope"),
-      lit(iRow.getDouble(0)).as("intercept"))
+    out(Some((slope, iRow.getDouble(0))))
   }
 
 
@@ -2663,32 +2538,22 @@ object StatTests {
       .agg(sum(col("t") * (col("t") - 1) * (col("t") * 2 + 5)).as("_tt"))
       .head()
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
-    if (nDays < 2) {
-      return spark.range(1).select(lit(nDays).as("n_days"),
-        lit(null).cast("long").as("s"), dNull.as("var_s"), dNull.as("z"),
-        lit("none").as("trend"))
-    }
-    val s = sRow.getLong(0)
-    val ties = tieRow.getLong(0)
+    import spark.implicits._
     val n = nDays
-    val varS = (n.toDouble * (n - 1) * (2 * n + 5) - ties) / 18.0
-    val z: Option[Double] =
-      if (varS > 0)
-        Some(if (s > 0) (s - 1) / math.sqrt(varS)
-        else if (s < 0) (s + 1) / math.sqrt(varS)
-        else 0.0)
-      else None
+    val s = Option.when(n >= 2)(sRow.getLong(0))
+    val varS = s.map(_ =>
+      (n.toDouble * (n - 1) * (2 * n + 5) - tieRow.getLong(0)) / 18.0)
+    val z = for (sv <- s; v <- varS if v > 0) yield
+      if (sv > 0) (sv - 1) / math.sqrt(v)
+      else if (sv < 0) (sv + 1) / math.sqrt(v)
+      else 0.0
     val zc = 1.959963984540054
     val trend = z match {
       case Some(v) if v > zc => "increasing"
       case Some(v) if v < -zc => "decreasing"
       case _ => "none"
     }
-    spark.range(1).select(lit(n).as("n_days"), lit(s).as("s"),
-      lit(varS).as("var_s"),
-      z.map(lit(_).cast("double")).getOrElse(dNull).as("z"),
-      lit(trend).as("trend"))
+    Seq((n, s, varS, z, trend)).toDF("n_days", "s", "var_s", "z", "trend")
   }
 
 
@@ -2727,31 +2592,22 @@ object StatTests {
         sum(col("ng")).as("n"))
       .head()
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
+    import spark.implicits._
     val nDays = if (vRow.isNullAt(1)) 0L else vRow.getLong(1)
-    if (nDays < 2) {
-      return spark.range(1).select(lit(nDays).as("n_days"),
-        lit(period).as("period"), lit(null).cast("long").as("s"),
-        dNull.as("var_s"), dNull.as("z"), lit("none").as("trend"))
-    }
-    val s = sRow.getLong(0)
-    val varS = vRow.getDouble(0)
-    val z: Option[Double] =
-      if (varS > 0)
-        Some(if (s > 0) (s - 1) / math.sqrt(varS)
-        else if (s < 0) (s + 1) / math.sqrt(varS)
-        else 0.0)
-      else None
+    val s = Option.when(nDays >= 2)(sRow.getLong(0))
+    val varS = s.map(_ => vRow.getDouble(0))
+    val z = for (sv <- s; v <- varS if v > 0) yield
+      if (sv > 0) (sv - 1) / math.sqrt(v)
+      else if (sv < 0) (sv + 1) / math.sqrt(v)
+      else 0.0
     val zc = 1.959963984540054
     val trend = z match {
       case Some(v) if v > zc => "increasing"
       case Some(v) if v < -zc => "decreasing"
       case _ => "none"
     }
-    spark.range(1).select(lit(nDays).as("n_days"), lit(period).as("period"),
-      lit(s).as("s"), lit(varS).as("var_s"),
-      z.map(lit(_).cast("double")).getOrElse(dNull).as("z"),
-      lit(trend).as("trend"))
+    Seq((nDays, period, s, varS, z, trend))
+      .toDF("n_days", "period", "s", "var_s", "z", "trend")
   }
 
 
@@ -2854,24 +2710,26 @@ object StatTests {
         sum(x * x * x).as("s3"), sum(x * x * x * x).as("s4"))
       .head()
     val spark = df.sparkSession
+    import spark.implicits._
     val n = if (row.isNullAt(0)) 0L else row.getLong(0)
-    def dNull = lit(null).cast("double")
-    def nulls = spark.range(1).select(lit(n).as("n"), dNull.as("g1"),
-      dNull.as("b2"), dNull.as("jb"), dNull.as("p_value"))
-    if (n < 2) return nulls
-    val nd = n.toDouble
-    val mu = row.getDouble(1) / nd
-    val m2 = row.getDouble(2) / nd - mu * mu
-    if (m2 <= 0) return nulls
-    val m3 = (row.getDouble(3) - 3 * mu * row.getDouble(2) + 2 * nd * mu * mu * mu) / nd
-    val m4 = (row.getDouble(4) - 4 * mu * row.getDouble(3) +
-      6 * mu * mu * row.getDouble(2) - 3 * nd * mu * mu * mu * mu) / nd
-    val g1 = m3 / math.pow(m2, 1.5)
-    val b2 = m4 / (m2 * m2)
-    val jb = nd / 6.0 * (g1 * g1 + (b2 - 3.0) * (b2 - 3.0) / 4.0)
-    val p = math.exp(-jb / 2.0)
-    spark.range(1).select(lit(n).as("n"), lit(g1).as("g1"), lit(b2).as("b2"),
-      lit(jb).as("jb"), lit(p).as("p_value"))
+    // (g1, b2, jb) for n ≥ 2 and a non-constant column
+    val stats = if (n < 2) None else {
+      val nd = n.toDouble
+      val mu = row.getDouble(1) / nd
+      val m2 = row.getDouble(2) / nd - mu * mu
+      Option.when(!(m2 <= 0)) {
+        val m3 = (row.getDouble(3) - 3 * mu * row.getDouble(2) +
+          2 * nd * mu * mu * mu) / nd
+        val m4 = (row.getDouble(4) - 4 * mu * row.getDouble(3) +
+          6 * mu * mu * row.getDouble(2) - 3 * nd * mu * mu * mu * mu) / nd
+        val g1 = m3 / math.pow(m2, 1.5)
+        val b2 = m4 / (m2 * m2)
+        (g1, b2, nd / 6.0 * (g1 * g1 + (b2 - 3.0) * (b2 - 3.0) / 4.0))
+      }
+    }
+    Seq((n, stats.map(_._1), stats.map(_._2), stats.map(_._3),
+        stats.map(st => math.exp(-st._3 / 2.0))))
+      .toDF("n", "g1", "b2", "jb", "p_value")
   }
 
 
@@ -2891,14 +2749,7 @@ object StatTests {
     * reduce on the driver. The p-value uses the even-df closed survival
     * when k−1 is even (oracle-replayable), incomplete gamma otherwise. */
   def bartlettTest(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val byG = df
-      .select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
-      .groupBy(col("g"))
-      .agg(count(lit(1)).as("ng"), sum(col("v")).as("s"),
-        sum(col("v") * col("v")).as("q"))
-      .filter(col("ng") >= 2)
+    val byG = groupMoments(df, groupCol, valueCol).filter(col("ng") >= 2)
     // sample variance from exact power sums (the welchTTest convention)
     val vg = (col("q") - col("s") * col("s") / col("ng")) / (col("ng") - 1)
     val row = byG.agg(
@@ -2909,21 +2760,19 @@ object StatTests {
       sum(vg * (col("ng") - 1)).as("_ssw"))
       .head()
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
+    import spark.implicits._
     val n = if (row.isNullAt(0)) 0L else row.getLong(0)
     val k = if (row.isNullAt(1)) 0L else row.getLong(1)
-    def nulls = spark.range(1).select(lit(n).as("n"), lit(k).as("k"),
-      dNull.as("pooled_var"), dNull.as("statistic"),
-      lit(math.max(k - 1, 0)).as("df"), dNull.as("p_value"))
-    if (k < 2 || n <= k || row.getDouble(2) <= 0) return nulls
-    val sp2 = row.getDouble(5) / (n - k)
-    val t0 = (n - k) * math.log(sp2) - row.getDouble(3)
-    val c = 1.0 + (row.getDouble(4) - 1.0 / (n - k)) / (3.0 * (k - 1))
-    val t = t0 / c
-    val p = chi2Survival((k - 1).toInt, t)
-    spark.range(1).select(lit(n).as("n"), lit(k).as("k"),
-      lit(sp2).as("pooled_var"), lit(t).as("statistic"),
-      lit(k - 1).as("df"), lit(p).as("p_value"))
+    // (pooled_var, statistic) for k ≥ 2 groups of positive variance
+    val stats = Option.when(k >= 2 && n > k && !(row.getDouble(2) <= 0)) {
+      val sp2 = row.getDouble(5) / (n - k)
+      val t0 = (n - k) * math.log(sp2) - row.getDouble(3)
+      val c = 1.0 + (row.getDouble(4) - 1.0 / (n - k)) / (3.0 * (k - 1))
+      (sp2, t0 / c)
+    }
+    Seq((n, k, stats.map(_._1), stats.map(_._2), math.max(k - 1, 0),
+        stats.map(st => chi2Survival((k - 1).toInt, st._2))))
+      .toDF("n", "k", "pooled_var", "statistic", "df", "p_value")
   }
 
 
@@ -2958,11 +2807,13 @@ object StatTests {
     val (n, cuts) = graft.ops.ScaleOps.rankCutpoints(counts, "v", "c",
       total => Seq((total + 1) / 2))
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
-    def nulls(k: Long) = spark.range(1).select(lit(n).as("n"), lit(k).as("k"),
-      dNull.as("grand_median"), dNull.as("chi2"),
-      lit(math.max(k - 1, 0)).as("df"), dNull.as("p_value"))
-    if (n == 0) return nulls(0)
+    import spark.implicits._
+    // stats = (grand_median, chi2) of a non-degenerate 2×k table
+    def out(k: Long, stats: Option[(Double, Double)]) =
+      Seq((n, k, stats.map(_._1), stats.map(_._2), math.max(k - 1, 0),
+          stats.map(st => chi2Survival((k - 1).toInt, st._2))))
+        .toDF("n", "k", "grand_median", "chi2", "df", "p_value")
+    if (n == 0) return out(0, None)
     val cut = cuts.head
     val cells = base.groupBy(col("g")).agg(
       sum(when(col("v") > cut, 1L).otherwise(0L)).cast("double").as("a"),
@@ -2983,13 +2834,8 @@ object StatTests {
             ((col("a") + col("l")) * col("_tl") / n))).as("chi2"))
       .head()
     val k = row.getLong(0)
-    if (k < 2 || row.getDouble(1) == 0.0 || row.getDouble(2) == 0.0 ||
-        row.isNullAt(3)) return nulls(k)
-    val chi2 = row.getDouble(3)
-    val p = chi2Survival((k - 1).toInt, chi2)
-    spark.range(1).select(lit(n).as("n"), lit(k).as("k"),
-      lit(cut).as("grand_median"), lit(chi2).as("chi2"),
-      lit(k - 1).as("df"), lit(p).as("p_value"))
+    out(k, Option.when(k >= 2 && row.getDouble(1) != 0.0 &&
+      row.getDouble(2) != 0.0 && !row.isNullAt(3))((cut, row.getDouble(3))))
   }
 
 
@@ -3108,17 +2954,16 @@ object StatTests {
       sum(col("y")).as("sy"), sum(col("x") * col("x")).as("sxx"),
       sum(col("x") * col("y")).as("sxy")).head()
     val spark = df.sparkSession
+    import spark.implicits._
     val n = if (m.isNullAt(0)) 0L else m.getLong(0)
-    def dNull = lit(null).cast("double")
-    def nulls(slope: Option[Double], icept: Option[Double]) = {
-      def o(v: Option[Double]) = v.map(lit(_).cast("double")).getOrElse(dNull)
-      spark.range(1).select(lit(n).as("n"), o(slope).as("slope"),
-        o(icept).as("intercept"), dNull.as("lm"), lit(1).as("df"),
-        dNull.as("p_value"))
-    }
-    if (n < 3) return nulls(None, None)
+    // fit = (slope, intercept); lm once the squared residuals vary
+    def out(fit: Option[(Double, Double)], lm: Option[Double]) =
+      Seq((n, fit.map(_._1), fit.map(_._2), lm, 1,
+          lm.map(v => 2.0 * normalSfAS(math.sqrt(v)))))
+        .toDF("n", "slope", "intercept", "lm", "df", "p_value")
+    if (n < 3) return out(None, None)
     val den = n * m.getDouble(3) - m.getDouble(1) * m.getDouble(1)
-    if (den <= 0) return nulls(None, None)
+    if (den <= 0) return out(None, None)
     val b = (n * m.getDouble(4) - m.getDouble(1) * m.getDouble(2)) / den
     val a = (m.getDouble(2) - b * m.getDouble(1)) / n
     val u = pow(col("y") - a - col("x") * b, 2)
@@ -3126,14 +2971,9 @@ object StatTests {
       sum(u * u).as("suu")).head()
     val su = m2.getDouble(0); val sxu = m2.getDouble(1); val suu = m2.getDouble(2)
     val denU = n * suu - su * su
-    if (denU <= 0) return nulls(Some(b), Some(a))
     val cov = n * sxu - m.getDouble(1) * su
-    val r2 = cov * cov / (den * denU)
-    val lm = n * r2
-    val p = 2.0 * normalSfAS(math.sqrt(lm))
-    spark.range(1).select(lit(n).as("n"), lit(b).as("slope"),
-      lit(a).as("intercept"), lit(lm).as("lm"), lit(1).as("df"),
-      lit(p).as("p_value"))
+    out(Some((b, a)),
+      Option.when(!(denU <= 0))(n * (cov * cov / (den * denU))))
   }
 
 
@@ -3184,10 +3024,9 @@ object StatTests {
       i += 1
     }
     val spark = df.sparkSession
-    spark.range(1).select(lit(na).as("n_a"), lit(sa).as("s_a"),
-      lit(nb).as("n_b"), lit(sb).as("s_b"),
-      lit(aa / (aa + ab)).as("mean_a"), lit(ba / (ba + bb)).as("mean_b"),
-      lit(math.min(1.0, p)).as("prob_b_gt_a"))
+    import spark.implicits._
+    Seq((na, sa, nb, sb, aa / (aa + ab), ba / (ba + bb), math.min(1.0, p)))
+      .toDF("n_a", "s_a", "n_b", "s_b", "mean_a", "mean_b", "prob_b_gt_a")
   }
 
 
@@ -3215,14 +3054,10 @@ object StatTests {
       .select(col(tCol).cast("long").as("t"), col(yCol).cast("double").as("y"))
       .filter(col("t").isNotNull && col("y").isNotNull)
     val tmin = base.agg(min(col("t"))).head()
-    val spark = series.sparkSession
-    def dNull = lit(null).cast("double")
-    if (tmin.isNullAt(0)) {
-      return spark.range(1).select(lit(0L).as("n"), lit(0L).as("n_scored"),
-        dNull.as("mae_ewma"), dNull.as("mae_naive1"), dNull.as("rel_mae"))
-    }
     val r = 1.0 / (1.0 - alpha)
-    val k = (col("t") - tmin.getLong(0)).as("k")
+    // an empty series aggregates to n = 0 with NULL scores, any offset
+    val k = (col("t") - (if (tmin.isNullAt(0)) 0L else tmin.getLong(0)))
+      .as("k")
     val w = Window.orderBy(col("k"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wl = Window.orderBy(col("k"))
@@ -3278,18 +3113,12 @@ object StatTests {
         sum(pow(col("o") - col("_n") * col("p"), 2) /
           (col("_n") * col("p"))).as("chi2"))
       .head()
-    def dNull = lit(null).cast("double")
     val n = if (row.isNullAt(0)) 0L else row.getLong(0)
     val k = row.getLong(1)
-    if (n == 0 || k < 2) {
-      return spark.range(1).select(lit(n).as("n"), lit(k).as("k"),
-        dNull.as("chi2"), lit(math.max(k - 1, 0)).as("df"),
-        dNull.as("p_value"))
-    }
-    val chi2 = row.getDouble(2)
-    spark.range(1).select(lit(n).as("n"), lit(k).as("k"),
-      lit(chi2).as("chi2"), lit(k - 1).as("df"),
-      lit(chi2Survival((k - 1).toInt, chi2)).as("p_value"))
+    val chi2 = Option.when(n > 0 && k >= 2)(row.getDouble(2))
+    Seq((n, k, chi2, math.max(k - 1, 0),
+        chi2.map(c => chi2Survival((k - 1).toInt, c))))
+      .toDF("n", "k", "chi2", "df", "p_value")
   }
 
 
@@ -3344,22 +3173,17 @@ object StatTests {
         min(when(col("hi") >= medTarget, col("v"))).as("med"))
       .head()
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
-    if (row.isNullAt(0)) {
-      return spark.range(1).select(lit(0L).as("n"), lit(0L).as("n_trim_each"),
-        dNull.as("mean"), dNull.as("trimmed_mean"),
-        dNull.as("winsorized_mean"), dNull.as("median"))
-    }
-    val n = row.getLong(0); val tr = row.getLong(2)
+    import spark.implicits._
+    // an empty column has no first row: n = 0 and every stat NULL
+    val n = if (row.isNullAt(0)) 0L else row.getLong(0)
+    val tr = if (row.isNullAt(0)) 0L else row.getLong(2)
     val keptN = n - 2 * tr
-    def out(o: Option[Double]) = o.map(lit(_).cast("double")).getOrElse(dNull)
-    spark.range(1).select(lit(n).as("n"), lit(tr).as("n_trim_each"),
-      lit(row.getDouble(1) / n).as("mean"),
-      out(if (keptN > 0) Some(row.getDouble(3) / keptN) else None)
-        .as("trimmed_mean"),
-      out(if (keptN > 0) Some(row.getDouble(4) / n) else None)
-        .as("winsorized_mean"),
-      lit(row.getDouble(5)).as("median"))
+    Seq((n, tr, Option.when(n > 0)(row.getDouble(1) / n),
+        Option.when(n > 0 && keptN > 0)(row.getDouble(3) / keptN),
+        Option.when(n > 0 && keptN > 0)(row.getDouble(4) / n),
+        Option.when(n > 0)(row.getDouble(5))))
+      .toDF("n", "n_trim_each", "mean", "trimmed_mean", "winsorized_mean",
+        "median")
   }
 
 
@@ -3401,14 +3225,17 @@ object StatTests {
       persistInput = false)
     val (nA, nB) = (grand(0), grand(1))
     val spark = a.sparkSession
-    def dNull = lit(null).cast("double")
-    def nulls(ha: Long, hb: Long) = spark.range(1).select(
-      lit(nA).as("n_a"), lit(nB).as("n_b"), lit(ha).as("h_a"),
-      lit(hb).as("h_b"), dNull.as("trimmed_mean_a"),
-      dNull.as("trimmed_mean_b"), dNull.as("t_stat"), dNull.as("df"))
+    import spark.implicits._
+    // stats = (trimmed_mean_a, trimmed_mean_b, t_stat, df)
+    def out(ha: Long, hb: Long,
+        stats: Option[(Double, Double, Double, Double)]) =
+      Seq((nA, nB, ha, hb, stats.map(_._1), stats.map(_._2),
+          stats.map(_._3), stats.map(_._4)))
+        .toDF("n_a", "n_b", "h_a", "h_b", "trimmed_mean_a",
+          "trimmed_mean_b", "t_stat", "df")
     val tA = (nA * trimFrac).toLong; val tB = (nB * trimFrac).toLong
     val (hA, hB) = (nA - 2 * tA, nB - 2 * tB)
-    if (hA < 2 || hB < 2) return nulls(math.max(hA, 0), math.max(hB, 0))
+    if (hA < 2 || hB < 2) return out(math.max(hA, 0), math.max(hB, 0), None)
     def side(c: String, e: String, n: Long, t: Long) = {
       val hi = col(e) + col(c)
       val lo = col(e) + 1
@@ -3431,14 +3258,9 @@ object StatTests {
       (hA.toDouble * (hA - 1))
     val dB = (row.getDouble(5) - row.getDouble(4) * row.getDouble(4) / nB) /
       (hB.toDouble * (hB - 1))
-    if (!(dA + dB > 0)) return nulls(hA, hB)
-    val tStat = (tmA - tmB) / math.sqrt(dA + dB)
-    val df = (dA + dB) * (dA + dB) /
-      (dA * dA / (hA - 1) + dB * dB / (hB - 1))
-    spark.range(1).select(lit(nA).as("n_a"), lit(nB).as("n_b"),
-      lit(hA).as("h_a"), lit(hB).as("h_b"),
-      lit(tmA).as("trimmed_mean_a"), lit(tmB).as("trimmed_mean_b"),
-      lit(tStat).as("t_stat"), lit(df).as("df"))
+    out(hA, hB, Option.when(dA + dB > 0)((tmA, tmB,
+      (tmA - tmB) / math.sqrt(dA + dB),
+      (dA + dB) * (dA + dB) / (dA * dA / (hA - 1) + dB * dB / (hB - 1)))))
   }
 
 
@@ -3517,27 +3339,20 @@ object StatTests {
         sum(when(x === 0, 1L).otherwise(0L)).as("z"))
       .head()
     val spark = df.sparkSession
-    def dNull = lit(null).cast("double")
+    import spark.implicits._
     val n = if (row.isNullAt(0)) 0L else row.getLong(0)
-    if (n < 2) {
-      return spark.range(1).select(lit(n).as("n"), dNull.as("mean"),
-        dNull.as("variance"), dNull.as("zero_frac_obs"),
-        dNull.as("zero_frac_poisson"), dNull.as("nb_r"),
-        dNull.as("zero_frac_nb"))
+    // (mean, variance, zero_frac_obs) for n ≥ 2
+    val m = Option.when(n >= 2)((row.getDouble(1) / n,
+      (row.getDouble(2) - row.getDouble(1) * row.getDouble(1) / n) / (n - 1),
+      row.getLong(3).toDouble / n))
+    val nb = m.collect { case (mu, v, _) if v > mu && mu > 0 =>
+      val r = mu * mu / (v - mu)
+      (r, math.pow(r / (r + mu), r))
     }
-    val mu = row.getDouble(1) / n
-    val v = (row.getDouble(2) - row.getDouble(1) * row.getDouble(1) / n) / (n - 1)
-    val zObs = row.getLong(3).toDouble / n
-    val nb: Option[(Double, Double)] =
-      if (v > mu && mu > 0) {
-        val r = mu * mu / (v - mu)
-        Some((r, math.pow(r / (r + mu), r)))
-      } else None
-    def out(o: Option[Double]) = o.map(lit(_).cast("double")).getOrElse(dNull)
-    spark.range(1).select(lit(n).as("n"), lit(mu).as("mean"),
-      lit(v).as("variance"), lit(zObs).as("zero_frac_obs"),
-      lit(math.exp(-mu)).as("zero_frac_poisson"),
-      out(nb.map(_._1)).as("nb_r"), out(nb.map(_._2)).as("zero_frac_nb"))
+    Seq((n, m.map(_._1), m.map(_._2), m.map(_._3),
+        m.map(t => math.exp(-t._1)), nb.map(_._1), nb.map(_._2)))
+      .toDF("n", "mean", "variance", "zero_frac_obs", "zero_frac_poisson",
+        "nb_r", "zero_frac_nb")
   }
 
 
@@ -3555,37 +3370,23 @@ object StatTests {
     * Scale: ONE (count, Σv, Σv²) aggregation per side; scalar algebra on
     * the driver. */
   def effectSizes(a: DataFrame, b: DataFrame, column: String): DataFrame = {
-    def side(df: DataFrame) = df
-      .select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull)
-      .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
-        sum(col("v") * col("v")).as("q"))
-      .head()
-    val (ra, rb) = (side(a), side(b))
-    val (na, nb) = (ra.getLong(0), rb.getLong(0))
+    val (na, sa, qa) = sideMoments(a, column)
+    val (nb, sb, qb) = sideMoments(b, column)
     val spark = a.sparkSession
-    def dNull = lit(null).cast("double")
-    def out(o: Option[Double]) = o.map(lit(_).cast("double")).getOrElse(dNull)
-    val ma = if (na > 0) Some(ra.getDouble(1) / na) else None
-    val mb = if (nb > 0) Some(rb.getDouble(1) / nb) else None
-    if (na < 2 || nb < 2) {
-      return spark.range(1).select(lit(na).as("n_a"), lit(nb).as("n_b"),
-        out(ma).as("mean_a"), out(mb).as("mean_b"),
-        out(for (x <- ma; y <- mb) yield x - y).as("diff"),
-        dNull.as("cohens_d"), dNull.as("hedges_g"), dNull.as("glass_delta"),
-        dNull.as("var_ratio"))
-    }
-    val va = (ra.getDouble(2) - ra.getDouble(1) * ra.getDouble(1) / na) / (na - 1)
-    val vb = (rb.getDouble(2) - rb.getDouble(1) * rb.getDouble(1) / nb) / (nb - 1)
-    val diff = ma.get - mb.get
+    import spark.implicits._
+    val ma = Option.when(na > 0)(sa / na)
+    val mb = Option.when(nb > 0)(sb / nb)
+    val diff = for (x <- ma; y <- mb) yield x - y
+    val ok = na >= 2 && nb >= 2
+    val va = (qa - sa * sa / na) / (na - 1)
+    val vb = (qb - sb * sb / nb) / (nb - 1)
     val sp2 = ((na - 1) * va + (nb - 1) * vb) / (na + nb - 2).toDouble
-    val d = if (sp2 > 0) Some(diff / math.sqrt(sp2)) else None
-    val g = d.map(_ * (1.0 - 3.0 / (4.0 * (na + nb) - 9.0)))
-    val glass = if (va > 0) Some(diff / math.sqrt(va)) else None
-    val vr = if (vb > 0) Some(va / vb) else None
-    spark.range(1).select(lit(na).as("n_a"), lit(nb).as("n_b"),
-      lit(ma.get).as("mean_a"), lit(mb.get).as("mean_b"),
-      lit(diff).as("diff"), out(d).as("cohens_d"), out(g).as("hedges_g"),
-      out(glass).as("glass_delta"), out(vr).as("var_ratio"))
+    val d = for (x <- diff if ok && sp2 > 0) yield x / math.sqrt(sp2)
+    Seq((na, nb, ma, mb, diff, d,
+        d.map(_ * (1.0 - 3.0 / (4.0 * (na + nb) - 9.0))),
+        for (x <- diff if ok && va > 0) yield x / math.sqrt(va),
+        Option.when(ok && vb > 0)(va / vb)))
+      .toDF("n_a", "n_b", "mean_a", "mean_b", "diff", "cohens_d", "hedges_g",
+        "glass_delta", "var_ratio")
   }
 }

@@ -190,6 +190,29 @@ class ParquetIOSpec extends SparkSpecBase {
       s"SparkSession.builder outside GraftSession: $found")
   }
 
+  test("closed-form statistics return one toDF row, not range(1) rows") {
+    // Files allowed a `range(1)…select(` row, with how many: each goes
+    // with a row that Spark expressions compute.
+    val allowed = Map(
+      // thresholdAtKeepRate: threshold and rates round with Spark's round()
+      "graft/operators/LinearModel.scala" -> 1,
+      // permutationTestMeanDiff's empty-side row: its normal row is the
+      // lazy resampling aggregate, whose plan PlanSpec pins
+      "graft/profile/StatTests.scala" -> 1)
+    val rangeRow = """range\(1\)\s*\.select\(""".r
+    val found = mainSources
+      .map { case (f, text) => f -> rangeRow.findAllMatchIn(text).size }
+      .filter(_._2 > 0)
+    assert(found == allowed,
+      s"range(1).select( rows in src/main: $found; allowed: $allowed")
+    // a degenerate stat is None in the output tuple, not a typed NULL
+    // literal helper (no file is allowed one)
+    val dNull = """\b(def|val)\s+dNull\b""".r
+    val helpers = mainSources.collect {
+      case (f, text) if dNull.findFirstIn(text).isDefined => f }
+    assert(helpers.isEmpty, s"dNull helpers in src/main: $helpers")
+  }
+
   /** Every src/main Scala file's text, keyed by its path under src/main/scala. */
   private def mainSources: Map[String, String] = {
     val root = Paths.get("src/main/scala")
