@@ -637,37 +637,48 @@ object Behavior {
         "expected_a", "var_a", "chi2")
   }
 
-  def kmCurve(durations: DataFrame, durationCol: String,
-      censoredCol: String, reliable: Boolean = false): DataFrame = {
-    // The [[rmst]] chain discipline: the per-distinct-duration spine is
-    // calendar-bounded, so it (and the cumsum-1 output below) checkpoints —
-    // without the cuts, each chained cumsum's splits/totals pass replayed
-    // the whole subject-table aggregation again (measured at sf0.1: the
-    // byLife aggregation ran ~5× per curve), and the range splits over
-    // `life` compute once and feed both cumsums (same order column, same
-    // spine rows). `reliable` swaps the local checkpoint for a durable one
-    // on a real cluster.
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val byLife = cp(durations
+  /** The at-risk spine shared by [[kmCurve]], [[kmCurveCI]] and
+    * [[naCurve]]: `byLife` — per distinct lifetime, churned `d`, censored
+    * `cns` and all exits `all` — and cumsum 1 over it, `cum1`, which adds
+    * `__exitsBefore` (exits strictly BEFORE each lifetime), with the
+    * subject count `n` and the range splits over `life`.
+    *
+    * The [[rmst]] chain discipline: the per-distinct-duration spine is
+    * calendar-bounded, so it (and each curve's cumsum-1 output)
+    * checkpoints — without the cuts, each chained cumsum's splits/totals
+    * pass replayed the whole subject-table aggregation again (measured at
+    * sf0.1: the byLife aggregation ran ~5× per curve), and the range
+    * splits over `life` compute once and feed both cumsums (same order
+    * column, same spine rows). `reliable` swaps the local checkpoint for a
+    * durable one on a real cluster. Each curve releases `byLife` once its
+    * own cumsum-1 output is checkpointed. */
+  private def atRiskSpine(durations: DataFrame, durationCol: String,
+      censoredCol: String, reliable: Boolean)
+      : (DataFrame, DataFrame, Long, Option[Array[Double]]) = {
+    val byLife = graft.ops.ScaleOps.cutLineageBounded(durations
       .filter(col(durationCol).isNotNull)
       .select(col(durationCol).cast("long").as("life"),
         coalesce(col(censoredCol), lit(false)).as("__cens"))
       .groupBy(col("life"))
       .agg(sum(when(col("__cens"), 0L).otherwise(1L)).as("d"),
         sum(when(col("__cens"), 1L).otherwise(0L)).as("cns"),
-        count(lit(1)).as("all")))
+        count(lit(1)).as("all")), reliable)
     val lifeSplits = Some(graft.ops.ScaleOps.rangeSplits(byLife, col("life")))
-    // cumsum 1: exits (churned + censored) strictly BEFORE each lifetime
     val (cum1, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
       byLife, col("life"), Seq("all"), Seq("__exitsBefore"),
       splitsHint = lifeSplits, persistInput = false)
-    val n = grand.head
+    (byLife, cum1, grand.head, lifeSplits)
+  }
+
+  def kmCurve(durations: DataFrame, durationCol: String,
+      censoredCol: String, reliable: Boolean = false): DataFrame = {
+    val (byLife, cum1, n, lifeSplits) =
+      atRiskSpine(durations, durationCol, censoredCol, reliable)
     val nRisk = lit(n) - col("__exitsBefore")
     // ln(1 − d/n_risk): d = n_risk only at the terminal lifetime where
     // everyone remaining churns — survival is exactly 0 there, flagged and
     // excluded from the log (ln(0) is undefined under ANSI)
-    val withTerm = cp(cum1
+    val withTerm = graft.ops.ScaleOps.cutLineageBounded(cum1
       .withColumn("__nRisk", nRisk)
       .withColumn("__dead", col("d") === col("__nRisk"))
       .withColumn("__lnTerm",
@@ -677,7 +688,7 @@ object Behavior {
       .withColumn("__lnQ",
         // fixed-point (12 dp) so the long-typed cumsum machinery carries
         // it exactly; 1e-12 granularity is far below the 6-dp report
-        round(col("__lnTerm") * 1e12, 0).cast("long")))
+        round(col("__lnTerm") * 1e12, 0).cast("long")), reliable)
     graft.ops.ScaleOps.releaseCheckpointBlocks(byLife)
     // cumsum 2: running Σ ln-terms (inclusive = exclusive + own)
     val cum2 = graft.ops.ScaleOps.withExclusiveRunningSum(
@@ -714,27 +725,12 @@ object Behavior {
       censoredCol: String, z: Double = 1.959964,
       reliable: Boolean = false): DataFrame = {
     require(z > 0, s"z must be > 0: $z")
-    // checkpointed calendar-bounded spine + shared splits — the [[kmCurve]]
-    // chain discipline (see the note there)
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val byLife = cp(durations
-      .filter(col(durationCol).isNotNull)
-      .select(col(durationCol).cast("long").as("life"),
-        coalesce(col(censoredCol), lit(false)).as("__cens"))
-      .groupBy(col("life"))
-      .agg(sum(when(col("__cens"), 0L).otherwise(1L)).as("d"),
-        sum(when(col("__cens"), 1L).otherwise(0L)).as("cns"),
-        count(lit(1)).as("all")))
-    val lifeSplits = Some(graft.ops.ScaleOps.rangeSplits(byLife, col("life")))
-    val (cum1, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      byLife, col("life"), Seq("all"), Seq("__exitsBefore"),
-      splitsHint = lifeSplits, persistInput = false)
-    val n = grand.head
+    val (byLife, cum1, n, lifeSplits) =
+      atRiskSpine(durations, durationCol, censoredCol, reliable)
     val nRisk = lit(n) - col("__exitsBefore")
     val dD = col("d").cast("double")
     val nrD = nRisk.cast("double")
-    val withTerm = cp(cum1
+    val withTerm = graft.ops.ScaleOps.cutLineageBounded(cum1
       .withColumn("__nRisk", nRisk)
       .withColumn("__dead", col("d") === col("__nRisk"))
       .withColumn("__lnQ",
@@ -745,7 +741,7 @@ object Behavior {
       .withColumn("__gQ",
         when(col("d") > 0 && !col("__dead"),
           round(dD / (nrD * (nrD - dD)) * 1e12, 0).cast("long"))
-          .otherwise(lit(0L))))
+          .otherwise(lit(0L))), reliable)
     graft.ops.ScaleOps.releaseCheckpointBlocks(byLife)
     val cum2 = graft.ops.ScaleOps.withExclusiveRunningSums(
       withTerm, col("life"), Seq("__lnQ", "__gQ"),
@@ -784,30 +780,15 @@ object Behavior {
     * cumsum pass; no global window, no sort. */
   def naCurve(durations: DataFrame, durationCol: String,
       censoredCol: String, reliable: Boolean = false): DataFrame = {
-    // checkpointed calendar-bounded spine + shared splits — the [[kmCurve]]
-    // chain discipline (see the note there)
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val byLife = cp(durations
-      .filter(col(durationCol).isNotNull)
-      .select(col(durationCol).cast("long").as("life"),
-        coalesce(col(censoredCol), lit(false)).as("__cens"))
-      .groupBy(col("life"))
-      .agg(sum(when(col("__cens"), 0L).otherwise(1L)).as("d"),
-        sum(when(col("__cens"), 1L).otherwise(0L)).as("cns"),
-        count(lit(1)).as("all")))
-    val lifeSplits = Some(graft.ops.ScaleOps.rangeSplits(byLife, col("life")))
-    val (cum1, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      byLife, col("life"), Seq("all"), Seq("__exitsBefore"),
-      splitsHint = lifeSplits, persistInput = false)
-    val n = grand.head
-    val withTerms = cp(cum1
+    val (byLife, cum1, n, lifeSplits) =
+      atRiskSpine(durations, durationCol, censoredCol, reliable)
+    val withTerms = graft.ops.ScaleOps.cutLineageBounded(cum1
       .withColumn("__nRisk", lit(n) - col("__exitsBefore"))
       .withColumn("__hQ", round(col("d").cast("double") / col("__nRisk")
         * 1e12, 0).cast("long"))
       .withColumn("__vQ", round(col("d").cast("double")
         / (col("__nRisk").cast("double") * col("__nRisk")) * 1e12, 0)
-        .cast("long")))
+        .cast("long")), reliable)
     graft.ops.ScaleOps.releaseCheckpointBlocks(byLife)
     val cum2 = graft.ops.ScaleOps.withExclusiveRunningSums(
       withTerms, col("life"), Seq("__hQ", "__vQ"),

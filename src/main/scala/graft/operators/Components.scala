@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.ops.ScaleOps.{cutLineageBounded, releaseCheckpointBlocks}
+
 /** Distributed connected components by iterative min-label propagation —
   * the classic Spark pattern for the one dedup step that is inherently
   * iterative: collapsing near-duplicate PAIRS into transitive clusters.
@@ -81,7 +83,7 @@ object Components {
           .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
           .groupBy(col("id"))
           .agg(sum(col("c").cast("decimal(28,18)")).cast("double").as("in_sum"))
-        val next = cutLineage(v.join(contrib, Seq("id"), "left")
+        val next = cutLineageBounded(v.join(contrib, Seq("id"), "left")
           .select(col("id"),
             round(lit(base) + lit(damping) * coalesce(col("in_sum"), lit(0.0)), 12)
               .as("rank")), checkpointDir.isDefined)
@@ -89,7 +91,7 @@ object Components {
         // cached blocks are no longer referenced — release them now instead
         // of letting one checkpoint per iteration accumulate for the job's
         // lifetime (no-op on the first, un-checkpointed ranks frame)
-        releaseCheckpoint(ranks)
+        releaseCheckpointBlocks(ranks)
         ranks = next
       }
       ranks.select(col("id"), round(col("rank"), 6).as("rank"))
@@ -167,7 +169,7 @@ object Components {
       else touched0
 
     try {
-      var labels = cutLineage(
+      var labels = cutLineageBounded(
         touched.select(col("id"), col("id").as("component")),
         checkpointDir.isDefined)
       var converged = false
@@ -177,7 +179,7 @@ object Components {
           .groupBy(col("src")).agg(min(col("component")).as("nbr_comp"))
         // the changed flag rides in the checkpointed projection: the
         // convergence probe below scans cached blocks, no join, no shuffle
-        val next = cutLineage(
+        val next = cutLineageBounded(
           labels.join(nbrMin, labels("id") === nbrMin("src"), "left")
             .select(labels("id"),
               least(col("component"), coalesce(col("nbr_comp"), col("component")))
@@ -186,7 +188,7 @@ object Components {
                 .as("__chg")),
           checkpointDir.isDefined) // materializes AND cuts lineage
         converged = next.filter(col("__chg")).isEmpty
-        releaseCheckpoint(labels)
+        releaseCheckpointBlocks(labels)
         labels = next.drop("__chg")
         iter += 1
       }
@@ -203,29 +205,4 @@ object Components {
       sym0.unpersist(); touched0.unpersist()
     }
   }
-
-  /** Materialize `df` eagerly and cut its lineage so iterative plan depth
-    * stays constant. `reliable = false` (local mode default) uses
-    * `localCheckpoint(true)`: blocks live on executors with lineage
-    * truncated — fast, but one executor loss mid-iteration kills the job
-    * unrecoverably. `reliable = true` writes a durable checkpoint to the
-    * directory previously registered via `setCheckpointDir`
-    * (`Dataset.checkpoint`): files survive executor loss — the required
-    * mode for long iterative jobs on a real cluster. */
-  private def cutLineage(df: DataFrame, reliable: Boolean): DataFrame =
-    if (reliable) df.checkpoint(eager = true)
-    // registered so the PUBLIC releaseCheckpointBlocks can release the
-    // final returned frame; intermediate iterations self-release via
-    // releaseCheckpoint below (stale registered ids are harmless — RDD
-    // ids are never reused within a SparkContext)
-    else graft.ops.ScaleOps.registerInternalCheckpoint(df.localCheckpoint(true))
-
-  /** Release the cached blocks behind a `localCheckpoint(true)` DataFrame.
-    * Routed through the public registry-scoped release so the iteration's
-    * id is also DEREGISTERED (a raw per-leaf unpersist would leave one
-    * stale id per iteration accumulating toward the registry bound).
-    * No-op for reliable checkpoints (their data is files, not blocks) and
-    * for never-checkpointed frames (no `LogicalRDD` leaf). */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    graft.ops.ScaleOps.releaseCheckpointBlocks(df)
 }

@@ -973,53 +973,53 @@ object CorpusStats {
     val lens = toks.groupBy(col("id")).agg(count(lit(1)).as("len"))
     val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
       lens, col("id"), Seq("len"), Seq("off"))
-    val nTokens = grand.head
-    val spark = docs.sparkSession
-    if (nTokens < checkpoints) {
-      graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-      return spark.range(0).select(
-        lit(0).as("i"), lit(0L).as("n_prefix"), lit(0L).as("v_types"),
-        lit(null).cast("double").as("beta"),
-        lit(null).cast("double").as("log_k"),
-        lit(null).cast("double").as("r2"))
-    }
-    val firstOcc = toks
-      .join(cum.select(col("id"), col("off")), Seq("id"))
-      .groupBy(col("term"))
-      .agg(min(col("off") + col("pos") + 1).as("first_pos"))
-    // inner inequality join STREAMS the vocab side against the broadcast
-    // checkpoint spine (a left-outer spine join would need the vocab side
-    // broadcast — wrong way round at corpus scale); empty checkpoints
-    // fill from the spine on the driver
-    import spark.implicits._
-    val spineRows = (1 to checkpoints)
-      .map(i => (i, i.toLong * nTokens / checkpoints))
-    val counts = firstOcc
-      .join(broadcast(spineRows.toDF("i", "n_prefix")),
-        col("first_pos") <= col("n_prefix"))
-      .groupBy(col("i")).agg(count(lit(1)).as("v"))
-      .collect()
-      .map(r => r.getAs[Int]("i") -> r.getAs[Long]("v")).toMap
-    val curve = spineRows.map { case (i, np) => (i, np, counts.getOrElse(i, 0L)) }
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-    // log-log OLS over the checkpoint curve (driver-side: bounded rows)
-    val pts = curve.filter(p => p._2 > 0 && p._3 > 0)
-      .map(p => (math.log(p._2.toDouble), math.log(p._3.toDouble)))
-    val fit: Option[(Double, Double, Double)] =
-      if (pts.length < 3) None
-      else {
-        val n = pts.length
-        val mx = pts.map(_._1).sum / n; val my = pts.map(_._2).sum / n
-        val sxx = pts.map(p => (p._1 - mx) * (p._1 - mx)).sum
-        val sxy = pts.map(p => (p._1 - mx) * (p._2 - my)).sum
-        val syy = pts.map(p => (p._2 - my) * (p._2 - my)).sum
-        if (sxx <= 0 || syy <= 0) None
-        else Some((sxy / sxx, my - sxy / sxx * mx, sxy * sxy / (sxx * syy)))
+    try {
+      val nTokens = grand.head
+      val spark = docs.sparkSession
+      if (nTokens < checkpoints) {
+        return spark.range(0).select(
+          lit(0).as("i"), lit(0L).as("n_prefix"), lit(0L).as("v_types"),
+          lit(null).cast("double").as("beta"),
+          lit(null).cast("double").as("log_k"),
+          lit(null).cast("double").as("r2"))
       }
-    val fitted = curve.map { case (i, np, v) =>
-      (i, np, v, fit.map(_._1), fit.map(_._2), fit.map(_._3))
-    }
-    fitted.toDF("i", "n_prefix", "v_types", "beta", "log_k", "r2")
+      val firstOcc = toks
+        .join(cum.select(col("id"), col("off")), Seq("id"))
+        .groupBy(col("term"))
+        .agg(min(col("off") + col("pos") + 1).as("first_pos"))
+      // inner inequality join STREAMS the vocab side against the broadcast
+      // checkpoint spine (a left-outer spine join would need the vocab side
+      // broadcast — wrong way round at corpus scale); empty checkpoints
+      // fill from the spine on the driver
+      import spark.implicits._
+      val spineRows = (1 to checkpoints)
+        .map(i => (i, i.toLong * nTokens / checkpoints))
+      val counts = firstOcc
+        .join(broadcast(spineRows.toDF("i", "n_prefix")),
+          col("first_pos") <= col("n_prefix"))
+        .groupBy(col("i")).agg(count(lit(1)).as("v"))
+        .collect()
+        .map(r => r.getAs[Int]("i") -> r.getAs[Long]("v")).toMap
+      val curve = spineRows.map { case (i, np) => (i, np, counts.getOrElse(i, 0L)) }
+      // log-log OLS over the checkpoint curve (driver-side: bounded rows)
+      val pts = curve.filter(p => p._2 > 0 && p._3 > 0)
+        .map(p => (math.log(p._2.toDouble), math.log(p._3.toDouble)))
+      val fit: Option[(Double, Double, Double)] =
+        if (pts.length < 3) None
+        else {
+          val n = pts.length
+          val mx = pts.map(_._1).sum / n; val my = pts.map(_._2).sum / n
+          val sxx = pts.map(p => (p._1 - mx) * (p._1 - mx)).sum
+          val sxy = pts.map(p => (p._1 - mx) * (p._2 - my)).sum
+          val syy = pts.map(p => (p._2 - my) * (p._2 - my)).sum
+          if (sxx <= 0 || syy <= 0) None
+          else Some((sxy / sxx, my - sxy / sxx * mx, sxy * sxy / (sxx * syy)))
+        }
+      val fitted = curve.map { case (i, np, v) =>
+        (i, np, v, fit.map(_._1), fit.map(_._2), fit.map(_._3))
+      }
+      fitted.toDF("i", "n_prefix", "v_types", "beta", "log_k", "r2")
+    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
   }
 
   /** Word bigrams of a text column as `(v, w)` rows — in-plan (zip of

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.ScaleOps.cutLineageBounded
+
 /** Graph-structure features over an edge list — the link-prediction and
   * topology-QA primitives a relationship-heavy corpus needs (entity
   * co-mention graphs, user-item interactions, citation webs): which node
@@ -68,10 +70,6 @@ object GraphFeatures {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxIters >= 1 && maxIters <= 100,
       s"maxIters must be in [1, 100]: $maxIters")
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true)
-      else graft.ops.ScaleOps.registerInternalCheckpoint(
-        df.localCheckpoint(true))
     val e0 = edges
       .select(col(srcCol).cast("string").as("a"),
         col(dstCol).cast("string").as("b"))
@@ -83,8 +81,9 @@ object GraphFeatures {
     try {
       // full within-graph degrees: ONE keyed count over the distinct
       // symmetric edges (sym lists every node as `a`)
-      var degs = cut(sym.groupBy(col("a")).agg(count(lit(1)).as("degree"))
-        .select(col("a").as("node"), col("degree")))
+      var degs = cutLineageBounded(sym.groupBy(col("a"))
+        .agg(count(lit(1)).as("degree"))
+        .select(col("a").as("node"), col("degree")), reliable)
       var aliveN = degs.count()
       var converged = aliveN == 0
       var it = 0
@@ -95,7 +94,7 @@ object GraphFeatures {
         else if (aliveN - nRem <= 0) {
           // everything peeled this round: the k-core is empty
           val old = degs
-          degs = cut(degs.filter(col("degree") >= k))
+          degs = cutLineageBounded(degs.filter(col("degree") >= k), reliable)
           graft.ops.ScaleOps.releaseCheckpointBlocks(old)
           aliveN = 0
           converged = true
@@ -112,11 +111,11 @@ object GraphFeatures {
             .groupBy(col("a")).agg(count(lit(1)).as("__dec"))
             .select(col("a").as("node"), col("__dec"))
           val old = degs
-          degs = cut(degs.filter(col("degree") >= k)
+          degs = cutLineageBounded(degs.filter(col("degree") >= k)
             .join(gate(dec), Seq("node"), "left")
             .select(col("node"),
               (col("degree") - coalesce(col("__dec"), lit(0L)))
-                .as("degree")))
+                .as("degree")), reliable)
           graft.ops.ScaleOps.releaseCheckpointBlocks(old)
         }
         it += 1

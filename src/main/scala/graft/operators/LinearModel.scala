@@ -634,32 +634,30 @@ object LinearModel {
     val (ranked, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
       perScore, col("score"), Seq("__pos", "__neg"),
       Seq("__posBelow", "__negBelow"))
-    val p = grand(0); val nn = grand(1)
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val zc = 1.959963984540054
-    def out(auc: Option[Double], se: Option[Double]) =
-      Seq((p + nn, p, auc, se,
-          for (a <- auc; v <- se) yield math.max(0.0, a - zc * v),
-          for (a <- auc; v <- se) yield math.min(1.0, a + zc * v)))
-        .toDF("n", "n_pos", "auc", "se", "ci_lo", "ci_hi")
-    if (p == 0 || nn == 0) {
-      graft.ops.ScaleOps.releaseCheckpointBlocks(ranked)
-      return out(None, None)
-    }
-    val v10 = (col("__negBelow") + col("__neg") / lit(2.0)) / nn
-    val v01 = (lit(p) - col("__posBelow") - col("__pos") / lit(2.0)) / p
-    val aucRow = ranked.agg(sum(col("__pos") * v10).as("_s")).head()
-    val auc = aucRow.getDouble(0) / p
-    val moments = ranked.agg(
-      sum(col("__pos") * pow(v10 - auc, 2)).as("_m10"),
-      sum(col("__neg") * pow(v01 - auc, 2)).as("_m01")).head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(ranked)
-    out(Some(auc), Option.when(p >= 2 && nn >= 2) {
-      val s10 = moments.getDouble(0) / (p - 1)
-      val s01 = moments.getDouble(1) / (nn - 1)
-      math.sqrt(s10 / p + s01 / nn)
-    })
+    try {
+      val p = grand(0); val nn = grand(1)
+      val spark = scored.sparkSession
+      import spark.implicits._
+      val zc = 1.959963984540054
+      def out(auc: Option[Double], se: Option[Double]) =
+        Seq((p + nn, p, auc, se,
+            for (a <- auc; v <- se) yield math.max(0.0, a - zc * v),
+            for (a <- auc; v <- se) yield math.min(1.0, a + zc * v)))
+          .toDF("n", "n_pos", "auc", "se", "ci_lo", "ci_hi")
+      if (p == 0 || nn == 0) return out(None, None)
+      val v10 = (col("__negBelow") + col("__neg") / lit(2.0)) / nn
+      val v01 = (lit(p) - col("__posBelow") - col("__pos") / lit(2.0)) / p
+      val aucRow = ranked.agg(sum(col("__pos") * v10).as("_s")).head()
+      val auc = aucRow.getDouble(0) / p
+      val moments = ranked.agg(
+        sum(col("__pos") * pow(v10 - auc, 2)).as("_m10"),
+        sum(col("__neg") * pow(v01 - auc, 2)).as("_m01")).head()
+      out(Some(auc), Option.when(p >= 2 && nn >= 2) {
+        val s10 = moments.getDouble(0) / (p - 1)
+        val s01 = moments.getDouble(1) / (nn - 1)
+        math.sqrt(s10 / p + s01 / nn)
+      })
+    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(ranked)
   }
 
   /** Murphy decomposition of the Brier score — WHY is the probability

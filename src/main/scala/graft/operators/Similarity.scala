@@ -1432,9 +1432,10 @@ object Similarity {
     * no pairwise anything. */
   def linearCka(df: DataFrame, colA: String, colB: String): DataFrame = {
     val base = df.filter(col(colA).isNotNull && col(colB).isNotNull)
-    val da = base.select(size(col(colA))).head() match {
-      case r if r.isNullAt(0) => 0
-      case r => r.getInt(0)
+    // no complete row (or a NULL size) reads as dimension 0: the n = 0 row
+    val da = base.select(size(col(colA))).head(1).headOption match {
+      case Some(r) if !r.isNullAt(0) => r.getInt(0)
+      case _ => 0
     }
     val spark = df.sparkSession
     import spark.implicits._

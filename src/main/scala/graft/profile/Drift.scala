@@ -107,55 +107,14 @@ object Drift {
     *
     * Shape: per-side counts per DISTINCT value, then a DISTRIBUTED
     * running CDF (range partition + per-partition windows + driver
-    * prefix-summed offsets — see inline note). Exact for any distinct
+    * prefix-summed offsets — [[graft.ops.ScaleOps.pooledValueCdf]]).
+    * Exact for any distinct
     * cardinality, continuous columns included; no bounded-distinct
     * contract. Returns one row `(n_a, n_b, ks)`. */
   def ksStatistic(a: DataFrame, b: DataFrame, column: String): DataFrame = {
-    val va = a.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_a"))
-    val vb = b.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_b"))
-    val joined = va.join(vb, Seq("v"), "full_outer").na.fill(0L, Seq("n_a", "n_b"))
-
-    // Bucket splits come from the RAW per-side columns (parquet footer
-    // statistics — zero jobs): the post-join table can never trace to a
-    // relation, so without the hint the cumsum would pay a data-sized
-    // quantile pass over the freshly-joined distinct-value table. Each
-    // side that traces contributes its splits; the union covers the
-    // combined range (placement only affects balance, never correctness).
-    // The hint applies only when BOTH sides trace to parquet footers: a
-    // one-sided hint covers one side's range only, and if the other
-    // side's values sit outside it (disjoint snapshots, time-like
-    // columns) they would ALL land in one edge bucket — the
-    // single-partition stall — while the hint suppressed the quantile
-    // fallback that would have covered both. Both-sides-traced empties
-    // are legitimate (both constant).
-    val splitsHint = (graft.ops.ScaleOps.footerRangeSplits(va, "v"),
-        graft.ops.ScaleOps.footerRangeSplits(vb, "v")) match {
-      case (Some(x), Some(y)) => Some((x ++ y).distinct.sorted)
-      case _ => None
-    }
-
-    // Both running CDFs ride ONE deterministic-bucket two-phase cumsum
-    // ([[graft.ops.ScaleOps.withExclusiveRunningSums]]): same bucket
-    // assignment, one totals pass (which also yields the grand totals —
-    // no extra job), one shared window stage. The distinct-value table
-    // may be arbitrarily large (continuous columns where distinct ≈ rows
-    // included); no global single-partition window, no checkpoint — the
-    // bucket id is a pure function of the value, so every job agrees by
-    // construction.
-    // persistInput = false when the splits are footer-derived: the joined
-    // distinct-value table may be ~row-sized for continuous columns, and a
-    // MEMORY_AND_DISK materialization of it costs more than replaying the
-    // two pruned scans + cell join for the totals and consumer jobs
-    // (measured at sf0.1: 1.42 s → 0.62 s on the continuous-column KS) —
-    // and at 100 TB the cache write would be the bottleneck outright.
-    // Without the hint the cumsum pays a quantile pass too (3 replays), so
-    // the cache earns its keep there.
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      joined, col("v"), Seq("n_a", "n_b"), Seq("_ea", "_eb"), splitsHint,
-      persistInput = splitsHint.isEmpty)
-    val (ta, tb) = (grand(0), grand(1))
+    // both running CDFs ride the one pooled-value cumsum; the lazy
+    // aggregate returns to the caller, which releases `cum`'s blocks
+    val (cum, ta, tb, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
     cum
       .withColumn("_d", abs(
         (col("_ea") + col("n_a")) / lit(ta).cast("double") -
@@ -428,44 +387,28 @@ object Drift {
     * Scale: the [[mannWhitneyU]] plan — per-distinct-value counts, the
     * shared deterministic-bucket cumsum for inclusive CDFs, one reduce. */
   def cramerVonMises(a: DataFrame, b: DataFrame, column: String): DataFrame = {
-    val va = a.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_a"))
-    val vb = b.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_b"))
-    val joined = va.join(vb, Seq("v"), "full_outer")
-      .na.fill(0L, Seq("n_a", "n_b"))
-    val splitsHint = (graft.ops.ScaleOps.footerRangeSplits(va, "v"),
-        graft.ops.ScaleOps.footerRangeSplits(vb, "v")) match {
-      case (Some(x), Some(y)) => Some((x ++ y).distinct.sorted)
-      case _ => None
-    }
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      joined, col("v"), Seq("n_a", "n_b"), Seq("_beforeA", "_beforeB"),
-      splitsHint, persistInput = splitsHint.isEmpty)
-    val (na, nb) = (grand(0), grand(1))
-    val spark = a.sparkSession
-    import spark.implicits._
-    // stats = (t, t_expected, z) once both sides hold values
-    def out(stats: Option[(Double, Double, Option[Double])]) =
-      Seq((na, nb, stats.map(_._1), stats.map(_._2), stats.flatMap(_._3)))
-        .toDF("n_a", "n_b", "t", "t_expected", "z")
-    if (na == 0 || nb == 0) {
-      graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-      return out(None)
-    }
-    val fa = (col("_beforeA") + col("n_a")).cast("double") / na
-    val fb = (col("_beforeB") + col("n_b")).cast("double") / nb
-    val s = cum.agg(
-      sum((col("n_a") + col("n_b")).cast("double") * pow(fa - fb, 2)).as("_s"))
-      .head().getDouble(0)
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-    val (m, nn) = (na.toDouble, nb.toDouble)
-    val bigN = m + nn
-    val t = m * nn / (bigN * bigN) * s
-    val et = (1 + 1 / bigN) / 6
-    val varT = (bigN + 1) / (45 * bigN * bigN) *
-      (4 * m * nn * bigN - 3 * (m * m + nn * nn) - 2 * m * nn) / (4 * m * nn)
-    out(Some((t, et, Option.when(varT > 0)((t - et) / math.sqrt(varT)))))
+    val (cum, na, nb, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
+    try {
+      val spark = a.sparkSession
+      import spark.implicits._
+      // stats = (t, t_expected, z) once both sides hold values
+      def out(stats: Option[(Double, Double, Option[Double])]) =
+        Seq((na, nb, stats.map(_._1), stats.map(_._2), stats.flatMap(_._3)))
+          .toDF("n_a", "n_b", "t", "t_expected", "z")
+      if (na == 0 || nb == 0) return out(None)
+      val fa = (col("_ea") + col("n_a")).cast("double") / na
+      val fb = (col("_eb") + col("n_b")).cast("double") / nb
+      val s = cum.agg(
+        sum((col("n_a") + col("n_b")).cast("double") * pow(fa - fb, 2)).as("_s"))
+        .head().getDouble(0)
+      val (m, nn) = (na.toDouble, nb.toDouble)
+      val bigN = m + nn
+      val t = m * nn / (bigN * bigN) * s
+      val et = (1 + 1 / bigN) / 6
+      val varT = (bigN + 1) / (45 * bigN * bigN) *
+        (4 * m * nn * bigN - 3 * (m * m + nn * nn) - 2 * m * nn) / (4 * m * nn)
+      out(Some((t, et, Option.when(varT > 0)((t - et) / math.sqrt(varT)))))
+    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
   }
 
 
@@ -486,47 +429,37 @@ object Drift {
     * table with itself — a shuffle join on the rank key, NOT a global
     * window, so no single-partition stall on high-cardinality columns. */
   def wasserstein1(a: DataFrame, b: DataFrame, column: String): DataFrame = {
-    val va = a.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_a"))
-    val vb = b.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_b"))
-    val joined = va.join(vb, Seq("v"), "full_outer")
-      .na.fill(0L, Seq("n_a", "n_b"))
-      .withColumn("one", lit(1L))
-    val splitsHint = (graft.ops.ScaleOps.footerRangeSplits(va, "v"),
-        graft.ops.ScaleOps.footerRangeSplits(vb, "v")) match {
-      case (Some(x), Some(y)) => Some((x ++ y).distinct.sorted)
-      case _ => None
-    }
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      joined, col("v"), Seq("n_a", "n_b", "one"),
-      Seq("_beforeA", "_beforeB", "_rank"),
-      splitsHint, persistInput = splitsHint.isEmpty)
-    val (na, nb) = (grand(0), grand(1))
-    val spark = a.sparkSession
-    import spark.implicits._
-    def out(w1: Option[Double], w1Norm: Option[Double]) =
-      Seq((na, nb, grand(2), w1, w1Norm))
-        .toDF("n_a", "n_b", "n_values", "w1", "w1_norm")
-    if (na == 0 || nb == 0) {
-      graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-      return out(None, None)
-    }
+    val (cum, na, nb, nValues) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
+    try {
+      val spark = a.sparkSession
+      import spark.implicits._
+      def out(w1: Option[Double], w1Norm: Option[Double]) =
+        Seq((na, nb, nValues, w1, w1Norm))
+          .toDF("n_a", "n_b", "n_values", "w1", "w1_norm")
+      if (na == 0 || nb == 0) return out(None, None)
+      val agg = neighborGaps(cum, na, nb)
+        .agg(
+          sum(abs(col("_fa") - col("_fb")) * (col("_vNext") - col("v"))).as("_w1"),
+          min(col("v")).as("_lo"), max(col("_vNext")).as("_hi"))
+        .head()
+      // a single merged distinct value: zero mass distance by definition
+      if (agg.isNullAt(0)) return out(Some(0.0), None)
+      val w1 = agg.getDouble(0)
+      val range = agg.getDouble(2) - agg.getDouble(1)
+      out(Some(w1), Option.when(range > 0)(w1 / range))
+    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+  }
+
+  /** Each pooled distinct value `v` beside its successor `_vNext`, with both
+    * inclusive CDFs `_fa`/`_fb` at `v` — the rank⁺¹ equi-join of the
+    * [[graft.ops.ScaleOps.pooledValueCdf]] frame with itself that
+    * [[wasserstein1]] and [[energyDistance]] integrate over. */
+  private def neighborGaps(cum: DataFrame, na: Long, nb: Long): DataFrame = {
     val cur = cum.select(col("v"), col("_rank"),
-      ((col("_beforeA") + col("n_a")).cast("double") / na).as("_fa"),
-      ((col("_beforeB") + col("n_b")).cast("double") / nb).as("_fb"))
+      ((col("_ea") + col("n_a")).cast("double") / na).as("_fa"),
+      ((col("_eb") + col("n_b")).cast("double") / nb).as("_fb"))
     val next = cur.select(col("v").as("_vNext"), (col("_rank") - 1).as("_rank"))
-    val agg = cur.join(next, Seq("_rank"))
-      .agg(
-        sum(abs(col("_fa") - col("_fb")) * (col("_vNext") - col("v"))).as("_w1"),
-        min(col("v")).as("_lo"), max(col("_vNext")).as("_hi"))
-      .head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-    // a single merged distinct value: zero mass distance by definition
-    if (agg.isNullAt(0)) return out(Some(0.0), None)
-    val w1 = agg.getDouble(0)
-    val range = agg.getDouble(2) - agg.getDouble(1)
-    out(Some(w1), Option.when(range > 0)(w1 / range))
+    cur.join(next, Seq("_rank"))
   }
 
 
@@ -586,36 +519,20 @@ object Drift {
     * cumsum carrying CDFs + rank, neighbor gaps via the rank⁺¹
     * equi-join. */
   def energyDistance(a: DataFrame, b: DataFrame, column: String): DataFrame = {
-    val va = a.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_a"))
-    val vb = b.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_b"))
-    val joined = va.join(vb, Seq("v"), "full_outer")
-      .na.fill(0L, Seq("n_a", "n_b"))
-      .withColumn("one", lit(1L))
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      joined, col("v"), Seq("n_a", "n_b", "one"),
-      Seq("_beforeA", "_beforeB", "_rank"))
-    val (na, nb) = (grand(0), grand(1))
-    val spark = a.sparkSession
-    import spark.implicits._
-    def out(e2: Option[Double]) =
-      Seq((na, nb, e2, e2.map(v => math.sqrt(math.max(0.0, v)))))
-        .toDF("n_a", "n_b", "e2", "e")
-    if (na == 0 || nb == 0) {
-      graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-      return out(None)
-    }
-    val cur = cum.select(col("v"), col("_rank"),
-      ((col("_beforeA") + col("n_a")).cast("double") / na).as("_fa"),
-      ((col("_beforeB") + col("n_b")).cast("double") / nb).as("_fb"))
-    val next = cur.select(col("v").as("_vNext"), (col("_rank") - 1).as("_rank"))
-    val agg = cur.join(next, Seq("_rank"))
-      .agg(sum(pow(col("_fa") - col("_fb"), 2) * (col("_vNext") - col("v")))
-        .as("_i"))
-      .head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-    out(Some(if (agg.isNullAt(0)) 0.0 else 2 * agg.getDouble(0)))
+    val (cum, na, nb, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
+    try {
+      val spark = a.sparkSession
+      import spark.implicits._
+      def out(e2: Option[Double]) =
+        Seq((na, nb, e2, e2.map(v => math.sqrt(math.max(0.0, v)))))
+          .toDF("n_a", "n_b", "e2", "e")
+      if (na == 0 || nb == 0) return out(None)
+      val agg = neighborGaps(cum, na, nb)
+        .agg(sum(pow(col("_fa") - col("_fb"), 2) * (col("_vNext") - col("v")))
+          .as("_i"))
+        .head()
+      out(Some(if (agg.isNullAt(0)) 0.0 else 2 * agg.getDouble(0)))
+    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
   }
 
 
@@ -729,52 +646,41 @@ object Drift {
     * counts, ONE shared two-phase distributed cumsum (footer-split
     * hinted), a max reduce. No global window, no row-sized state. */
   def kuiperTest(a: DataFrame, b: DataFrame, column: String): DataFrame = {
-    val va = a.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_a"))
-    val vb = b.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_b"))
-    val joined = va.join(vb, Seq("v"), "full_outer").na.fill(0L, Seq("n_a", "n_b"))
-    val splitsHint = (graft.ops.ScaleOps.footerRangeSplits(va, "v"),
-        graft.ops.ScaleOps.footerRangeSplits(vb, "v")) match {
-      case (Some(x), Some(y)) => Some((x ++ y).distinct.sorted)
-      case _ => None
-    }
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      joined, col("v"), Seq("n_a", "n_b"), Seq("_ea", "_eb"), splitsHint,
-      persistInput = splitsHint.isEmpty)
-    val (ta, tb) = (grand(0), grand(1))
-    val spark = a.sparkSession
-    import spark.implicits._
-    // stats = (d_plus, d_minus, v, p_value) once both sides hold values
-    def out(stats: Option[(Double, Double, Double, Double)]) =
-      Seq((ta, tb, stats.map(_._1), stats.map(_._2), stats.map(_._3),
-          stats.map(_._4)))
-        .toDF("n_a", "n_b", "d_plus", "d_minus", "v", "p_value")
-    if (ta == 0 || tb == 0) return out(None)
-    val gap = (col("_ea") + col("n_a")) / lit(ta).cast("double") -
-      (col("_eb") + col("n_b")) / lit(tb).cast("double")
-    val row = cum.withColumn("_g", gap)
-      .agg(greatest(max(col("_g")), lit(0.0)).as("dp"),
-        greatest(max(-col("_g")), lit(0.0)).as("dm"))
-      .head()
-    val (dp, dm) = (row.getDouble(0), row.getDouble(1))
-    val v = dp + dm
-    val ne = ta.toDouble * tb / (ta + tb)
-    val lam = (math.sqrt(ne) + 0.155 + 0.24 / math.sqrt(ne)) * v
-    // the asymptotic series diverges as λ → 0 (every term → −1); the
-    // standard guard (Numerical Recipes' probkp) returns 1 below 0.4,
-    // where the true survival is 1 to double precision anyway
-    val p = if (lam < 0.4) 1.0 else {
-      var acc = 0.0
-      var m = 1
-      while (m <= 100) {
-        acc += (4.0 * m * m * lam * lam - 1.0) *
-          math.exp(-2.0 * m * m * lam * lam)
-        m += 1
+    val (cum, ta, tb, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
+    try {
+      val spark = a.sparkSession
+      import spark.implicits._
+      // stats = (d_plus, d_minus, v, p_value) once both sides hold values
+      def out(stats: Option[(Double, Double, Double, Double)]) =
+        Seq((ta, tb, stats.map(_._1), stats.map(_._2), stats.map(_._3),
+            stats.map(_._4)))
+          .toDF("n_a", "n_b", "d_plus", "d_minus", "v", "p_value")
+      if (ta == 0 || tb == 0) return out(None)
+      val gap = (col("_ea") + col("n_a")) / lit(ta).cast("double") -
+        (col("_eb") + col("n_b")) / lit(tb).cast("double")
+      val row = cum.withColumn("_g", gap)
+        .agg(greatest(max(col("_g")), lit(0.0)).as("dp"),
+          greatest(max(-col("_g")), lit(0.0)).as("dm"))
+        .head()
+      val (dp, dm) = (row.getDouble(0), row.getDouble(1))
+      val v = dp + dm
+      val ne = ta.toDouble * tb / (ta + tb)
+      val lam = (math.sqrt(ne) + 0.155 + 0.24 / math.sqrt(ne)) * v
+      // the asymptotic series diverges as λ → 0 (every term → −1); the
+      // standard guard (Numerical Recipes' probkp) returns 1 below 0.4,
+      // where the true survival is 1 to double precision anyway
+      val p = if (lam < 0.4) 1.0 else {
+        var acc = 0.0
+        var m = 1
+        while (m <= 100) {
+          acc += (4.0 * m * m * lam * lam - 1.0) *
+            math.exp(-2.0 * m * m * lam * lam)
+          m += 1
+        }
+        math.min(1.0, math.max(0.0, 2.0 * acc))
       }
-      math.min(1.0, math.max(0.0, 2.0 * acc))
-    }
-    out(Some((dp, dm, v, p)))
+      out(Some((dp, dm, v, p)))
+    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
   }
 
 
@@ -797,63 +703,52 @@ object Drift {
     * Σ_{m=1}^{n−1} H_m/(n−m) = H_n² − H_n^(2) to
     * g = H_N^(2) − 2H_{N−1}/N − 1/N²) — no driver loop, no N bound. */
   def andersonDarling2(a: DataFrame, b: DataFrame, column: String): DataFrame = {
-    val va = a.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_a"))
-    val vb = b.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_b"))
-    val joined = va.join(vb, Seq("v"), "full_outer").na.fill(0L, Seq("n_a", "n_b"))
-    val splitsHint = (graft.ops.ScaleOps.footerRangeSplits(va, "v"),
-        graft.ops.ScaleOps.footerRangeSplits(vb, "v")) match {
-      case (Some(x), Some(y)) => Some((x ++ y).distinct.sorted)
-      case _ => None
-    }
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      joined, col("v"), Seq("n_a", "n_b"), Seq("_ea", "_eb"), splitsHint,
-      persistInput = splitsHint.isEmpty)
-    val (na, nb) = (grand(0), grand(1))
-    val bigN = na + nb
-    val spark = a.sparkSession
-    import spark.implicits._
-    // stats = (a2, sigma, t_stat) of a non-constant pooled column
-    def out(stats: Option[(Double, Double, Double)]) =
-      Seq((na, nb, stats.map(_._1), stats.map(_._2), stats.map(_._3)))
-        .toDF("n_a", "n_b", "a2", "sigma", "t_stat")
-    if (na == 0 || nb == 0) return out(None)
-    val l = col("n_a") + col("n_b")
-    val bj = col("_ea") + col("_eb") + l
-    val ba = bj - l / lit(2.0)
-    val maA = col("_ea") + col("n_a") / lit(2.0)
-    val maB = col("_eb") + col("n_b") / lit(2.0)
-    val denom = ba * (lit(bigN.toDouble) - ba) - lit(bigN.toDouble) * l / 4
-    def side(ma: org.apache.spark.sql.Column, n: Long) =
-      sum(when(denom > 0,
-        l * pow(lit(bigN.toDouble) * ma - lit(n.toDouble) * ba, 2) / denom))
-    val row = cum.agg(side(maA, na).as("sa"), side(maB, nb).as("sb")).head()
-    if (row.isNullAt(0) || row.isNullAt(1)) return out(None) // constant column
-    val a2 = (bigN - 1.0) / bigN *
-      (row.getDouble(0) / na + row.getDouble(1) / nb) / bigN
-    // Scholz–Stephens harmonic constants in O(1): h = H_{N−1} = ψ(N)+γ,
-    // and g = Σ_{m=1}^{N−2} (H_{N−1} − H_m)/(N−m) collapses EXACTLY via
-    // Σ_{m=1}^{n−1} H_m/(n−m) = H_n² − H_n^(2) (the classic Euler-sum
-    // convolution, from Σ_{s≤n} H_s/s = (H_n² + H_n^(2))/2) to
-    // g = H_N^(2) − 2H_{N−1}/N − 1/N², with H_N^(2) = π²/6 − ψ'(N+1).
-    val nD0 = bigN.toDouble
-    val h = digamma(nD0) + EulerGamma
-    val h2 = math.Pi * math.Pi / 6 - trigamma(nD0 + 1)
-    val g = h2 - 2.0 * h / nD0 - 1.0 / (nD0 * nD0)
-    val k = 2.0
-    val bigH = 1.0 / na + 1.0 / nb
-    val ca = (4 * g - 6) * (k - 1) + (10 - 6 * g) * bigH
-    val cb = (2 * g - 4) * k * k + 8 * h * k +
-      (2 * g - 14 * h - 4) * bigH - 8 * h + 4 * g - 6
-    val cc = (6 * h + 2 * g - 2) * k * k + (4 * h - 4 * g + 6) * k +
-      (2 * h - 6) * bigH + 4 * h
-    val cd = (2 * h + 6) * k * k - 4 * h * k
-    val nD = bigN.toDouble
-    val var2 = (ca * nD * nD * nD + cb * nD * nD + cc * nD + cd) /
-      ((nD - 1) * (nD - 2) * (nD - 3))
-    val sigma = math.sqrt(var2)
-    out(Option.when(!(var2 <= 0))((a2, sigma, (a2 - (k - 1)) / sigma)))
+    val (cum, na, nb, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
+    try {
+      val bigN = na + nb
+      val spark = a.sparkSession
+      import spark.implicits._
+      // stats = (a2, sigma, t_stat) of a non-constant pooled column
+      def out(stats: Option[(Double, Double, Double)]) =
+        Seq((na, nb, stats.map(_._1), stats.map(_._2), stats.map(_._3)))
+          .toDF("n_a", "n_b", "a2", "sigma", "t_stat")
+      if (na == 0 || nb == 0) return out(None)
+      val l = col("n_a") + col("n_b")
+      val bj = col("_ea") + col("_eb") + l
+      val ba = bj - l / lit(2.0)
+      val maA = col("_ea") + col("n_a") / lit(2.0)
+      val maB = col("_eb") + col("n_b") / lit(2.0)
+      val denom = ba * (lit(bigN.toDouble) - ba) - lit(bigN.toDouble) * l / 4
+      def side(ma: org.apache.spark.sql.Column, n: Long) =
+        sum(when(denom > 0,
+          l * pow(lit(bigN.toDouble) * ma - lit(n.toDouble) * ba, 2) / denom))
+      val row = cum.agg(side(maA, na).as("sa"), side(maB, nb).as("sb")).head()
+      if (row.isNullAt(0) || row.isNullAt(1)) return out(None) // constant column
+      val a2 = (bigN - 1.0) / bigN *
+        (row.getDouble(0) / na + row.getDouble(1) / nb) / bigN
+      // Scholz–Stephens harmonic constants in O(1): h = H_{N−1} = ψ(N)+γ,
+      // and g = Σ_{m=1}^{N−2} (H_{N−1} − H_m)/(N−m) collapses EXACTLY via
+      // Σ_{m=1}^{n−1} H_m/(n−m) = H_n² − H_n^(2) (the classic Euler-sum
+      // convolution, from Σ_{s≤n} H_s/s = (H_n² + H_n^(2))/2) to
+      // g = H_N^(2) − 2H_{N−1}/N − 1/N², with H_N^(2) = π²/6 − ψ'(N+1).
+      val nD0 = bigN.toDouble
+      val h = digamma(nD0) + EulerGamma
+      val h2 = math.Pi * math.Pi / 6 - trigamma(nD0 + 1)
+      val g = h2 - 2.0 * h / nD0 - 1.0 / (nD0 * nD0)
+      val k = 2.0
+      val bigH = 1.0 / na + 1.0 / nb
+      val ca = (4 * g - 6) * (k - 1) + (10 - 6 * g) * bigH
+      val cb = (2 * g - 4) * k * k + 8 * h * k +
+        (2 * g - 14 * h - 4) * bigH - 8 * h + 4 * g - 6
+      val cc = (6 * h + 2 * g - 2) * k * k + (4 * h - 4 * g + 6) * k +
+        (2 * h - 6) * bigH + 4 * h
+      val cd = (2 * h + 6) * k * k - 4 * h * k
+      val nD = bigN.toDouble
+      val var2 = (ca * nD * nD * nD + cb * nD * nD + cc * nD + cd) /
+        ((nD - 1) * (nD - 2) * (nD - 3))
+      val sigma = math.sqrt(var2)
+      out(Option.when(!(var2 <= 0))((a2, sigma, (a2 - (k - 1)) / sigma)))
+    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
   }
 
 

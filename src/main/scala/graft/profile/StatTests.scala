@@ -867,46 +867,45 @@ object StatTests {
     val cb = cp(b.filter(col(column).isNotNull)
       .select(col(column).cast("double").as("vb"))
       .groupBy(col("vb")).agg(count(lit(1)).as("wb")))
-    val spark = a.sparkSession
-    import spark.implicits._
-    val sizes = ca.agg(sum(col("wa")), count(lit(1))).head()
-    val sizesB = cb.agg(sum(col("wb")), count(lit(1))).head()
-    val na = if (sizes.isNullAt(0)) 0L else sizes.getLong(0)
-    val nb = if (sizesB.isNullAt(0)) 0L else sizesB.getLong(0)
-    def out(nPairs: Long, hl: Option[Double], lo: Option[Double],
-        hi: Option[Double]) = Seq((na, nb, nPairs, hl, lo, hi))
-      .toDF("n_a", "n_b", "n_pairs", "hl_shift", "ci_lo", "ci_hi")
-    if (na == 0 || nb == 0) {
-      graft.ops.ScaleOps.releaseCheckpointBlocks(ca)
-      graft.ops.ScaleOps.releaseCheckpointBlocks(cb)
-      return out(0L, None, None, None)
-    }
-    val cellsA = sizes.getLong(1); val cellsB = sizesB.getLong(1)
-    require(cellsA * cellsB <= maxPairCells,
-      s"hodgesLehmann: $cellsA x $cellsB difference cells exceed " +
-        s"maxPairCells $maxPairCells — quantize the value column first")
+    // the difference table's plan holds both cell checkpoints and, once
+    // the cumsum has run, its persist: releasing it frees all three
     val diffs = cb.crossJoin(ca)
       .groupBy((col("vb") - col("va")).as("d"))
       .agg(sum(col("wb") * col("wa")).as("c"))
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      diffs, col("d"), Seq("c"), Seq("b"), persistInput = true)
-    val nPairs = grand(0)
-    // rank targets: the two middles (equal when N is odd) and the
-    // Lehmann normal-approximation CI ranks
-    val r1 = (nPairs + 1) / 2
-    val r2 = (nPairs + 2) / 2
-    val kD = nPairs / 2.0 - 1.959963984540054 *
-      math.sqrt(na.toDouble * nb * (na + nb + 1) / 12.0)
-    val kLo = math.max(1L, math.floor(kD).toLong + 1)
-    val kHi = math.min(nPairs, nPairs - (math.floor(kD).toLong))
-    def osAgg(r: Long, name: String) =
-      min(when(col("b") < r && col("b") + col("c") >= r, col("d")))
-        .as(name)
-    val row = cum.agg(osAgg(r1, "o1"), osAgg(r2, "o2"),
-      osAgg(kLo, "olo"), osAgg(kHi, "ohi")).head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-    val hl = (row.getDouble(0) + row.getDouble(1)) / 2.0
-    out(nPairs, Some(hl), Some(row.getDouble(2)), Some(row.getDouble(3)))
+    try {
+      val spark = a.sparkSession
+      import spark.implicits._
+      val sizes = ca.agg(sum(col("wa")), count(lit(1))).head()
+      val sizesB = cb.agg(sum(col("wb")), count(lit(1))).head()
+      val na = if (sizes.isNullAt(0)) 0L else sizes.getLong(0)
+      val nb = if (sizesB.isNullAt(0)) 0L else sizesB.getLong(0)
+      def out(nPairs: Long, hl: Option[Double], lo: Option[Double],
+          hi: Option[Double]) = Seq((na, nb, nPairs, hl, lo, hi))
+        .toDF("n_a", "n_b", "n_pairs", "hl_shift", "ci_lo", "ci_hi")
+      if (na == 0 || nb == 0) return out(0L, None, None, None)
+      val cellsA = sizes.getLong(1); val cellsB = sizesB.getLong(1)
+      require(cellsA * cellsB <= maxPairCells,
+        s"hodgesLehmann: $cellsA x $cellsB difference cells exceed " +
+          s"maxPairCells $maxPairCells — quantize the value column first")
+      val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
+        diffs, col("d"), Seq("c"), Seq("b"), persistInput = true)
+      val nPairs = grand(0)
+      // rank targets: the two middles (equal when N is odd) and the
+      // Lehmann normal-approximation CI ranks
+      val r1 = (nPairs + 1) / 2
+      val r2 = (nPairs + 2) / 2
+      val kD = nPairs / 2.0 - 1.959963984540054 *
+        math.sqrt(na.toDouble * nb * (na + nb + 1) / 12.0)
+      val kLo = math.max(1L, math.floor(kD).toLong + 1)
+      val kHi = math.min(nPairs, nPairs - (math.floor(kD).toLong))
+      def osAgg(r: Long, name: String) =
+        min(when(col("b") < r && col("b") + col("c") >= r, col("d")))
+          .as(name)
+      val row = cum.agg(osAgg(r1, "o1"), osAgg(r2, "o2"),
+        osAgg(kLo, "olo"), osAgg(kHi, "ohi")).head()
+      val hl = (row.getDouble(0) + row.getDouble(1)) / 2.0
+      out(nPairs, Some(hl), Some(row.getDouble(2)), Some(row.getDouble(3)))
+    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(diffs)
   }
 
   /** Delete-one-group jackknife SE for a RATIO metric — the honest error
@@ -995,49 +994,47 @@ object StatTests {
       .groupBy(col("v")).agg(count(lit(1)).as("c"))
     val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
       cells, col("v"), Seq("c"), Seq("b"), persistInput = false)
-    val n = grand(0)
-    val spark = df.sparkSession
-    import spark.implicits._
-    // shares = (gini, top1, top10) once the total mass is positive
-    def out(total: Option[Long], shares: Option[(Double, Double, Double)]) =
-      Seq((n, total, shares.map(_._1), shares.map(_._2), shares.map(_._3)))
-        .toDF("n", "total", "gini", "top1_share", "top10_share")
-    if (n < 2) {
-      graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-      return out(None, None)
-    }
-    def dec(c: Column) = c.cast("decimal(38,0)")
-    val vD = dec(col("v")); val cD = dec(col("c")); val bD = dec(col("b"))
-    // Σ ranks of a tied block starting after b rows: c·b + c(c+1)/2 —
-    // the halving lands on whichever of c / c+1 is even (shiftright
-    // keeps it integer-exact; the decimal cast happens BEFORE the
-    // products so nothing overflows long)
-    val half = when(col("c") % 2 === 0,
-        dec(shiftright(col("c"), 1)) * dec(col("c") + 1))
-      .otherwise(dec(col("c")) * dec(shiftright(col("c") + 1, 1)))
-    val w = cD * bD + half
-    // bottom-r mass: blocks fully below contribute v·c, the boundary
-    // block contributes v·(r − b) — resolved per block, no second scan
-    def bottom(r: Long, name: String) =
-      sum(when(col("b") + col("c") <= r, vD * cD)
-        .when(col("b") < r, vD * dec(lit(r) - col("b")))
-        .otherwise(dec(lit(0)))).as(name)
-    val r1 = n - n / 100
-    val r10 = n - n / 10
-    val row = cum.agg(
-        sum(vD * cD).as("__t"), sum(vD * w).as("__n"),
-        bottom(r1, "__s1"), bottom(r10, "__s10"))
-      .head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-    def bd(o: Int): BigDecimal =
-      if (row.isNullAt(o)) BigDecimal(0) else BigDecimal(row.getDecimal(o))
-    val t = bd(0); val num = bd(1)
-    // exact integer subtraction first, ONE double division — the order
-    // an external 128-bit-integer engine reproduces
-    out(Some(t.toLong), Option.when(t > 0)((
-      2.0 * num.toDouble / (n.toDouble * t.toDouble) - (n + 1.0) / n,
-      (t - bd(2)).toDouble / t.toDouble,
-      (t - bd(3)).toDouble / t.toDouble)))
+    try {
+      val n = grand(0)
+      val spark = df.sparkSession
+      import spark.implicits._
+      // shares = (gini, top1, top10) once the total mass is positive
+      def out(total: Option[Long], shares: Option[(Double, Double, Double)]) =
+        Seq((n, total, shares.map(_._1), shares.map(_._2), shares.map(_._3)))
+          .toDF("n", "total", "gini", "top1_share", "top10_share")
+      if (n < 2) return out(None, None)
+      def dec(c: Column) = c.cast("decimal(38,0)")
+      val vD = dec(col("v")); val cD = dec(col("c")); val bD = dec(col("b"))
+      // Σ ranks of a tied block starting after b rows: c·b + c(c+1)/2 —
+      // the halving lands on whichever of c / c+1 is even (shiftright
+      // keeps it integer-exact; the decimal cast happens BEFORE the
+      // products so nothing overflows long)
+      val half = when(col("c") % 2 === 0,
+          dec(shiftright(col("c"), 1)) * dec(col("c") + 1))
+        .otherwise(dec(col("c")) * dec(shiftright(col("c") + 1, 1)))
+      val w = cD * bD + half
+      // bottom-r mass: blocks fully below contribute v·c, the boundary
+      // block contributes v·(r − b) — resolved per block, no second scan
+      def bottom(r: Long, name: String) =
+        sum(when(col("b") + col("c") <= r, vD * cD)
+          .when(col("b") < r, vD * dec(lit(r) - col("b")))
+          .otherwise(dec(lit(0)))).as(name)
+      val r1 = n - n / 100
+      val r10 = n - n / 10
+      val row = cum.agg(
+          sum(vD * cD).as("__t"), sum(vD * w).as("__n"),
+          bottom(r1, "__s1"), bottom(r10, "__s10"))
+        .head()
+      def bd(o: Int): BigDecimal =
+        if (row.isNullAt(o)) BigDecimal(0) else BigDecimal(row.getDecimal(o))
+      val t = bd(0); val num = bd(1)
+      // exact integer subtraction first, ONE double division — the order
+      // an external 128-bit-integer engine reproduces
+      out(Some(t.toLong), Option.when(t > 0)((
+        2.0 * num.toDouble / (n.toDouble * t.toDouble) - (n + 1.0) / n,
+        (t - bd(2)).toDouble / t.toDouble,
+        (t - bd(3)).toDouble / t.toDouble)))
+    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
   }
 
 
@@ -1059,34 +1056,20 @@ object StatTests {
     * aggregation. Footer-derived splits skip both the quantile pass and
     * the input cache exactly as KS does. */
   def mannWhitneyU(a: DataFrame, b: DataFrame, column: String): DataFrame = {
-    val va = a.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_a"))
-    val vb = b.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_b"))
-    val joined = va.join(vb, Seq("v"), "full_outer")
-      .na.fill(0L, Seq("n_a", "n_b"))
-      .withColumn("cnt", col("n_a") + col("n_b"))
-    val splitsHint = (graft.ops.ScaleOps.footerRangeSplits(va, "v"),
-        graft.ops.ScaleOps.footerRangeSplits(vb, "v")) match {
-      case (Some(x), Some(y)) => Some((x ++ y).distinct.sorted)
-      case _ => None
-    }
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      joined, col("v"), Seq("cnt", "n_a"), Seq("_before", "_beforeA"),
-      splitsHint, persistInput = splitsHint.isEmpty)
-    val (n, na) = (grand(0), grand(1))
-    val nb = n - na
-    val avgRank = col("_before") + (col("cnt") + 1) / lit(2.0)
+    val (cum, na, nb, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
+    val n = na + nb
+    val cnt = col("n_a") + col("n_b")
+    val avgRank = col("_ea") + col("_eb") + (cnt + 1) / lit(2.0)
     // rank sum in double is EXACT (half-integers are representable and
     // their sums stay representable below 2^52); the tie cubes go through
     // double because cnt³ crosses Long range at ~2M rows per value (ANSI
     // overflow would error) — the tie CORRECTION tolerates double rounding
-    val cntD = col("cnt").cast("double")
-    val agg = cum.agg(
+    val cntD = cnt.cast("double")
+    val agg = try cum.agg(
       sum(col("n_a") * avgRank).as("_ra"),
       sum(cntD * cntD * cntD - cntD).as("_ties"))
       .head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
     val spark = a.sparkSession
     import spark.implicits._
     // (u_a, u_b, z) once both sides hold values
@@ -1785,27 +1768,13 @@ object StatTests {
     * strictly below v", one reduce. Pair counts go through double (they
     * cross Long at ~3M×3M rows); they are exact integers below 2^53. */
   def cliffsDelta(a: DataFrame, b: DataFrame, column: String): DataFrame = {
-    val va = a.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_a"))
-    val vb = b.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("n_b"))
-    val joined = va.join(vb, Seq("v"), "full_outer")
-      .na.fill(0L, Seq("n_a", "n_b"))
-    val splitsHint = (graft.ops.ScaleOps.footerRangeSplits(va, "v"),
-        graft.ops.ScaleOps.footerRangeSplits(vb, "v")) match {
-      case (Some(x), Some(y)) => Some((x ++ y).distinct.sorted)
-      case _ => None
-    }
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      joined, col("v"), Seq("n_a", "n_b"), Seq("_beforeA", "_beforeB"),
-      splitsHint, persistInput = splitsHint.isEmpty)
-    val (na, nb) = (grand(0), grand(1))
-    val agg = cum.agg(
-      sum(col("n_a").cast("double") * col("_beforeB")).as("_gt"),
-      sum(col("n_b").cast("double") * col("_beforeA")).as("_lt"),
+    val (cum, na, nb, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
+    val agg = try cum.agg(
+      sum(col("n_a").cast("double") * col("_eb")).as("_gt"),
+      sum(col("n_b").cast("double") * col("_ea")).as("_lt"),
       sum(col("n_a").cast("double") * col("n_b")).as("_ties"))
       .head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
     val spark = a.sparkSession
     import spark.implicits._
     // (gt, lt, ties) once both sides hold values
@@ -1848,32 +1817,30 @@ object StatTests {
         sum(when(col("d") > 0, 1L).otherwise(0L)).as("pos"))
     val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
       byAbs, col("v"), Seq("cnt"), Seq("_before"))
-    val n = grand.head
-    val spark = df.sparkSession
-    import spark.implicits._
-    // w = (w_plus, w_minus, z) once a difference is non-zero
-    def out(w: Option[(Double, Double, Option[Double])]) =
-      Seq((nPairs, n, w.map(_._1), w.map(_._2), w.flatMap(_._3)))
-        .toDF("n_pairs", "n_nonzero", "w_plus", "w_minus", "z")
-    if (n == 0) {
-      graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-      return out(None)
-    }
-    val avgRank = col("_before") + (col("cnt") + 1) / lit(2.0)
-    val cntD = col("cnt").cast("double")
-    val agg = cum.agg(
-      sum(col("pos") * avgRank).as("_wp"),
-      sum(cntD * cntD * cntD - cntD).as("_ties"))
-      .head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-    val wp = agg.getDouble(0)
-    val ties = agg.getDouble(1)
-    val nD = n.toDouble
-    val wm = nD * (nD + 1) / 2 - wp
-    val mu = nD * (nD + 1) / 4
-    val sigma2 = nD * (nD + 1) * (2 * nD + 1) / 24 - ties / 48
-    out(Some((wp, wm,
-      Option.when(sigma2 > 0)((wp - mu) / math.sqrt(sigma2)))))
+    try {
+      val n = grand.head
+      val spark = df.sparkSession
+      import spark.implicits._
+      // w = (w_plus, w_minus, z) once a difference is non-zero
+      def out(w: Option[(Double, Double, Option[Double])]) =
+        Seq((nPairs, n, w.map(_._1), w.map(_._2), w.flatMap(_._3)))
+          .toDF("n_pairs", "n_nonzero", "w_plus", "w_minus", "z")
+      if (n == 0) return out(None)
+      val avgRank = col("_before") + (col("cnt") + 1) / lit(2.0)
+      val cntD = col("cnt").cast("double")
+      val agg = cum.agg(
+        sum(col("pos") * avgRank).as("_wp"),
+        sum(cntD * cntD * cntD - cntD).as("_ties"))
+        .head()
+      val wp = agg.getDouble(0)
+      val ties = agg.getDouble(1)
+      val nD = n.toDouble
+      val wm = nD * (nD + 1) / 2 - wp
+      val mu = nD * (nD + 1) / 4
+      val sigma2 = nD * (nD + 1) * (2 * nD + 1) / 24 - ties / 48
+      out(Some((wp, wm,
+        Option.when(sigma2 > 0)((wp - mu) / math.sqrt(sigma2)))))
+    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
   }
 
 
@@ -2131,31 +2098,29 @@ object StatTests {
     val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
       s, col("t"), Seq("y", "one"), Seq("_ey", "_ek"),
       persistInput = false)
-    val (sn, n) = (grand(0), grand(1))
-    val spark = series.sparkSession
-    import spark.implicits._
-    // best = (change_at, k, stat, S_k) of the argmax split
-    def out(best: Option[(Long, Long, Double, Double)]) =
-      Seq((n, best.map(_._1), best.map(_._2), best.map(_._3),
-          best.map(b => b._4 / b._2), best.map(b => (sn - b._4) / (n - b._2))))
-        .toDF("n", "change_at", "k", "stat", "mean_before", "mean_after")
-    if (n < 3) {
-      graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-      return out(None)
-    }
-    val k = col("_ek") + 1
-    val sk = (col("_ey") + col("y")).cast("double")
-    val kd = k.cast("double")
-    val num = abs(sk - kd * lit(sn.toDouble) / lit(n.toDouble))
-    val den = sqrt(kd * (lit(n.toDouble) - kd) / lit(n.toDouble))
-    val best = cum.filter(k < n)
-      .select(col("t"), k.cast("long").as("k"), sk.as("sk"),
-        (num / den).as("stat"))
-      .orderBy(col("stat").desc, col("t").asc)
-      .limit(1).head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-    out(Some((best.getLong(0), best.getLong(1), best.getDouble(3),
-      best.getDouble(2))))
+    try {
+      val (sn, n) = (grand(0), grand(1))
+      val spark = series.sparkSession
+      import spark.implicits._
+      // best = (change_at, k, stat, S_k) of the argmax split
+      def out(best: Option[(Long, Long, Double, Double)]) =
+        Seq((n, best.map(_._1), best.map(_._2), best.map(_._3),
+            best.map(b => b._4 / b._2), best.map(b => (sn - b._4) / (n - b._2))))
+          .toDF("n", "change_at", "k", "stat", "mean_before", "mean_after")
+      if (n < 3) return out(None)
+      val k = col("_ek") + 1
+      val sk = (col("_ey") + col("y")).cast("double")
+      val kd = k.cast("double")
+      val num = abs(sk - kd * lit(sn.toDouble) / lit(n.toDouble))
+      val den = sqrt(kd * (lit(n.toDouble) - kd) / lit(n.toDouble))
+      val best = cum.filter(k < n)
+        .select(col("t"), k.cast("long").as("k"), sk.as("sk"),
+          (num / den).as("stat"))
+        .orderBy(col("stat").desc, col("t").asc)
+        .limit(1).head()
+      out(Some((best.getLong(0), best.getLong(1), best.getDouble(3),
+        best.getDouble(2))))
+    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
   }
 
 
@@ -3214,53 +3179,45 @@ object StatTests {
       trimFrac: Double = 0.1): DataFrame = {
     require(trimFrac >= 0 && trimFrac < 0.5,
       s"trimFrac must be in [0, 0.5): $trimFrac")
-    val va = a.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("ca"))
-    val vb = b.select(col(column).cast("double").as("v"))
-      .filter(col("v").isNotNull).groupBy("v").agg(count(lit(1)).as("cb"))
-    val joined = va.join(vb, Seq("v"), "full_outer")
-      .na.fill(0L, Seq("ca", "cb"))
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      joined, col("v"), Seq("ca", "cb"), Seq("_ea", "_eb"),
-      persistInput = false)
-    val (nA, nB) = (grand(0), grand(1))
-    val spark = a.sparkSession
-    import spark.implicits._
-    // stats = (trimmed_mean_a, trimmed_mean_b, t_stat, df)
-    def out(ha: Long, hb: Long,
-        stats: Option[(Double, Double, Double, Double)]) =
-      Seq((nA, nB, ha, hb, stats.map(_._1), stats.map(_._2),
-          stats.map(_._3), stats.map(_._4)))
-        .toDF("n_a", "n_b", "h_a", "h_b", "trimmed_mean_a",
-          "trimmed_mean_b", "t_stat", "df")
-    val tA = (nA * trimFrac).toLong; val tB = (nB * trimFrac).toLong
-    val (hA, hB) = (nA - 2 * tA, nB - 2 * tB)
-    if (hA < 2 || hB < 2) return out(math.max(hA, 0), math.max(hB, 0), None)
-    def side(c: String, e: String, n: Long, t: Long) = {
-      val hi = col(e) + col(c)
-      val lo = col(e) + 1
-      val keepLo = lit(t + 1); val keepHi = lit(n - t)
-      val kept = greatest(least(hi, keepHi) - greatest(lo, keepLo) + 1,
-        lit(0L))
-      val lowCl = when(lo <= keepLo && keepLo <= hi, lit(t)).otherwise(lit(0L))
-      val highCl = when(lo <= keepHi && keepHi <= hi, lit(t)).otherwise(lit(0L))
-      val w = kept + lowCl + highCl
-      (sum(col("v") * kept), sum(col("v") * w), sum(col("v") * col("v") * w))
-    }
-    val (tsA, wsA, w2A) = side("ca", "_ea", nA, tA)
-    val (tsB, wsB, w2B) = side("cb", "_eb", nB, tB)
-    val row = cum.agg(tsA.as("tsa"), wsA.as("wsa"), w2A.as("w2a"),
-      tsB.as("tsb"), wsB.as("wsb"), w2B.as("w2b")).head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
-    val tmA = row.getDouble(0) / hA
-    val tmB = row.getDouble(3) / hB
-    val dA = (row.getDouble(2) - row.getDouble(1) * row.getDouble(1) / nA) /
-      (hA.toDouble * (hA - 1))
-    val dB = (row.getDouble(5) - row.getDouble(4) * row.getDouble(4) / nB) /
-      (hB.toDouble * (hB - 1))
-    out(hA, hB, Option.when(dA + dB > 0)((tmA, tmB,
-      (tmA - tmB) / math.sqrt(dA + dB),
-      (dA + dB) * (dA + dB) / (dA * dA / (hA - 1) + dB * dB / (hB - 1)))))
+    val (cum, nA, nB, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
+    try {
+      val spark = a.sparkSession
+      import spark.implicits._
+      // stats = (trimmed_mean_a, trimmed_mean_b, t_stat, df)
+      def out(ha: Long, hb: Long,
+          stats: Option[(Double, Double, Double, Double)]) =
+        Seq((nA, nB, ha, hb, stats.map(_._1), stats.map(_._2),
+            stats.map(_._3), stats.map(_._4)))
+          .toDF("n_a", "n_b", "h_a", "h_b", "trimmed_mean_a",
+            "trimmed_mean_b", "t_stat", "df")
+      val tA = (nA * trimFrac).toLong; val tB = (nB * trimFrac).toLong
+      val (hA, hB) = (nA - 2 * tA, nB - 2 * tB)
+      if (hA < 2 || hB < 2) return out(math.max(hA, 0), math.max(hB, 0), None)
+      def side(c: String, e: String, n: Long, t: Long) = {
+        val hi = col(e) + col(c)
+        val lo = col(e) + 1
+        val keepLo = lit(t + 1); val keepHi = lit(n - t)
+        val kept = greatest(least(hi, keepHi) - greatest(lo, keepLo) + 1,
+          lit(0L))
+        val lowCl = when(lo <= keepLo && keepLo <= hi, lit(t)).otherwise(lit(0L))
+        val highCl = when(lo <= keepHi && keepHi <= hi, lit(t)).otherwise(lit(0L))
+        val w = kept + lowCl + highCl
+        (sum(col("v") * kept), sum(col("v") * w), sum(col("v") * col("v") * w))
+      }
+      val (tsA, wsA, w2A) = side("n_a", "_ea", nA, tA)
+      val (tsB, wsB, w2B) = side("n_b", "_eb", nB, tB)
+      val row = cum.agg(tsA.as("tsa"), wsA.as("wsa"), w2A.as("w2a"),
+        tsB.as("tsb"), wsB.as("wsb"), w2B.as("w2b")).head()
+      val tmA = row.getDouble(0) / hA
+      val tmB = row.getDouble(3) / hB
+      val dA = (row.getDouble(2) - row.getDouble(1) * row.getDouble(1) / nA) /
+        (hA.toDouble * (hA - 1))
+      val dB = (row.getDouble(5) - row.getDouble(4) * row.getDouble(4) / nB) /
+        (hB.toDouble * (hB - 1))
+      out(hA, hB, Option.when(dA + dB > 0)((tmA, tmB,
+        (tmA - tmB) / math.sqrt(dA + dB),
+        (dA + dB) * (dA + dB) / (dA * dA / (hA - 1) + dB * dB / (hB - 1)))))
+    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
   }
 
 

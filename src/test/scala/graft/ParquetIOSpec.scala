@@ -175,6 +175,23 @@ class ParquetIOSpec extends SparkSpecBase {
       s"direct .read.parquet( outside ParquetIO: $found; allowed: $allowed")
   }
 
+  test("lineage cuts in src/main go through ScaleOps") {
+    // Files allowed a direct `localCheckpoint(` or `.checkpoint(eager`,
+    // with how many: each is always local, with no `reliable` flag to pass.
+    val allowed = Map(
+      // Dedup.released: the `materialize = true` result checkpoint
+      "graft/operators/Dedup.scala" -> 1,
+      // IndexOps' stable-row-number base: freezes the partition-id and
+      // monotonically_increasing_id assignment for its offsets job
+      "graft/ops/IndexOps.scala" -> 1)
+    val cut = """localCheckpoint\(|\.checkpoint\(eager""".r
+    val found = mainSources
+      .map { case (f, text) => f -> cut.findAllMatchIn(text).size }
+      .filter { case (f, n) => n > 0 && f != "graft/ops/ScaleOps.scala" }
+    assert(found == allowed,
+      s"lineage cuts outside ScaleOps: $found; allowed: $allowed")
+  }
+
   test("SparkSession.builder is called in src/main only by GraftSession") {
     val builder = """SparkSession\s*\.builder\b""".r
     // scaladoc and line comments may name the builder without calling it

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{CompareOps, IndexOps}
 import graft.operators.Dedup
@@ -208,6 +209,33 @@ class RegressionSpec extends SparkSpecBase {
     while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
     assert(leaked.isEmpty,
       "releaseCheckpointBlocks must release the registered kernel base")
+  }
+
+  test("two-sample rank tests release their pooled value CDF on every exit") {
+    // in-memory inputs have no parquet footer, so the pooled-value cumsum
+    // persists its joined table; each test reads its statistic to the
+    // driver and must release that persist itself, on the normal exit and
+    // on the empty-side one
+    import graft.profile.{Drift, StatTests}
+    val a = Seq(1.0, 2.0, 2.0, 3.0, 5.0, 8.0, 8.0, 9.0, 11.0, 12.0).toDF("x")
+    val b = Seq(2.0, 3.0, 3.0, 4.0, 6.0, 7.0, 10.0, 10.0, 13.0).toDF("x")
+    val tests = Seq[(String, (DataFrame, DataFrame) => DataFrame)](
+      "cramerVonMises" -> (Drift.cramerVonMises(_, _, "x")),
+      "wasserstein1" -> (Drift.wasserstein1(_, _, "x")),
+      "energyDistance" -> (Drift.energyDistance(_, _, "x")),
+      "kuiperTest" -> (Drift.kuiperTest(_, _, "x")),
+      "andersonDarling2" -> (Drift.andersonDarling2(_, _, "x")),
+      "mannWhitneyU" -> (StatTests.mannWhitneyU(_, _, "x")),
+      "cliffsDelta" -> (StatTests.cliffsDelta(_, _, "x")),
+      "yuenTrimmedTest" -> (StatTests.yuenTrimmedTest(_, _, "x")))
+    for ((name, test) <- tests; (tag, bIn) <- Seq("" -> b, "empty b " -> b.limit(0))) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      assert(test(a, bIn).collect().length == 1)
+      def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(leaked.isEmpty, s"$name ${tag}left ${leaked.size} cached RDD(s)")
+    }
   }
 
   test("releaseCheckpointBlocks leaves CALLER-created caches untouched") {

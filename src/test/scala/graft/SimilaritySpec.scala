@@ -780,6 +780,10 @@ class SimilaritySpec extends SparkSpecBase {
     // constant second representation: zero variance -> NULL
     val const = vecs.withColumn("b", typedLit(Seq(1.0f, 1.0f)))
     assert(Similarity.linearCka(const, "a", "b").collect().head.isNullAt(3))
+    // no complete row: the n = 0 row, not an exception
+    val none = Similarity.linearCka(self.filter(lit(false)), "a", "b")
+      .collect().head
+    assert(none.getLong(0) == 0L && none.getInt(1) == 0 && none.isNullAt(3))
   }
 
   test("mahalanobisScores: hand 2-D case, trace identity, ridge rescue") {
