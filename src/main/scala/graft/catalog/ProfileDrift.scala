@@ -252,9 +252,8 @@ object ProfileDrift {
       // unchanged — the filter and both aggregations see the same values —
       // so the oracle-pinned statuses are byte-identical while the second
       // full input scan disappears.
-      val pruned = graft.ops.ScaleOps.registerInternalPersist(
-        li.select(colNames.map(col): _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val pruned = graft.ops.ScaleOps.persisted(
+        li.select(colNames.map(col): _*))
       val p1 = ColumnProfiler.profile(pruned, cols, exactDistinct = false)
       val p2 = ColumnProfiler.profile(pruned.filter(col("l_quantity") > 25.0),
         cols, exactDistinct = false)

@@ -664,10 +664,9 @@ object ScansJoins {
       // per-key counts hashing there), the probe key set is identical,
       // and the exact table IS the aggregate — the oracle replays the
       // same numbers bit-for-bit.
-      val perKey = graft.ops.ScaleOps.registerInternalPersist(
+      val perKey = graft.ops.ScaleOps.persisted(
         li.filter(col("l_suppkey").isNotNull)
-          .groupBy(col("l_suppkey").as("key")).agg(count(lit(1)).as("exact"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .groupBy(col("l_suppkey").as("key")).agg(count(lit(1)).as("exact")))
       val cells = ScaleOps.countMinCellsFromCounts(perKey, "key", "exact",
         depth = 4, width = 64)
       val est = ScaleOps.countMinEstimates(cells,

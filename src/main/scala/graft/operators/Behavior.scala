@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.kernels.{FunnelAdvanceTs, FunnelDepth, FunnelDepthWithin}
+import graft.ops.ScaleOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -538,7 +539,7 @@ object Behavior {
     * ambiguity). No global window; nothing after the first aggregation
     * is user-sized. */
   def kmSurvival(events: DataFrame, userCol: String, tsCol: String,
-      censorDays: Int = 7, reliable: Boolean = false): DataFrame = {
+      censorDays: Int = 7): DataFrame = {
     require(censorDays >= 0, s"censorDays must be >= 0: $censorDays")
     val perUser = events
       .filter(col(userCol).isNotNull && col(tsCol).isNotNull)
@@ -550,7 +551,7 @@ object Behavior {
       .select(datediff(col("__last"), col("__first")).cast("long")
           .as("duration"),
         (datediff(col("__hmax"), col("__last")) < censorDays).as("censored"))
-    kmCurve(durations, "duration", "censored", reliable)
+    kmCurve(durations, "duration", "censored")
       .withColumnRenamed("duration", "lifetime_days")
   }
 
@@ -576,8 +577,7 @@ object Behavior {
     * distinct-duration counts, ONE multi-column deterministic-bucket
     * cumsum, one scalar reduce over event times. */
   def logRankTest(durations: DataFrame, durationCol: String,
-      censoredCol: String, groupCol: String,
-      reliable: Boolean = false): DataFrame = {
+      censoredCol: String, groupCol: String): DataFrame = {
     val base = durations
       .filter(col(durationCol).isNotNull && col(groupCol).isNotNull)
       .select(col(groupCol).cast("string").as("g"),
@@ -587,43 +587,44 @@ object Behavior {
     // table ([[rmst]]'s chain discipline): the group collect and the
     // per-duration pivot both derive from the checkpointed cells instead
     // of re-scanning subjects, and the shared range splits feed the cumsum
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val cells = cp(base.groupBy(col("life"), col("g"))
+    val cells = ScaleOps.cut(base.groupBy(col("life"), col("g"))
       .agg(sum(when(!col("__cens"), 1L).otherwise(0L)).as("__d"),
         count(lit(1)).as("__all")))
-    val groups = cells.select(col("g")).distinct().orderBy(col("g"))
-      .collect().map(_.getString(0))
-    require(groups.length == 2,
-      s"log-rank needs exactly 2 groups, got ${groups.toSeq}")
-    val (ga, gb) = (groups(0), groups(1))
-    val byLife = cp(cells.groupBy(col("life")).agg(
-      sum(when(col("g") === ga, col("__d")).otherwise(0L)).as("da"),
-      sum(when(col("g") === gb, col("__d")).otherwise(0L)).as("db"),
-      sum(when(col("g") === ga, col("__all")).otherwise(0L)).as("alla"),
-      sum(when(col("g") === gb, col("__all")).otherwise(0L)).as("allb")))
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cells)
-    val lifeSplits = Some(graft.ops.ScaleOps.rangeSplits(byLife, col("life")))
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      byLife, col("life"), Seq("alla", "allb"), Seq("_ba", "_bb"),
-      splitsHint = lifeSplits, persistInput = false)
-    val (nA, nB) = (grand(0), grand(1))
-    val nra = lit(nA) - col("_ba")
-    val nrb = lit(nB) - col("_bb")
-    val nr = nra + nrb
-    val d = (col("da") + col("db")).cast("double")
-    // hypergeometric mean/variance of group-A events at each event time;
-    // the chained left-assoc form is mirrored verbatim in the oracle
-    val ea = d * nra / nr
-    val va = d * nra / nr * nrb / nr * (nr - col("da") - col("db")) / (nr - 1)
-    val row = cum
-      .filter(col("da") + col("db") > 0)
-      .agg(sum(col("da")).cast("long").as("oa"),
-        sum(col("db")).cast("long").as("ob"),
-        sum(ea).as("ea"),
-        sum(when(nr > 1, va).otherwise(lit(0.0))).as("va"))
-      .head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    val (ga, gb, byLife) = ScaleOps.releasing(cells) {
+      val groups = cells.select(col("g")).distinct().orderBy(col("g"))
+        .collect().map(_.getString(0))
+      require(groups.length == 2,
+        s"log-rank needs exactly 2 groups, got ${groups.toSeq}")
+      val (ga, gb) = (groups(0), groups(1))
+      (ga, gb, ScaleOps.cut(cells.groupBy(col("life")).agg(
+        sum(when(col("g") === ga, col("__d")).otherwise(0L)).as("da"),
+        sum(when(col("g") === gb, col("__d")).otherwise(0L)).as("db"),
+        sum(when(col("g") === ga, col("__all")).otherwise(0L)).as("alla"),
+        sum(when(col("g") === gb, col("__all")).otherwise(0L)).as("allb"))))
+    }
+    val (nA, nB, row) = ScaleOps.releasing(byLife) {
+      val lifeSplits = Some(ScaleOps.rangeSplits(byLife, col("life")))
+      val (cum, grand) = ScaleOps.withExclusiveRunningSums(
+        byLife, col("life"), Seq("alla", "allb"), Seq("_ba", "_bb"),
+        splitsHint = lifeSplits, persistInput = false)
+      val (nA, nB) = (grand(0), grand(1))
+      val nra = lit(nA) - col("_ba")
+      val nrb = lit(nB) - col("_bb")
+      val nr = nra + nrb
+      val d = (col("da") + col("db")).cast("double")
+      // hypergeometric mean/variance of group-A events at each event
+      // time; the chained left-assoc form is mirrored verbatim in the
+      // oracle
+      val ea = d * nra / nr
+      val va = d * nra / nr * nrb / nr * (nr - col("da") - col("db")) / (nr - 1)
+      (nA, nB, cum
+        .filter(col("da") + col("db") > 0)
+        .agg(sum(col("da")).cast("long").as("oa"),
+          sum(col("db")).cast("long").as("ob"),
+          sum(ea).as("ea"),
+          sum(when(nr > 1, va).otherwise(lit(0.0))).as("va"))
+        .head())
+    }
     val spark = durations.sparkSession
     import spark.implicits._
     // no event at all: zero observed counts, NULL moments
@@ -640,8 +641,9 @@ object Behavior {
   /** The at-risk spine shared by [[kmCurve]], [[kmCurveCI]] and
     * [[naCurve]]: `byLife` — per distinct lifetime, churned `d`, censored
     * `cns` and all exits `all` — and cumsum 1 over it, `cum1`, which adds
-    * `__exitsBefore` (exits strictly BEFORE each lifetime), with the
-    * subject count `n` and the range splits over `life`.
+    * `__exitsBefore` (exits strictly BEFORE each lifetime). The curve's
+    * `terms(cum1, n)` (n = the subject count) is cut and returned with
+    * the range splits over `life`; `byLife` is released once it exists.
     *
     * The [[rmst]] chain discipline: the per-distinct-duration spine is
     * calendar-bounded, so it (and each curve's cumsum-1 output)
@@ -649,49 +651,49 @@ object Behavior {
     * pass replayed the whole subject-table aggregation again (measured at
     * sf0.1: the byLife aggregation ran ~5× per curve), and the range
     * splits over `life` compute once and feed both cumsums (same order
-    * column, same spine rows). `reliable` swaps the local checkpoint for a
-    * durable one on a real cluster. Each curve releases `byLife` once its
-    * own cumsum-1 output is checkpointed. */
+    * column, same spine rows). */
   private def atRiskSpine(durations: DataFrame, durationCol: String,
-      censoredCol: String, reliable: Boolean)
-      : (DataFrame, DataFrame, Long, Option[Array[Double]]) = {
-    val byLife = graft.ops.ScaleOps.cutLineageBounded(durations
+      censoredCol: String)(terms: (DataFrame, Long) => DataFrame)
+      : (DataFrame, Option[Array[Double]]) = {
+    val byLife = ScaleOps.cut(durations
       .filter(col(durationCol).isNotNull)
       .select(col(durationCol).cast("long").as("life"),
         coalesce(col(censoredCol), lit(false)).as("__cens"))
       .groupBy(col("life"))
       .agg(sum(when(col("__cens"), 0L).otherwise(1L)).as("d"),
         sum(when(col("__cens"), 1L).otherwise(0L)).as("cns"),
-        count(lit(1)).as("all")), reliable)
-    val lifeSplits = Some(graft.ops.ScaleOps.rangeSplits(byLife, col("life")))
-    val (cum1, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      byLife, col("life"), Seq("all"), Seq("__exitsBefore"),
-      splitsHint = lifeSplits, persistInput = false)
-    (byLife, cum1, grand.head, lifeSplits)
+        count(lit(1)).as("all")))
+    ScaleOps.releasing(byLife) {
+      val lifeSplits = Some(ScaleOps.rangeSplits(byLife, col("life")))
+      val (cum1, grand) = ScaleOps.withExclusiveRunningSums(
+        byLife, col("life"), Seq("all"), Seq("__exitsBefore"),
+        splitsHint = lifeSplits, persistInput = false)
+      (ScaleOps.cut(terms(cum1, grand.head)), lifeSplits)
+    }
   }
 
   def kmCurve(durations: DataFrame, durationCol: String,
-      censoredCol: String, reliable: Boolean = false): DataFrame = {
-    val (byLife, cum1, n, lifeSplits) =
-      atRiskSpine(durations, durationCol, censoredCol, reliable)
-    val nRisk = lit(n) - col("__exitsBefore")
+      censoredCol: String): DataFrame = {
     // ln(1 − d/n_risk): d = n_risk only at the terminal lifetime where
     // everyone remaining churns — survival is exactly 0 there, flagged and
     // excluded from the log (ln(0) is undefined under ANSI)
-    val withTerm = graft.ops.ScaleOps.cutLineageBounded(cum1
-      .withColumn("__nRisk", nRisk)
-      .withColumn("__dead", col("d") === col("__nRisk"))
-      .withColumn("__lnTerm",
-        when(col("d") > 0 && !col("__dead"),
-          log(lit(1.0) - col("d").cast("double") / col("__nRisk")))
-          .otherwise(lit(0.0)))
-      .withColumn("__lnQ",
-        // fixed-point (12 dp) so the long-typed cumsum machinery carries
-        // it exactly; 1e-12 granularity is far below the 6-dp report
-        round(col("__lnTerm") * 1e12, 0).cast("long")), reliable)
-    graft.ops.ScaleOps.releaseCheckpointBlocks(byLife)
+    val (withTerm, lifeSplits) =
+      atRiskSpine(durations, durationCol, censoredCol) { (cum1, n) =>
+        cum1
+          .withColumn("__nRisk", lit(n) - col("__exitsBefore"))
+          .withColumn("__dead", col("d") === col("__nRisk"))
+          .withColumn("__lnTerm",
+            when(col("d") > 0 && !col("__dead"),
+              log(lit(1.0) - col("d").cast("double") / col("__nRisk")))
+              .otherwise(lit(0.0)))
+          .withColumn("__lnQ",
+            // fixed-point (12 dp) so the long-typed cumsum machinery
+            // carries it exactly; 1e-12 granularity is far below the 6-dp
+            // report
+            round(col("__lnTerm") * 1e12, 0).cast("long"))
+      }
     // cumsum 2: running Σ ln-terms (inclusive = exclusive + own)
-    val cum2 = graft.ops.ScaleOps.withExclusiveRunningSum(
+    val cum2 = ScaleOps.withExclusiveRunningSum(
       withTerm, col("life"), "__lnQ", "__lnBefore",
       splitsHint = lifeSplits, persistInput = false)
     cum2
@@ -722,28 +724,28 @@ object Behavior {
     * pass as the ln-survival prefix (one more long column, no extra
     * shuffle), so both engines exponentiate identical doubles. */
   def kmCurveCI(durations: DataFrame, durationCol: String,
-      censoredCol: String, z: Double = 1.959964,
-      reliable: Boolean = false): DataFrame = {
+      censoredCol: String, z: Double = 1.959964): DataFrame = {
     require(z > 0, s"z must be > 0: $z")
-    val (byLife, cum1, n, lifeSplits) =
-      atRiskSpine(durations, durationCol, censoredCol, reliable)
-    val nRisk = lit(n) - col("__exitsBefore")
-    val dD = col("d").cast("double")
-    val nrD = nRisk.cast("double")
-    val withTerm = graft.ops.ScaleOps.cutLineageBounded(cum1
-      .withColumn("__nRisk", nRisk)
-      .withColumn("__dead", col("d") === col("__nRisk"))
-      .withColumn("__lnQ",
-        when(col("d") > 0 && !col("__dead"),
-          round(log(lit(1.0) - dD / nrD) * 1e12, 0).cast("long"))
-          .otherwise(lit(0L)))
-      // Greenwood increment d/(n(n−d)), quantized to ride the same pass
-      .withColumn("__gQ",
-        when(col("d") > 0 && !col("__dead"),
-          round(dD / (nrD * (nrD - dD)) * 1e12, 0).cast("long"))
-          .otherwise(lit(0L))), reliable)
-    graft.ops.ScaleOps.releaseCheckpointBlocks(byLife)
-    val cum2 = graft.ops.ScaleOps.withExclusiveRunningSums(
+    val (withTerm, lifeSplits) =
+      atRiskSpine(durations, durationCol, censoredCol) { (cum1, n) =>
+        val nRisk = lit(n) - col("__exitsBefore")
+        val dD = col("d").cast("double")
+        val nrD = nRisk.cast("double")
+        cum1
+          .withColumn("__nRisk", nRisk)
+          .withColumn("__dead", col("d") === col("__nRisk"))
+          .withColumn("__lnQ",
+            when(col("d") > 0 && !col("__dead"),
+              round(log(lit(1.0) - dD / nrD) * 1e12, 0).cast("long"))
+              .otherwise(lit(0L)))
+          // Greenwood increment d/(n(n−d)), quantized to ride the same
+          // pass
+          .withColumn("__gQ",
+            when(col("d") > 0 && !col("__dead"),
+              round(dD / (nrD * (nrD - dD)) * 1e12, 0).cast("long"))
+              .otherwise(lit(0L)))
+      }
+    val cum2 = ScaleOps.withExclusiveRunningSums(
       withTerm, col("life"), Seq("__lnQ", "__gQ"),
       Seq("__lnBefore", "__gBefore"), splitsHint = lifeSplits,
       persistInput = false)._1
@@ -779,18 +781,18 @@ object Behavior {
     * the hazard and its variance ride ONE two-column fixed-point (12 dp)
     * cumsum pass; no global window, no sort. */
   def naCurve(durations: DataFrame, durationCol: String,
-      censoredCol: String, reliable: Boolean = false): DataFrame = {
-    val (byLife, cum1, n, lifeSplits) =
-      atRiskSpine(durations, durationCol, censoredCol, reliable)
-    val withTerms = graft.ops.ScaleOps.cutLineageBounded(cum1
-      .withColumn("__nRisk", lit(n) - col("__exitsBefore"))
-      .withColumn("__hQ", round(col("d").cast("double") / col("__nRisk")
-        * 1e12, 0).cast("long"))
-      .withColumn("__vQ", round(col("d").cast("double")
-        / (col("__nRisk").cast("double") * col("__nRisk")) * 1e12, 0)
-        .cast("long")), reliable)
-    graft.ops.ScaleOps.releaseCheckpointBlocks(byLife)
-    val cum2 = graft.ops.ScaleOps.withExclusiveRunningSums(
+      censoredCol: String): DataFrame = {
+    val (withTerms, lifeSplits) =
+      atRiskSpine(durations, durationCol, censoredCol) { (cum1, n) =>
+        cum1
+          .withColumn("__nRisk", lit(n) - col("__exitsBefore"))
+          .withColumn("__hQ", round(col("d").cast("double") / col("__nRisk")
+            * 1e12, 0).cast("long"))
+          .withColumn("__vQ", round(col("d").cast("double")
+            / (col("__nRisk").cast("double") * col("__nRisk")) * 1e12, 0)
+            .cast("long"))
+      }
+    val cum2 = ScaleOps.withExclusiveRunningSums(
       withTerms, col("life"), Seq("__hQ", "__vQ"),
       Seq("__hBefore", "__vBefore"), splitsHint = lifeSplits,
       persistInput = false)._1
@@ -841,7 +843,7 @@ object Behavior {
     * (at-risk, ln-survival, area), one single-row final aggregate. No
     * unkeyed window, no data-sized driver state. */
   def rmst(durations: DataFrame, durationCol: String, censoredCol: String,
-      groupCol: String, tau: Long, reliable: Boolean = false): DataFrame = {
+      groupCol: String, tau: Long): DataFrame = {
     require(tau > 0, s"tau must be > 0: $tau")
     // Long-headroom fail-stop for the fixed quantization scales: the
     // variance terms quantize area²·w at 9 dp (area ≤ τ, w < 1), so a
@@ -869,85 +871,89 @@ object Behavior {
     // totals pass and every AQE stage of the replay ran as its own job
     // (measured 61 sequential jobs at sf0.1). The range splits over
     // `life` compute once and feed all three cumsums (same order column,
-    // same spine rows). `reliable` swaps the local checkpoints for durable
-    // ones on a real cluster (executor loss cannot brick the chain).
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val cells = cp(base.groupBy(col("life"), col("g"))
+    // same spine rows). Each link releases its predecessor once it is cut.
+    val cells = ScaleOps.cut(base.groupBy(col("life"), col("g"))
       .agg(count(lit(1)).as("__c"),
         sum(when(!col("__cens"), 1L).otherwise(0L)).as("__dc")))
-    val groups = cells.select(col("g")).distinct().orderBy(col("g"))
-      .collect().map(_.getString(0))
-    require(groups.nonEmpty && groups.length <= 16,
-      s"rmst needs 1..16 groups, got ${groups.length}")
-    val gi = groups.indices
-    val pivots = gi.flatMap(i => Seq(
-      sum(when(col("g") === groups(i), col("__dc")).otherwise(0L))
-        .as(s"__d$i"),
-      sum(when(col("g") === groups(i), col("__c")).otherwise(0L))
-        .as(s"__all$i")))
-    val byLife = cp(cells.groupBy(col("life"))
-      .agg(pivots.head, pivots.tail: _*))
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cells)
-    val lifeSplits = Some(graft.ops.ScaleOps.rangeSplits(byLife, col("life")))
-    // cumsum 1: per-group exits strictly before each lifetime → n_risk
-    val (cum1, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      byLife, col("life"), gi.map(i => s"__all$i"), gi.map(i => s"__b$i"),
-      splitsHint = lifeSplits, persistInput = false)
-    val withLn = cp(gi.foldLeft(cum1) { (df, i) =>
-      val nRisk = lit(grand(i)) - col(s"__b$i")
-      val d = col(s"__d$i").cast("double")
-      df.withColumn(s"__nr$i", nRisk)
-        .withColumn(s"__dead$i", col(s"__d$i") > 0 && col(s"__d$i") === nRisk)
-        .withColumn(s"__lnQ$i",
-          when(col(s"__d$i") > 0 && !col(s"__dead$i"),
-            round(log(lit(1.0) - d / nRisk.cast("double")) * 1e12, 0)
-              .cast("long")).otherwise(lit(0L)))
-    })
-    graft.ops.ScaleOps.releaseCheckpointBlocks(byLife)
-    // cumsum 2: per-group running Σ ln(1 − d/n_risk) (exclusive = Ŝ(t⁻))
-    val cum2 = graft.ops.ScaleOps.withExclusiveRunningSums(
-      withLn, col("life"), gi.map(i => s"__lnQ$i"), gi.map(i => s"__lb$i"),
-      splitsHint = lifeSplits, persistInput = false)._1
-    val withDrop = cp(gi.foldLeft(cum2) { (df, i) =>
-      val sBef = exp(col(s"__lb$i").cast("double") / 1e12)
-      val s = when(col(s"__dead$i"), lit(0.0)).otherwise(
-        exp((col(s"__lb$i") + col(s"__lnQ$i")).cast("double") / 1e12))
-      df.withColumn(s"__s$i", s)
-        // tᵢ·ΔŜᵢ, quantized so its running AND final sums are exact longs
-        .withColumn(s"__aQ$i",
-          when(col(s"__d$i") > 0,
-            round(col("life").cast("double") * (sBef - s) * 1e12, 0)
-              .cast("long")).otherwise(lit(0L)))
-    })
-    graft.ops.ScaleOps.releaseCheckpointBlocks(withLn)
-    // cumsum 3: per-group running Σ tⱼ·ΔŜⱼ → area(0→tᵢ) by parts
-    val cum3 = graft.ops.ScaleOps.withExclusiveRunningSums(
-      withDrop, col("life"), gi.map(i => s"__aQ$i"), gi.map(i => s"__ab$i"),
-      splitsHint = lifeSplits, persistInput = false)._1
-    val withVarTerms = gi.foldLeft(cum3) { (df, i) =>
-      val area = col("life").cast("double") * col(s"__s$i") +
-        (col(s"__ab$i") + col(s"__aQ$i")).cast("double") / 1e12
-      val nr = col(s"__nr$i").cast("double")
-      val d = col(s"__d$i").cast("double")
-      val w = when(col(s"__d$i") > 0 && !col(s"__dead$i"),
-        d / (nr * (nr - d))).otherwise(lit(0.0))
-      df.withColumn(s"__wQ$i", round(w * 1e12, 0).cast("long"))
-        .withColumn(s"__awQ$i", round(area * w * 1e12, 0).cast("long"))
-        // area² ≤ τ², so 9 dp keeps Σ under Long range with 1e9 headroom
-        .withColumn(s"__a2wQ$i",
-          round(area * area * w * 1e9, 0).cast("long"))
+    val (groups, byLife) = ScaleOps.releasing(cells) {
+      val groups = cells.select(col("g")).distinct().orderBy(col("g"))
+        .collect().map(_.getString(0))
+      require(groups.nonEmpty && groups.length <= 16,
+        s"rmst needs 1..16 groups, got ${groups.length}")
+      val pivots = groups.indices.flatMap(i => Seq(
+        sum(when(col("g") === groups(i), col("__dc")).otherwise(0L))
+          .as(s"__d$i"),
+        sum(when(col("g") === groups(i), col("__c")).otherwise(0L))
+          .as(s"__all$i")))
+      (groups, ScaleOps.cut(cells.groupBy(col("life"))
+        .agg(pivots.head, pivots.tail: _*)))
     }
-    val aggs = gi.flatMap(i => Seq(
-      sum(col(s"__aQ$i")).as(s"saq$i"),
-      sum(col(s"__wQ$i")).as(s"sw$i"),
-      sum(col(s"__awQ$i")).as(s"saw$i"),
-      sum(col(s"__a2wQ$i")).as(s"sa2w$i"),
-      min(when(col(s"__d$i") > 0, col(s"__s$i"))).as(s"stau$i"),
-      sum(col(s"__d$i")).as(s"ev$i")))
-    val row = withVarTerms.filter(col("life") <= tau)
-      .agg(aggs.head, aggs.tail: _*).head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(withVarTerms)
+    val gi = groups.indices
+    val (lifeSplits, grand, withLn) = ScaleOps.releasing(byLife) {
+      val lifeSplits = Some(ScaleOps.rangeSplits(byLife, col("life")))
+      // cumsum 1: per-group exits strictly before each lifetime → n_risk
+      val (cum1, grand) = ScaleOps.withExclusiveRunningSums(
+        byLife, col("life"), gi.map(i => s"__all$i"), gi.map(i => s"__b$i"),
+        splitsHint = lifeSplits, persistInput = false)
+      (lifeSplits, grand, ScaleOps.cut(gi.foldLeft(cum1) { (df, i) =>
+        val nRisk = lit(grand(i)) - col(s"__b$i")
+        val d = col(s"__d$i").cast("double")
+        df.withColumn(s"__nr$i", nRisk)
+          .withColumn(s"__dead$i",
+            col(s"__d$i") > 0 && col(s"__d$i") === nRisk)
+          .withColumn(s"__lnQ$i",
+            when(col(s"__d$i") > 0 && !col(s"__dead$i"),
+              round(log(lit(1.0) - d / nRisk.cast("double")) * 1e12, 0)
+                .cast("long")).otherwise(lit(0L)))
+      }))
+    }
+    val withDrop = ScaleOps.releasing(withLn) {
+      // cumsum 2: per-group running Σ ln(1 − d/n_risk) (exclusive = Ŝ(t⁻))
+      val cum2 = ScaleOps.withExclusiveRunningSums(
+        withLn, col("life"), gi.map(i => s"__lnQ$i"), gi.map(i => s"__lb$i"),
+        splitsHint = lifeSplits, persistInput = false)._1
+      ScaleOps.cut(gi.foldLeft(cum2) { (df, i) =>
+        val sBef = exp(col(s"__lb$i").cast("double") / 1e12)
+        val s = when(col(s"__dead$i"), lit(0.0)).otherwise(
+          exp((col(s"__lb$i") + col(s"__lnQ$i")).cast("double") / 1e12))
+        df.withColumn(s"__s$i", s)
+          // tᵢ·ΔŜᵢ, quantized so its running AND final sums are exact
+          // longs
+          .withColumn(s"__aQ$i",
+            when(col(s"__d$i") > 0,
+              round(col("life").cast("double") * (sBef - s) * 1e12, 0)
+                .cast("long")).otherwise(lit(0L)))
+      })
+    }
+    val row = ScaleOps.releasing(withDrop) {
+      // cumsum 3: per-group running Σ tⱼ·ΔŜⱼ → area(0→tᵢ) by parts
+      val cum3 = ScaleOps.withExclusiveRunningSums(
+        withDrop, col("life"), gi.map(i => s"__aQ$i"), gi.map(i => s"__ab$i"),
+        splitsHint = lifeSplits, persistInput = false)._1
+      val withVarTerms = gi.foldLeft(cum3) { (df, i) =>
+        val area = col("life").cast("double") * col(s"__s$i") +
+          (col(s"__ab$i") + col(s"__aQ$i")).cast("double") / 1e12
+        val nr = col(s"__nr$i").cast("double")
+        val d = col(s"__d$i").cast("double")
+        val w = when(col(s"__d$i") > 0 && !col(s"__dead$i"),
+          d / (nr * (nr - d))).otherwise(lit(0.0))
+        df.withColumn(s"__wQ$i", round(w * 1e12, 0).cast("long"))
+          .withColumn(s"__awQ$i", round(area * w * 1e12, 0).cast("long"))
+          // area² ≤ τ², so 9 dp keeps Σ under Long range with 1e9
+          // headroom
+          .withColumn(s"__a2wQ$i",
+            round(area * area * w * 1e9, 0).cast("long"))
+      }
+      val aggs = gi.flatMap(i => Seq(
+        sum(col(s"__aQ$i")).as(s"saq$i"),
+        sum(col(s"__wQ$i")).as(s"sw$i"),
+        sum(col(s"__awQ$i")).as(s"saw$i"),
+        sum(col(s"__a2wQ$i")).as(s"sa2w$i"),
+        min(when(col(s"__d$i") > 0, col(s"__s$i"))).as(s"stau$i"),
+        sum(col(s"__d$i")).as(s"ev$i")))
+      withVarTerms.filter(col("life") <= tau)
+        .agg(aggs.head, aggs.tail: _*).head()
+    }
     val spark = durations.sparkSession
     import spark.implicits._
     gi.map { i =>
@@ -984,7 +990,7 @@ object Behavior {
     * τ-filtered aggregate. No unkeyed window, no data-sized driver
     * state. */
   def cumulativeIncidence(durations: DataFrame, durationCol: String,
-      eventCol: String, tau: Long, reliable: Boolean = false): DataFrame = {
+      eventCol: String, tau: Long): DataFrame = {
     require(tau > 0, s"tau must be > 0: $tau")
     val base = durations
       .filter(col(durationCol).isNotNull)
@@ -995,61 +1001,60 @@ object Behavior {
     // the pivoted spine both derive from the (life, type) cell table,
     // and without the lineage cuts each chained cumsum replayed the
     // whole deepening plan for its totals pass (measured 49 sequential
-    // jobs at sf0.1); `reliable` swaps local checkpoints for durable ones
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val cells = cp(base.groupBy(col("life"), col("__k"))
+    // jobs at sf0.1)
+    val cells = ScaleOps.cut(base.groupBy(col("life"), col("__k"))
       .agg(count(lit(1)).as("__c")))
-    val types = cells.filter(col("__k").isNotNull)
-      .select(col("__k")).distinct().orderBy(col("__k"))
-      .collect().map(_.getString(0))
-    require(types.nonEmpty && types.length <= 8,
-      s"cumulativeIncidence needs 1..8 event types, got ${types.length}")
+    val (types, byLife) = ScaleOps.releasing(cells) {
+      val types = cells.filter(col("__k").isNotNull)
+        .select(col("__k")).distinct().orderBy(col("__k"))
+        .collect().map(_.getString(0))
+      require(types.nonEmpty && types.length <= 8,
+        s"cumulativeIncidence needs 1..8 event types, got ${types.length}")
+      val pivots = (sum(when(col("__k").isNotNull, col("__c")).otherwise(0L))
+          .as("__dall") +:
+        sum(col("__c")).as("__all") +:
+        types.indices.map(i => sum(when(col("__k") === types(i), col("__c"))
+          .otherwise(0L)).as(s"__d$i")))
+      (types, ScaleOps.cut(cells.groupBy(col("life"))
+        .agg(pivots.head, pivots.tail: _*)))
+    }
     val ti = types.indices
-    val pivots = (sum(when(col("__k").isNotNull, col("__c")).otherwise(0L))
-        .as("__dall") +:
-      sum(col("__c")).as("__all") +:
-      ti.map(i => sum(when(col("__k") === types(i), col("__c"))
-        .otherwise(0L)).as(s"__d$i")))
-    val byLife = cp(cells.groupBy(col("life"))
-      .agg(pivots.head, pivots.tail: _*))
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cells)
-    val lifeSplits = Some(graft.ops.ScaleOps.rangeSplits(byLife, col("life")))
-    // cumsum 1: exits strictly before each lifetime → n_risk
-    val (cum1, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      byLife, col("life"), Seq("__all"), Seq("__b"),
-      splitsHint = lifeSplits, persistInput = false)
-    val nTotal = grand(0)
-    val withLn = cp {
+    val (lifeSplits, nTotal, withLn) = ScaleOps.releasing(byLife) {
+      val lifeSplits = Some(ScaleOps.rangeSplits(byLife, col("life")))
+      // cumsum 1: exits strictly before each lifetime → n_risk
+      val (cum1, grand) = ScaleOps.withExclusiveRunningSums(
+        byLife, col("life"), Seq("__all"), Seq("__b"),
+        splitsHint = lifeSplits, persistInput = false)
+      val nTotal = grand(0)
       val nRisk = lit(nTotal) - col("__b")
       val d = col("__dall").cast("double")
-      cum1.withColumn("__nr", nRisk)
+      (lifeSplits, nTotal, ScaleOps.cut(cum1.withColumn("__nr", nRisk)
         .withColumn("__dead",
           col("__dall") > 0 && col("__dall") === nRisk)
         .withColumn("__lnQ",
           when(col("__dall") > 0 && !col("__dead"),
             round(log(lit(1.0) - d / nRisk.cast("double")) * 1e12, 0)
-              .cast("long")).otherwise(lit(0L)))
+              .cast("long")).otherwise(lit(0L)))))
     }
-    graft.ops.ScaleOps.releaseCheckpointBlocks(byLife)
-    // cumsum 2: running Σ ln(1 − d/n_risk) exclusive = ln Ŝ(t⁻)
-    val cum2 = graft.ops.ScaleOps.withExclusiveRunningSums(
-      withLn, col("life"), Seq("__lnQ"), Seq("__lb"),
-      splitsHint = lifeSplits, persistInput = false)._1
-    val sBef = exp(col("__lb").cast("double") / 1e12)
-    val withInc = ti.foldLeft(cum2) { (df, i) =>
-      df.withColumn(s"__incQ$i",
-        when(col("__nr") > 0 && col(s"__d$i") > 0,
-          round(sBef * col(s"__d$i").cast("double") /
-            col("__nr").cast("double") * 1e12, 0).cast("long"))
-          .otherwise(lit(0L)))
+    val row = ScaleOps.releasing(withLn) {
+      // cumsum 2: running Σ ln(1 − d/n_risk) exclusive = ln Ŝ(t⁻)
+      val cum2 = ScaleOps.withExclusiveRunningSums(
+        withLn, col("life"), Seq("__lnQ"), Seq("__lb"),
+        splitsHint = lifeSplits, persistInput = false)._1
+      val sBef = exp(col("__lb").cast("double") / 1e12)
+      val withInc = ti.foldLeft(cum2) { (df, i) =>
+        df.withColumn(s"__incQ$i",
+          when(col("__nr") > 0 && col(s"__d$i") > 0,
+            round(sBef * col(s"__d$i").cast("double") /
+              col("__nr").cast("double") * 1e12, 0).cast("long"))
+            .otherwise(lit(0L)))
+      }
+      val aggs = ti.flatMap(i => Seq(
+        sum(col(s"__incQ$i")).as(s"cif$i"),
+        sum(col(s"__d$i")).as(s"ev$i")))
+      withInc.filter(col("life") <= tau)
+        .agg(aggs.head, aggs.tail: _*).head()
     }
-    val aggs = ti.flatMap(i => Seq(
-      sum(col(s"__incQ$i")).as(s"cif$i"),
-      sum(col(s"__d$i")).as(s"ev$i")))
-    val row = withInc.filter(col("life") <= tau)
-      .agg(aggs.head, aggs.tail: _*).head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(withInc)
     val spark = durations.sparkSession
     import spark.implicits._
     ti.map { i =>
@@ -1098,8 +1103,8 @@ object Behavior {
     def table(n: Long, ne: Long, w: Seq[NewtonFit.Wald]) =
       terms.zip(w).map { case (t, (b, se, z, p)) => (t, n, ne, b, se, z, p) }
         .toDF("term", "n", "n_events", "beta", "se", "z", "p_value")
-    NewtonFit.withPersistedBase(survivalDesign(durations, durationCol,
-        censoredCol, covariates)) { base =>
+    NewtonFit.withBase(ScaleOps.persisted(survivalDesign(durations,
+        durationCol, censoredCol, covariates))) { base =>
       val yAggs = count(lit(1)).as("__n") +: sum(col("__d")).as("__sd") +:
         sum(col("__t")).as("__st") +: min(col("__t")).as("__tmin") +:
         (1 to d).map(i =>
@@ -1190,7 +1195,7 @@ object Behavior {
     * (one codegen compile per shape, not per Newton pass). */
   def weibullAft(durations: DataFrame, durationCol: String,
       censoredCol: String, covariates: Seq[String],
-      iterations: Int = 40, reliable: Boolean = false): DataFrame = {
+      iterations: Int = 40): DataFrame = {
     require(covariates.nonEmpty && covariates.size <= 6,
       s"weibullAft needs 1..6 covariates, got ${covariates.size}")
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
@@ -1204,17 +1209,13 @@ object Behavior {
       terms.zip(w).zipWithIndex.map { case ((t, (b, se, z, p)), i) =>
         (t, n, ne, b, se, z, p, grad.map(_(i))) }
         .toDF("term", "n", "n_events", "beta", "se", "z", "p_value", "grad")
-    // materialize ONCE with the lineage CUT (localCheckpoint, the kCore /
-    // cumsum convention) rather than persist: ~35 Newton passes each
-    // re-analyze the frame's logical plan, and over the raw upstream tree
-    // (scan → groupBy → crossJoin → …) that planning overhead dominated
-    // the per-pass cost at bench scale; over a LogicalRDD leaf it is nil.
-    // The blocks release in the finally through the registry sweep;
-    // `reliable` swaps in a durable checkpoint (this base is data-sized,
-    // so executor loss under localCheckpoint fails the whole fit).
-    NewtonFit.withBase(graft.ops.ScaleOps.cutLineageBounded(
-        survivalDesign(durations, durationCol, censoredCol, covariates),
-        reliable), graft.ops.ScaleOps.releaseCheckpointBlocks) { base =>
+    // materialize ONCE with the lineage CUT (the kCore / cumsum
+    // convention) rather than persist: ~35 Newton passes each re-analyze
+    // the frame's logical plan, and over the raw upstream tree (scan →
+    // groupBy → crossJoin → …) that planning overhead dominated the
+    // per-pass cost at bench scale; over a LogicalRDD leaf it is nil.
+    NewtonFit.withBase(ScaleOps.cut(survivalDesign(durations, durationCol,
+        censoredCol, covariates))) { base =>
       // positivity guard + event-moment warm start (exact sums of
       // 12-dp-quantized ln t over events)
       val lnT = log(col("__t").cast("double"))
@@ -1483,10 +1484,10 @@ object Behavior {
           "grad")
       if (includeGradient) out else out.drop("grad")
     }
-    NewtonFit.withPersistedBase(NewtonFit.design(durations, Seq(durationCol),
-        Seq(col(durationCol).cast("long").as("__life"),
+    NewtonFit.withBase(ScaleOps.persisted(NewtonFit.design(durations,
+        Seq(durationCol), Seq(col(durationCol).cast("long").as("__life"),
           (lit(1L) - coalesce(col(censoredCol), lit(false)).cast("long"))
-            .as("__ev")), covariates)) { base =>
+            .as("__ev")), covariates))) { base =>
       // the subject count is iteration-invariant (base is persisted):
       // counting it once instead of once per pass saves a job per step
       val n = base.count()

@@ -2,9 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.ops.ScaleOps.{cutLineageBounded, releaseCheckpointBlocks}
+import graft.ops.ScaleOps.{cut, persisted, releasing}
 
 /** Distributed connected components by iterative min-label propagation —
   * the classic Spark pattern for the one dedup step that is inherently
@@ -18,25 +17,13 @@ import graft.ops.ScaleOps.{cutLineageBounded, releaseCheckpointBlocks}
   *    singleton components with no shuffle of labels.
   *  - convergence needs O(component diameter) rounds; near-dup clusters
   *    are shallow (pairs chain through shared shingles), so single-digit
-  *    rounds in practice. Each round persists its labels and unpersists
-  *    the previous, with `localCheckpoint` cutting the lineage so plan
-  *    depth stays constant.
+  *    rounds in practice. Each round cuts the lineage of its labels
+  *    ([[graft.ops.ScaleOps.cut]]) so plan depth stays constant, and
+  *    releases the previous round's.
   *  - a non-converged run THROWS rather than returning partial labels.
   */
 object Components {
 
-  /** Connected components of the undirected graph `edges` (`id_a`,`id_b`)
-    * over `vertices` (single column `id`). Output: `(id, component)` where
-    * `component` is the smallest id in the vertex's component; vertices
-    * with no edges are their own component.
-    *
-    * Per round: ONE checkpoint job materializes the new labels (with a
-    * per-row `changed` flag folded into the same projection), plus one
-    * cheap `isEmpty` probe over the just-cached blocks — no separate
-    * old-vs-new join. Each round releases the previous round's checkpoint
-    * blocks; `sym`/`touched` are released in a finally (the
-    * non-convergence throw included). Only the FINAL labels checkpoint
-    * stays cached — the returned plan reads from it. */
   /** PageRank over the undirected graph `edges` (`id_a`, `id_b`) on
     * `vertices` (single column `id`) — the authority score for near-dup
     * graphs: within a duplicate cluster, high-rank nodes are the "hub"
@@ -60,20 +47,17 @@ object Components {
     * iteration's rank is rounded to 12 dp. An engine replaying the recipe
     * reproduces every rank bit-for-bit. */
   def pageRank(vertices: DataFrame, edges: DataFrame,
-      iterations: Int = 2, damping: Double = 0.85,
-      checkpointDir: Option[String] = None): DataFrame = {
+      iterations: Int = 2, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     require(damping > 0.0 && damping < 1.0, s"damping must be in (0,1): $damping")
-    checkpointDir.foreach(vertices.sparkSession.sparkContext.setCheckpointDir)
     val v = vertices.select(col("id"))
     val n = v.count()
     require(n > 0, "pageRank needs at least one vertex")
     val base = (1.0 - damping) / n
-    val sym = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
+    val sym = persisted(edges.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+      .distinct())
+    releasing(sym) {
       val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       var ranks = v.withColumn("rank", lit(1.0 / n))
       for (_ <- 1 to iterations) {
@@ -83,19 +67,19 @@ object Components {
           .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
           .groupBy(col("id"))
           .agg(sum(col("c").cast("decimal(28,18)")).cast("double").as("in_sum"))
-        val next = cutLineageBounded(v.join(contrib, Seq("id"), "left")
-          .select(col("id"),
-            round(lit(base) + lit(damping) * coalesce(col("in_sum"), lit(0.0)), 12)
-              .as("rank")), checkpointDir.isDefined)
-        // `next` is materialized eagerly above, so the previous iteration's
-        // cached blocks are no longer referenced — release them now instead
-        // of letting one checkpoint per iteration accumulate for the job's
-        // lifetime (no-op on the first, un-checkpointed ranks frame)
-        releaseCheckpointBlocks(ranks)
-        ranks = next
+        // the next ranks are cut eagerly, so the previous iteration's blocks
+        // are no longer referenced — release them now instead of letting
+        // one checkpoint per iteration accumulate for the job's lifetime
+        // (no-op on the first, un-checkpointed ranks frame)
+        ranks = releasing(ranks) {
+          cut(v.join(contrib, Seq("id"), "left")
+            .select(col("id"),
+              round(lit(base) + lit(damping) * coalesce(col("in_sum"), lit(0.0)), 12)
+                .as("rank")))
+        }
       }
       ranks.select(col("id"), round(col("rank"), 6).as("rank"))
-    } finally sym.unpersist()
+    }
   }
 
   /** Per-vertex triangle count and local clustering coefficient over the
@@ -144,14 +128,24 @@ object Components {
             lit(2.0) * col("n_triangles") / (col("degree") * (col("degree") - 1)), 6)))
   }
 
+  /** Connected components of the undirected graph `edges` (`id_a`,`id_b`)
+    * over `vertices` (single column `id`). Output: `(id, component)` where
+    * `component` is the smallest id in the vertex's component; vertices
+    * with no edges are their own component.
+    *
+    * Per round: ONE checkpoint job materializes the new labels (with a
+    * per-row `changed` flag folded into the same projection), plus one
+    * cheap `isEmpty` probe over the just-cached blocks — no separate
+    * old-vs-new join. Each round releases the previous round's checkpoint
+    * blocks; `sym`/`touched` are released on every exit (the
+    * non-convergence throw included). Only the FINAL labels checkpoint
+    * stays cached — the returned plan reads from it. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
-      maxIter: Int = 25, checkpointDir: Option[String] = None): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     require(maxIter >= 1, s"maxIter must be >= 1: $maxIter")
-    checkpointDir.foreach(vertices.sparkSession.sparkContext.setCheckpointDir)
-    val sym0 = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
+    val sym0 = persisted(edges.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // SIZE-DERIVED read parallelism over the cached subgraph (guide §2):
     // the near-dup edge set is typically a tiny fraction of the corpus,
     // but the cache inherits the session shuffle constant, so every
@@ -162,16 +156,13 @@ object Components {
     val pE = math.min(math.max(1, sym0.rdd.getNumPartitions),
       math.max(1L, (nEdges + 262143) / 262144)).toInt
     val sym = if (pE < sym0.rdd.getNumPartitions) sym0.coalesce(pE) else sym0
-    val touched0 = sym.select(col("src").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val touched0 = persisted(sym.select(col("src").as("id")).distinct())
     val touched =
       if (pE < touched0.rdd.getNumPartitions) touched0.coalesce(pE)
       else touched0
 
-    try {
-      var labels = cutLineageBounded(
-        touched.select(col("id"), col("id").as("component")),
-        checkpointDir.isDefined)
+    releasing(sym0, touched0) {
+      var labels = cut(touched.select(col("id"), col("id").as("component")))
       var converged = false
       var iter = 0
       while (!converged && iter < maxIter) {
@@ -179,16 +170,15 @@ object Components {
           .groupBy(col("src")).agg(min(col("component")).as("nbr_comp"))
         // the changed flag rides in the checkpointed projection: the
         // convergence probe below scans cached blocks, no join, no shuffle
-        val next = cutLineageBounded(
-          labels.join(nbrMin, labels("id") === nbrMin("src"), "left")
+        val next = releasing(labels) {
+          cut(labels.join(nbrMin, labels("id") === nbrMin("src"), "left")
             .select(labels("id"),
               least(col("component"), coalesce(col("nbr_comp"), col("component")))
                 .as("component"),
               (coalesce(col("nbr_comp"), col("component")) < col("component"))
-                .as("__chg")),
-          checkpointDir.isDefined) // materializes AND cuts lineage
+                .as("__chg")))
+        }
         converged = next.filter(col("__chg")).isEmpty
-        releaseCheckpointBlocks(labels)
         labels = next.drop("__chg")
         iter += 1
       }
@@ -201,8 +191,6 @@ object Components {
         .join(touched, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("component"))
       labels.unionByName(singletons)
-    } finally {
-      sym0.unpersist(); touched0.unpersist()
     }
   }
 }

@@ -441,8 +441,8 @@ object CorpusStats {
       .filter(col("cnt") >= minWordCount)
       .withColumn("syms", regexp_replace(col("word"), "(.)", "|$1|"))
       .select(col("syms"), col("cnt"))
-    vocab.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      .transform(graft.ops.ScaleOps.persisted)
+    graft.ops.ScaleOps.releasing(vocab) {
       // vocab is distinct-word-bounded; size-derive the per-step read
       // parallelism (the cache inherits the session shuffle constant, so
       // each of the `merges` steps otherwise scans 32 near-empty blocks —
@@ -481,7 +481,7 @@ object CorpusStats {
       }
       import spark.implicits._
       learned.toSeq.toDF("step", "left", "right", "pair_count", "merged")
-    } finally vocab.unpersist(false)
+    }
   }
 
   /** Apply a learned BPE merge table ([[bpeTrain]]'s output, in step
@@ -621,13 +621,14 @@ object CorpusStats {
     // release would hit unpersisted, unrecomputable blocks whenever the
     // input plan is nondeterministic (sample()/rand-derived frames freeze
     // a localCheckpoint whose lineage is cut) — the mannWhitneyU pattern.
-    val row = cum.agg(
-      sum(col("c") * col("m")).cast("long").as("_t"),
-      sum(cD * (mD * bD + mD * (mD + 1) / 2.0)).as("_s"),
-      sum(mD * cD * cD).as("_q"),
-      max(col("c")).cast("long").as("_max"))
-      .head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    val row = graft.ops.ScaleOps.releasing(cum) {
+      cum.agg(
+        sum(col("c") * col("m")).cast("long").as("_t"),
+        sum(cD * (mD * bD + mD * (mD + 1) / 2.0)).as("_s"),
+        sum(mD * cD * cD).as("_q"),
+        max(col("c")).cast("long").as("_max"))
+        .head()
+    }
     val spark = df.sparkSession
     import spark.implicits._
     // empty input: NULL stats (n_keys 0)
@@ -973,7 +974,7 @@ object CorpusStats {
     val lens = toks.groupBy(col("id")).agg(count(lit(1)).as("len"))
     val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
       lens, col("id"), Seq("len"), Seq("off"))
-    try {
+    graft.ops.ScaleOps.releasing(cum) {
       val nTokens = grand.head
       val spark = docs.sparkSession
       if (nTokens < checkpoints) {
@@ -1019,7 +1020,7 @@ object CorpusStats {
         (i, np, v, fit.map(_._1), fit.map(_._2), fit.map(_._3))
       }
       fitted.toDF("i", "n_prefix", "v_types", "beta", "log_k", "r2")
-    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    }
   }
 
   /** Word bigrams of a text column as `(v, w)` rows — in-plan (zip of

@@ -229,14 +229,14 @@ object Dedup {
       numBuckets: Int = 32): Unit = {
     require(numHashes % numBands == 0, "numHashes must divide into numBands evenly")
     val base = lshBase(corpusDf, idCol, textCol, shingleSize, numHashes)
-    try {
+    graft.ops.ScaleOps.releasing(base) {
       graft.ops.ScaleOps.writeBucketed(
         banded(base, numHashes, numBands).select(col("band"), col("bucket"), col("id")),
         s"${tablePrefix}_buckets", Seq("band", "bucket"), numBuckets)
       graft.ops.ScaleOps.writeBucketed(
         base.select(col("id"), col("shingles")),
         s"${tablePrefix}_shingles", Seq("id"), numBuckets)
-    } finally graft.ops.ScaleOps.deregisterInternalPersist(base)
+    }
   }
 
   /** [[minhashLshAgainst]] against a corpus precomputed by
@@ -396,8 +396,7 @@ object Dedup {
       TextKernelFunctions.shingleHashSet(col(textCol), shingleSize).as("shingles"))
       .filter(size(col("shingles")) > 0)
       .withColumn("sig", TextKernelFunctions.minhashSignature(col("shingles"), numHashes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.ops.ScaleOps.registerInternalPersist)
+      .transform(graft.ops.ScaleOps.persisted)
 
   /** (id[, carry…], band, bucket) rows from a signature base — band value
     * = hash of the signature slice. Must stay bit-identical across call
@@ -415,18 +414,14 @@ object Dedup {
   }
 
   /** With `materialize` set: evaluate the (small) result into a
-    * lineage-free local checkpoint and release the operator's base cache(s)
-    * before returning — the eager-release mode for long-lived apps. The
-    * default lazy mode returns the plan untouched. */
+    * lineage cut ([[graft.ops.ScaleOps.cut]]) and release the operator's
+    * base cache(s) before returning — the eager-release mode for
+    * long-lived apps. The default lazy mode returns the plan untouched. */
   private def released(result: DataFrame, bases: Seq[DataFrame],
       materialize: Boolean): DataFrame =
     if (!materialize) result
-    else {
-      val out = graft.ops.ScaleOps.registerInternalCheckpoint(
-        result.localCheckpoint(true))
-      bases.foreach(graft.ops.ScaleOps.deregisterInternalPersist)
-      out
-    }
+    else graft.ops.ScaleOps.releasing(bases: _*)(
+      graft.ops.ScaleOps.cut(result))
 
   /** Exact Jaccard on candidate pairs via the (distinct, sorted) shingle-hash
     * sets. Candidates are already unique pairs. Two exact pruning layers
@@ -606,8 +601,7 @@ object Dedup {
     // cache cuts it to one evaluation per row).
     val exAll = base
       .select(col("id"), col("sz"), explode(col("shingles")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.ops.ScaleOps.registerInternalPersist)
+      .transform(graft.ops.ScaleOps.persisted)
     // anti-join against the hot-shingle set: the df aggregation is
     // partial (map-side) before its shuffle, and the hot set is tiny
     // (shingles with df > cap), so both anti-joins broadcast it.
@@ -767,8 +761,7 @@ object Dedup {
       TextKernelFunctions.shingleHashSet(col(textCol), shingleSize).as("shingles"),
       hashExpr.getOrElse(simhash(col(textCol))).as("sh"))
       .filter(size(col("shingles")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.ops.ScaleOps.registerInternalPersist)
+      .transform(graft.ops.ScaleOps.persisted)
     // Bucket rows carry only what the pre-distinct prunes need: the shingle
     // count always (size-ratio prune: J ≥ t needs min(sz)/max(sz) ≥ t), the
     // simhash only when hamming pruning is requested. Both prunes run
@@ -856,8 +849,7 @@ object Dedup {
     val base = df.select(col(idCol).as("id"), col(vecCol).as("vec"),
         bits.as("bits"))
       .withColumn("bands", graft.functions.VectorFunctions.bandBuckets(col("bits"), numBands, bitsPerBand))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.ops.ScaleOps.registerInternalPersist)
+      .transform(graft.ops.ScaleOps.persisted)
     val exploded = base.select(col("id"), posexplode(col("bands")).as(Seq("band", "bucket")))
     // hot-bucket cap — see simhashNearDup's maxBucket note (a replica-heavy
     // or boilerplate corpus makes one band bucket quadratic; dropping it is

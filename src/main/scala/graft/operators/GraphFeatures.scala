@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.ScaleOps.cutLineageBounded
+import graft.ops.ScaleOps.{cut, persisted, releasing}
 
 /** Graph-structure features over an edge list — the link-prediction and
   * topology-QA primitives a relationship-heavy corpus needs (entity
@@ -51,10 +51,9 @@ object GraphFeatures {
     * first round. Removed sets are disjoint across rounds and the edge
     * list is distinct, so the running degree is exactly the degree within
     * the surviving subgraph — the same alive-set sequence, the same
-    * fixpoint (the k-core is removal-order independent). Each round
-    * localCheckpoints the degree table (or durably checkpoints with
-    * `reliable = true` on a real cluster) so plan depth stays constant,
-    * and releases the previous round's blocks. Peeling depth is the
+    * fixpoint (the k-core is removal-order independent). Each round cuts
+    * the degree table's lineage ([[graft.ops.ScaleOps.cut]]) so plan depth
+    * stays constant, and releases the previous round's. Peeling depth is the
     * cascade length — single digits on natural graphs.
     *
     * Join strategy (guide §3.1): the removal count is already on the
@@ -65,8 +64,7 @@ object GraphFeatures {
     * stats, so the planner otherwise shuffles the cached edge list.
     * Past the gate both degrade to plain shuffled equi-joins. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxIters: Int = 30, reliable: Boolean = false,
-      broadcastNodes: Long = 1000000L): DataFrame = {
+      maxIters: Int = 30, broadcastNodes: Long = 1000000L): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxIters >= 1 && maxIters <= 100,
       s"maxIters must be in [1, 100]: $maxIters")
@@ -75,15 +73,14 @@ object GraphFeatures {
         col(dstCol).cast("string").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull &&
         col("a") =!= col("b"))
-    val sym = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    val sym = persisted(e0.union(e0.select(col("b").as("a"), col("a").as("b")))
+      .distinct())
+    releasing(sym) {
       // full within-graph degrees: ONE keyed count over the distinct
       // symmetric edges (sym lists every node as `a`)
-      var degs = cutLineageBounded(sym.groupBy(col("a"))
+      var degs = cut(sym.groupBy(col("a"))
         .agg(count(lit(1)).as("degree"))
-        .select(col("a").as("node"), col("degree")), reliable)
+        .select(col("a").as("node"), col("degree")))
       var aliveN = degs.count()
       var converged = aliveN == 0
       var it = 0
@@ -93,9 +90,7 @@ object GraphFeatures {
         if (nRem == 0) converged = true
         else if (aliveN - nRem <= 0) {
           // everything peeled this round: the k-core is empty
-          val old = degs
-          degs = cutLineageBounded(degs.filter(col("degree") >= k), reliable)
-          graft.ops.ScaleOps.releaseCheckpointBlocks(old)
+          degs = releasing(degs)(cut(degs.filter(col("degree") >= k)))
           aliveN = 0
           converged = true
         } else {
@@ -110,13 +105,13 @@ object GraphFeatures {
             .join(gate(removed.select(col("node").as("b"))), "b")
             .groupBy(col("a")).agg(count(lit(1)).as("__dec"))
             .select(col("a").as("node"), col("__dec"))
-          val old = degs
-          degs = cutLineageBounded(degs.filter(col("degree") >= k)
-            .join(gate(dec), Seq("node"), "left")
-            .select(col("node"),
-              (col("degree") - coalesce(col("__dec"), lit(0L)))
-                .as("degree")), reliable)
-          graft.ops.ScaleOps.releaseCheckpointBlocks(old)
+          degs = releasing(degs) {
+            cut(degs.filter(col("degree") >= k)
+              .join(gate(dec), Seq("node"), "left")
+              .select(col("node"),
+                (col("degree") - coalesce(col("__dec"), lit(0L)))
+                  .as("degree")))
+          }
         }
         it += 1
       }
@@ -126,7 +121,7 @@ object GraphFeatures {
       // the survivors (the returned plan reads the final checkpoint — the
       // Components convention; no final re-aggregation pass)
       degs
-    } finally sym.unpersist(false)
+    }
   }
 
   /** Node pairs ranked by shared neighbors, with the classic
@@ -158,11 +153,9 @@ object GraphFeatures {
       minCommon: Int = 2, maxDegree: Option[Long] = None): DataFrame = {
     require(minCommon >= 1, s"minCommon must be >= 1: $minCommon")
     maxDegree.foreach(c => require(c >= 2, s"maxDegree must be >= 2: $c"))
-    val e = edges.select(col(srcCol).as("a"), col(nbrCol).as("_nb"))
+    val e = persisted(edges.select(col(srcCol).as("a"), col(nbrCol).as("_nb"))
       .filter(col("a").isNotNull && col("_nb").isNotNull)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.ops.ScaleOps.registerInternalPersist)
+      .distinct())
     val nbrDeg = e.groupBy(col("_nb")).agg(count(lit(1)).as("_dn"))
     val kept = maxDegree.map(c => nbrDeg.filter(col("_dn") <= c))
       .getOrElse(nbrDeg)

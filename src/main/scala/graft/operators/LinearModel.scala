@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.ParamFrame
+import graft.ops.{ParamFrame, ScaleOps}
 import NewtonFit.{dec, round12}
 
 /** Distributed training of a linear (logistic-regression) text classifier
@@ -77,11 +77,9 @@ object LinearModel {
     val pT = math.min(
       math.max(1, spark.sessionState.conf.numShufflePartitions),
       math.max(1L, (docs.count() + 8191) / 8192)).toInt
-    val xc = xc0.repartition(pT, col("id"))
-    val yv = yv0.repartition(pT, col("id"))
-    xc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    yv.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try ParamFrame.withFixedPlan(spark) {
+    val xc = ScaleOps.persisted(xc0.repartition(pT, col("id")))
+    val yv = ScaleOps.persisted(yv0.repartition(pT, col("id")))
+    ScaleOps.releasing(xc, yv)(ParamFrame.withFixedPlan(spark) {
       val n = yv.count().toDouble
       var w = Array.fill(numBuckets)(0.0)
       for (_ <- 1 to iterations) {
@@ -114,7 +112,7 @@ object LinearModel {
       w.zipWithIndex.map { case (v, b) =>
         (b, BigDecimal(v).setScale(roundTo, BigDecimal.RoundingMode.HALF_UP).toDouble)
       }.toSeq.toDF("bucket", "weight")
-    } finally { xc.unpersist(false); yv.unpersist(false) }
+    })
   }
 
   /** Score documents with a trained weight table: `(id, label, score)`
@@ -488,26 +486,30 @@ object LinearModel {
       .agg(count(lit(1)).as("__cnt"), sum(col("__y")).cast("long").as("__pos"))
     // shared two-phase cumsum — no global single-partition window; the
     // grand total doubles as n (no separate count job)
-    val (ranked, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
+    val (ranked, grand) = ScaleOps.withExclusiveRunningSums(
       perScore, col("score").desc, Seq("__cnt"), Seq("__above"))
     val n = grand.head
-    require(n > 0, "thresholdAtKeepRate needs a non-empty scored set")
     val k = math.ceil(n * keepRate).toLong
-    // the row whose inclusive span covers rank k in descending order
-    val thr = ranked
-      .filter(col("__above") < k && col("__above") + col("__cnt") >= k)
-      .select(col("score")).head().getDouble(0)
-    // null-tolerant driver scalars: n_kept/kp floor at 0 via otherwise(0)
-    // (0 kept is legal when every score is NaN — `>= NaN` is false); the
-    // label sum stays NULLABLE (an unlabeled gate-tuning set must report a
-    // null rate, not crash on unboxing)
-    val stats = ranked.agg(
-        sum(when(col("score") >= thr, col("__cnt")).otherwise(0L))
-          .cast("long").as("n_kept"),
-        sum(when(col("score") >= thr, coalesce(col("__pos"), lit(0L)))
-          .otherwise(0L)).cast("long").as("__kp"),
-        sum(col("__pos")).cast("long").as("__p"))
-      .head()
+    // every output is a driver scalar: the cumsum's cached per-score table
+    // is unreachable from the returned literal frame, so it releases here
+    val (thr, stats) = ScaleOps.releasing(ranked) {
+      require(n > 0, "thresholdAtKeepRate needs a non-empty scored set")
+      // the row whose inclusive span covers rank k in descending order
+      val thr = ranked
+        .filter(col("__above") < k && col("__above") + col("__cnt") >= k)
+        .select(col("score")).head().getDouble(0)
+      // null-tolerant driver scalars: n_kept/kp floor at 0 via
+      // otherwise(0) (0 kept is legal when every score is NaN — `>= NaN`
+      // is false); the label sum stays NULLABLE (an unlabeled gate-tuning
+      // set must report a null rate, not crash on unboxing)
+      (thr, ranked.agg(
+          sum(when(col("score") >= thr, col("__cnt")).otherwise(0L))
+            .cast("long").as("n_kept"),
+          sum(when(col("score") >= thr, coalesce(col("__pos"), lit(0L)))
+            .otherwise(0L)).cast("long").as("__kp"),
+          sum(col("__pos")).cast("long").as("__p"))
+        .head())
+    }
     val (nKept, kp) = (stats.getLong(0), stats.getLong(1))
     val p: Option[Long] = if (stats.isNullAt(2)) None else Some(stats.getLong(2))
     def rate(num: Option[Long], den: Long): Column = num match {
@@ -515,10 +517,6 @@ object LinearModel {
         round(lit(v.toDouble / den), roundTo).cast("double")
       case _ => lit(null).cast("double")
     }
-    // every output is a driver scalar now — release the cumsum's cached
-    // per-score table (unreachable from the returned literal frame, so no
-    // caller could release it later) and emit the one-row report
-    graft.ops.ScaleOps.releaseCheckpointBlocks(ranked)
     scored.sparkSession.range(1).select(
       round(lit(thr), roundTo).as("threshold"), lit(n).as("n"),
       lit(k).as("n_target"), lit(nKept).as("n_kept"),
@@ -598,9 +596,10 @@ object LinearModel {
       perScore, col("score"), Seq("__cnt"), Seq("__below"))
     val n = grand.head
     val avgRank = col("__below") + (col("__cnt") + 1) / lit(2.0)
-    val row = ranked.agg(sum(col("__pos") * avgRank).as("_rp"),
-      sum(col("__pos")).cast("long").as("_p")).head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(ranked)
+    val row = ScaleOps.releasing(ranked) {
+      ranked.agg(sum(col("__pos") * avgRank).as("_rp"),
+        sum(col("__pos")).cast("long").as("_p")).head()
+    }
     val spark = scored.sparkSession
     import spark.implicits._
     val p = if (row.isNullAt(1)) 0L else row.getLong(1)
@@ -634,7 +633,7 @@ object LinearModel {
     val (ranked, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
       perScore, col("score"), Seq("__pos", "__neg"),
       Seq("__posBelow", "__negBelow"))
-    try {
+    ScaleOps.releasing(ranked) {
       val p = grand(0); val nn = grand(1)
       val spark = scored.sparkSession
       import spark.implicits._
@@ -657,7 +656,7 @@ object LinearModel {
         val s01 = moments.getDouble(1) / (nn - 1)
         math.sqrt(s10 / p + s01 / nn)
       })
-    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(ranked)
+    }
   }
 
   /** Murphy decomposition of the Brier score — WHY is the probability
@@ -912,8 +911,8 @@ object LinearModel {
         .toDF("term", "n", "phi", "beta", "se", "z", "p_value")
       if (quasi) out else out.drop("phi")
     }
-    NewtonFit.withPersistedBase(NewtonFit.design(df, Seq(yCol),
-        Seq(col(yCol).cast("long").as("__y")), covariates)) { base =>
+    NewtonFit.withBase(ScaleOps.persisted(NewtonFit.design(df, Seq(yCol),
+        Seq(col(yCol).cast("long").as("__y")), covariates))) { base =>
       val (n, sy, syx) = countSums(base, d)
       if (n == 0 || sy == 0) return table(n, None, NewtonFit.nullRows(dim))
       val baseIt = ParamFrame.compactForIteration(base, n)
@@ -1037,8 +1036,8 @@ object LinearModel {
     def table(n: Long, alpha: Option[Double], w: Seq[NewtonFit.Wald]) =
       terms.zip(w).map { case (t, (b, se, z, p)) => (t, n, alpha, b, se, z, p) }
         .toDF("term", "n", "alpha", "beta", "se", "z", "p_value")
-    NewtonFit.withPersistedBase(NewtonFit.design(df, Seq(yCol),
-        Seq(col(yCol).cast("long").as("__y")), covariates)) { base =>
+    NewtonFit.withBase(ScaleOps.persisted(NewtonFit.design(df, Seq(yCol),
+        Seq(col(yCol).cast("long").as("__y")), covariates))) { base =>
       val (n, sy, syx) = countSums(base, d)
       if (n == 0 || sy == 0) return table(n, None, NewtonFit.nullRows(dim))
       val baseIt = ParamFrame.compactForIteration(base, n)
@@ -1139,8 +1138,8 @@ object LinearModel {
     def table(n: Long, phi: Option[Double], w: Seq[NewtonFit.Wald]) =
       terms.zip(w).map { case (t, (b, se, z, p)) => (t, n, phi, b, se, z, p) }
         .toDF("term", "n", "phi", "beta", "se", "z", "p_value")
-    NewtonFit.withPersistedBase(NewtonFit.design(df, Seq(yCol),
-        Seq(col(yCol).cast("decimal(18,6)").as("__y")), covariates)) { base =>
+    NewtonFit.withBase(ScaleOps.persisted(NewtonFit.design(df, Seq(yCol),
+        Seq(col(yCol).cast("decimal(18,6)").as("__y")), covariates))) { base =>
       val x = NewtonFit.xDec _
       // one pass: n, Σy (exact), min y (the positivity guard), and the
       // constant XᵀX — the Fisher information is iteration-independent
@@ -1244,8 +1243,8 @@ object LinearModel {
     def table(n: Long, w: Seq[NewtonFit.Wald]) =
       terms.zip(w).map { case (t, (b, se, z, p)) => (t, n, b, se, z, p) }
         .toDF("term", "n", "beta", "se", "z", "p_value")
-    NewtonFit.withPersistedBase(NewtonFit.design(df, Seq(yCol),
-        Seq(col(yCol).cast("long").as("__y")), covariates)) { base =>
+    NewtonFit.withBase(ScaleOps.persisted(NewtonFit.design(df, Seq(yCol),
+        Seq(col(yCol).cast("long").as("__y")), covariates))) { base =>
       val yAggs = count(lit(1)).as("__n") +: sum(col("__y")).as("__sy") +:
         min(col("__y")).as("__ymin") +: max(col("__y")).as("__ymax") +:
         (1 to d).map(i =>
@@ -1685,11 +1684,11 @@ object LinearModel {
       calCounts, col("r"), Seq("cnt"), Seq("_before"))
     val nCal = grand.head
     val k = math.ceil((nCal + 1) * (1 - alpha)).toLong
-    val qHat: Option[Double] =
+    val qHat: Option[Double] = ScaleOps.releasing(cum) {
       if (nCal == 0 || k > nCal) None
       else Some(cum.filter(col("_before") < k && col("_before") + col("cnt") >= k)
         .select(col("r")).head().getDouble(0))
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    }
     val cov = qHat match {
       case None => tagged.filter(col("split") === "test")
         .agg(count(lit(1)).as("nt"),

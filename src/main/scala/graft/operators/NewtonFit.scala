@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.ops.ParamFrame
+import graft.ops.{ParamFrame, ScaleOps}
 
 /** The shared core of the iterative Newton fits — the four GLMs
   * in [[LinearModel]] and the three survival regressions in
@@ -20,19 +20,14 @@ private[operators] object NewtonFit {
   def round12(v: Double): Double =
     BigDecimal(v).setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** The fit base bracket: `body` runs over `base` with AQE off
-    * ([[ParamFrame.withFixedPlan]] — every pass is a tiny global
-    * aggregate), then `release` frees the base. */
-  def withBase[T](base: DataFrame, release: DataFrame => Unit)(
-      body: DataFrame => T): T =
-    try ParamFrame.withFixedPlan(base.sparkSession)(body(base))
-    finally release(base)
-
-  /** [[withBase]] over `rows` persisted MEMORY_AND_DISK, unpersisted
-    * after: every pass re-reads the same quantized design. */
-  def withPersistedBase[T](rows: DataFrame)(body: DataFrame => T): T =
-    withBase(rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      _.unpersist(false))(body)
+  /** The fit base bracket: `body` runs over `base` — the quantized
+    * design, [[ScaleOps.persisted]] (Weibull: [[ScaleOps.cut]]) because
+    * every pass re-reads it — with AQE off ([[ParamFrame.withFixedPlan]]
+    * — every pass is a tiny global aggregate), and the base is released
+    * on every exit. */
+  def withBase[T](base: DataFrame)(body: DataFrame => T): T =
+    ScaleOps.releasing(base)(
+      ParamFrame.withFixedPlan(base.sparkSession)(body(base)))
 
   // ---- design columns: covariate k is `__x{k}`, DECIMAL(8,4) ----
 

@@ -827,16 +827,15 @@ object Similarity {
     // persisted: the batch scan + assignment kernel feed the probed-id
     // collect, the join's broadcast side AND the final left join — without
     // the cache they would run three times per probe. Caller-release
-    // contract as with the LSH kernel bases: registered so
-    // ScaleOps.releaseCheckpointBlocks(result) frees exactly this block
-    // (clearCache() remains the blunt alternative).
+    // contract as with the LSH kernel bases: a library pin, so
+    // ScaleOps.releaseCheckpointBlocks on the result frees exactly this
+    // block (clearCache() remains the blunt alternative).
     val assigned = newDf.select(col(idCol).cast("long").as("id"),
         col(vecCol).as("__v"))
       .withColumn("cluster",
         VectorKernelFunctions.nearestCentroid(
           slice(col("__v"), 1, clusterDims), centroids.map(_.clone())))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.ops.ScaleOps.registerInternalPersist)
+      .transform(graft.ops.ScaleOps.persisted)
     val probed = assigned.select(col("cluster")).distinct()
       .collect().map(_.getInt(0)).sorted
     val corpus = graft.io.ParquetIO.read(spark, path)
@@ -1085,7 +1084,7 @@ object Similarity {
     // nondeterministic) query plan would execute twice, and a second
     // execution assigning a list OUTSIDE the collected literal filter
     // would silently drop candidates. Caller-release contract as with
-    // the LSH kernel bases (registered for releaseCheckpointBlocks).
+    // the LSH kernel bases (a library pin, freed by releaseCheckpointBlocks).
     val probes0 = queries
       .select(col(queryId).as("query_id"), col(queryVec).as("query_vec"))
       .withColumn("__cells", cells)
@@ -1095,8 +1094,7 @@ object Similarity {
           i => struct(element_at(col("__cells"), i + 1).as("d"), i.as("i")))),
           1, np),
         s => s.getField("i"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.ops.ScaleOps.registerInternalPersist)
+      .transform(graft.ops.ScaleOps.persisted)
     val probedLists = probes0.select(col("list_id")).distinct()
       .collect().map(_.getInt(0)).sorted
     val qres = VectorKernelFunctions.centroidResidual(

@@ -147,7 +147,7 @@ object IndexOps {
     * `monotonically_increasing_id` (consecutive within a partition —
     * Spark's documented layout, partition id in the upper 31 bits, record
     * number in the lower 33, stable since 1.6; the min-subtraction keeps
-    * us independent of the base offset), and a `localCheckpoint` to freeze
+    * us independent of the base offset), and a [[ScaleOps.cut]] to freeze
     * the NONDETERMINISTIC partition/id assignment so the offsets job and
     * the main job see the same rows (same materialize-once contract as
     * [[graft.operators.Components]]). Costs an eager full-width
@@ -155,12 +155,10 @@ object IndexOps {
   private[graft] def stableRowNumberGeneric(df: DataFrame,
       orderColumns: Seq[String], outCol: String): DataFrame = {
     val orderCols = orderColumns.map(col)
-    val base = ScaleOps.registerInternalCheckpoint(
-      df.repartitionByRange(orderCols: _*)
-        .sortWithinPartitions(orderCols: _*)
-        .select(col("*"), spark_partition_id().as("__g_pid"),
-          monotonically_increasing_id().as("__g_mid"))
-        .localCheckpoint())
+    val base = ScaleOps.cut(df.repartitionByRange(orderCols: _*)
+      .sortWithinPartitions(orderCols: _*)
+      .select(col("*"), spark_partition_id().as("__g_pid"),
+        monotonically_increasing_id().as("__g_mid")))
     val stats = base.groupBy("__g_pid")
       .agg(count(lit(1)).as("_c"), min("__g_mid").as("__g_m0"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))

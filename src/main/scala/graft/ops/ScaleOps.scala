@@ -12,6 +12,21 @@ import org.apache.spark.util.sketch.BloomFilter
   * pathologies AQE cannot always fix — extreme single-key skew on the
   * *build* side of an aggregation, and repeated joins on the same key
   * across pipelines.
+  *
+  * It is also the library's one materialization scope: every
+  * intermediate an operator pins goes through [[persisted]] (a
+  * MEMORY_AND_DISK cache), [[cut]] (an eager lineage cut) and
+  * [[releasing]] (frees frames on every exit of a block); frames an
+  * operator RETURNS lazily over its pins are freed by the caller through
+  * the one public release, [[releaseCheckpointBlocks]].
+  *
+  * Durability rule: a [[cut]] is durable exactly when the SparkContext
+  * has a checkpoint directory (`getCheckpointDir` is defined — the rule
+  * of Spark's own periodic checkpointers): a reliable checkpoint whose
+  * files survive executor loss and need no release. Without one it is a
+  * local checkpoint — executor-memory blocks, registered so the release
+  * paths can free them, lost unrecoverably with an executor (fine for
+  * single-process runs and the bounded frames the estimators cut).
   */
 object ScaleOps {
 
@@ -76,6 +91,8 @@ object ScaleOps {
   def readTable(spark: SparkSession, tableName: String): DataFrame =
     spark.table(tableName)
 
+  // ---- the materialization scope (see the object scaladoc) ----
+
   /** Frames the LIBRARY itself persisted (e.g. [[withExclusiveRunningSums]]'
     * per-distinct-value table), keyed by their analyzed plan so
     * [[releaseCheckpointBlocks]] can unpersist exactly these — and never a
@@ -98,18 +115,24 @@ object ScaleOps {
           if (size() > 256) { e.getValue.unpersist(false); true } else false
       })
 
-  /** RDD ids of `localCheckpoint`s the LIBRARY created (cumsum's frozen
-    * nondeterministic inputs, `materialize = true` dedup results, the
-    * generic stable-row-number base) so [[releaseCheckpointBlocks]] can
-    * scope its `LogicalRDD` sweep to them. Unpersisting a CALLER's
-    * checkpoint would be worse than sweeping a cache: checkpointed lineage
-    * is CUT, so the caller's frame would become unrecomputable, not merely
-    * slow. Ids are monotonic per SparkContext (never reused), so a stale
-    * entry is harmless. Bounded at 65536 — ids are 4-byte ints, and an
-    * eviction here (unlike [[internalPersists]]') cannot unpersist, so the
-    * bound is set far above any plausible count of LIVE library
-    * checkpoints; internal self-releases deregister through the public
-    * release path to keep stale ids from accumulating toward it. */
+  /** The frames [[persisted]] returned, by identity and weakly held, so
+    * [[releasing]] frees exactly that cache — never the pins upstream in
+    * its plan — even after a sweep or an eviction dropped its registry
+    * entry. */
+  private val persistedFrames: java.util.Set[DataFrame] =
+    java.util.Collections.synchronizedSet(java.util.Collections.newSetFromMap(
+      new java.util.WeakHashMap[DataFrame, java.lang.Boolean]()))
+
+  /** RDD ids of the local checkpoints the LIBRARY created ([[cut]]) so
+    * [[releaseCheckpointBlocks]] can scope its `LogicalRDD` sweep to them.
+    * Unpersisting a CALLER's checkpoint would be worse than sweeping a
+    * cache: checkpointed lineage is CUT, so the caller's frame would become
+    * unrecomputable, not merely slow. Ids are monotonic per SparkContext
+    * (never reused), so a stale entry is harmless. Bounded at 65536 — ids
+    * are 4-byte ints, and an eviction here (unlike [[internalPersists]]')
+    * cannot unpersist, so the bound is set far above any plausible count of
+    * LIVE library checkpoints; [[releasing]] deregisters what it frees to
+    * keep stale ids from accumulating toward it. */
   private val internalCheckpointIds: java.util.Set[Integer] =
     java.util.Collections.newSetFromMap(
       java.util.Collections.synchronizedMap(
@@ -119,40 +142,68 @@ object ScaleOps {
             size() > 65536
         }))
 
-  /** Record the `LogicalRDD` leaves of a frame the library just
-    * `localCheckpoint`ed so the public release can find them. */
-  private[graft] def registerInternalCheckpoint(df: DataFrame): DataFrame = {
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        internalCheckpointIds.add(lr.rdd.id)
-      case _ => ()
+  /** `df` persisted MEMORY_AND_DISK and recorded as a library pin, so
+    * [[releaseCheckpointBlocks]] on any consumer plan releases it. Entries
+    * whose SparkSession has stopped are pruned here — an app that releases
+    * blocks via `clearCache()` (the documented alternative) never matches
+    * entries out of the registry, and without pruning a restart would keep
+    * the stopped session's whole object graph reachable for the JVM
+    * lifetime. */
+  private[graft] def persisted(df: DataFrame): DataFrame = {
+    internalPersists.synchronized {
+      val it = internalPersists.values().iterator()
+      while (it.hasNext)
+        if (it.next().sparkSession.sparkContext.isStopped) it.remove()
     }
-    df
+    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    internalPersists.put(cached.queryExecution.analyzed, cached)
+    persistedFrames.add(cached)
+    cached
   }
 
-  /** Cut lineage on an intermediate (usually calendar/cell/spine-BOUNDED;
-    * the Weibull fit base is the one data-sized-but-compact exception)
-    * inside a multi-phase estimator chain, so each later
+  /** Eager lineage cut of an intermediate (usually calendar/cell/spine-
+    * BOUNDED; the Weibull fit base is the one data-sized-but-compact
+    * exception) inside a multi-phase estimator chain, so each later
     * totals/consumer pass replans a leaf instead of replaying the whole
-    * deepening plan. `reliable = false` (local default) uses
-    * `localCheckpoint`: executor-memory blocks, lost unrecoverably with an
-    * executor — acceptable for provably tiny frames and single-process
-    * runs. `reliable = true` writes a durable checkpoint (requires
-    * `SparkContext.setCheckpointDir`) — the cluster-mode escape hatch,
-    * mirroring [[graft.operators.GraphFeatures.kCore]]'s flag. Local
-    * checkpoints register for [[releaseCheckpointBlocks]]; reliable ones
-    * are files, not blocks, and need no release. */
-  private[graft] def cutLineageBounded(df: DataFrame,
-      reliable: Boolean): DataFrame =
-    if (reliable) df.checkpoint(eager = true)
-    else registerInternalCheckpoint(df.localCheckpoint(true))
+    * deepening plan; it also freezes a nondeterministic plan so every
+    * later job sees the same rows. Durable iff the SparkContext has a
+    * checkpoint directory (the durability rule in the object scaladoc);
+    * otherwise a registered local checkpoint. */
+  private[graft] def cut(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint(eager = true)
+    else {
+      val local = df.localCheckpoint(eager = true)
+      local.queryExecution.analyzed.collectLeaves().foreach {
+        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          internalCheckpointIds.add(lr.rdd.id)
+        case _ => ()
+      }
+      local
+    }
+
+  /** Run `body`, then release `frames` on EVERY exit (a throw or a
+    * non-local return included). A frame [[persisted]] returned releases
+    * just that cache; any other frame — a [[cut]], or a plan over pins
+    * such as a cumsum frame — releases every library pin in its plan
+    * ([[releaseCheckpointBlocks]]). A chain step that frees its
+    * predecessor as soon as the next link exists is
+    * `releasing(prev) { … cut(next) }`. */
+  private[graft] def releasing[T](frames: DataFrame*)(body: => T): T =
+    try body
+    finally frames.foreach { df =>
+      if (persistedFrames.remove(df)) {
+        internalPersists.remove(df.queryExecution.analyzed)
+        df.unpersist(false)
+      } else releaseCheckpointBlocks(df)
+    }
 
   /** Release EVERY block a DataFrame's plan pinned by THIS LIBRARY, both
-    * kinds: `localCheckpoint` leaves (`LogicalRDD` — registered with the
+    * kinds: local-checkpoint leaves (`LogicalRDD` — registered with the
     * RDD, unreachable from `Dataset.unpersist`/`Catalog.clearCache`) AND
-    * internal `persist` subtrees the library registered (CacheManager
-    * entries the caller holds no handle to — e.g. the per-distinct-value
-    * table inside [[withExclusiveRunningSums]]). Blocks the CALLER pinned —
+    * [[persisted]] subtrees (CacheManager entries the caller holds no
+    * handle to — e.g. the per-distinct-value table inside
+    * [[withExclusiveRunningSums]]). Blocks the CALLER pinned —
     * their persists on inputs, their own localCheckpoints feeding an
     * operator — are left untouched: releasing a user's cache silently
     * forces recomputes, and releasing a user's checkpoint (whose lineage
@@ -162,7 +213,8 @@ object ScaleOps {
     * once the result is consumed and the session is block-free again. Safe
     * on any DataFrame (no-op without pinned blocks); the frame must not be
     * re-executed afterwards (checkpointed lineage is cut; cached subtrees
-    * merely recompute). */
+    * merely recompute). Durable checkpoints are files, not blocks, and are
+    * left alone. */
   def releaseCheckpointBlocks(df: DataFrame): Unit = {
     df.queryExecution.analyzed.collectLeaves().foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD
@@ -181,37 +233,6 @@ object ScaleOps {
       }
     }
     hits.result().foreach(_.unpersist(false))
-  }
-
-  /** Record a frame the library persisted internally so
-    * [[releaseCheckpointBlocks]] on any consumer plan releases it. Entries
-    * whose SparkSession has stopped are pruned here — an app that releases
-    * blocks via `clearCache()` (the documented alternative) never matches
-    * entries out of the registry, and without pruning a restart would keep
-    * the stopped session's whole object graph reachable for the JVM
-    * lifetime. */
-  private[graft] def registerInternalPersist(cached: DataFrame): DataFrame = {
-    internalPersists.synchronized {
-      val it = internalPersists.values().iterator()
-      while (it.hasNext)
-        if (it.next().sparkSession.sparkContext.isStopped) it.remove()
-    }
-    internalPersists.put(cached.queryExecution.analyzed, cached)
-    cached
-  }
-
-  /** Unpersist a library-internal frame AND drop its registry entry — the
-    * release path for operators that free their own kernel base eagerly
-    * (`materialize = true` dedup, the stored-corpus precompute). Keeps the
-    * 256-entry registry from filling with already-released frames. Safe on
-    * an unregistered frame (plain unpersist). */
-  private[graft] def deregisterInternalPersist(cached: DataFrame): Unit = {
-    val plan = cached.queryExecution.analyzed
-    internalPersists.synchronized {
-      val it = internalPersists.keySet().iterator()
-      while (it.hasNext) if (it.next().sameResult(plan)) it.remove()
-    }
-    cached.unpersist(false)
   }
 
   /** Pin the exchange feeding an EXPLODING equi-self-join to the session
@@ -615,14 +636,12 @@ object ScaleOps {
     // the caller's recompute-vs-materialize trade (`persistInput`, see
     // scaladoc). A plan carrying rand()/uuid()-class expressions would
     // silently renumber on recompute, so THAT case always freezes a
-    // localCheckpoint (fail-stop on block loss beats corruption); release
-    // via [[releaseCheckpointBlocks]].
+    // [[cut]] (fail-stop on block loss beats corruption); the caller
+    // releases the result frame, which frees it.
     val nondetInput = hasNondeterministicPlan(perV)
     val cached =
-      if (nondetInput)
-        registerInternalCheckpoint(perV.localCheckpoint())
-      else if (persistInput) registerInternalPersist(
-        perV.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      if (nondetInput) cut(perV)
+      else if (persistInput) persisted(perV)
       else perV
     // split points: caller-supplied hint first (zero jobs), then footer
     // statistics when `order` is a plain attribute tracing to one parquet
@@ -719,7 +738,7 @@ object ScaleOps {
     // everything collects to plain Scala values before returning, so any
     // internal checkpoint (nondeterministic-lineage inputs) must release
     // HERE — the caller never sees `cum`
-    try {
+    releasing(cum) {
       val n = grand.head
       if (n == 0) return (0L, Seq.empty)
       val targets = ranksOf(n).filter(t => t >= 1 && t <= n).distinct.sorted
@@ -736,7 +755,7 @@ object ScaleOps {
         .select(col("__rc_v"))
         .collect().map(_.getDouble(0))
       (n, hits.distinct.sorted.toSeq)
-    } finally releaseCheckpointBlocks(cum)
+    }
   }
 
   /** Pooled value CDF of two samples — the one front end of the two-sample
@@ -750,8 +769,8 @@ object ScaleOps {
     * `(v, n_a, n_b, _ea, _eb, _rank)` — `_ea`/`_eb` count each side's
     * values strictly below `v`, `_rank` is the 0-based rank of `v` among
     * the pooled distinct values — and the three totals come free from the
-    * cumsum's totals pass. `cum` may read a library persist: release it
-    * with [[releaseCheckpointBlocks]] once consumed.
+    * cumsum's totals pass. `cum` may read a library persist: consume it
+    * inside [[releasing]]`(cum)`.
     *
     * Bucket splits come from the RAW per-side columns (parquet footer
     * statistics — zero jobs): the post-join table can never trace to a
@@ -796,6 +815,37 @@ object ScaleOps {
       Seq("n_a", "n_b", "__one"), Seq("_ea", "_eb", "_rank"), hint,
       persistInput = hint.isEmpty)
     (cum.drop("__one"), grand(0), grand(1), grand(2))
+  }
+
+  /** The k-group rank front end of [[graft.profile.StatTests.kruskalWallis]],
+    * `dunnTest` and `jonckheereTerpstra`: per-(group, value) counts `c`
+    * of `gv` (complete-case `(g: string, v: double)` rows), per-value
+    * counts, ONE persisted [[withExclusiveRunningSums]]. With `groups`
+    * empty (KW, Dunn) it returns `(v, g, c, _r, _t)` — each count beside
+    * the average rank `_r` of `v` and the tie size `_t` — and `Seq(n)`.
+    * With `groups` listed (JT) the counts pivot to `_c{i}` per group in
+    * that order and it returns the cumsum frame (`_e{i}`: the group's
+    * values below `v`) and the group sizes. Consume the frame inside
+    * [[releasing]]`(frame)`. */
+  private[graft] def groupValueRanks(gv: DataFrame,
+      groups: Seq[String] = Nil): (DataFrame, Seq[Long]) = {
+    val perGV = gv.groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
+    if (groups.isEmpty) {
+      val perV = perGV.groupBy(col("v")).agg(sum(col("c")).as("cnt"))
+      val (cum, grand) = withExclusiveRunningSums(
+        perV, col("v"), Seq("cnt"), Seq("_before"))
+      val ranks = cum.select(col("v"),
+        (col("_before") + (col("cnt") + 1) / lit(2.0)).as("_r"),
+        col("cnt").cast("double").as("_t"))
+      (perGV.join(ranks, Seq("v")), grand)
+    } else {
+      val perGroup = groups.indices.map(i =>
+        coalesce(sum(when(col("g") === groups(i), col("c"))), lit(0L))
+          .as(s"_c$i"))
+      val perV = perGV.groupBy(col("v")).agg(perGroup.head, perGroup.tail: _*)
+      withExclusiveRunningSums(perV, col("v"),
+        groups.indices.map(i => s"_c$i"), groups.indices.map(i => s"_e$i"))
+    }
   }
 
   /** The shared ⌈i·n/bins⌉ rank spine (i = 1..bins−1) every

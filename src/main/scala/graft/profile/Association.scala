@@ -764,10 +764,10 @@ object Association {
     // and agreement subtrees otherwise each replay the full input scan —
     // with a per-row kernel in the label expression (q251 feeds langId
     // through here) that was 3-4 evaluations of the kernel per row
-    val cells = graft.ops.ScaleOps.cutLineageBounded(df
+    val cells = graft.ops.ScaleOps.cut(df
       .filter(col(a).isNotNull && col(b).isNotNull)
       .groupBy(col(a).cast("string").as("va"), col(b).cast("string").as("vb"))
-      .agg(count(lit(1)).cast("double").as("o")), reliable = false)
+      .agg(count(lit(1)).cast("double").as("o")))
     val ma = cells.groupBy(col("va")).agg(sum(col("o")).as("ca"))
     val mb = cells.groupBy(col("vb")).agg(sum(col("o")).as("cb"))
     // pe = Σ_label (ca/n)(cb/n) over labels PRESENT FOR BOTH labelers
@@ -1005,58 +1005,59 @@ object Association {
     // contingency pass (measured ~6 scans for q342 at sf0.1). The cache
     // is smaller than the input (3 numeric columns, distinct pairs only)
     // and releases as soon as the bins²-bounded contingency checkpoints.
-    val pairCells = graft.ops.ScaleOps.registerInternalPersist(
-      base.groupBy(col("va"), col("vb")).agg(count(lit(1)).as("pc"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    def cuts(c: String): Seq[Double] = {
-      val counts = pairCells.groupBy(col(c).as("v"))
-        .agg(sum(col("pc")).as("cnt"))
-      graft.ops.ScaleOps.rankCutpoints(counts, "v", "cnt",
-        graft.ops.ScaleOps.quantileRanks(bins))._2
-    }
-    val (ca, cb) = (cuts("va"), cuts("vb"))
+    val pairCells = graft.ops.ScaleOps.persisted(
+      base.groupBy(col("va"), col("vb")).agg(count(lit(1)).as("pc")))
     import spark.implicits._
     def out(n: Long, binsA: Long, binsB: Long, mi: Option[Double],
         nmi: Option[Double]) = Seq((n, binsA, binsB, mi, nmi))
       .toDF("n", "bins_a", "bins_b", "mi_nats", "nmi")
-    if (ca.isEmpty && cb.isEmpty && pairCells.isEmpty) {
-      graft.ops.ScaleOps.deregisterInternalPersist(pairCells)
-      return out(0L, 0L, 0L, None, None)
-    }
-    def binOf(c: String, cs: Seq[Double]) =
-      cs.foldLeft(lit(0)) { (acc, cut) =>
-        acc + when(col(c) > cut, 1).otherwise(0)
+    val cells = graft.ops.ScaleOps.releasing(pairCells) {
+      def cuts(c: String): Seq[Double] = {
+        val counts = pairCells.groupBy(col(c).as("v"))
+          .agg(sum(col("pc")).as("cnt"))
+        graft.ops.ScaleOps.rankCutpoints(counts, "v", "cnt",
+          graft.ops.ScaleOps.quantileRanks(bins))._2
       }
-    // bins²-bounded — checkpointing cuts the lineage so the marginal and
-    // total aggregates below (four separate subtrees) read ≤ bins² rows
-    // instead of each replaying the contingency aggregation
-    val cells = graft.ops.ScaleOps.cutLineageBounded(pairCells
-      .select(binOf("va", ca).as("ba"), binOf("vb", cb).as("bb"), col("pc"))
-      .groupBy(col("ba"), col("bb"))
-      .agg(sum(col("pc")).cast("double").as("o")), reliable = false)
-    graft.ops.ScaleOps.deregisterInternalPersist(pairCells)
-    val ma = cells.groupBy(col("ba")).agg(sum(col("o")).as("ra"))
-    val mb = cells.groupBy(col("bb")).agg(sum(col("o")).as("cb2"))
-    val totals = cells.agg(sum(col("o")).as("nn"),
-      count_distinct(col("ba")).as("ka"), count_distinct(col("bb")).as("kb"))
-    val r = cells.join(broadcast(ma), "ba").join(broadcast(mb), "bb")
-      .crossJoin(broadcast(totals))
-      .agg(first(col("nn")).cast("long").as("n"),
-        first(col("ka")).as("bins_a"), first(col("kb")).as("bins_b"),
-        sum(col("o") / col("nn") *
-          log(col("o") * col("nn") / (col("ra") * col("cb2")))).as("mi_nats"))
-      .crossJoin(broadcast(
-        ma.crossJoin(broadcast(totals.select(col("nn").as("_t"))))
-          .agg((-sum(col("ra") / col("_t") * log(col("ra") / col("_t"))))
-            .as("_ha"))))
-      .crossJoin(broadcast(
-        mb.crossJoin(broadcast(totals.select(col("nn").as("_t"))))
-          .agg((-sum(col("cb2") / col("_t") * log(col("cb2") / col("_t"))))
-            .as("_hb"))))
-      .select(col("n"), col("bins_a"), col("bins_b"), col("mi_nats"),
-        when(col("_ha") > 0 && col("_hb") > 0,
-          col("mi_nats") / sqrt(col("_ha") * col("_hb"))).as("nmi"))
-      .head()
+      val (ca, cb) = (cuts("va"), cuts("vb"))
+      if (ca.isEmpty && cb.isEmpty && pairCells.isEmpty)
+        return out(0L, 0L, 0L, None, None)
+      def binOf(c: String, cs: Seq[Double]) =
+        cs.foldLeft(lit(0)) { (acc, cut) =>
+          acc + when(col(c) > cut, 1).otherwise(0)
+        }
+      // bins²-bounded — checkpointing cuts the lineage so the marginal and
+      // total aggregates below (four separate subtrees) read ≤ bins² rows
+      // instead of each replaying the contingency aggregation
+      graft.ops.ScaleOps.cut(pairCells
+        .select(binOf("va", ca).as("ba"), binOf("vb", cb).as("bb"), col("pc"))
+        .groupBy(col("ba"), col("bb"))
+        .agg(sum(col("pc")).cast("double").as("o")))
+    }
+    // the contingency is read to the driver: release its cut on every exit
+    val r = graft.ops.ScaleOps.releasing(cells) {
+      val ma = cells.groupBy(col("ba")).agg(sum(col("o")).as("ra"))
+      val mb = cells.groupBy(col("bb")).agg(sum(col("o")).as("cb2"))
+      val totals = cells.agg(sum(col("o")).as("nn"),
+        count_distinct(col("ba")).as("ka"), count_distinct(col("bb")).as("kb"))
+      cells.join(broadcast(ma), "ba").join(broadcast(mb), "bb")
+        .crossJoin(broadcast(totals))
+        .agg(first(col("nn")).cast("long").as("n"),
+          first(col("ka")).as("bins_a"), first(col("kb")).as("bins_b"),
+          sum(col("o") / col("nn") *
+            log(col("o") * col("nn") / (col("ra") * col("cb2")))).as("mi_nats"))
+        .crossJoin(broadcast(
+          ma.crossJoin(broadcast(totals.select(col("nn").as("_t"))))
+            .agg((-sum(col("ra") / col("_t") * log(col("ra") / col("_t"))))
+              .as("_ha"))))
+        .crossJoin(broadcast(
+          mb.crossJoin(broadcast(totals.select(col("nn").as("_t"))))
+            .agg((-sum(col("cb2") / col("_t") * log(col("cb2") / col("_t"))))
+              .as("_hb"))))
+        .select(col("n"), col("bins_a"), col("bins_b"), col("mi_nats"),
+          when(col("_ha") > 0 && col("_hb") > 0,
+            col("mi_nats") / sqrt(col("_ha") * col("_hb"))).as("nmi"))
+        .head()
+    }
     def opt(o: Int) = Option.when(!r.isNullAt(o))(r.getDouble(o))
     out(r.getLong(0), r.getLong(1), r.getLong(2), opt(3), opt(4))
   }

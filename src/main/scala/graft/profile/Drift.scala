@@ -262,10 +262,8 @@ object Drift {
     // persist rides the internal registry: the harness's post-consume
     // releaseCheckpointBlocks / clearCache drops it (the same
     // caller-unpersist contract as the dedup kernel bases).
-    val withP = ks.withColumn("p_value",
-      ksPValue(sqrt(ne) * col("ks")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(graft.ops.ScaleOps.registerInternalPersist)
+    val withP = graft.ops.ScaleOps.persisted(ks.withColumn("p_value",
+      ksPValue(sqrt(ne) * col("ks"))))
     // BH step-up over the m group p-values: distinct-p counts + inclusive
     // cumulative rank (= BH's largest-index-in-tie convention). byP is a
     // cheap agg over the PERSISTED battery, so the cumsum skips its own
@@ -388,7 +386,7 @@ object Drift {
     * shared deterministic-bucket cumsum for inclusive CDFs, one reduce. */
   def cramerVonMises(a: DataFrame, b: DataFrame, column: String): DataFrame = {
     val (cum, na, nb, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
-    try {
+    graft.ops.ScaleOps.releasing(cum) {
       val spark = a.sparkSession
       import spark.implicits._
       // stats = (t, t_expected, z) once both sides hold values
@@ -408,7 +406,7 @@ object Drift {
       val varT = (bigN + 1) / (45 * bigN * bigN) *
         (4 * m * nn * bigN - 3 * (m * m + nn * nn) - 2 * m * nn) / (4 * m * nn)
       out(Some((t, et, Option.when(varT > 0)((t - et) / math.sqrt(varT)))))
-    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    }
   }
 
 
@@ -430,7 +428,7 @@ object Drift {
     * window, so no single-partition stall on high-cardinality columns. */
   def wasserstein1(a: DataFrame, b: DataFrame, column: String): DataFrame = {
     val (cum, na, nb, nValues) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
-    try {
+    graft.ops.ScaleOps.releasing(cum) {
       val spark = a.sparkSession
       import spark.implicits._
       def out(w1: Option[Double], w1Norm: Option[Double]) =
@@ -447,7 +445,7 @@ object Drift {
       val w1 = agg.getDouble(0)
       val range = agg.getDouble(2) - agg.getDouble(1)
       out(Some(w1), Option.when(range > 0)(w1 / range))
-    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    }
   }
 
   /** Each pooled distinct value `v` beside its successor `_vNext`, with both
@@ -520,7 +518,7 @@ object Drift {
     * equi-join. */
   def energyDistance(a: DataFrame, b: DataFrame, column: String): DataFrame = {
     val (cum, na, nb, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
-    try {
+    graft.ops.ScaleOps.releasing(cum) {
       val spark = a.sparkSession
       import spark.implicits._
       def out(e2: Option[Double]) =
@@ -532,7 +530,7 @@ object Drift {
           .as("_i"))
         .head()
       out(Some(if (agg.isNullAt(0)) 0.0 else 2 * agg.getDouble(0)))
-    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    }
   }
 
 
@@ -647,7 +645,7 @@ object Drift {
     * hinted), a max reduce. No global window, no row-sized state. */
   def kuiperTest(a: DataFrame, b: DataFrame, column: String): DataFrame = {
     val (cum, ta, tb, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
-    try {
+    graft.ops.ScaleOps.releasing(cum) {
       val spark = a.sparkSession
       import spark.implicits._
       // stats = (d_plus, d_minus, v, p_value) once both sides hold values
@@ -680,7 +678,7 @@ object Drift {
         math.min(1.0, math.max(0.0, 2.0 * acc))
       }
       out(Some((dp, dm, v, p)))
-    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    }
   }
 
 
@@ -704,7 +702,7 @@ object Drift {
     * g = H_N^(2) − 2H_{N−1}/N − 1/N²) — no driver loop, no N bound. */
   def andersonDarling2(a: DataFrame, b: DataFrame, column: String): DataFrame = {
     val (cum, na, nb, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
-    try {
+    graft.ops.ScaleOps.releasing(cum) {
       val bigN = na + nb
       val spark = a.sparkSession
       import spark.implicits._
@@ -748,7 +746,7 @@ object Drift {
         ((nD - 1) * (nD - 2) * (nD - 3))
       val sigma = math.sqrt(var2)
       out(Option.when(!(var2 <= 0))((a2, sigma, (a2 - (k - 1)) / sigma)))
-    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    }
   }
 
 

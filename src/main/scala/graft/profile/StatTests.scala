@@ -55,7 +55,7 @@ object StatTests {
       val counts = arm.groupBy(col("__v")).agg(count(lit(1)).as("__c"))
       val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
         counts, col("__v"), Seq("__c"), Seq("__e"), persistInput = false)
-      try {
+      graft.ops.ScaleOps.releasing(cum) {
         val n = grand.head
         if (n == 0) return (0L, Map.empty)
         val targets = (1L to 9L).map(i => (i * n + 9) / 10)
@@ -67,7 +67,7 @@ object StatTests {
             .as("__r"))
           .collect().map(r => r.getLong(1) -> r.getDouble(0)).toMap
         (n, hits)
-      } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+      }
     }
     val (nT, qT) = armQuantiles(base.filter(col("__t") =!= 0))
     val (nC, qC) = armQuantiles(base.filter(col("__t") === 0))
@@ -850,7 +850,7 @@ object StatTests {
     * statistic resolves from ONE exclusive-cumsum pass per block, no
     * sort of the pair multiset. Exact integer weights throughout. */
   def hodgesLehmann(a: DataFrame, b: DataFrame, column: String,
-      maxPairCells: Long = 10000000L, reliable: Boolean = false): DataFrame = {
+      maxPairCells: Long = 10000000L): DataFrame = {
     // Both per-distinct-value cell tables CHECKPOINT (value-bounded —
     // the maxPairCells contract), and the difference table persists
     // through the cumsum (persistInput = true; distinct differences are
@@ -858,21 +858,18 @@ object StatTests {
     // previously the size probes, the cumsum totals pass and the final
     // order-statistic aggregate each re-derived the inputs and the
     // CELL CROSS JOIN ran twice (measured 27 sequential jobs for q376
-    // at sf0.1). `reliable` swaps local checkpoints for durable ones.
-    def cp(df: DataFrame): DataFrame =
-      graft.ops.ScaleOps.cutLineageBounded(df, reliable)
-    val ca = cp(a.filter(col(column).isNotNull)
+    // at sf0.1).
+    val ca = graft.ops.ScaleOps.cut(a.filter(col(column).isNotNull)
       .select(col(column).cast("double").as("va"))
       .groupBy(col("va")).agg(count(lit(1)).as("wa")))
-    val cb = cp(b.filter(col(column).isNotNull)
+    val cb = graft.ops.ScaleOps.cut(b.filter(col(column).isNotNull)
       .select(col(column).cast("double").as("vb"))
       .groupBy(col("vb")).agg(count(lit(1)).as("wb")))
-    // the difference table's plan holds both cell checkpoints and, once
-    // the cumsum has run, its persist: releasing it frees all three
     val diffs = cb.crossJoin(ca)
       .groupBy((col("vb") - col("va")).as("d"))
       .agg(sum(col("wb") * col("wa")).as("c"))
-    try {
+    // `diffs` is the cumsum's persist once the size checks pass
+    graft.ops.ScaleOps.releasing(ca, cb, diffs) {
       val spark = a.sparkSession
       import spark.implicits._
       val sizes = ca.agg(sum(col("wa")), count(lit(1))).head()
@@ -905,7 +902,7 @@ object StatTests {
         osAgg(kLo, "olo"), osAgg(kHi, "ohi")).head()
       val hl = (row.getDouble(0) + row.getDouble(1)) / 2.0
       out(nPairs, Some(hl), Some(row.getDouble(2)), Some(row.getDouble(3)))
-    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(diffs)
+    }
   }
 
   /** Delete-one-group jackknife SE for a RATIO metric — the honest error
@@ -994,7 +991,7 @@ object StatTests {
       .groupBy(col("v")).agg(count(lit(1)).as("c"))
     val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
       cells, col("v"), Seq("c"), Seq("b"), persistInput = false)
-    try {
+    graft.ops.ScaleOps.releasing(cum) {
       val n = grand(0)
       val spark = df.sparkSession
       import spark.implicits._
@@ -1034,7 +1031,7 @@ object StatTests {
         2.0 * num.toDouble / (n.toDouble * t.toDouble) - (n + 1.0) / n,
         (t - bd(2)).toDouble / t.toDouble,
         (t - bd(3)).toDouble / t.toDouble)))
-    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    }
   }
 
 
@@ -1065,11 +1062,12 @@ object StatTests {
     // double because cnt³ crosses Long range at ~2M rows per value (ANSI
     // overflow would error) — the tie CORRECTION tolerates double rounding
     val cntD = cnt.cast("double")
-    val agg = try cum.agg(
-      sum(col("n_a") * avgRank).as("_ra"),
-      sum(cntD * cntD * cntD - cntD).as("_ties"))
-      .head()
-    finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    val agg = graft.ops.ScaleOps.releasing(cum) {
+      cum.agg(
+        sum(col("n_a") * avgRank).as("_ra"),
+        sum(cntD * cntD * cntD - cntD).as("_ties"))
+        .head()
+    }
     val spark = a.sparkSession
     import spark.implicits._
     // (u_a, u_b, z) once both sides hold values
@@ -1350,15 +1348,27 @@ object StatTests {
     (r.getLong(0), d(1), d(2))
   }
 
+  /** The complete-case `(g, v)` rows of the k-group tests: `groupCol`
+    * cast to string, `valueCol` to double, rows with either NULL dropped. */
+  private def groupValues(df: DataFrame, groupCol: String,
+      valueCol: String): DataFrame = df
+    .select(col(groupCol).cast("string").as("g"),
+      col(valueCol).cast("double").as("v"))
+    .filter(col("g").isNotNull && col("v").isNotNull)
+
+  /** Per group of a [[graft.ops.ScaleOps.groupValueRanks]] table:
+    * `(g, ng, rg, tg)` = count, rank sum and tie mass Σ(t²−1)·c. */
+  private def groupRankSums(ranked: DataFrame): DataFrame = ranked
+    .groupBy(col("g"))
+    .agg(sum(col("c")).as("ng"), sum(col("c") * col("_r")).as("rg"),
+      sum((col("_t") * col("_t") - 1) * col("c")).as("tg"))
+
   /** Per-group `(g, ng, s, q)` = (label, count, Σv, Σv²) of `valueCol`
     * by the string-cast `groupCol`, complete cases only — the one moment
     * pass of the k-group tests (a partial aggregation, so the shuffle is
     * bounded by the group count). */
   private def groupMoments(df: DataFrame, groupCol: String,
-      valueCol: String): DataFrame = df
-    .select(col(groupCol).cast("string").as("g"),
-      col(valueCol).cast("double").as("v"))
-    .filter(col("g").isNotNull && col("v").isNotNull)
+      valueCol: String): DataFrame = groupValues(df, groupCol, valueCol)
     .groupBy(col("g"))
     .agg(count(lit(1)).as("ng"), sum(col("v")).as("s"),
       sum(col("v") * col("v")).as("q"))
@@ -1498,10 +1508,7 @@ object StatTests {
     * broadcast join back, then the [[anovaF]] moment pass — two scans. */
   def brownForsythe(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val base = df
-      .select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
+    val base = groupValues(df, groupCol, valueCol)
     val med = base.groupBy(col("g"))
       .agg(percentile(col("v"), lit(0.5)).as("__m"))
     anovaF(base.join(broadcast(med), Seq("g"))
@@ -1526,27 +1533,16 @@ object StatTests {
     * t³ once per group sharing the value). */
   def kruskalWallis(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame = {
-    val gv = df
-      .select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
-    val perGV = gv.groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
-    val perV = perGV.groupBy(col("v")).agg(sum(col("c")).as("cnt"))
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      perV, col("v"), Seq("cnt"), Seq("_before"))
+    val (ranked, grand) = graft.ops.ScaleOps.groupValueRanks(
+      groupValues(df, groupCol, valueCol))
     val n = grand.head
-    val avgRank = col("_before") + (col("cnt") + 1) / lit(2.0)
-    val cntD = col("cnt").cast("double")
-    val ranks = cum.select(col("v"), avgRank.as("_r"), cntD.as("_t"))
-    val row = perGV.join(ranks, Seq("v"))
-      .groupBy(col("g"))
-      .agg(sum(col("c")).as("ng"), sum(col("c") * col("_r")).as("rg"),
-        sum((col("_t") * col("_t") - 1) * col("c")).as("tg"))
-      .agg(count(lit(1)).as("k"),
-        sum(col("rg") * col("rg") / col("ng")).as("_sr"),
-        sum(col("tg")).as("_ties"))
-      .head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    val row = graft.ops.ScaleOps.releasing(ranked) {
+      groupRankSums(ranked)
+        .agg(count(lit(1)).as("k"),
+          sum(col("rg") * col("rg") / col("ng")).as("_sr"),
+          sum(col("tg")).as("_ties"))
+        .head()
+    }
     val spark = df.sparkSession
     import spark.implicits._
     val k = if (row.isNullAt(0)) 0L else row.getLong(0)
@@ -1579,26 +1575,13 @@ object StatTests {
     * collected group table (`maxGroups` guards the k² driver loop). */
   def dunnTest(df: DataFrame, groupCol: String, valueCol: String,
       maxGroups: Int = 1000): DataFrame = {
-    val gv = df
-      .select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
-    val perGV = gv.groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
-    val perV = perGV.groupBy(col("v")).agg(sum(col("c")).as("cnt"))
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      perV, col("v"), Seq("cnt"), Seq("_before"))
+    val (ranked, grand) = graft.ops.ScaleOps.groupValueRanks(
+      groupValues(df, groupCol, valueCol))
     val n = grand.head
-    val avgRank = col("_before") + (col("cnt") + 1) / lit(2.0)
-    val ranks = cum.select(col("v"), avgRank.as("_r"),
-      col("cnt").cast("double").as("_t"))
-    val gstats = perGV.join(ranks, Seq("v"))
-      .groupBy(col("g"))
-      .agg(sum(col("c")).as("ng"), sum(col("c") * col("_r")).as("rg"),
-        sum((col("_t") * col("_t") - 1) * col("c")).as("tg"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
+    val gstats = graft.ops.ScaleOps.releasing(ranked) {
+      groupRankSums(ranked).collect()
+    }.map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
       .sortBy(_._1)
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
     require(gstats.length <= maxGroups,
       s"dunnTest: ${gstats.length} groups exceed maxGroups $maxGroups — " +
         "a k² post-hoc over that many groups is not a pairwise report")
@@ -1670,10 +1653,7 @@ object StatTests {
     * per-value column algebra. */
   def jonckheereTerpstra(df: DataFrame, groupCol: String, valueCol: String,
       groupOrder: Seq[String] = Seq.empty, maxGroups: Int = 100): DataFrame = {
-    val gv = df
-      .select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
+    val gv = groupValues(df, groupCol, valueCol)
     val groups: Seq[String] =
       if (groupOrder.nonEmpty) groupOrder
       else gv.select(col("g")).distinct().collect().map(_.getString(0))
@@ -1702,19 +1682,10 @@ object StatTests {
       require(unknown.isEmpty,
         s"groups not in groupOrder: ${unknown.toSeq.sorted.mkString(", ")}")
     }
-    val perGV = gv.groupBy(col("g"), col("v")).agg(count(lit(1)).as("c"))
-    // pivot the bounded group list to k per-value count columns
+    // the bounded group list pivots to k per-value count columns
+    val (cum, grand) = graft.ops.ScaleOps.groupValueRanks(gv, groups)
     val cntCols = groups.indices.map(i => s"_c$i")
-    val perV = perGV.groupBy(col("v"))
-      .agg(
-        coalesce(sum(when(col("g") === groups.head, col("c"))), lit(0L))
-          .as(cntCols.head),
-        groups.indices.tail.map(i =>
-          coalesce(sum(when(col("g") === groups(i), col("c"))), lit(0L))
-            .as(cntCols(i))): _*)
     val exCols = groups.indices.map(i => s"_e$i")
-    val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
-      perV, col("v"), cntCols, exCols)
     val n = grand.sum
     // J and tie masses in ONE reduce over the distinct-value table:
     // each later group b contributes c_b·Σ_{a<b}(e_a + c_a/2) at every v
@@ -1725,13 +1696,14 @@ object StatTests {
       col(cntCols(b)) * inner
     }.reduceOption[Column](_ + _).getOrElse(lit(0.0))
     val t = cntCols.map(col(_).cast("double")).reduce(_ + _)
-    val row = cum.agg(
-        sum(jExpr).as("j"),
-        sum(t * (t - 1) * (t * 2 + 5)).as("t1"),
-        sum(t * (t - 1) * (t - 2)).as("t2"),
-        sum(t * (t - 1)).as("t3"))
-      .head()
-    graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    val row = graft.ops.ScaleOps.releasing(cum) {
+      cum.agg(
+          sum(jExpr).as("j"),
+          sum(t * (t - 1) * (t * 2 + 5)).as("t1"),
+          sum(t * (t - 1) * (t - 2)).as("t2"),
+          sum(t * (t - 1)).as("t3"))
+        .head()
+    }
     if (n == 0 || row.isNullAt(0)) return out(n, None)
     val j = row.getDouble(0)
     val (t1, t2, t3) = (row.getDouble(1), row.getDouble(2), row.getDouble(3))
@@ -1769,12 +1741,13 @@ object StatTests {
     * cross Long at ~3M×3M rows); they are exact integers below 2^53. */
   def cliffsDelta(a: DataFrame, b: DataFrame, column: String): DataFrame = {
     val (cum, na, nb, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
-    val agg = try cum.agg(
-      sum(col("n_a").cast("double") * col("_eb")).as("_gt"),
-      sum(col("n_b").cast("double") * col("_ea")).as("_lt"),
-      sum(col("n_a").cast("double") * col("n_b")).as("_ties"))
-      .head()
-    finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    val agg = graft.ops.ScaleOps.releasing(cum) {
+      cum.agg(
+        sum(col("n_a").cast("double") * col("_eb")).as("_gt"),
+        sum(col("n_b").cast("double") * col("_ea")).as("_lt"),
+        sum(col("n_a").cast("double") * col("n_b")).as("_ties"))
+        .head()
+    }
     val spark = a.sparkSession
     import spark.implicits._
     // (gt, lt, ties) once both sides hold values
@@ -1817,7 +1790,7 @@ object StatTests {
         sum(when(col("d") > 0, 1L).otherwise(0L)).as("pos"))
     val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
       byAbs, col("v"), Seq("cnt"), Seq("_before"))
-    try {
+    graft.ops.ScaleOps.releasing(cum) {
       val n = grand.head
       val spark = df.sparkSession
       import spark.implicits._
@@ -1840,7 +1813,7 @@ object StatTests {
       val sigma2 = nD * (nD + 1) * (2 * nD + 1) / 24 - ties / 48
       out(Some((wp, wm,
         Option.when(sigma2 > 0)((wp - mu) / math.sqrt(sigma2)))))
-    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    }
   }
 
 
@@ -2098,7 +2071,7 @@ object StatTests {
     val (cum, grand) = graft.ops.ScaleOps.withExclusiveRunningSums(
       s, col("t"), Seq("y", "one"), Seq("_ey", "_ek"),
       persistInput = false)
-    try {
+    graft.ops.ScaleOps.releasing(cum) {
       val (sn, n) = (grand(0), grand(1))
       val spark = series.sparkSession
       import spark.implicits._
@@ -2120,7 +2093,7 @@ object StatTests {
         .limit(1).head()
       out(Some((best.getLong(0), best.getLong(1), best.getDouble(3),
         best.getDouble(2))))
-    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    }
   }
 
 
@@ -2760,10 +2733,7 @@ object StatTests {
     * conditional count; shuffles bounded by distinct values and group
     * count. */
   def moodMedianTest(df: DataFrame, groupCol: String, valueCol: String): DataFrame = {
-    val base = df
-      .select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"))
-      .filter(col("g").isNotNull && col("v").isNotNull)
+    val base = groupValues(df, groupCol, valueCol)
     val counts = base.groupBy(col("v")).agg(count(lit(1)).as("c"))
     // lower median = value at rank ⌈n/2⌉ of the sorted multiset — resolved
     // by the DISTRIBUTED two-phase cumsum over the distinct-value table
@@ -3180,7 +3150,7 @@ object StatTests {
     require(trimFrac >= 0 && trimFrac < 0.5,
       s"trimFrac must be in [0, 0.5): $trimFrac")
     val (cum, nA, nB, _) = graft.ops.ScaleOps.pooledValueCdf(a, b, column)
-    try {
+    graft.ops.ScaleOps.releasing(cum) {
       val spark = a.sparkSession
       import spark.implicits._
       // stats = (trimmed_mean_a, trimmed_mean_b, t_stat, df)
@@ -3217,7 +3187,7 @@ object StatTests {
       out(hA, hB, Option.when(dA + dB > 0)((tmA, tmB,
         (tmA - tmB) / math.sqrt(dA + dB),
         (dA + dB) * (dA + dB) / (dA * dA / (hA - 1) + dB * dB / (hB - 1)))))
-    } finally graft.ops.ScaleOps.releaseCheckpointBlocks(cum)
+    }
   }
 
 

@@ -117,38 +117,74 @@ class ComponentsSpec extends SparkSpecBase {
     assert(after.size <= 2, s"leaked caches on throw: $after")
   }
 
-  test("reliable checkpointDir mode: same results, checkpoint files land in dir") {
-    // executor-loss durability for cluster runs: with checkpointDir set the
-    // per-iteration lineage cut is a RELIABLE checkpoint (files in the dir
-    // survive executor loss) instead of localCheckpoint's executor blocks
+  test("durable mode: checkpoint files written and results unchanged") {
+    // the durability rule: a lineage cut is a reliable checkpoint exactly
+    // when the SparkContext has a checkpoint directory. Each operator
+    // below cuts lineage; run it without, then with, the directory
+    import graft.operators.{Behavior, GraphFeatures}
+    import graft.profile.{Association, StatTests}
+    val vertices = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L).toDF("id")
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L), (10L, 11L),
+      (11L, 12L), (10L, 12L)).toDF("id_a", "id_b")
+    val durations = Seq((1L, false, "A"), (2L, true, "A"), (3L, false, "A"),
+      (5L, false, "A"), (2L, false, "B"), (3L, true, "B"), (4L, false, "B"),
+      (6L, false, "B")).toDF("dur", "cens", "g")
+    val fit = (for (x <- Seq(-1.0, 0.0, 1.0); i <- 1 to 10) yield {
+      val u = (i - 0.5) / 10.0
+      (math.max(1L, math.round(math.exp(3.0 + 0.5 * x +
+        0.5 * math.log(-math.log(1.0 - u))))), i % 4 == 0, x)
+    }).toDF("dur", "cens", "x")
+    val labels = (1 to 40).map(i => (i % 3, (i * 7) % 5 % 3, i.toDouble,
+      (i * i % 11).toDouble)).toDF("a", "b", "x", "y")
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+      (2L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+      (3L, "completely different content about spark query engines and columnar formats"))
+      .toDF("doc_id", "text")
+    val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (() => Components.pageRank(vertices, edges)),
+      "connectedComponents" -> (() =>
+        Components.connectedComponents(vertices, edges)),
+      "kCore" -> (() => GraphFeatures.kCore(edges, "id_a", "id_b", k = 2)),
+      "kmCurve" -> (() => Behavior.kmCurve(durations, "dur", "cens")),
+      "logRankTest" -> (() =>
+        Behavior.logRankTest(durations, "dur", "cens", "g")),
+      "rmst" -> (() => Behavior.rmst(durations, "dur", "cens", "g", tau = 5L)),
+      "weibullAft" -> (() =>
+        Behavior.weibullAft(fit, "dur", "cens", Seq("x"), iterations = 5)),
+      "cohenKappa" -> (() => Association.cohenKappa(labels, "a", "b")),
+      "numericMutualInfo" -> (() =>
+        Association.numericMutualInfo(labels, "x", "y", bins = 3)),
+      "hodgesLehmann" -> (() => StatTests.hodgesLehmann(
+        labels.filter($"a" === 0), labels.filter($"a" =!= 0), "y")),
+      "minhashLsh materialize" -> (() => Dedup.minhashLsh(docs, "doc_id",
+        "text", threshold = 0.5, materialize = true)),
+      "stableRowNumberGeneric" -> (() => graft.ops.IndexOps
+        .stableRowNumberGeneric(docs, Seq("text"), "rn")))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      try df.collect().map(_.toString).toSeq.sorted
+      finally graft.ops.ScaleOps.releaseCheckpointBlocks(df)
+    val local = ops.map { case (name, op) => name -> rows(op()) }.toMap
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toFile
+    def countFiles(f: java.io.File): Int =
+      if (f.isDirectory) f.listFiles.map(countFiles).sum else 1
     try {
-      val vertices = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L).toDF("id")
-      val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L))
-        .toDF("id_a", "id_b")
-      val local = Components.connectedComponents(vertices, edges)
-        .as[(Long, Long)].collect().toMap
-      val durable = Components.connectedComponents(vertices, edges,
-          checkpointDir = Some(dir.getAbsolutePath))
-        .as[(Long, Long)].collect().toMap
-      assert(durable == local, s"mode changed results: $durable vs $local")
-
-      val prLocal = Components.pageRank(vertices, edges, iterations = 2)
-        .as[(Long, Double)].collect().toMap
-      val prDurable = Components.pageRank(vertices, edges, iterations = 2,
-          checkpointDir = Some(dir.getAbsolutePath))
-        .as[(Long, Double)].collect().toMap
-      assert(prDurable == prLocal, s"pageRank mode changed results")
-
-      def countFiles(f: java.io.File): Int =
-        if (f.isDirectory) f.listFiles.map(countFiles).sum else 1
-      assert(countFiles(dir) > 0, "no reliable checkpoint files written")
+      spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
+      for ((name, op) <- ops) {
+        val before = countFiles(dir)
+        assert(rows(op()) == local(name), s"$name: durable mode changed results")
+        assert(countFiles(dir) > before, s"$name wrote no checkpoint files")
+      }
     } finally {
+      // local mode: a null directory resets the context to no directory,
+      // so later suites cut locally again
+      spark.sparkContext.setCheckpointDir(null)
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
       }
       rm(dir)
     }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
   }
 
   test("nearDupClusters collapses the transitive near-dup chain") {

@@ -175,21 +175,23 @@ class ParquetIOSpec extends SparkSpecBase {
       s"direct .read.parquet( outside ParquetIO: $found; allowed: $allowed")
   }
 
-  test("lineage cuts in src/main go through ScaleOps") {
-    // Files allowed a direct `localCheckpoint(` or `.checkpoint(eager`,
-    // with how many: each is always local, with no `reliable` flag to pass.
-    val allowed = Map(
-      // Dedup.released: the `materialize = true` result checkpoint
-      "graft/operators/Dedup.scala" -> 1,
-      // IndexOps' stable-row-number base: freezes the partition-id and
-      // monotonically_increasing_id assignment for its offsets job
-      "graft/ops/IndexOps.scala" -> 1)
-    val cut = """localCheckpoint\(|\.checkpoint\(eager""".r
+  test("every persist, lineage cut and release in src/main goes through ScaleOps") {
+    // one materialization scope: ScaleOps.persisted, cut and releasing
+    // pin and free every intermediate (and releaseCheckpointBlocks is the
+    // one public release), so no other file spells them out — no
+    // allow-list. LazyParquetFrame's user-facing `.cache()` is not a match
+    val pinning =
+      """localCheckpoint\(|\.checkpoint\(eager|\.persist\(|releaseCheckpointBlocks\(|registerInternal""".r
     val found = mainSources
-      .map { case (f, text) => f -> cut.findAllMatchIn(text).size }
+      .map { case (f, text) => f -> pinning.findAllMatchIn(text).size }
       .filter { case (f, n) => n > 0 && f != "graft/ops/ScaleOps.scala" }
-    assert(found == allowed,
-      s"lineage cuts outside ScaleOps: $found; allowed: $allowed")
+    assert(found.isEmpty, s"pinning outside ScaleOps: $found")
+    // durability is the SparkContext's checkpoint directory, not a knob
+    val knobs = """\b(reliable|checkpointDir)\s*:|setCheckpointDir""".r
+    val knobbed = mainSources
+      .map { case (f, text) => f -> knobs.findAllMatchIn(text).size }
+      .filter(_._2 > 0)
+    assert(knobbed.isEmpty, s"durability parameters in src/main: $knobbed")
   }
 
   test("SparkSession.builder is called in src/main only by GraftSession") {

@@ -211,31 +211,106 @@ class RegressionSpec extends SparkSpecBase {
       "releaseCheckpointBlocks must release the registered kernel base")
   }
 
-  test("two-sample rank tests release their pooled value CDF on every exit") {
-    // in-memory inputs have no parquet footer, so the pooled-value cumsum
-    // persists its joined table; each test reads its statistic to the
-    // driver and must release that persist itself, on the normal exit and
-    // on the empty-side one
-    import graft.profile.{Drift, StatTests}
+  test("collecting estimators release what they materialize on every exit") {
+    // each estimator reads its result to the driver, so whatever it
+    // persisted or cut on the way is unreachable from what it returns and
+    // must be released before it returns: on the normal exit, on an
+    // empty-side one and on a throw. In-memory inputs have no parquet
+    // footer, so the value cumsums take their persisted path
+    import graft.operators.{Behavior, CorpusStats, LinearModel}
+    import graft.profile.{Association, Drift, StatTests}
     val a = Seq(1.0, 2.0, 2.0, 3.0, 5.0, 8.0, 8.0, 9.0, 11.0, 12.0).toDF("x")
     val b = Seq(2.0, 3.0, 3.0, 4.0, 6.0, 7.0, 10.0, 10.0, 13.0).toDF("x")
-    val tests = Seq[(String, (DataFrame, DataFrame) => DataFrame)](
-      "cramerVonMises" -> (Drift.cramerVonMises(_, _, "x")),
-      "wasserstein1" -> (Drift.wasserstein1(_, _, "x")),
-      "energyDistance" -> (Drift.energyDistance(_, _, "x")),
-      "kuiperTest" -> (Drift.kuiperTest(_, _, "x")),
-      "andersonDarling2" -> (Drift.andersonDarling2(_, _, "x")),
-      "mannWhitneyU" -> (StatTests.mannWhitneyU(_, _, "x")),
-      "cliffsDelta" -> (StatTests.cliffsDelta(_, _, "x")),
-      "yuenTrimmedTest" -> (StatTests.yuenTrimmedTest(_, _, "x")))
-    for ((name, test) <- tests; (tag, bIn) <- Seq("" -> b, "empty b " -> b.limit(0))) {
+    val groups = Seq(("A", 1.0), ("A", 3.0), ("A", 4.0), ("B", 2.0),
+      ("B", 5.0), ("B", 5.0), ("C", 4.0), ("C", 6.0), ("C", 7.0))
+      .toDF("g", "v")
+    val xy = (1 to 30).map(i => (i.toString, i.toDouble, (i * 7 % 11).toDouble,
+      (i % 4).toLong, i % 3 == 0)).toDF("id", "x", "y", "n", "flag")
+    val scored = (1 to 20).map(i => (i % 3 == 0, (i % 7) / 7.0))
+      .toDF("label", "score")
+    val durations = Seq((1L, false, "A", 0.5), (2L, true, "A", 1.5),
+      (3L, false, "A", 0.0), (5L, false, "A", 2.0), (2L, false, "B", 1.0),
+      (3L, true, "B", 0.5), (4L, false, "B", 2.5), (6L, false, "B", 1.0))
+      .toDF("dur", "cens", "g", "x")
+    val docs = Seq((1L, "the cat sat on the mat", true),
+      (2L, "the dog sat on the log", false),
+      (3L, "a cat and a dog met", true)).toDF("id", "text", "label")
+    def twoSample(test: (DataFrame, DataFrame, String) => DataFrame) =
+      Seq(() => test(a, b, "x"), () => test(a, b.limit(0), "x"))
+    val runs = Seq[(String, Seq[() => DataFrame])](
+      "cramerVonMises" -> twoSample(Drift.cramerVonMises),
+      "wasserstein1" -> twoSample(Drift.wasserstein1),
+      "energyDistance" -> twoSample(Drift.energyDistance),
+      "kuiperTest" -> twoSample(Drift.kuiperTest),
+      "andersonDarling2" -> twoSample(Drift.andersonDarling2),
+      "mannWhitneyU" -> twoSample(StatTests.mannWhitneyU),
+      "cliffsDelta" -> twoSample(StatTests.cliffsDelta),
+      "yuenTrimmedTest" -> twoSample(StatTests.yuenTrimmedTest(_, _, _)),
+      "hodgesLehmann" -> twoSample(StatTests.hodgesLehmann(_, _, _)),
+      "kruskalWallis" -> Seq(() => StatTests.kruskalWallis(groups, "g", "v")),
+      "dunnTest" -> Seq(() => StatTests.dunnTest(groups, "g", "v")),
+      "jonckheereTerpstra" -> Seq(() =>
+        StatTests.jonckheereTerpstra(groups, "g", "v")),
+      "giniConcentration" -> Seq(() => StatTests.giniConcentration(xy, "n")),
+      "wilcoxonSignedRank" -> Seq(() =>
+        StatTests.wilcoxonSignedRank(xy, "x", "y")),
+      "thresholdAtKeepRate" -> Seq(() =>
+        LinearModel.thresholdAtKeepRate(scored, 0.5)),
+      "aucRoc" -> Seq(() => LinearModel.aucRoc(scored)),
+      "aucDeLong" -> Seq(() => LinearModel.aucDeLong(scored)),
+      "conformalInterval" -> Seq(() =>
+        LinearModel.conformalInterval(xy, "id", "x", "y")),
+      "logregTrainHashed" -> Seq(() => LinearModel.logregTrainHashed(docs,
+        "id", "text", col("label"), numBuckets = 8)),
+      "poissonGlm" -> Seq(() => LinearModel.poissonGlm(xy, "n", Seq("x"))),
+      "binomialGlm" -> Seq(() =>
+        LinearModel.binomialGlm(xy.withColumn("f", col("flag").cast("long")),
+          "f", Seq("x"))),
+      "logRankTest" -> Seq(() =>
+        Behavior.logRankTest(durations, "dur", "cens", "g")),
+      "rmst" -> Seq(() => Behavior.rmst(durations, "dur", "cens", "g", 5L)),
+      "cumulativeIncidence" -> Seq(() => Behavior.cumulativeIncidence(
+        durations.withColumn("k", when(!col("cens"), col("g"))), "dur", "k",
+        5L)),
+      "exponentialAft" -> Seq(() =>
+        Behavior.exponentialAft(durations, "dur", "cens", Seq("x"))),
+      "weibullAft" -> Seq(() => Behavior.weibullAft(durations, "dur", "cens",
+        Seq("x"), iterations = 3)),
+      "coxPHWithGradient" -> Seq(() =>
+        Behavior.coxPHWithGradient(durations, "dur", "cens", Seq("x"))),
+      "numericMutualInfo" -> Seq(() =>
+        Association.numericMutualInfo(xy, "x", "y", bins = 3)),
+      "bpeTrain" -> Seq(() => CorpusStats.bpeTrain(docs, "text", 2)),
+      "heapsLaw" -> Seq(() => CorpusStats.heapsLaw(docs, "id", "text", 3)))
+    // a require that fails after something is materialized
+    val throws = Seq[(String, () => DataFrame)](
+      "logRankTest on 3 groups" -> (() => Behavior.logRankTest(
+        durations.union(durations.withColumn("g", lit("C"))),
+        "dur", "cens", "g")),
+      "rmst on 40 groups" -> (() => Behavior.rmst((1 to 40).map(i =>
+        (i.toLong, false, s"g$i")).toDF("dur", "cens", "g"),
+        "dur", "cens", "g", 5L)),
+      "thresholdAtKeepRate on an empty set" -> (() =>
+        LinearModel.thresholdAtKeepRate(scored.limit(0), 0.5)),
+      "hodgesLehmann over maxPairCells" -> (() =>
+        StatTests.hodgesLehmann(a, b, "x", maxPairCells = 1L)))
+    // every case runs; the failure lists each one that left blocks behind
+    val leaks = Seq.newBuilder[String]
+    def checkReleased(name: String)(run: => Unit): Unit = {
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      assert(test(a, bIn).collect().length == 1)
+      run
       def leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
-      assert(leaked.isEmpty, s"$name ${tag}left ${leaked.size} cached RDD(s)")
+      if (leaked.nonEmpty) leaks += s"$name left ${leaked.size} cached RDD(s)"
     }
+    for ((name, calls) <- runs; (call, i) <- calls.zipWithIndex)
+      checkReleased(if (i == 0) name else s"$name on an empty side") {
+        call().collect()
+      }
+    for ((name, call) <- throws)
+      checkReleased(name)(intercept[IllegalArgumentException](call()))
+    assert(leaks.result().isEmpty, leaks.result().mkString("; "))
   }
 
   test("releaseCheckpointBlocks leaves CALLER-created caches untouched") {
