@@ -19,12 +19,10 @@ object AssociationTests {
     Case("q223_lang_source_assoc", (s, dir) => {
       graft.profile.Association
         .categoricalAssociation(read(s, dir, "documents"), "lang", "source")
-        .select(col("n"), col("k_a"), col("k_b"),
-          // + 0.0 folds IEEE −0.0 (near-independent data rounds the tiny
-          // mixed-sign MI sum — and a clamped χ² — to zero)
-          (round(col("chi2"), 4) + lit(0.0)).as("chi2"),
-          (round(col("cramers_v"), 6) + lit(0.0)).as("cramers_v"),
-          (round(col("mutual_info"), 6) + lit(0.0)).as("mutual_info"))
+        // rounded folds IEEE −0.0 (near-independent data rounds the tiny
+        // mixed-sign MI sum — and a clamped χ² — to zero)
+        .select(cols("n", "k_a", "k_b") ++ rounded(4)("chi2") ++
+          rounded(6)("cramers_v", "mutual_info"): _*)
     },
       // χ² over ALL kₐ·k_b cells from observed cells only: an empty cell's
       // term is its expected count e, and Σ_all e = n, so the empty-cell
@@ -60,10 +58,8 @@ object AssociationTests {
         .withColumn("len_bucket", floor(col("n_chars") / 500).cast("long"))
       graft.profile.Association
         .associationMatrix(d, Seq("lang", "source", "len_bucket"))
-        .select(col("col_a"), col("col_b"), col("n"), col("k_a"), col("k_b"),
-          (round(col("chi2"), 4) + lit(0.0)).as("chi2"),
-          (round(col("cramers_v"), 6) + lit(0.0)).as("cramers_v"),
-          (round(col("mutual_info"), 6) + lit(0.0)).as("mutual_info"))
+        .select(cols("col_a", "col_b", "n", "k_a", "k_b") ++ rounded(4)("chi2") ++
+          rounded(6)("cramers_v", "mutual_info"): _*)
         .orderBy(col("col_a"), col("col_b"))
     },
       // per-pair replay of the q223 chain over pair-suffixed CTEs, unioned
@@ -111,9 +107,7 @@ object AssociationTests {
     Case("q231_correlation_ratio", (s, dir) => {
       graft.profile.Association
         .correlationRatio(read(s, dir, "documents"), "lang", "n_chars")
-        .select(col("n"), col("k"),
-          (round(col("eta2"), 6) + lit(0.0)).as("eta2"),
-          (round(col("eta"), 6) + lit(0.0)).as("eta"))
+        .select(cols("n", "k") ++ rounded(6)("eta2", "eta"): _*)
     },
       // correlation ratio from the same moment identity (SS via sums and
       // sums of squares; integer-valued doubles sum exactly below 2^52)
@@ -143,8 +137,7 @@ object AssociationTests {
       graft.profile.Association
         .spearmanCorrelation(read(s, dir, "lineitem"),
           "l_quantity", "l_extendedprice")
-        .select(col("n"),
-          (round(col("rho"), 6) + lit(0.0)).as("rho"))
+        .select(cols("n") ++ rounded(6)("rho"): _*)
     },
       // Spearman = Pearson over average ranks; ranks from per-distinct-value
       // counts + exclusive cumsum, exactly the Spark construction
@@ -168,12 +161,8 @@ object AssociationTests {
     Case("q250_uncertainty", (s, dir) => {
       graft.profile.Association
         .uncertaintyCoefficient(read(s, dir, "documents"), "lang", "source")
-        .select(col("n"),
-          (round(col("h_a"), 6) + lit(0.0)).as("h_a"),
-          (round(col("h_b"), 6) + lit(0.0)).as("h_b"),
-          (round(col("mi"), 6) + lit(0.0)).as("mi"),
-          (round(col("u_a_given_b"), 6) + lit(0.0)).as("u_a_given_b"),
-          (round(col("u_b_given_a"), 6) + lit(0.0)).as("u_b_given_a"))
+        .select(cols("n") ++
+          rounded(6)("h_a", "h_b", "mi", "u_a_given_b", "u_b_given_a"): _*)
     },
       // entropies over observed cells only (each margin's mass splits across
       // its cells); U = MI / H per direction
@@ -207,10 +196,7 @@ object AssociationTests {
         .filter(col("text").isNotNull)
         .select(col("lang"), TextFunctions.langId(col("text")).as("pred"))
       graft.profile.Association.cohenKappa(docs, "lang", "pred")
-        .select(col("n"),
-          (round(col("po"), 6) + lit(0.0)).as("po"),
-          (round(col("pe"), 6) + lit(0.0)).as("pe"),
-          (round(col("kappa"), 6) + lit(0.0)).as("kappa"))
+        .select(cols("n") ++ rounded(6)("po", "pe", "kappa"): _*)
     },
       // q27's stopword-share language argmax replayed (ties break to the
       // lexicographically largest code), then the kappa contingency algebra
@@ -257,9 +243,7 @@ object AssociationTests {
         .select((col("lang") === "en").as("a"),
           (TextFunctions.langId(col("text")) === "en").as("b"))
       graft.profile.Association.mcnemar(docs, "a", "b")
-        .select(col("n"), col("n10"), col("n01"),
-          (round(col("chi2"), 6) + lit(0.0)).as("chi2"),
-          (round(col("chi2_cc"), 6) + lit(0.0)).as("chi2_cc"))
+        .select(cols("n", "n10", "n01") ++ rounded(6)("chi2", "chi2_cc"): _*)
     },
       // the q27 lang-id argmax replayed; discordant-pair chi2 with and
       // without the Edwards continuity correction
@@ -302,10 +286,9 @@ object AssociationTests {
       val li = read(s, dir, "lineitem").select(col("l_quantity").as("x"),
         floor(col("l_extendedprice") / 5000).as("y"))
       graft.profile.Association.kendallTau(li, "x", "y")
-        .select(col("n"), col("n_cells"), col("concordant"), col("discordant"),
-          col("ties_x"), col("ties_y"),
-          (round(col("tau_b"), 6) + lit(0.0)).as("tau_b"),
-          (round(col("z"), 6) + lit(0.0)).as("z"))
+        .select(
+          cols("n", "n_cells", "concordant", "discordant", "ties_x", "ties_y") ++
+          rounded(6)("tau_b", "z"): _*)
     },
       // same densified-grid dominance counting: two chained partitioned
       // prefix sums over the observed-x x observed-y grid, scipy's
@@ -360,10 +343,9 @@ object AssociationTests {
       val li = read(s, dir, "lineitem").select(col("l_quantity").as("x"),
         floor(col("l_extendedprice") / 5000).as("y"))
       graft.profile.Association.somersD(li, "x", "y")
-        .select(col("n"), col("n_cells"), col("concordant"),
-          col("discordant"), col("ties_x"), col("ties_y"),
-          (round(col("d_y_given_x"), 6) + lit(0.0)).as("d_y_given_x"),
-          (round(col("d_x_given_y"), 6) + lit(0.0)).as("d_x_given_y"))
+        .select(
+          cols("n", "n_cells", "concordant", "discordant", "ties_x", "ties_y") ++
+          rounded(6)("d_y_given_x", "d_x_given_y"): _*)
     },
       // the q278 grid CTEs with the Somers final ratios: predictor ties
       // leave the denominator per direction
@@ -412,11 +394,8 @@ object AssociationTests {
         .filter(col("lang").isNotNull && col("n_chars").isNotNull)
         .select((col("lang") === "de").as("a"), (col("n_chars") > 900).as("b"))
       graft.profile.Association.fisherExact(docs, "a", "b")
-        .select(col("a11"), col("a10"), col("a01"), col("a00"),
-          (round(col("odds_ratio"), 6) + lit(0.0)).as("odds_ratio"),
-          (round(col("p_two_sided"), 6) + lit(0.0)).as("p_two_sided"),
-          (round(col("p_greater"), 6) + lit(0.0)).as("p_greater"),
-          (round(col("p_less"), 6) + lit(0.0)).as("p_less"))
+        .select(cols("a11", "a10", "a01", "a00") ++
+          rounded(6)("odds_ratio", "p_two_sided", "p_greater", "p_less"): _*)
     },
       // same hypergeometric enumeration with DuckDB's lgamma; the 1e-7
       // relative slack keeps mirror-table inclusion engine-stable
@@ -472,10 +451,8 @@ object AssociationTests {
         .select((hour(col("ts")) / 6).cast("int").cast("double").as("w"),
           (col("event_type") === "error").as("s"))
       graft.profile.Association.cochranArmitage(ev, "w", "s")
-        .select(col("n"), col("k_groups"),
-          (round(col("slope_num"), 6) + lit(0.0)).as("slope_num"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("chi2_trend"), 6) + lit(0.0)).as("chi2_trend"))
+        .select(cols("n", "k_groups") ++
+          rounded(6)("slope_num", "z", "chi2_trend"): _*)
     },
       // k-bounded count table -> the exact one-degree trend algebra
       """WITH b AS (SELECT (hour(ts) // 6)::DOUBLE w, event_type = 'error' s
@@ -508,10 +485,8 @@ object AssociationTests {
         .select(col("user_id"), col("event_type"),
           (col("value") > 50.0).cast("int").as("succ"))
       graft.profile.Association.cochranQ(ev, "user_id", "event_type", "succ")
-        .select(col("n_items"), col("k"),
-          (round(col("q"), 6) + lit(0.0)).as("q"),
-          col("df"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n_items", "k") ++ rounded(6)("q") ++ cols("df") ++
+          rounded(6)("p_value"): _*)
     },
       // complete-block filter on the (user, type) cell table; the Q
       // identity over row/column totals; df = 4 closed-form survival
@@ -542,10 +517,8 @@ object AssociationTests {
     Case("q324_g_test", (s, dir) => {
       graft.profile.Association.gTest(read(s, dir, "documents"),
           "lang", "source")
-        .select(col("n"), col("k_a"), col("k_b"),
-          (round(col("g"), 6) + lit(0.0)).as("g"),
-          col("df"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n", "k_a", "k_b") ++ rounded(6)("g") ++ cols("df") ++
+          rounded(6)("p_value"): _*)
     },
       // observed-cell likelihood-ratio sum; df = 76 survival as the
       // 38-term lgamma series (same even-df closed form, different but
@@ -580,10 +553,8 @@ object AssociationTests {
         .groupBy(col("user_id"))
         .agg(aggs.head, aggs.tail: _*)
       graft.profile.Association.cronbachAlpha(wide, types.map(t => s"n_$t"))
-        .select(col("n"), col("k"),
-          (round(col("sum_item_var"), 6) + lit(0.0)).as("sum_item_var"),
-          (round(col("total_var"), 6) + lit(0.0)).as("total_var"),
-          (round(col("alpha"), 6) + lit(0.0)).as("alpha"))
+        .select(cols("n", "k") ++
+          rounded(6)("sum_item_var", "total_var", "alpha"): _*)
     },
       // the same per-user conditional counts and moment-sum variances
       """WITH u AS (SELECT user_id,
@@ -627,10 +598,8 @@ object AssociationTests {
         .agg(least(floor(avg(col("value")) / 25), lit(4.0)).as(out))
       val paired = rating("view", "ra").join(rating("click", "rb"), Seq("user_id"))
       graft.profile.Association.weightedKappa(paired, "ra", "rb")
-        .select(col("n"), col("k"),
-          (round(col("obs_penalty"), 6) + lit(0.0)).as("obs_penalty"),
-          (round(col("exp_penalty"), 6) + lit(0.0)).as("exp_penalty"),
-          (round(col("kappa_w"), 6) + lit(0.0)).as("kappa_w"))
+        .select(cols("n", "k") ++
+          rounded(6)("obs_penalty", "exp_penalty", "kappa_w"): _*)
     },
       // the same quantized ratings; ordinal index via row_number over the
       // distinct levels; quadratic penalties on observed and expected
@@ -669,9 +638,7 @@ object AssociationTests {
         .filter(col("n_chars").isNotNull && col("text").isNotNull)
         .withColumn("tok", TextFunctions.tokenCount(col("text")).cast("double"))
       graft.profile.Association.numericMutualInfo(docs, "n_chars", "tok")
-        .select(col("n"), col("bins_a"), col("bins_b"),
-          (round(col("mi_nats"), 6) + lit(0.0)).as("mi_nats"),
-          (round(col("nmi"), 6) + lit(0.0)).as("nmi"))
+        .select(cols("n", "bins_a", "bins_b") ++ rounded(6)("mi_nats", "nmi"): _*)
     },
       // the q326 rank-exact cutpoints on BOTH axes; the same plug-in MI
       """WITH b AS (SELECT n_chars::DOUBLE va,
@@ -713,10 +680,8 @@ object AssociationTests {
     Case("q306_fleiss_kappa", (s, dir) => {
       val ev = EventsSource.read(s, s"$dir/events.parquet")
       graft.profile.Association.fleissKappa(ev, "user_id", "event_type")
-        .select(col("n_items"), col("n_ratings"), col("k_categories"),
-          (round(col("p_bar"), 6) + lit(0.0)).as("p_bar"),
-          (round(col("p_e"), 6) + lit(0.0)).as("p_e"),
-          (round(col("kappa"), 6) + lit(0.0)).as("kappa"))
+        .select(cols("n_items", "n_ratings", "k_categories") ++
+          rounded(6)("p_bar", "p_e", "kappa"): _*)
     },
       // (user, event_type) contingency cells; items with >= 2 ratings;
       // the unequal-n Fleiss generalization
@@ -749,8 +714,7 @@ object AssociationTests {
         .groupBy(col("user_id"), col("event_type"))
         .agg(count(lit(1)).cast("double").as("cnt"))
       graft.profile.Association.friedmanTest(ev, "user_id", "event_type", "cnt")
-        .select(col("n_blocks"), col("k"),
-          (round(col("chi2"), 6) + lit(0.0)).as("chi2"), col("dof"))
+        .select(cols("n_blocks", "k") ++ rounded(6)("chi2") ++ cols("dof"): _*)
     },
       // within-block average ranks via RANGE-frame peer counts; the
       // tie-general chi2 with A - C in the denominator
@@ -792,11 +756,7 @@ object AssociationTests {
       val base = ord.join(li, col("o_orderkey") === col("l_orderkey"))
       graft.profile.Association.partialCorrelation(
           base, "o_totalprice", "n_lines", "sum_qty")
-        .select(col("n"),
-          (round(col("r_xy"), 6) + lit(0.0)).as("r_xy"),
-          (round(col("r_xz"), 6) + lit(0.0)).as("r_xz"),
-          (round(col("r_yz"), 6) + lit(0.0)).as("r_yz"),
-          (round(col("r_xy_given_z"), 6) + lit(0.0)).as("r_xy_given_z"))
+        .select(cols("n") ++ rounded(6)("r_xy", "r_xz", "r_yz", "r_xy_given_z"): _*)
     },
       // three Pearson marginals from one pass -> the first-order identity
       """WITH li AS (SELECT l_orderkey, count(*)::DOUBLE nl,
@@ -827,10 +787,8 @@ object AssociationTests {
           (col("user_id") % 2 === 0).as("even_user"),
           (col("event_type") === "error").as("is_err"))
       graft.profile.Association.cmhTest(ev, "dow", "even_user", "is_err")
-        .select(col("n_strata"), col("n"), col("sum_a"),
-          (round(col("sum_e_a"), 6) + lit(0.0)).as("sum_e_a"),
-          (round(col("chi2_cmh"), 6) + lit(0.0)).as("chi2_cmh"),
-          (round(col("or_mh"), 6) + lit(0.0)).as("or_mh"))
+        .select(cols("n_strata", "n", "sum_a") ++
+          rounded(6)("sum_e_a", "chi2_cmh", "or_mh"): _*)
     },
       // per-weekday 2x2 tables -> hypergeometric mean/variance, pooled with
       // the 0.5 continuity correction; MH odds ratio alongside
@@ -870,11 +828,8 @@ object AssociationTests {
           (col("user_id") % 2 === 0).as("even_user"),
           (col("event_type") === "error").as("is_err"))
       graft.profile.Association.breslowDay(ev, "dow", "even_user", "is_err")
-        .select(col("n_strata"), col("n"),
-          (round(col("or_mh"), 6) + lit(0.0)).as("or_mh"),
-          (round(col("bd_chi2"), 6) + lit(0.0)).as("bd_chi2"),
-          col("df"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n_strata", "n") ++ rounded(6)("or_mh", "bd_chi2") ++
+          cols("df") ++ rounded(6)("p_value"): _*)
     },
       // the q273 strata; MH odds ratio from 12-dp-quantized long sums, the
       // STRICTLY-in-bounds quadratic root per stratum (boundary strata —

@@ -11,7 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - deterministic ORDER BY on both sides;
   *  - multi-row double aggregates rounded (2–4 dp) on both sides — the
   *    underlying float error is ~1e-12 relative, far below the rounding
-  *    grain, so both engines land on the same rounded value;
+  *    grain, so both engines land on the same rounded value. The rounding
+  *    and its signed-zero fold are written once, in [[Support.rounded]]
+  *    (Spark) and as `round(x, k) + 0.0` (oracle); the A–S normal p-value
+  *    and the Wald table are [[Support.normalPValue]] and the SQL
+  *    fragments beside it ([[Support.asT]], [[Support.asPoly]],
+  *    [[Support.waldCtes]]);
   *  - timestamps exported as formatted strings (engine-native binary
   *    encodings differ);
   *  - DuckDB integer SUMs cast back to BIGINT (DuckDB widens to HUGEINT).

@@ -254,11 +254,8 @@ object Classifiers {
       val scored = LinearModel.logregScoreHashed(docs, "doc_id", "text",
         label = col("text").contains("spark"), weights = w, numBuckets = 64)
       LinearModel.liftTable(scored, bins = 10)
-        .select(col("bin"), col("n"), col("n_pos"),
-          (round(col("pos_rate"), 6) + lit(0.0)).as("pos_rate"),
-          col("cum_n"), col("cum_pos"),
-          (round(col("gain"), 6) + lit(0.0)).as("gain"),
-          (round(col("lift"), 6) + lit(0.0)).as("lift"))
+        .select(cols("bin", "n", "n_pos") ++ rounded(6)("pos_rate") ++
+          cols("cum_n", "cum_pos") ++ rounded(6)("gain", "lift"): _*)
         .gateOrdered(col("bin"))
     },
       // the q217 scoring replay -> distinct-score cumulatives -> tie-safe
@@ -299,9 +296,7 @@ object Classifiers {
       val scored = LinearModel.logregScoreHashed(docs, "doc_id", "text",
         label = col("text").contains("spark"), weights = w, numBuckets = 64)
       LinearModel.aucRoc(scored)
-        .select(col("n"), col("n_pos"),
-          (round(col("auc"), 6) + lit(0.0)).as("auc"),
-          (round(col("gini"), 6) + lit(0.0)).as("gini"))
+        .select(cols("n", "n_pos") ++ rounded(6)("auc", "gini"): _*)
     },
       // rank-based AUC over the replayed scores: average ranks from the
       // exclusive distinct-score cumsum, Mann-Whitney identity
@@ -336,11 +331,8 @@ object Classifiers {
       val scored = LinearModel.logregScoreHashed(docs, "doc_id", "text",
         label = col("text").contains("spark"), weights = w, numBuckets = 64)
       LinearModel.brierDecomposition(scored, bins = 10)
-        .select(col("n"),
-          (round(col("brier"), 6) + lit(0.0)).as("brier"),
-          (round(col("reliability"), 6) + lit(0.0)).as("reliability"),
-          (round(col("resolution"), 6) + lit(0.0)).as("resolution"),
-          (round(col("uncertainty"), 6) + lit(0.0)).as("uncertainty"))
+        .select(cols("n") ++
+          rounded(6)("brier", "reliability", "resolution", "uncertainty"): _*)
     },
       // Murphy decomposition over the q203 fixed-width decile bins; decimal
       // score sums make bin means engine-exact
@@ -377,12 +369,9 @@ object Classifiers {
       val scored = LinearModel.logregScoreHashed(docs, "doc_id", "text",
         label = col("text").contains("spark"), weights = w, numBuckets = 64)
       LinearModel.labelNoiseEstimate(scored)
-        .select(col("n"),
-          (round(col("t0"), 6) + lit(0.0)).as("t0"),
-          (round(col("t1"), 6) + lit(0.0)).as("t1"),
-          col("n_00"), col("n_01"), col("n_10"), col("n_11"),
-          (round(col("noise_0_to_1"), 6) + lit(0.0)).as("noise_0_to_1"),
-          (round(col("noise_1_to_0"), 6) + lit(0.0)).as("noise_1_to_0"))
+        .select(cols("n") ++ rounded(6)("t0", "t1") ++
+          cols("n_00", "n_01", "n_10", "n_11") ++
+          rounded(6)("noise_0_to_1", "noise_1_to_0"): _*)
     },
       // thresholds from exact decimal score sums; the margin tiebreak and
       // the abstention mirror the operator exactly
@@ -434,11 +423,8 @@ object Classifiers {
           TextFunctions.tokenCount(col("text")).cast("double").as("x"),
           col("n_chars").cast("double").as("y"))
       LinearModel.conformalInterval(docs, "doc_id", "x", "y", alpha = 0.1)
-        .select(col("n_train"), col("n_cal"), col("n_test"), col("alpha"),
-          (round(col("intercept"), 6) + lit(0.0)).as("intercept"),
-          (round(col("slope"), 6) + lit(0.0)).as("slope"),
-          (round(col("q_hat"), 6) + lit(0.0)).as("q_hat"),
-          (round(col("coverage"), 6) + lit(0.0)).as("coverage"))
+        .select(cols("n_train", "n_cal", "n_test", "alpha") ++
+          rounded(6)("intercept", "slope", "q_hat", "coverage"): _*)
     },
       // replay the md5 split, moment-sum OLS, row_number order statistic
       // and coverage reduce
@@ -486,11 +472,7 @@ object Classifiers {
       val scored = LinearModel.logregScoreHashed(docs, "doc_id", "text",
         label = col("text").contains("spark"), weights = w, numBuckets = 64)
       LinearModel.aucDeLong(scored)
-        .select(col("n"), col("n_pos"),
-          (round(col("auc"), 6) + lit(0.0)).as("auc"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("ci_lo"), 6) + lit(0.0)).as("ci_lo"),
-          (round(col("ci_hi"), 6) + lit(0.0)).as("ci_hi"))
+        .select(cols("n", "n_pos") ++ rounded(6)("auc", "se", "ci_lo", "ci_hi"): _*)
     },
       // q259's scored frame + the placement-variance algebra
       s"""WITH ${logregCtes(iterations = 4, buckets = 64, lr = 100.0)},
@@ -537,10 +519,8 @@ object Classifiers {
           (lit(1.0) / (lit(1.0) +
             exp((lit(400.0) - col("n_chars")) / 100.0))).as("s"))
       LinearModel.hosmerLemeshow(docs, "y", "s", bins = 10)
-        .select(col("n"), col("n_bins"),
-          (round(col("hl"), 6) + lit(0.0)).as("hl"),
-          col("df"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n", "n_bins") ++ rounded(6)("hl") ++ cols("df") ++
+          rounded(6)("p_value"): _*)
     },
       // identical logistic pseudo-score; decile cutpoints from the
       // distinct-score cumsum; df = 8 closed survival (4 terms)
@@ -578,10 +558,8 @@ object Classifiers {
           (lit(1.0) / (lit(1.0) +
             exp((lit(400.0) - col("n_chars")) / 100.0))).as("s"))
       LinearModel.isotonicCalibration(docs, "y", "s", bins = 20)
-        .select(col("bin"), col("n"),
-          (round(col("mean_score"), 6) + lit(0.0)).as("mean_score"),
-          (round(col("observed_rate"), 6) + lit(0.0)).as("observed_rate"),
-          (round(col("calibrated"), 6) + lit(0.0)).as("calibrated"))
+        .select(cols("bin", "n") ++
+          rounded(6)("mean_score", "observed_rate", "calibrated"): _*)
         .gateOrdered(col("bin"))
     },
       // identical score + rank-exact 20-bin cutpoints; the minimax isotonic
@@ -628,9 +606,7 @@ object Classifiers {
           (lit(1.0) / (lit(1.0) +
             exp((lit(400.0) - col("n_chars")) / 100.0))).as("s"))
       LinearModel.calibrationError(docs, "y", "s", bins = 10)
-        .select(col("n"), col("n_bins"),
-          (round(col("ece"), 6) + lit(0.0)).as("ece"),
-          (round(col("mce"), 6) + lit(0.0)).as("mce"))
+        .select(cols("n", "n_bins") ++ rounded(6)("ece", "mce"): _*)
     },
       // the q326 pseudo-score over fixed-width bins; weighted and max gaps
       """WITH b AS (SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END y,
@@ -656,10 +632,8 @@ object Classifiers {
         .withColumn("pred",
           when(col("doc_id") % 5 === 0, lit("en")).otherwise(col("lang")))
       LinearModel.confusionMatrix(docs, "lang", "pred")
-        .select(col("class"), col("n_actual"), col("n_pred"), col("tp"),
-          (round(col("precision"), 6) + lit(0.0)).as("precision"),
-          (round(col("recall"), 6) + lit(0.0)).as("recall"),
-          (round(col("f1"), 6) + lit(0.0)).as("f1"))
+        .select(cols("class", "n_actual", "n_pred", "tp") ++
+          rounded(6)("precision", "recall", "f1"): _*)
         .gateOrdered(col("class"))
     },
       // the same pseudo-predictor; cells + marginals + per-class PRF
@@ -693,11 +667,8 @@ object Classifiers {
         .withColumn("pred",
           when(col("doc_id") % 5 === 0, lit("en")).otherwise(col("lang")))
       LinearModel.classificationSummary(docs, "lang", "pred")
-        .select(col("n"), col("n_classes"),
-          (round(col("accuracy"), 6) + lit(0.0)).as("accuracy"),
-          (round(col("macro_precision"), 6) + lit(0.0)).as("macro_precision"),
-          (round(col("macro_recall"), 6) + lit(0.0)).as("macro_recall"),
-          (round(col("macro_f1"), 6) + lit(0.0)).as("macro_f1"))
+        .select(cols("n", "n_classes") ++
+          rounded(6)("accuracy", "macro_precision", "macro_recall", "macro_f1"): _*)
     },
       // macro over actual-present classes; sklearn zero_division = 0
       """WITH b AS (SELECT lang a,
@@ -737,15 +708,8 @@ object Classifiers {
         .select((col("lang") === "en").cast("int").as("y"),
           (col("doc_id") % 5 === 0 || col("lang") === "en").cast("int").as("p"))
       LinearModel.binaryDiagnostics(docs, "y", "p")
-        .select(col("n"), col("tp"), col("fp"), col("tn"), col("fn"),
-          (round(col("accuracy"), 6) + lit(0.0)).as("accuracy"),
-          (round(col("precision"), 6) + lit(0.0)).as("precision"),
-          (round(col("recall"), 6) + lit(0.0)).as("recall"),
-          (round(col("f1"), 6) + lit(0.0)).as("f1"),
-          (round(col("balanced_accuracy"), 6) + lit(0.0))
-            .as("balanced_accuracy"),
-          (round(col("youden_j"), 6) + lit(0.0)).as("youden_j"),
-          (round(col("mcc"), 6) + lit(0.0)).as("mcc"))
+        .select(cols("n", "tp", "fp", "tn", "fn") ++ rounded(6)("accuracy",
+          "precision", "recall", "f1", "balanced_accuracy", "youden_j", "mcc"): _*)
     },
       // one conditional-count pass; the same marginal-guarded panel
       """WITH b AS (SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END y,
@@ -793,8 +757,8 @@ object Classifiers {
         .filter(col("lang").isNotNull)
         .withColumn("y", (col("lang") === "en").cast("int"))
       LinearModel.targetEncodeLoo(docs, "doc_id", "source", "y")
-        .select(col("id").as("doc_id"), col("category").as("source"),
-          (round(col("encoded"), 6) + lit(0.0)).as("encoded"))
+        .select(Seq(col("id").as("doc_id"), col("category").as("source")) ++
+          rounded(6)("encoded"): _*)
         .gateOrdered(col("doc_id"))
     },
       // per-source (count, sum) + the global prior; the one LOO double

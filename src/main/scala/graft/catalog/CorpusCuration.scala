@@ -562,8 +562,7 @@ object CorpusCuration {
           sum(col("pass_alpha").cast("int")).as("pass_alpha"),
           sum(col("pass_stopwords").cast("int")).as("pass_stopwords"),
           sum(col("pass").cast("int")).as("pass_all"),
-          (round(avg(col("mean_word_len")), 6) + lit(0.0))
-            .as("avg_mean_word_len"))
+          roundedExpr(avg(col("mean_word_len")), 6).as("avg_mean_word_len"))
     },
       // identical counting conventions: \s+ tokens of the trimmed lowered
       // text, chr(10) lines, replace-based symbol counts
@@ -667,9 +666,8 @@ object CorpusCuration {
       Sampling.rakeWeights(read(s, dir, "documents"), "lang", "source",
           Seq("en" -> 0.4, "de" -> 0.15, "es" -> 0.15, "fr" -> 0.15,
             "zh" -> 0.15), iterations = 5)
-        .select(col("row_key"), col("col_key"), col("n"),
-          (round(col("weight"), 6) + lit(0.0)).as("weight"),
-          (round(col("cell_share"), 6) + lit(0.0)).as("cell_share"))
+        .select(cols("row_key", "col_key", "n") ++
+          rounded(6)("weight", "cell_share"): _*)
         .gateOrdered(col("row_key"), col("col_key"))
     },
       // the IPF replay (rakeCtes): 5 unrolled alternating-scaling rounds,
@@ -688,11 +686,8 @@ object CorpusCuration {
     Case("q378_neyman_allocation", (s, dir) => {
       Sampling.neymanAllocation(read(s, dir, "documents"), "lang",
           "n_chars", budget = 1000L)
-        .select(col("stratum"), col("n_rows"),
-          (round(col("stddev"), 6) + lit(0.0)).as("stddev"),
-          (round(col("weight_share"), 6) + lit(0.0)).as("weight_share"),
-          col("alloc"),
-          (round(col("rate"), 6) + lit(0.0)).as("rate"))
+        .select(cols("stratum", "n_rows") ++ rounded(6)("stddev", "weight_share") ++
+          cols("alloc") ++ rounded(6)("rate"): _*)
         .gateOrdered(col("stratum"))
     },
       // per-stratum exact integer moment sums, textbook sample stddev,
@@ -728,11 +723,8 @@ object CorpusCuration {
         "source", Seq("en" -> 0.4, "de" -> 0.15, "es" -> 0.15,
           "fr" -> 0.15, "zh" -> 0.15), iterations = 5)
       Sampling.designEffect(rake, "weight", Some("n"))
-        .select(col("n_units"),
-          (round(col("sum_w"), 6) + lit(0.0)).as("sum_w"),
-          (round(col("deff"), 6) + lit(0.0)).as("deff"),
-          (round(col("n_eff"), 6) + lit(0.0)).as("n_eff"),
-          (round(col("cv_weights"), 6) + lit(0.0)).as("cv_weights"))
+        .select(cols("n_units") ++
+          rounded(6)("sum_w", "deff", "n_eff", "cv_weights"): _*)
     },
       // the q358 IPF replay (rakeCtes w5), per-cell unit weight w/n, and
       // the 12/9-dp quantized Kish sums
@@ -766,12 +758,8 @@ object CorpusCuration {
         docs("lang") === rake("row_key") &&
           docs("source") === rake("col_key"))
       Sampling.weightedMeanSurvey(joined, "n_chars", "weight")
-        .select(col("n"),
-          (round(col("sum_w"), 6) + lit(0.0)).as("sum_w"),
-          (round(col("wmean"), 6) + lit(0.0)).as("wmean"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("ci_lo"), 6) + lit(0.0)).as("ci_lo"),
-          (round(col("ci_hi"), 6) + lit(0.0)).as("ci_hi"))
+        .select(cols("n") ++
+          rounded(6)("sum_w", "wmean", "se", "ci_lo", "ci_hi"): _*)
     },
       // the q358 IPF replay joined back onto documents by cell, then the
       // two-pass Hajek mean + linearized-residual reduce (ipwAte recipe)

@@ -282,10 +282,8 @@ object CorpusText {
     // mixture designer reads before trusting per-source weights
     Case("q233_concentration", (s, dir) => {
       CorpusStats.concentrationReport(read(s, dir, "documents"), "lang")
-        .select(col("n_rows"), col("n_keys"),
-          (round(col("gini"), 6) + lit(0.0)).as("gini"),
-          (round(col("hhi"), 6) + lit(0.0)).as("hhi"),
-          (round(col("top_share"), 6) + lit(0.0)).as("top_share"))
+        .select(cols("n_rows", "n_keys") ++
+          rounded(6)("gini", "hhi", "top_share"): _*)
     },
       // Gini over per-key counts: sum of i*x_i is order-invariant within
       // tied counts, so any deterministic row_number tiebreak agrees with
@@ -336,8 +334,7 @@ object CorpusText {
     Case("q245_source_divergence", (s, dir) => {
       CorpusStats.sourceDivergence(read(s, dir, "documents"),
           "text", "source", topV = 200)
-        .select(col("source"), col("n_tokens"),
-          (round(col("kl_nats"), 6) + lit(0.0)).as("kl_nats"))
+        .select(cols("source", "n_tokens") ++ rounded(6)("kl_nats"): _*)
         .orderBy(col("source"))
     },
       // same q72-convention tokenizer; OTHER bucket keyed by '' (impossible
@@ -367,9 +364,8 @@ object CorpusText {
     // unseen-vocabulary estimators from the term frequency-of-frequencies
     Case("q252_vocab_richness", (s, dir) => {
       CorpusStats.vocabRichness(read(s, dir, "documents"), "text")
-        .select(col("n_tokens"), col("n_types"), col("f1"), col("f2"),
-          (round(col("chao1"), 4) + lit(0.0)).as("chao1"),
-          (round(col("gt_unseen_mass"), 6) + lit(0.0)).as("gt_unseen_mass"))
+        .select(cols("n_tokens", "n_types", "f1", "f2") ++ rounded(4)("chao1") ++
+          rounded(6)("gt_unseen_mass"): _*)
     },
       // frequency-of-frequencies -> Chao1 + Good-Turing; same q72 tokenizer
       """WITH toks AS (SELECT unnest(list_filter(
@@ -396,8 +392,7 @@ object CorpusText {
       // k = 20: the synthetic corpus draws from a ~31-term pool, so the
       // estimator needs k + 1 <= vocabulary
       CorpusStats.hillTailIndex(read(s, dir, "documents"), "text", k = 20)
-        .select(col("k"), col("x_tail"),
-          (round(col("alpha"), 6) + lit(0.0)).as("alpha"))
+        .select(cols("k", "x_tail") ++ rounded(6)("alpha"): _*)
     },
       // top-51 counts under (count desc, term asc); boundary ties contribute
       // ln(1)=0 so the 51-row sum equals the top-50 sum exactly
@@ -416,9 +411,8 @@ object CorpusText {
     // ---- per-source lexical diversity: TTR + hapax share (CorpusStats) ----
     Case("q257_lexical_diversity", (s, dir) => {
       CorpusStats.lexicalDiversity(read(s, dir, "documents"), "text", "source")
-        .select(col("group").as("source"), col("n_tokens"), col("n_types"),
-          (round(col("ttr"), 6) + lit(0.0)).as("ttr"),
-          (round(col("hapax_rate"), 6) + lit(0.0)).as("hapax_rate"))
+        .select(Seq(col("group").as("source"), col("n_tokens"), col("n_types")) ++
+          rounded(6)("ttr", "hapax_rate"): _*)
         .orderBy(col("source"))
     },
       // per-source type/token/hapax counts; same q72 tokenizer
@@ -442,8 +436,7 @@ object CorpusText {
     Case("q258_burstiness", (s, dir) => {
       CorpusStats.termBurstiness(read(s, dir, "documents"), "doc_id", "text",
           k = 20)
-        .select(col("term"), col("total"), col("doc_freq"),
-          (round(col("vmr"), 6) + lit(0.0)).as("vmr"))
+        .select(cols("term", "total", "doc_freq") ++ rounded(6)("vmr"): _*)
         .gateOrdered(col("total").desc, col("term"))
     },
       // per-(term, doc) counts; zero docs enter the dispersion in closed
@@ -467,9 +460,7 @@ object CorpusText {
     Case("q263_pmi", (s, dir) => {
       CorpusStats.pmiCollocations(read(s, dir, "documents"), "text",
           k = 20, minCount = 5)
-        .select(col("w1"), col("w2"), col("count"),
-          (round(col("pmi"), 6) + lit(0.0)).as("pmi"),
-          (round(col("npmi"), 6) + lit(0.0)).as("npmi"))
+        .select(cols("w1", "w2", "count") ++ rounded(6)("pmi", "npmi"): _*)
         .gateOrdered(col("count").desc, col("w1"), col("w2"))
     },
       // adjacent bigram + unigram counts -> PMI/NPMI for the top-20
@@ -512,10 +503,8 @@ object CorpusText {
       val docs = read(s, dir, "documents")
         .withColumn("text", concat(col("text"), lit(" uid"), col("doc_id")))
       CorpusStats.heapsLaw(docs, "doc_id", "text", checkpoints = 10)
-        .select(col("i"), col("n_prefix"), col("v_types"),
-          (round(col("beta"), 6) + lit(0.0)).as("beta"),
-          (round(col("log_k"), 6) + lit(0.0)).as("log_k"),
-          (round(col("r2"), 6) + lit(0.0)).as("r2"))
+        .select(cols("i", "n_prefix", "v_types") ++
+          rounded(6)("beta", "log_k", "r2"): _*)
         .gateOrdered(col("i"))
     },
       // same doc_id-ordered token positions, first-occurrence minima,
@@ -562,11 +551,7 @@ object CorpusText {
         .filter(col("user_id").isNotNull)
         .groupBy(col("user_id")).agg(count(lit(1)).as("c"))
       CorpusStats.inequalityPanel(perUser, "c")
-        .select(col("n"),
-          (round(col("mean"), 6) + lit(0.0)).as("mean"),
-          (round(col("theil_t"), 6) + lit(0.0)).as("theil_t"),
-          (round(col("atkinson_1"), 6) + lit(0.0)).as("atkinson_1"),
-          (round(col("cv2"), 6) + lit(0.0)).as("cv2"))
+        .select(cols("n") ++ rounded(6)("mean", "theil_t", "atkinson_1", "cv2"): _*)
     },
       // one moment pass over the positive per-user loads
       """WITH u AS (SELECT count(*)::DOUBLE x FROM events
@@ -590,9 +575,8 @@ object CorpusText {
           docs.filter(col("doc_id") % 2 === 0),
           docs.filter(col("doc_id") % 2 === 1),
           "doc_id", "text", "lang")
-        .select(col("lang"), col("n_docs"), col("n_bigrams"),
-          (round(col("avg_nll"), 6) + lit(0.0)).as("avg_nll"),
-          (round(col("ppl"), 4) + lit(0.0)).as("ppl"))
+        .select(cols("lang", "n_docs", "n_bigrams") ++ rounded(6)("avg_nll") ++
+          rounded(4)("ppl"): _*)
         .gateOrdered(col("lang"))
     },
       // identical bigram extraction (toks[i], toks[i+1]), count tables,
@@ -637,8 +621,7 @@ object CorpusText {
         .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("term").asc).limit(500)
       CorpusStats.oovRate(docs, "text", "lang", ref, "term")
-        .select(col("lang"), col("n_tokens"), col("n_oov"),
-          (round(col("oov_rate"), 6) + lit(0.0)).as("oov_rate"))
+        .select(cols("lang", "n_tokens", "n_oov") ++ rounded(6)("oov_rate"): _*)
         .orderBy(col("lang"))
     },
       // top-500 en vocabulary (count desc, term asc — deterministic cut),

@@ -636,12 +636,8 @@ object DedupLinkage {
     Case("q268_fs_weights", (s, dir) => {
       Linkage.fellegiSunterWeights(fsPairs(read(s, dir, "customer")),
           Seq("nation_agree", "segment_agree", "balance_agree"))
-        .select(col("field"),
-          (round(col("m"), 6) + lit(0.0)).as("m"),
-          (round(col("u"), 6) + lit(0.0)).as("u"),
-          (round(col("w_agree"), 6) + lit(0.0)).as("w_agree"),
-          (round(col("w_disagree"), 6) + lit(0.0)).as("w_disagree"),
-          (round(col("lambda"), 6) + lit(0.0)).as("lambda"))
+        .select(cols("field") ++
+          rounded(6)("m", "u", "w_agree", "w_disagree", "lambda"): _*)
         .orderBy(col("field"))
     },
       // 3-iteration EM replayed as chained CTEs (fsCtes); per-field
@@ -667,8 +663,8 @@ object DedupLinkage {
         .select(col("p_name").as("id"), col("p_name").as("nm")).distinct()
       Linkage.jaroWinklerPairs(names, "id", "nm",
           blocker = Linkage.prefixBlocker(2), threshold = 0.8)
-        .select(col("id_a").as("name_a"), col("id_b").as("name_b"),
-          (round(col("jw"), 6) + lit(0.0)).as("jw"))
+        .select(Seq(col("id_a").as("name_a"), col("id_b").as("name_b")) ++
+          rounded(6)("jw"): _*)
         .gateOrdered(col("name_a"), col("name_b"))
     },
       // DuckDB's native jaro_winkler_similarity IS the independent oracle
@@ -820,10 +816,8 @@ object DedupLinkage {
           graft.functions.TextFunctions.minShingleMd5(col("text"), 3))
       graft.operators.Dedup.chapmanEstimate(docs, "source", "mk",
           "src0", "src1")
-        .select(col("n_a"), col("n_b"), col("overlap"), col("observed"),
-          (round(col("n_hat"), 6) + lit(0.0)).as("n_hat"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("coverage"), 6) + lit(0.0)).as("coverage"))
+        .select(cols("n_a", "n_b", "overlap", "observed") ++
+          rounded(6)("n_hat", "se", "coverage"): _*)
     },
       // distinct (side, min-shingle key) pairs -> the Chapman closed form
       """WITH toks AS (SELECT source, text,
@@ -864,10 +858,8 @@ object DedupLinkage {
     Case("q269_fs_posteriors", (s, dir) => {
       Linkage.fellegiSunterPosteriors(fsPairs(read(s, dir, "customer")),
           Seq("nation_agree", "segment_agree", "balance_agree"))
-        .select(col("nation_agree"), col("segment_agree"),
-          col("balance_agree"), col("n_pairs"),
-          (round(col("llr"), 6) + lit(0.0)).as("llr"),
-          (round(col("posterior"), 6) + lit(0.0)).as("posterior"))
+        .select(cols("nation_agree", "segment_agree", "balance_agree", "n_pairs") ++
+          rounded(6)("llr", "posterior"): _*)
         .orderBy(col("nation_agree"), col("segment_agree"),
           col("balance_agree"))
     },

@@ -23,15 +23,9 @@ object Experiments {
       StatTests.proportionZTest(
           ev.filter(to_date(col("ts")) < cut),
           ev.filter(to_date(col("ts")) >= cut), "is_err")
-        .select(col("n_a"), col("k_a"), col("n_b"), col("k_b"),
-          (round(col("rate_a"), 6) + lit(0.0)).as("rate_a"),
-          (round(col("rate_b"), 6) + lit(0.0)).as("rate_b"),
-          (round(col("diff"), 6) + lit(0.0)).as("diff"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("wilson_lo_a"), 6) + lit(0.0)).as("wilson_lo_a"),
-          (round(col("wilson_hi_a"), 6) + lit(0.0)).as("wilson_hi_a"),
-          (round(col("wilson_lo_b"), 6) + lit(0.0)).as("wilson_lo_b"),
-          (round(col("wilson_hi_b"), 6) + lit(0.0)).as("wilson_hi_b"))
+        .select(cols("n_a", "k_a", "n_b", "k_b") ++ rounded(6)("rate_a", "rate_b",
+          "diff", "z", "wilson_lo_a", "wilson_hi_a", "wilson_lo_b",
+          "wilson_hi_b"): _*)
     },
       // pooled-variance z + Wilson score intervals with the shared
       // z-critical literal 1.959963984540054 on both engines; the
@@ -78,19 +72,9 @@ object Experiments {
           (col("event_type") === "error").as("is_err"))
       StatTests.proportionEffects(ev.filter(col("even")),
           ev.filter(!col("even")), "is_err")
-        .select(col("n_a"), col("k_a"), col("n_b"), col("k_b"),
-          (round(col("p_a"), 6) + lit(0.0)).as("p_a"),
-          (round(col("p_b"), 6) + lit(0.0)).as("p_b"),
-          (round(col("risk_ratio"), 6) + lit(0.0)).as("risk_ratio"),
-          (round(col("rr_lo"), 6) + lit(0.0)).as("rr_lo"),
-          (round(col("rr_hi"), 6) + lit(0.0)).as("rr_hi"),
-          (round(col("odds_ratio"), 6) + lit(0.0)).as("odds_ratio"),
-          (round(col("or_lo"), 6) + lit(0.0)).as("or_lo"),
-          (round(col("or_hi"), 6) + lit(0.0)).as("or_hi"),
-          (round(col("risk_diff"), 6) + lit(0.0)).as("risk_diff"),
-          (round(col("rd_lo"), 6) + lit(0.0)).as("rd_lo"),
-          (round(col("rd_hi"), 6) + lit(0.0)).as("rd_hi"),
-          (round(col("cohens_h"), 6) + lit(0.0)).as("cohens_h"))
+        .select(cols("n_a", "k_a", "n_b", "k_b") ++ rounded(6)("p_a", "p_b",
+          "risk_ratio", "rr_lo", "rr_hi", "odds_ratio", "or_lo", "or_hi",
+          "risk_diff", "rd_lo", "rd_hi", "cohens_h"): _*)
     },
       // per-side counts -> the Wald/Woolf log-scale CIs and Cohen's h
       """WITH b AS (SELECT user_id % 2 = 0 ev, event_type = 'error' er
@@ -138,12 +122,8 @@ object Experiments {
         .filter(col("user_id").isNotNull)
         .groupBy(col("user_id")).agg(count(lit(1)).as("c"))
       StatTests.overdispersionTest(perUser, "c")
-        .select(col("n"),
-          (round(col("mean"), 6) + lit(0.0)).as("mean"),
-          (round(col("variance"), 6) + lit(0.0)).as("variance"),
-          (round(col("dispersion"), 6) + lit(0.0)).as("dispersion"),
-          (round(col("chi2"), 6) + lit(0.0)).as("chi2"),
-          (round(col("z"), 6) + lit(0.0)).as("z"))
+        .select(cols("n") ++
+          rounded(6)("mean", "variance", "dispersion", "chi2", "z"): _*)
     },
       // one keyed count + one moment reduce; same closed-form z
       """WITH u AS (SELECT user_id, count(*)::DOUBLE c FROM events
@@ -164,10 +144,8 @@ object Experiments {
       val ev = EventsSource.read(s, s"$dir/events.parquet")
         .withColumn("hv", (col("value") > 50.0).cast("int"))
       StatTests.bayesianAB(ev, "event_type", "hv", armA = "view", armB = "click")
-        .select(col("n_a"), col("s_a"), col("n_b"), col("s_b"),
-          (round(col("mean_a"), 6) + lit(0.0)).as("mean_a"),
-          (round(col("mean_b"), 6) + lit(0.0)).as("mean_b"),
-          (round(col("prob_b_gt_a"), 6) + lit(0.0)).as("prob_b_gt_a"))
+        .select(cols("n_a", "s_a", "n_b", "s_b") ++
+          rounded(6)("mean_a", "mean_b", "prob_b_gt_a"): _*)
     },
       // identical midpoint quadrature: F_A by the shifted running sum,
       // P(B>A) = sum fb * F_A / m; engine lgamma differences are ~1e-10
@@ -212,14 +190,8 @@ object Experiments {
       val grid = users.crossJoin(broadcast(spine))
         .join(counts, Seq("user_id", "d"), "left").na.fill(0.0, Seq("c"))
       StatTests.countModelFit(grid, "c")
-        .select(col("n"),
-          (round(col("mean"), 6) + lit(0.0)).as("mean"),
-          (round(col("variance"), 6) + lit(0.0)).as("variance"),
-          (round(col("zero_frac_obs"), 6) + lit(0.0)).as("zero_frac_obs"),
-          (round(col("zero_frac_poisson"), 6) + lit(0.0))
-            .as("zero_frac_poisson"),
-          (round(col("nb_r"), 6) + lit(0.0)).as("nb_r"),
-          (round(col("zero_frac_nb"), 6) + lit(0.0)).as("zero_frac_nb"))
+        .select(cols("n") ++ rounded(6)("mean", "variance", "zero_frac_obs",
+          "zero_frac_poisson", "nb_r", "zero_frac_nb"): _*)
     },
       // the same zero-filled grid; moment algebra and the MoM NB fit
       """WITH e AS (SELECT user_id u, floor(epoch(ts) / 86400)::BIGINT d
@@ -260,9 +232,8 @@ object Experiments {
           count(lit(1)).as("score"))
         .withColumn("t", (col("user_id") % 2 === 0).cast("int"))
       StatTests.qiniDeciles(perUser, "t", "y", "score")
-        .select(col("decile"), col("n_bin"), col("cum_treated"),
-          col("cum_control"), col("cum_y_treated"), col("cum_y_control"),
-          (round(col("qini"), 6) + lit(0.0)).as("qini"))
+        .select(cols("decile", "n_bin", "cum_treated", "cum_control",
+          "cum_y_treated", "cum_y_control") ++ rounded(6)("qini"): _*)
         .gateOrdered(col("decile"))
     },
       // rank-exact decile cutpoints over the distinct-score cumsum (the
@@ -314,11 +285,8 @@ object Experiments {
             coalesce(col("value"), lit(0.0))).otherwise(lit(0.0)).as("rev"),
           lit(1.0).as("one"))
       StatTests.jackknifeRatio(ev, "user_id", "rev", "one")
-        .select(col("n"), col("buckets"),
-          (round(col("ratio"), 6) + lit(0.0)).as("ratio"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("ci_lo"), 6) + lit(0.0)).as("ci_lo"),
-          (round(col("ci_hi"), 6) + lit(0.0)).as("ci_hi"))
+        .select(cols("n", "buckets") ++
+          rounded(6)("ratio", "se", "ci_lo", "ci_hi"): _*)
     },
       // the md5 unit-bucket mirror, per-bucket exact decimal(38,12) sums,
       // leave-one-out replicates from exact subtractions, (B-1)/B variance
@@ -358,14 +326,12 @@ object Experiments {
       val ev = EventsSource.read(s, s"$dir/events.parquet")
         .filter(col("value").isNotNull)
       val av = ev.filter(col("event_type") === "view")
-        .select((round(col("value"), 1) + lit(0.0)).as("v"))
+        .select(roundedExpr(col("value"), 1).as("v"))
       val bv = ev.filter(col("event_type") === "click")
-        .select((round(col("value"), 1) + lit(0.0)).as("v"))
+        .select(roundedExpr(col("value"), 1).as("v"))
       StatTests.hodgesLehmann(av, bv, "v")
-        .select(col("n_a"), col("n_b"), col("n_pairs"),
-          (round(col("hl_shift"), 6) + lit(0.0)).as("hl_shift"),
-          (round(col("ci_lo"), 6) + lit(0.0)).as("ci_lo"),
-          (round(col("ci_hi"), 6) + lit(0.0)).as("ci_hi"))
+        .select(cols("n_a", "n_b", "n_pairs") ++
+          rounded(6)("hl_shift", "ci_lo", "ci_hi"): _*)
     },
       // per-side value cells, the cell cross-join difference table, the
       // exclusive-count window, and four exact order statistics (two
@@ -416,16 +382,12 @@ object Experiments {
             .as("x_highval"))
         .withColumn("t", (col("user_id") % 2 === 0).cast("long"))
       StatTests.regressionAdjustedAte(perUser, "t", "y", "x_highval")
-        .select(col("n"),
-          (round(col("ate"), 6) + lit(0.0)).as("ate"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"),
-          (round(col("beta_covariate"), 6) + lit(0.0)).as("beta_covariate"))
+        .select(cols("n") ++
+          rounded(6)("ate", "se", "z", "p_value", "beta_covariate"): _*)
     },
       // the exact 9-moment reduce and the closed-form Frisch-Waugh
       // 2-regressor solution, classical sigma^2 * cXX / det variance
-      """WITH du AS (SELECT
+      s"""WITH du AS (SELECT
                  sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                    ::BIGINT y,
                  CAST((sum(CASE WHEN value > 50 THEN 1 ELSE 0 END) - 24)
@@ -454,13 +416,11 @@ object Experiments {
                    / (n - 3.0) * cxx / det) se
                FROM sol),
          zz AS (SELECT *, ate / se z, abs(ate / se) / sqrt(2.0) az,
-                 1.0 / (1.0 + 0.3275911 * abs(ate / se) / sqrt(2.0)) tt
+                 ${asT("abs(ate / se)")} tt
                FROM st2)
          SELECT n, round(ate, 6) + 0.0 AS ate, round(se, 6) + 0.0 AS se,
            round(z, 6) + 0.0 AS z,
-           round(least(1.0, tt * (0.254829592 + tt * (-0.284496736
-             + tt * (1.421413741 + tt * (-1.453152027
-             + tt * 1.061405429)))) * exp(-az * az)), 6) + 0.0 AS p_value,
+           round(least(1.0, ${asPoly("tt", "az", 13)}), 6) + 0.0 AS p_value,
            round(bx, 6) + 0.0 AS beta_covariate
          FROM zz"""),
 
@@ -475,13 +435,9 @@ object Experiments {
             col("value") > 80, 1L).otherwise(0L)).as("y"))
         .withColumn("t", (col("user_id") % 2 === 0).cast("long"))
       StatTests.msprtProportions(perUser, "t", "y", tau = 0.0001)
-        .select(col("n_a"), col("n_b"),
-          (round(col("p_a"), 6) + lit(0.0)).as("p_a"),
-          (round(col("p_b"), 6) + lit(0.0)).as("p_b"),
-          (round(col("delta"), 6) + lit(0.0)).as("delta"),
-          (round(col("lambda_stat"), 6) + lit(0.0)).as("lambda_stat"),
-          (round(col("p_always"), 6) + lit(0.0)).as("p_always"),
-          col("reject_05"))
+        .select(cols("n_a", "n_b") ++
+          rounded(6)("p_a", "p_b", "delta", "lambda_stat", "p_always") ++
+          cols("reject_05"): _*)
     },
       // one 4-long reduce + the closed mSPRT mixture formula
       """WITH du AS (SELECT
@@ -519,11 +475,8 @@ object Experiments {
         .agg(count(lit(1)).as("activity"))
         .withColumn("t", (col("user_id") % 2 === 0).cast("long"))
       StatTests.quantileTreatmentEffects(perUser, "t", "activity")
-        .select((round(col("quantile"), 1) + lit(0.0)).as("quantile"),
-          col("n_treated"), col("n_control"),
-          (round(col("q_treated"), 6) + lit(0.0)).as("q_treated"),
-          (round(col("q_control"), 6) + lit(0.0)).as("q_control"),
-          (round(col("qte"), 6) + lit(0.0)).as("qte"))
+        .select(rounded(1)("quantile") ++ cols("n_treated", "n_control") ++
+          rounded(6)("q_treated", "q_control", "qte"): _*)
         .gateOrdered(col("quantile"))
     },
       // the full Breslow-Newton replay (coxCtes): 4 unrolled iterations,
@@ -581,19 +534,13 @@ object Experiments {
             col("hr") > col("__mid"), 1L).otherwise(0L)).as("y_post"))
         .withColumn("t", (col("user_id") % 2 === 0).cast("long"))
       StatTests.diffInDiff(perUser, "t", "y_pre", "y_post")
-        .select(col("n_treated"), col("n_control"),
-          (round(col("pre_treated"), 6) + lit(0.0)).as("pre_treated"),
-          (round(col("post_treated"), 6) + lit(0.0)).as("post_treated"),
-          (round(col("pre_control"), 6) + lit(0.0)).as("pre_control"),
-          (round(col("post_control"), 6) + lit(0.0)).as("post_control"),
-          (round(col("did"), 6) + lit(0.0)).as("did"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n_treated", "n_control") ++ rounded(6)("pre_treated",
+          "post_treated", "pre_control", "post_control", "did", "se", "z",
+          "p_value"): _*)
     },
       // the calendar-midpoint split, exact per-user integer change sums,
       // and the closed-form Welch algebra on the per-arm changes
-      """WITH eh AS (SELECT user_id, event_type,
+      s"""WITH eh AS (SELECT user_id, event_type,
                  floor(epoch(ts) / 3600)::BIGINT hr
                FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
          md AS (SELECT (min(hr) + max(hr)) // 2 mid FROM eh),
@@ -619,7 +566,7 @@ object Experiments {
                      / (n0 - 1.0), 0.0) / n0) se
                FROM ag),
          zz AS (SELECT *, did / se z, abs(did / se) / sqrt(2.0) az,
-                 1.0 / (1.0 + 0.3275911 * abs(did / se) / sqrt(2.0)) tt
+                 ${asT("abs(did / se)")} tt
                FROM st)
          SELECT n1 AS n_treated, n0 AS n_control,
            round(p1::DOUBLE / n1, 6) + 0.0 AS pre_treated,
@@ -628,9 +575,7 @@ object Experiments {
            round(q0::DOUBLE / n0, 6) + 0.0 AS post_control,
            round(did, 6) + 0.0 AS did, round(se, 6) + 0.0 AS se,
            round(z, 6) + 0.0 AS z,
-           round(least(1.0, tt * (0.254829592 + tt * (-0.284496736
-             + tt * (1.421413741 + tt * (-1.453152027
-             + tt * 1.061405429)))) * exp(-az * az)), 6) + 0.0 AS p_value
+           round(least(1.0, ${asPoly("tt", "az", 13)}), 6) + 0.0 AS p_value
          FROM zz"""),
 
     // ---- power / MDE: how long must the next conversion test run? ---------
@@ -644,17 +589,12 @@ object Experiments {
             col("value") > 80, 1L).otherwise(0L)).as("y"))
         .withColumn("t", (col("user_id") % 2 === 0).cast("long"))
       StatTests.powerTwoProportions(perUser, "t", "y")
-        .select(col("n_a"), col("n_b"),
-          (round(col("p_a"), 6) + lit(0.0)).as("p_a"),
-          (round(col("p_b"), 6) + lit(0.0)).as("p_b"),
-          (round(col("delta"), 6) + lit(0.0)).as("delta"),
-          (round(col("mde"), 6) + lit(0.0)).as("mde"),
-          col("n_required_per_arm"),
-          (round(col("power_at_n"), 6) + lit(0.0)).as("power_at_n"))
+        .select(cols("n_a", "n_b") ++ rounded(6)("p_a", "p_b", "delta", "mde") ++
+          cols("n_required_per_arm") ++ rounded(6)("power_at_n"): _*)
     },
       // one exact count reduce; the published z quantiles; achieved power
       // via the reflected A&S survival (q lands either side of zero)
-      """WITH du AS (SELECT
+      s"""WITH du AS (SELECT
                  max(CASE WHEN event_type = 'purchase' AND value > 80
                    THEN 1 ELSE 0 END)::BIGINT y,
                  (CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)::BIGINT t
@@ -671,10 +611,8 @@ object Experiments {
          qq AS (SELECT *, abs(delta) / se - 1.959963985 q,
                  (1.959963985 + 0.8416212336) zsum FROM vv),
          sf AS (SELECT *, abs(q) / sqrt(2.0) az,
-                 1.0 / (1.0 + 0.3275911 * abs(q) / sqrt(2.0)) tt FROM qq),
-         pw AS (SELECT *, 0.5 * tt * (0.254829592 + tt * (-0.284496736
-                 + tt * (1.421413741 + tt * (-1.453152027
-                 + tt * 1.061405429)))) * exp(-az * az) half FROM sf)
+                 ${asT("abs(q)")} tt FROM qq),
+         pw AS (SELECT *, 0.5 * ${asPoly("tt", "az", 17)} half FROM sf)
          SELECT na AS n_a, nb AS n_b,
            round(pa, 6) + 0.0 AS p_a, round(pb, 6) + 0.0 AS p_b,
            round(delta, 6) + 0.0 AS delta,
@@ -695,16 +633,13 @@ object Experiments {
       val perUser = ev.groupBy(col("user_id")).agg(count(lit(1)).as("__n"))
         .withColumn("arm", (col("user_id") % 2).cast("string"))
       StatTests.srmCheck(perUser, "arm", Seq("0" -> 0.5, "1" -> 0.5))
-        .select(col("arm"), col("n"),
-          (round(col("expected"), 6) + lit(0.0)).as("expected"),
-          (round(col("chi2"), 6) + lit(0.0)).as("chi2"), col("df"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"),
-          col("srm_flag"))
+        .select(cols("arm", "n") ++ rounded(6)("expected", "chi2") ++ cols("df") ++
+          rounded(6)("p_value") ++ cols("srm_flag"): _*)
         .gateOrdered(col("arm"))
     },
       // exact arm counts vs the 50/50 design; chi2_1 survival as the
       // reflected normal: p = 2*Phi(-sqrt(chi2)) via the erf polynomial
-      """WITH du AS (SELECT (user_id % 2)::VARCHAR arm FROM events
+      s"""WITH du AS (SELECT (user_id % 2)::VARCHAR arm FROM events
                WHERE user_id IS NOT NULL AND ts IS NOT NULL
                GROUP BY user_id),
          c AS (SELECT arm, count(*)::BIGINT n FROM du GROUP BY arm),
@@ -712,7 +647,7 @@ object Experiments {
          x AS (SELECT sum((n - 0.5 * tot) * (n - 0.5 * tot)
                  / (0.5 * tot)) chi2 FROM c, t),
          p AS (SELECT chi2, sqrt(chi2) / sqrt(2.0) az,
-                 1.0 / (1.0 + 0.3275911 * sqrt(chi2) / sqrt(2.0)) tt
+                 ${asT("sqrt(chi2)")} tt
                FROM x),
          pv AS (SELECT chi2, least(1.0, tt * (0.254829592
                  + tt * (-0.284496736 + tt * (1.421413741
@@ -743,11 +678,8 @@ object Experiments {
           floor((col("__f") - col("__lo")) * 5 /
             (col("__hi") - col("__lo") + 1))))
       StatTests.groupSequentialObf(looked, "look", "t", "y")
-        .select(col("look"), col("n_a"), col("n_b"), col("x_a"), col("x_b"),
-          (round(col("delta"), 6) + lit(0.0)).as("delta"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("boundary"), 6) + lit(0.0)).as("boundary"),
-          col("crossed"))
+        .select(cols("look", "n_a", "n_b", "x_a", "x_b") ++
+          rounded(6)("delta", "z", "boundary") ++ cols("crossed"): _*)
         .gateOrdered(col("look"))
     },
       // enrollment quintiles, cumulative pooled z per look via a 5-row
@@ -800,12 +732,8 @@ object Experiments {
             col("value") > 80, 1L).otherwise(0L)).as("y"))
         .withColumn("t", (col("user_id") % 2 === 0).cast("long"))
       StatTests.eValueRR(perUser, "t", "y")
-        .select(col("n_exposed"), col("n_unexposed"),
-          (round(col("rr"), 6) + lit(0.0)).as("rr"),
-          (round(col("rr_lo"), 6) + lit(0.0)).as("rr_lo"),
-          (round(col("rr_hi"), 6) + lit(0.0)).as("rr_hi"),
-          (round(col("e_value"), 6) + lit(0.0)).as("e_value"),
-          (round(col("e_value_ci"), 6) + lit(0.0)).as("e_value_ci"))
+        .select(cols("n_exposed", "n_unexposed") ++
+          rounded(6)("rr", "rr_lo", "rr_hi", "e_value", "e_value_ci"): _*)
     },
       // one exact 2x2 reduce, Wald log-RR interval, and the VanderWeele-
       // Ding transform at the point and the near-null CI bound
@@ -850,16 +778,9 @@ object Experiments {
             col("value") > 80, 1L).otherwise(0L)).as("y"))
         .withColumn("t", (col("user_id") % 2 === 0).cast("long"))
       StatTests.newcombeDiffCI(perUser, "t", "y")
-        .select(col("n_a"), col("n_b"),
-          (round(col("p_a"), 6) + lit(0.0)).as("p_a"),
-          (round(col("p_b"), 6) + lit(0.0)).as("p_b"),
-          (round(col("wilson_lo_a"), 6) + lit(0.0)).as("wilson_lo_a"),
-          (round(col("wilson_hi_a"), 6) + lit(0.0)).as("wilson_hi_a"),
-          (round(col("wilson_lo_b"), 6) + lit(0.0)).as("wilson_lo_b"),
-          (round(col("wilson_hi_b"), 6) + lit(0.0)).as("wilson_hi_b"),
-          (round(col("delta"), 6) + lit(0.0)).as("delta"),
-          (round(col("ci_lo"), 6) + lit(0.0)).as("ci_lo"),
-          (round(col("ci_hi"), 6) + lit(0.0)).as("ci_hi"))
+        .select(cols("n_a", "n_b") ++ rounded(6)("p_a", "p_b", "wilson_lo_a",
+          "wilson_hi_a", "wilson_lo_b", "wilson_hi_b", "delta", "ci_lo",
+          "ci_hi"): _*)
     },
       // one exact count reduce; per-arm Wilson score bounds; the Newcombe
       // square-and-add difference interval
@@ -911,9 +832,8 @@ object Experiments {
         sum(when(to_date(col("ts")) >= split, 1L).otherwise(0L))
           .cast("double").as("y"))
       StatTests.wilcoxonSignedRank(perUser, "x", "y")
-        .select(col("n_pairs"), col("n_nonzero"),
-          col("w_plus"), col("w_minus"),
-          (round(col("z"), 6) + lit(0.0)).as("z"))
+        .select(cols("n_pairs", "n_nonzero", "w_plus", "w_minus") ++
+          rounded(6)("z"): _*)
     },
       // same distinct-|d| average-rank cumsum and tie-corrected variance
       """WITH pu AS (SELECT user_id,
@@ -954,12 +874,8 @@ object Experiments {
         sum(when(to_date(col("ts")) < cut, 1L).otherwise(0L)).as("pre"),
         sum(when(to_date(col("ts")) >= cut, 1L).otherwise(0L)).as("post"))
       StatTests.cuped(perUser, "pre", "post")
-        .select(col("n"),
-          (round(col("theta"), 6) + lit(0.0)).as("theta"),
-          (round(col("mean_metric"), 6) + lit(0.0)).as("mean_metric"),
-          (round(col("var_metric"), 6) + lit(0.0)).as("var_metric"),
-          (round(col("var_adjusted"), 6) + lit(0.0)).as("var_adjusted"),
-          (round(col("var_reduction"), 6) + lit(0.0)).as("var_reduction"))
+        .select(cols("n") ++ rounded(6)("theta", "mean_metric", "var_metric",
+          "var_adjusted", "var_reduction"): _*)
     },
       // same var_samp/covar_samp primitives; the adjusted variance uses the
       // exact identity var_y - cov^2/var_x on both engines

@@ -21,11 +21,8 @@ object HypothesisTests {
       StatTests.mannWhitneyU(
           orders.filter(col("o_orderstatus") === "F"),
           orders.filter(col("o_orderstatus") === "O"), "o_totalprice")
-        .select(col("n_a"), col("n_b"),
-          (round(col("u_a"), 2) + lit(0.0)).as("u_a"),
-          (round(col("u_b"), 2) + lit(0.0)).as("u_b"),
-          (round(col("u"), 2) + lit(0.0)).as("u"),
-          (round(col("z"), 6) + lit(0.0)).as("z"))
+        .select(cols("n_a", "n_b") ++ rounded(2)("u_a", "u_b", "u") ++
+          rounded(6)("z"): _*)
     },
       // Mann-Whitney U via per-distinct-value counts + exclusive cumulative
       // rank offsets (avg rank = before + (cnt+1)/2); rank sums are exact
@@ -69,10 +66,8 @@ object HypothesisTests {
           docs.filter(col("lang") === "es"),
           docs.filter(col("lang") === "de"),
           "doc_id", "n_chars", nPerms = 200, seed = "pt")
-        .select(col("n_a"), col("n_b"),
-          (round(col("observed"), 6) + lit(0.0)).as("observed"),
-          col("n_perms"), col("n_ge"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n_a", "n_b") ++ rounded(6)("observed") ++
+          cols("n_perms", "n_ge") ++ rounded(6)("p_value"): _*)
     },
       // identical md5 relabeling per (seed, perm, side, id), coin WEIGHTED
       // at n_a/(n_a+n_b) (unconditional randomization conditioning on the
@@ -115,12 +110,8 @@ object HypothesisTests {
       val docs = read(s, dir, "documents")
       StatTests.welchTTest(docs.filter(col("lang") === "en"),
           docs.filter(col("lang") === "de"), "n_chars")
-        .select(col("n_a"), col("n_b"),
-          (round(col("mean_a"), 6) + lit(0.0)).as("mean_a"),
-          (round(col("mean_b"), 6) + lit(0.0)).as("mean_b"),
-          (round(col("t"), 6) + lit(0.0)).as("t"),
-          (round(col("df"), 6) + lit(0.0)).as("df"),
-          (round(col("cohens_d"), 6) + lit(0.0)).as("cohens_d"))
+        .select(cols("n_a", "n_b") ++
+          rounded(6)("mean_a", "mean_b", "t", "df", "cohens_d"): _*)
     },
       // exact integer moments -> the identical closed-form Welch t / df /
       // Cohen's d expression on both engines
@@ -151,10 +142,8 @@ object HypothesisTests {
     // cross-engine summation-order noise)
     Case("q248_anova", (s, dir) => {
       StatTests.anovaF(read(s, dir, "documents"), "lang", "n_chars")
-        .select(col("n"), col("k"),
-          (round(col("ss_between"), 2) + lit(0.0)).as("ss_between"),
-          (round(col("ss_within"), 2) + lit(0.0)).as("ss_within"),
-          (round(col("f"), 6) + lit(0.0)).as("f"))
+        .select(cols("n", "k") ++ rounded(2)("ss_between", "ss_within") ++
+          rounded(6)("f"): _*)
     },
       // moment-identity sums of squares; 2dp on the 1e10-scale ss values
       // absorbs cross-engine group-summation order
@@ -176,9 +165,8 @@ object HypothesisTests {
     // 4dp (rank-sum squares cross 2^53, the division noise sits ~1e-7)
     Case("q249_kruskal", (s, dir) => {
       StatTests.kruskalWallis(read(s, dir, "documents"), "lang", "n_chars")
-        .select(col("n"), col("k"),
-          (round(col("h"), 4) + lit(0.0)).as("h"),
-          (round(col("tie_correction"), 9) + lit(0.0)).as("tie_correction"))
+        .select(cols("n", "k") ++ rounded(4)("h") ++
+          rounded(9)("tie_correction"): _*)
     },
       // average ranks from the exclusive distinct-value cumsum; the tie mass
       // rides the group join as (t^2-1)*c (exact); H at 4dp
@@ -212,10 +200,8 @@ object HypothesisTests {
     // integer values make medians and deviation moments engine-exact
     Case("q275_brown_forsythe", (s, dir) => {
       StatTests.brownForsythe(read(s, dir, "documents"), "lang", "n_chars")
-        .select(col("n"), col("k"),
-          (round(col("ss_between"), 2) + lit(0.0)).as("ss_between"),
-          (round(col("ss_within"), 2) + lit(0.0)).as("ss_within"),
-          (round(col("f"), 6) + lit(0.0)).as("f"))
+        .select(cols("n", "k") ++ rounded(2)("ss_between", "ss_within") ++
+          rounded(6)("f"): _*)
     },
       // per-group exact medians -> |x - m_g| -> the q248 moment identities
       """WITH b AS (SELECT lang g, n_chars::DOUBLE v FROM documents
@@ -241,10 +227,8 @@ object HypothesisTests {
       val docs = read(s, dir, "documents")
       StatTests.cliffsDelta(docs.filter(col("lang") === "en"),
           docs.filter(col("lang") === "de"), "n_chars")
-        .select(col("n_a"), col("n_b"), col("gt"), col("lt"),
-          col("ties").as("tie_pairs"),
-          (round(col("delta"), 6) + lit(0.0)).as("delta"),
-          (round(col("p_superiority"), 6) + lit(0.0)).as("p_superiority"))
+        .select(Seq(col("n_a"), col("n_b"), col("gt"), col("lt"),
+          col("ties").as("tie_pairs")) ++ rounded(6)("delta", "p_superiority"): _*)
     },
       // exact cross-pair counts from the exclusive distinct-value cumsum —
       // gt = sum n_a(v) * (#b below v), lt symmetric, ties at equal v
@@ -278,13 +262,8 @@ object HypothesisTests {
     // the closed form exp(-K2/2), engine-identical
     Case("q281_dagostino", (s, dir) => {
       StatTests.dagostinoK2(read(s, dir, "documents"), "n_chars")
-        .select(col("n"),
-          (round(col("g1"), 6) + lit(0.0)).as("g1"),
-          (round(col("b2"), 6) + lit(0.0)).as("b2"),
-          (round(col("z_skew"), 6) + lit(0.0)).as("z_skew"),
-          (round(col("z_kurt"), 6) + lit(0.0)).as("z_kurt"),
-          (round(col("k2"), 6) + lit(0.0)).as("k2"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n") ++
+          rounded(6)("g1", "b2", "z_skew", "z_kurt", "k2", "p_value"): _*)
     },
       // same raw-power-sum central moments + transform algebra as the Scala
       // scalar path; cbrt handles the negative cube-root branch identically
@@ -334,11 +313,7 @@ object HypothesisTests {
     // one power-sum scan; chi2(2) survival is the exact exp(-jb/2)
     Case("q303_jarque_bera", (s, dir) => {
       StatTests.jarqueBera(read(s, dir, "documents"), "n_chars")
-        .select(col("n"),
-          (round(col("g1"), 6) + lit(0.0)).as("g1"),
-          (round(col("b2"), 6) + lit(0.0)).as("b2"),
-          (round(col("jb"), 6) + lit(0.0)).as("jb"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n") ++ rounded(6)("g1", "b2", "jb", "p_value"): _*)
     },
       // the dagostino power-sum CTE chain, ending in the JB statistic and
       // the exact chi2(2) survival exp(-jb/2)
@@ -365,11 +340,8 @@ object HypothesisTests {
     // only; df = 4 (even) so the survival is closed-form on both engines
     Case("q304_bartlett", (s, dir) => {
       StatTests.bartlettTest(read(s, dir, "documents"), "lang", "n_chars")
-        .select(col("n"), col("k"),
-          (round(col("pooled_var"), 6) + lit(0.0)).as("pooled_var"),
-          (round(col("statistic"), 6) + lit(0.0)).as("statistic"),
-          col("df"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n", "k") ++ rounded(6)("pooled_var", "statistic") ++
+          cols("df") ++ rounded(6)("p_value"): _*)
     },
       // per-group sample variances from exact power sums; df = k-1 = 4 is
       // even, so the survival is the closed form exp(-x/2)(1 + x/2)
@@ -398,14 +370,8 @@ object HypothesisTests {
       val docs = read(s, dir, "documents")
       StatTests.effectSizes(docs.filter(col("lang") === "en"),
           docs.filter(col("lang") === "de"), "n_chars")
-        .select(col("n_a"), col("n_b"),
-          (round(col("mean_a"), 6) + lit(0.0)).as("mean_a"),
-          (round(col("mean_b"), 6) + lit(0.0)).as("mean_b"),
-          (round(col("diff"), 6) + lit(0.0)).as("diff"),
-          (round(col("cohens_d"), 6) + lit(0.0)).as("cohens_d"),
-          (round(col("hedges_g"), 6) + lit(0.0)).as("hedges_g"),
-          (round(col("glass_delta"), 6) + lit(0.0)).as("glass_delta"),
-          (round(col("var_ratio"), 6) + lit(0.0)).as("var_ratio"))
+        .select(cols("n_a", "n_b") ++ rounded(6)("mean_a", "mean_b", "diff",
+          "cohens_d", "hedges_g", "glass_delta", "var_ratio"): _*)
     },
       // one moment CTE per slice; the same pooled-sd algebra as the Spark
       // driver literals
@@ -439,11 +405,8 @@ object HypothesisTests {
     // rank-exact lower grand median + a 2xk contingency chi2; df = 4 even
     Case("q307_mood_median", (s, dir) => {
       StatTests.moodMedianTest(read(s, dir, "documents"), "lang", "n_chars")
-        .select(col("n"), col("k"),
-          (round(col("grand_median"), 6) + lit(0.0)).as("grand_median"),
-          (round(col("chi2"), 6) + lit(0.0)).as("chi2"),
-          col("df"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n", "k") ++ rounded(6)("grand_median", "chi2") ++
+          cols("df") ++ rounded(6)("p_value"): _*)
     },
       // rank-exact lower median from the distinct-count prefix sum; the
       // same 2xk Pearson cells; df = 4 closed-form survival
@@ -477,11 +440,9 @@ object HypothesisTests {
       StatTests.yuenTrimmedTest(
           docs.filter(col("lang") === "en"),
           docs.filter(col("lang") === "de"), "n_chars", trimFrac = 0.1)
-        .select(col("n_a"), col("n_b"), col("h_a"), col("h_b"),
-          (round(col("trimmed_mean_a"), 6) + lit(0.0)).as("trimmed_mean_a"),
-          (round(col("trimmed_mean_b"), 6) + lit(0.0)).as("trimmed_mean_b"),
-          (round(col("t_stat"), 6) + lit(0.0)).as("t_stat"),
-          (round(col("df"), 4) + lit(0.0)).as("df"))
+        .select(cols("n_a", "n_b", "h_a", "h_b") ++
+          rounded(6)("trimmed_mean_a", "trimmed_mean_b", "t_stat") ++
+          rounded(4)("df"): _*)
     },
       // the q327 rank-overlap algebra per side; Yuen/Welch-Satterthwaite
       // driver arithmetic mirrored expression-for-expression
@@ -554,11 +515,8 @@ object HypothesisTests {
     Case("q327_robust_location", (s, dir) => {
       StatTests.robustLocation(read(s, dir, "documents"), "n_chars",
           trimFrac = 0.1)
-        .select(col("n"), col("n_trim_each"),
-          (round(col("mean"), 6) + lit(0.0)).as("mean"),
-          (round(col("trimmed_mean"), 6) + lit(0.0)).as("trimmed_mean"),
-          (round(col("winsorized_mean"), 6) + lit(0.0)).as("winsorized_mean"),
-          (round(col("median"), 6) + lit(0.0)).as("median"))
+        .select(cols("n", "n_trim_each") ++
+          rounded(6)("mean", "trimmed_mean", "winsorized_mean", "median"): _*)
     },
       // the same rank-overlap algebra over the distinct-value cumsum
       """WITH b AS (SELECT n_chars::DOUBLE v FROM documents
@@ -590,17 +548,14 @@ object HypothesisTests {
     // Holm across the pair family
     Case("q348_dunn_posthoc", (s, dir) => {
       StatTests.dunnTest(read(s, dir, "documents"), "lang", "n_chars")
-        .select(col("group_a"), col("group_b"), col("n_a"), col("n_b"),
-          (round(col("mean_rank_a"), 4) + lit(0.0)).as("mean_rank_a"),
-          (round(col("mean_rank_b"), 4) + lit(0.0)).as("mean_rank_b"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"),
-          (round(col("p_holm"), 6) + lit(0.0)).as("p_holm"))
+        .select(cols("group_a", "group_b", "n_a", "n_b") ++
+          rounded(4)("mean_rank_a", "mean_rank_b") ++
+          rounded(6)("z", "p_value", "p_holm"): _*)
         .gateOrdered(col("group_a"), col("group_b"))
     },
       // the q249 average-rank spine, pairwise z with the tie-corrected
       // sigma^2, the shared A&S two-sided p, Holm over the pair family
-      """WITH gv AS (SELECT lang g, n_chars::DOUBLE v FROM documents
+      s"""WITH gv AS (SELECT lang g, n_chars::DOUBLE v FROM documents
                 WHERE lang IS NOT NULL AND n_chars IS NOT NULL),
          pv AS (SELECT v, count(*)::BIGINT cnt FROM gv GROUP BY 1),
          rk AS (SELECT v, sum(cnt) OVER (ORDER BY v) - cnt
@@ -619,12 +574,10 @@ object HypothesisTests {
                    / sqrt(s2 * (1.0 / na + 1.0 / nb)) END z
                FROM pr, s2),
          pz AS (SELECT *, abs(z) / sqrt(2.0) az,
-                 1.0 / (1.0 + 0.3275911 * abs(z) / sqrt(2.0)) t FROM zz),
+                 ${asT("abs(z)")} t FROM zz),
          pp AS (SELECT ga, gb, na, nb, ra, rb, z,
                  CASE WHEN z IS NOT NULL THEN least(1.0,
-                   t * (0.254829592 + t * (-0.284496736
-                     + t * (1.421413741 + t * (-1.453152027
-                     + t * 1.061405429)))) * exp(-az * az)) END p
+                   ${asPoly("t", "az", 21)}) END p
                FROM pz),
          hm AS (SELECT *, p * (count(*) OVER ()
                  - row_number() OVER (ORDER BY p ASC) + 1) raw
@@ -645,10 +598,8 @@ object HypothesisTests {
     // the inequality summary a mix audit quotes; rank-exact, integer-only
     Case("q373_gini_concentration", (s, dir) => {
       StatTests.giniConcentration(read(s, dir, "documents"), "n_chars")
-        .select(col("n"), col("total"),
-          (round(col("gini"), 6) + lit(0.0)).as("gini"),
-          (round(col("top1_share"), 6) + lit(0.0)).as("top1_share"),
-          (round(col("top10_share"), 6) + lit(0.0)).as("top10_share"))
+        .select(cols("n", "total") ++
+          rounded(6)("gini", "top1_share", "top10_share"): _*)
     },
       // exact block-rank Gini: per-value counts, exclusive count window,
       // HUGEINT moment sums (mirroring the decimal(38,0) exact sums), the
@@ -689,10 +640,8 @@ object HypothesisTests {
       val docs = read(s, dir, "documents")
         .withColumn("is_en", (col("lang") === "en").cast("long"))
       StatTests.ebShrinkRates(docs, "source", "is_en")
-        .select(col("group"), col("n"), col("successes"),
-          (round(col("raw_rate"), 6) + lit(0.0)).as("raw_rate"),
-          (round(col("shrinkage"), 6) + lit(0.0)).as("shrinkage"),
-          (round(col("shrunk_rate"), 6) + lit(0.0)).as("shrunk_rate"))
+        .select(cols("group", "n", "successes") ++
+          rounded(6)("raw_rate", "shrinkage", "shrunk_rate"): _*)
         .gateOrdered(col("group"))
     },
       // per-group exact long sums, moment prior (between-group variance
@@ -732,13 +681,8 @@ object HypothesisTests {
             .otherwise(size(split(trim(col("text")), "\\s+"))))
       StatTests.oaxacaBlinder(docs, "source", "src0", "src1",
           "n_chars", "n_tok")
-        .select(col("n_a"), col("n_b"),
-          (round(col("mean_a"), 6) + lit(0.0)).as("mean_a"),
-          (round(col("mean_b"), 6) + lit(0.0)).as("mean_b"),
-          (round(col("gap"), 6) + lit(0.0)).as("gap"),
-          (round(col("explained"), 6) + lit(0.0)).as("explained"),
-          (round(col("unexplained"), 6) + lit(0.0)).as("unexplained"),
-          (round(col("pct_explained"), 6) + lit(0.0)).as("pct_explained"))
+        .select(cols("n_a", "n_b") ++ rounded(6)("mean_a", "mean_b", "gap",
+          "explained", "unexplained", "pct_explained"): _*)
     },
       // per-group exact moment sums in one conditional reduce, per-group
       // closed-form OLS, and the twofold decomposition from B's structure
@@ -798,12 +742,8 @@ object HypothesisTests {
           when(length(trim(col("text"))) === 0, 0)
             .otherwise(size(split(trim(col("text")), "\\s+"))))
       StatTests.demingRegression(docs, "n_tok", "n_chars")
-        .select(col("n"),
-          (round(col("mean_x"), 6) + lit(0.0)).as("mean_x"),
-          (round(col("mean_y"), 6) + lit(0.0)).as("mean_y"),
-          (round(col("slope"), 6) + lit(0.0)).as("slope"),
-          (round(col("intercept"), 6) + lit(0.0)).as("intercept"),
-          (round(col("pearson_r"), 6) + lit(0.0)).as("pearson_r"))
+        .select(cols("n") ++
+          rounded(6)("mean_x", "mean_y", "slope", "intercept", "pearson_r"): _*)
     },
       // six exact HUGEINT moments -> doubles -> the closed Deming root
       // (lambda = 1), Pearson r from the same centered moments
@@ -846,14 +786,8 @@ object HypothesisTests {
           when(length(trim(col("text"))) === 0, 0)
             .otherwise(size(split(trim(col("text")), "\\s+"))) * 6)
       StatTests.methodAgreement(docs, "est6", "n_chars")
-        .select(col("n"),
-          (round(col("mean_x"), 6) + lit(0.0)).as("mean_x"),
-          (round(col("mean_y"), 6) + lit(0.0)).as("mean_y"),
-          (round(col("ccc"), 6) + lit(0.0)).as("ccc"),
-          (round(col("pearson_r"), 6) + lit(0.0)).as("pearson_r"),
-          (round(col("bias"), 6) + lit(0.0)).as("bias"),
-          (round(col("loa_lo"), 6) + lit(0.0)).as("loa_lo"),
-          (round(col("loa_hi"), 6) + lit(0.0)).as("loa_hi"))
+        .select(cols("n") ++ rounded(6)("mean_x", "mean_y", "ccc", "pearson_r",
+          "bias", "loa_lo", "loa_hi"): _*)
     },
       // the same six moments with the 6x token estimate; population-moment
       // CCC (Lin's form) and the sample-sd Bland-Altman limits
@@ -895,9 +829,8 @@ object HypothesisTests {
     // rarely share a variance); Welch-Satterthwaite df2
     Case("q351_welch_anova", (s, dir) => {
       StatTests.welchAnova(read(s, dir, "documents"), "lang", "n_chars")
-        .select(col("n"), col("k"),
-          (round(col("f"), 6) + lit(0.0)).as("f"), col("df1"),
-          (round(col("df2"), 4) + lit(0.0)).as("df2"))
+        .select(cols("n", "k") ++ rounded(6)("f") ++ cols("df1") ++
+          rounded(4)("df2"): _*)
     },
       // per-language moments, Welch weights w = n/s², the 1951 F* and
       // Welch-Satterthwaite df2 — pure moment algebra, replayed verbatim
@@ -928,11 +861,8 @@ object HypothesisTests {
     // the design-effect number: how clone-like are same-source docs
     Case("q297_icc", (s, dir) => {
       StatTests.icc1(read(s, dir, "documents"), "source", "n_chars")
-        .select(col("n"), col("k"),
-          (round(col("k0"), 6) + lit(0.0)).as("k0"),
-          (round(col("ms_between"), 4) + lit(0.0)).as("ms_between"),
-          (round(col("ms_within"), 4) + lit(0.0)).as("ms_within"),
-          (round(col("icc1"), 6) + lit(0.0)).as("icc1"))
+        .select(cols("n", "k") ++ rounded(6)("k0") ++
+          rounded(4)("ms_between", "ms_within") ++ rounded(6)("icc1"): _*)
     },
       // the anova moment pass + sum ni^2 for the unbalanced k0
       """WITH g AS (SELECT source, count(*)::BIGINT ng,
@@ -963,11 +893,8 @@ object HypothesisTests {
       StatTests.bootstrapMeanCI(
           read(s, dir, "documents").filter(col("lang") === "en"),
           "doc_id", "n_chars", reps = 200, level = 0.95, seed = "bs")
-        .select(col("n"),
-          (round(col("mean"), 6) + lit(0.0)).as("mean"),
-          col("boot_reps"),
-          (round(col("ci_lo"), 6) + lit(0.0)).as("ci_lo"),
-          (round(col("ci_hi"), 6) + lit(0.0)).as("ci_hi"))
+        .select(cols("n") ++ rounded(6)("mean") ++ cols("boot_reps") ++
+          rounded(6)("ci_lo", "ci_hi"): _*)
     },
       // same md5->uniform (q102 convention) -> shared Poisson(1) inverse-CDF
       // literals; replicate means are exact dyadic ratios (integer n_chars),

@@ -519,9 +519,7 @@ object ProfileDrift {
       Drift.jsDivergence(
           ev.filter(to_date(col("ts")) < cut),
           ev.filter(to_date(col("ts")) >= cut), "event_type")
-        .select(col("n_a"), col("n_b"), col("k"),
-          (round(col("jsd_nats"), 8) + lit(0.0)).as("jsd_nats"),
-          (round(col("jsd_bits"), 8) + lit(0.0)).as("jsd_bits"))
+        .select(cols("n_a", "n_b", "k") ++ rounded(8)("jsd_nats", "jsd_bits"): _*)
     },
       // JSD over the union of observed categories; one-sided categories
       // contribute their full p*ln(2) mass (no smoothing)
@@ -555,9 +553,8 @@ object ProfileDrift {
     // shared \x-escape character classes on both engines (the q213 lesson)
     Case("q236_unicode_anomaly", (s, dir) => {
       QualityOps.unicodeAnomalies(read(s, dir, "documents"), "text", "lang")
-        .select(col("lang"), col("n_docs"), col("n_docs_replacement"),
-          col("n_docs_control"), col("n_docs_mixed_script"),
-          (round(col("nonascii_share"), 6) + lit(0.0)).as("nonascii_share"))
+        .select(cols("lang", "n_docs", "n_docs_replacement", "n_docs_control",
+          "n_docs_mixed_script") ++ rounded(6)("nonascii_share"): _*)
         .orderBy(col("lang"))
     },
       // same \x-escape character classes as QualityOps (interpolated from
@@ -599,9 +596,8 @@ object ProfileDrift {
           li.filter(col("l_orderkey") % 2 === 0),
           li.filter(col("l_orderkey") % 2 === 1), "grp", "l_extendedprice",
           alpha = 0.10)
-        .select(col("group").as("grp"), col("n_a"), col("n_b"), col("ks"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"),
-          col("rejected"))
+        .select(Seq(col("group").as("grp"), col("n_a"), col("n_b"), col("ks")) ++
+          rounded(6)("p_value") ++ cols("rejected"): _*)
         .orderBy(col("grp"))
     },
       // per-group KS + the 100-term Kolmogorov series (identical truncation)
@@ -654,11 +650,8 @@ object ProfileDrift {
       val docs = read(s, dir, "documents")
         .withColumn("hit", col("text").contains("spark"))
       QualityOps.ebShrinkRates(docs, "source", "hit")
-        .select(col("key").as("source"), col("n"), col("k"),
-          (round(col("raw_rate"), 6) + lit(0.0)).as("raw_rate"),
-          (round(col("shrunk_rate"), 6) + lit(0.0)).as("shrunk_rate"),
-          (round(col("alpha"), 4) + lit(0.0)).as("alpha"),
-          (round(col("beta"), 4) + lit(0.0)).as("beta"))
+        .select(Seq(col("key").as("source"), col("n"), col("k")) ++
+          rounded(6)("raw_rate", "shrunk_rate") ++ rounded(4)("alpha", "beta"): _*)
         .orderBy(col("source"))
     },
       // beta-binomial MoM prior over raw per-source rates; degenerate
@@ -695,10 +688,8 @@ object ProfileDrift {
       Drift.distributionDistances(
           ev.filter(to_date(col("ts")) < cut),
           ev.filter(to_date(col("ts")) >= cut), "event_type")
-        .select(col("n_a"), col("n_b"), col("k"),
-          (round(col("tv"), 6) + lit(0.0)).as("tv"),
-          (round(col("hellinger"), 6) + lit(0.0)).as("hellinger"),
-          (round(col("chi2_sym"), 6) + lit(0.0)).as("chi2_sym"))
+        .select(cols("n_a", "n_b", "k") ++
+          rounded(6)("tv", "hellinger", "chi2_sym"): _*)
     },
       // the q230 join shape; three distances over the category union
       """WITH a AS (SELECT event_type::VARCHAR v, count(*)::BIGINT ca
@@ -729,10 +720,7 @@ object ProfileDrift {
       val cut = lit("2024-01-08").cast("date")
       Drift.qqDrift(ev.filter(to_date(col("ts")) < cut),
           ev.filter(to_date(col("ts")) >= cut), "value")
-        .select((round(col("p"), 2) + lit(0.0)).as("p"),
-          (round(col("q_a"), 4) + lit(0.0)).as("q_a"),
-          (round(col("q_b"), 4) + lit(0.0)).as("q_b"),
-          (round(col("shift"), 4) + lit(0.0)).as("shift"))
+        .select(rounded(2)("p") ++ rounded(4)("q_a", "q_b", "shift"): _*)
         .orderBy(col("p"))
     },
       // per-decile quantile_cont on each side; 4dp absorbs the
@@ -758,11 +746,8 @@ object ProfileDrift {
       val ev = EventsSource.read(s, s"$dir/events.parquet")
         .withColumn("is_err", col("event_type") === "error")
       QualityOps.sprtGate(ev, "is_err", p0 = 0.02, p1 = 0.05)
-        .select(col("n"), col("k"),
-          (round(col("llr"), 4) + lit(0.0)).as("llr"),
-          (round(col("lower"), 6) + lit(0.0)).as("lower"),
-          (round(col("upper"), 6) + lit(0.0)).as("upper"),
-          col("decision"))
+        .select(cols("n", "k") ++ rounded(4)("llr") ++
+          rounded(6)("lower", "upper") ++ cols("decision"): _*)
     },
       // Wald boundaries and per-observation log-ratios from the same
       // double literals; one count/sum
@@ -787,10 +772,8 @@ object ProfileDrift {
     Case("q270_t_closeness", (s, dir) => {
       QualityOps.tCloseness(read(s, dir, "lineitem"),
           Seq("l_returnflag", "l_linestatus"), "l_quantity", t = 0.05)
-        .select(col("n_rows"), col("n_classes"),
-          (round(col("t_closeness"), 6) + lit(0.0)).as("t_closeness"),
-          col("n_classes_above_t"), col("n_rows_at_risk"),
-          col("risk_share"), col("pass"))
+        .select(cols("n_rows", "n_classes") ++ rounded(6)("t_closeness") ++
+          cols("n_classes_above_t", "n_rows_at_risk", "risk_share", "pass"): _*)
     },
       // ordered-EMD per class over the bounded quantity spine; global
       // cumulative + class-keyed cumulatives, worst-class gate at t = 0.05
@@ -834,9 +817,7 @@ object ProfileDrift {
       val docs = read(s, dir, "documents")
       Drift.wasserstein1(docs.filter(col("lang") === "en"),
           docs.filter(col("lang") === "de"), "n_chars")
-        .select(col("n_a"), col("n_b"), col("n_values"),
-          (round(col("w1"), 6) + lit(0.0)).as("w1"),
-          (round(col("w1_norm"), 6) + lit(0.0)).as("w1_norm"))
+        .select(cols("n_a", "n_b", "n_values") ++ rounded(6)("w1", "w1_norm"): _*)
     },
       // W1 = sum |F_a - F_b| * gap over consecutive merged distinct values
       """WITH va AS (SELECT n_chars::DOUBLE v, count(*)::BIGINT na
@@ -869,10 +850,7 @@ object ProfileDrift {
       val docs = read(s, dir, "documents")
       Drift.cramerVonMises(docs.filter(col("lang") === "en"),
           docs.filter(col("lang") === "de"), "n_chars")
-        .select(col("n_a"), col("n_b"),
-          (round(col("t"), 6) + lit(0.0)).as("t"),
-          (round(col("t_expected"), 6) + lit(0.0)).as("t_expected"),
-          (round(col("z"), 6) + lit(0.0)).as("z"))
+        .select(cols("n_a", "n_b") ++ rounded(6)("t", "t_expected", "z"): _*)
     },
       // same distinct-value inclusive CDFs; Anderson's exact null moments
       """WITH va AS (SELECT n_chars::DOUBLE v, count(*)::BIGINT na
@@ -909,11 +887,8 @@ object ProfileDrift {
       val docs = read(s, dir, "documents")
       Drift.kuiperTest(docs.filter(col("lang") === "en"),
           docs.filter(col("lang") === "de"), "n_chars")
-        .select(col("n_a"), col("n_b"),
-          (round(col("d_plus"), 6) + lit(0.0)).as("d_plus"),
-          (round(col("d_minus"), 6) + lit(0.0)).as("d_minus"),
-          (round(col("v"), 6) + lit(0.0)).as("v"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n_a", "n_b") ++
+          rounded(6)("d_plus", "d_minus", "v", "p_value"): _*)
     },
       // the wasserstein CDF chain with directional maxima and the same
       // truncated Kuiper series
@@ -954,10 +929,7 @@ object ProfileDrift {
       val docs = read(s, dir, "documents")
       Drift.andersonDarling2(docs.filter(col("lang") === "en"),
           docs.filter(col("lang") === "de"), "n_chars")
-        .select(col("n_a"), col("n_b"),
-          (round(col("a2"), 6) + lit(0.0)).as("a2"),
-          (round(col("sigma"), 6) + lit(0.0)).as("sigma"),
-          (round(col("t_stat"), 6) + lit(0.0)).as("t_stat"))
+        .select(cols("n_a", "n_b") ++ rounded(6)("a2", "sigma", "t_stat"): _*)
     },
       // the pooled-distinct-value cumsum with midrank adjustments; h and g
       // via the same harmonic identities over range spines
@@ -1022,8 +994,7 @@ object ProfileDrift {
       val ref = ev.filter(to_date(col("ts")) < lit("2024-01-08"))
       val cur = ev.filter(to_date(col("ts")) >= lit("2024-01-08"))
       Drift.psiQuantile(ref, cur, "value", bins = 10)
-        .select(col("n_a"), col("n_b"), col("n_bins"),
-          (round(col("psi"), 6) + lit(0.0)).as("psi"))
+        .select(cols("n_a", "n_b", "n_bins") ++ rounded(6)("psi"): _*)
     },
       // the q326 rank-exact cutpoints on the reference week; eps-floored
       // shares on both sides
@@ -1070,11 +1041,8 @@ object ProfileDrift {
       Drift.covariateBalance(docs.filter(col("doc_id") % 2 === 0),
           docs.filter(col("doc_id") % 2 === 1),
           Seq("x_chars", "x_tokens", "x_types"))
-        .select(col("covariate"), col("n_a"), col("n_b"),
-          (round(col("mean_a"), 6) + lit(0.0)).as("mean_a"),
-          (round(col("mean_b"), 6) + lit(0.0)).as("mean_b"),
-          (round(col("smd"), 6) + lit(0.0)).as("smd"),
-          (round(col("var_ratio"), 6) + lit(0.0)).as("var_ratio"))
+        .select(cols("covariate", "n_a", "n_b") ++
+          rounded(6)("mean_a", "mean_b", "smd", "var_ratio"): _*)
         .gateOrdered(col("covariate"))
     },
       // one moment pass per cohort, reshaped to per-covariate rows
@@ -1110,9 +1078,7 @@ object ProfileDrift {
       val docs = read(s, dir, "documents")
       Drift.energyDistance(docs.filter(col("lang") === "en"),
           docs.filter(col("lang") === "de"), "n_chars")
-        .select(col("n_a"), col("n_b"),
-          (round(col("e2"), 6) + lit(0.0)).as("e2"),
-          (round(col("e"), 6) + lit(0.0)).as("e"))
+        .select(cols("n_a", "n_b") ++ rounded(6)("e2", "e"): _*)
     },
       // the wasserstein CTE chain with squared gaps, doubled
       """WITH va AS (SELECT n_chars::DOUBLE v, count(*)::BIGINT na
@@ -1396,12 +1362,10 @@ object ProfileDrift {
           ((unix_micros(col("h")) - lit(1704067200000000L)) / lit(3600000000L))
             .cast("double"))
       Drift.trendSlope(hourly, Seq("event_type"), "x", "n")
-        .select(col("event_type"), col("n_points"),
-          // + 0.0 folds IEEE −0.0 into +0.0 (a flat series rounds to −0.0
-          // on the Spark side; DuckDB prints 0)
-          (round(col("slope"), 4) + lit(0.0)).as("slope"),
-          (round(col("intercept"), 4) + lit(0.0)).as("intercept"),
-          (round(col("r2"), 4) + lit(0.0)).as("r2"))
+        // rounded folds IEEE −0.0 into +0.0 (a flat series rounds to −0.0
+        // on the Spark side; DuckDB prints 0)
+        .select(cols("event_type", "n_points") ++
+          rounded(4)("slope", "intercept", "r2"): _*)
         .orderBy(col("event_type"))
     },
       // Least-squares trend per event type over hourly counts; x is exact

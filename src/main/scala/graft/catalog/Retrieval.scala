@@ -614,8 +614,7 @@ object Retrieval {
         }: _*).as("vb"))
       Similarity.procrustesAlign(src, planted, "vec_id", "embedding", "vb",
           dims = 8)
-        .select(col("i"), col("j"),
-          (round(col("r"), 6) + lit(0.0)).as("r"))
+        .select(cols("i", "j") ++ rounded(6)("r"): _*)
         .gateOrdered(col("i"), col("j"))
     },
       // the planted transform IS the expected answer: Jacobi lands within
@@ -640,10 +639,8 @@ object Retrieval {
       Similarity.silhouetteSimplified(read(s, dir, "embeddings"), "vec_id",
           "embedding", initIds = Seq(0L, 1L, 2L, 3L), iterations = 1,
           dims = 8)
-        .select(col("cluster"), col("n"),
-          (round(col("mean_silhouette"), 6) + lit(0.0)).as("mean_silhouette"),
-          (round(col("mean_dist_own"), 6) + lit(0.0)).as("mean_dist_own"),
-          (round(col("mean_dist_other"), 6) + lit(0.0)).as("mean_dist_other"))
+        .select(cols("cluster", "n") ++
+          rounded(6)("mean_silhouette", "mean_dist_own", "mean_dist_other"): _*)
         .gateOrdered(col("cluster"))
     },
       // kmeansCtes + decimal-exact m2 centroids + the 12-dp per-point
@@ -1069,11 +1066,10 @@ object Retrieval {
       Similarity.groupCentroids(read(s, dir, "embeddings"), "label", "embedding")
         .select(col("group").as("label"), col("n_vectors"),
           posexplode(col("centroid")).as(Seq("dim", "value")))
-        .select(col("label"), col("dim"),
-          // + 0.0 folds IEEE −0.0 into +0.0 (DuckDB prints 0; a zero mean
-          // of negative values would otherwise hash-mismatch)
-          (round(col("value"), 4) + lit(0.0)).as("value"),
-          col("n_vectors"))
+        // rounded folds IEEE −0.0 into +0.0 (DuckDB prints 0; a zero mean
+        // of negative values would otherwise hash-mismatch)
+        .select(cols("label", "dim") ++ rounded(4)("value") ++
+          cols("n_vectors"): _*)
         .orderBy(col("label"), col("dim"))
     },
       // Element-wise mean embedding per label; dim is 0-based
@@ -1090,9 +1086,7 @@ object Retrieval {
     Case("q225_mislabel_candidates", (s, dir) => {
       Similarity.mislabelCandidates(read(s, dir, "embeddings"),
           "vec_id", "embedding", "label", k = 5)
-        .select(col("label"), col("id"),
-          (round(col("dist"), 4) + lit(0.0)).as("dist"),
-          (round(col("z"), 4) + lit(0.0)).as("z"), col("rank"))
+        .select(cols("label", "id") ++ rounded(4)("dist", "z") ++ cols("rank"): _*)
         .orderBy(col("label"), col("rank"))
     },
       // Centroid = per-dim mean (q82's construction); dist = 1 − cos to the
@@ -1133,9 +1127,7 @@ object Retrieval {
           .withColumn("rank", row_number().over(w))
       }
       Search.rbo(topTerms(0), topTerms(1), "term", "rank", p = 0.9, k = 20)
-        .select(col("depth"), col("n_common"),
-          (round(col("rbo"), 6) + lit(0.0)).as("rbo"),
-          (round(col("rbo_ext"), 6) + lit(0.0)).as("rbo_ext"))
+        .select(cols("depth", "n_common") ++ rounded(6)("rbo", "rbo_ext"): _*)
     },
       // RBO from the overlap-at-depth table: X_d = pairs whose max rank <= d;
       // same q72-convention tokenizer, (count desc, term asc) rankings
@@ -1170,12 +1162,8 @@ object Retrieval {
     Case("q276_ndcg", (s, dir) => {
       val (res, rel) = brandRecEval(s, dir)
       Search.rankingMetrics(res, rel, "c", "b", "r", "rel", k = 10)
-        .select(col("c").as("custkey"), col("n_ranked"), col("n_rel"),
-          (round(col("dcg"), 6) + lit(0.0)).as("dcg"),
-          (round(col("idcg"), 6) + lit(0.0)).as("idcg"),
-          (round(col("ndcg"), 6) + lit(0.0)).as("ndcg"),
-          (round(col("ap"), 6) + lit(0.0)).as("ap"),
-          (round(col("rr"), 6) + lit(0.0)).as("rr"))
+        .select(Seq(col("c").as("custkey"), col("n_ranked"), col("n_rel")) ++
+          rounded(6)("dcg", "idcg", "ndcg", "ap", "rr"): _*)
         .gateOrdered(col("custkey"))
     },
       // trec_eval conventions: graded gain (2^rel-1)/log2(r+1), IDCG from
@@ -1192,10 +1180,7 @@ object Retrieval {
     // upper-triangle cells from ONE VectorMomentsAgg scan
     Case("q315_embedding_cov", (s, dir) => {
       Similarity.embeddingCovariance(read(s, dir, "embeddings"), "embedding")
-        .select(col("i"), col("j"),
-          (round(col("mean_i"), 6) + lit(0.0)).as("mean_i"),
-          (round(col("mean_j"), 6) + lit(0.0)).as("mean_j"),
-          (round(col("cov"), 6) + lit(0.0)).as("cov"))
+        .select(cols("i", "j") ++ rounded(6)("mean_i", "mean_j", "cov"): _*)
         .gateOrdered(col("i"), col("j"))
     },
       // d-bounded index cross join replays the same raw-moment covariance
@@ -1253,12 +1238,9 @@ object Retrieval {
         (comp, nrm, ortho, res / lam(comp), trace, eigDesc)
       }.toDF("component", "norm", "max_ortho", "rel_residual", "trace",
           "eig_descending")
-        .select(col("component"),
-          (round(col("norm"), 6) + lit(0.0)).as("norm"),
-          (round(col("max_ortho"), 6) + lit(0.0)).as("max_ortho"),
-          (round(col("rel_residual"), 6) + lit(0.0)).as("rel_residual"),
-          (round(col("trace"), 6) + lit(0.0)).as("trace"),
-          col("eig_descending"))
+        .select(cols("component") ++
+          rounded(6)("norm", "max_ortho", "rel_residual", "trace") ++
+          cols("eig_descending"): _*)
         .gateOrdered(col("component"))
     },
       // the eigen contract: unit norms / zero orthogonality / zero C·v−λv
@@ -1301,8 +1283,8 @@ object Retrieval {
         eigenvalues = lam, eps = 0.0)
       proj.select(col("projection")(0).as("z0"), col("projection")(1).as("z1"))
         .agg(count(lit(1)).as("n"),
-          (round(var_samp(col("z0")), 4) + lit(0.0)).as("var_z0"),
-          (round(var_samp(col("z1")), 4) + lit(0.0)).as("var_z1"),
+          roundedExpr(var_samp(col("z0")), 4).as("var_z0"),
+          roundedExpr(var_samp(col("z1")), 4).as("var_z1"),
           // the embeddings' spectrum is near-degenerate, so the exact
           // cross-covariance rotates with fp summation order — assert
           // the decorrelation CONTRACT, not the unstable digits
@@ -1318,9 +1300,7 @@ object Retrieval {
     // the no-pair-join identity (|sum u|^2 - n)/(n(n-1))
     Case("q321_isotropy", (s, dir) => {
       Similarity.isotropyScore(read(s, dir, "embeddings"), "embedding")
-        .select(col("n"),
-          (round(col("mean_pairwise_cos"), 6) + lit(0.0))
-            .as("mean_pairwise_cos"))
+        .select(cols("n") ++ rounded(6)("mean_pairwise_cos"): _*)
     },
       // per-dim sums of the normalized vectors; the same pair-free identity
       """WITH x AS (SELECT embedding e,
@@ -1352,8 +1332,7 @@ object Retrieval {
         array(element_at(col("embedding"), 1),
           element_at(col("embedding"), 2)).as("v2"))
       Similarity.mahalanobisScores(e2, "v2", ridge = 0.0)
-        .select(col("vec_id"),
-          (round(col("mahalanobis_sq"), 6) + lit(0.0)).as("md2"))
+        .select(col("vec_id"), roundedExpr(col("mahalanobis_sq"), 6).as("md2"))
         .gateOrdered(col("vec_id"))
     },
       // full per-row replay: the 2×2 inverse is closed-form, so DuckDB
@@ -1384,8 +1363,7 @@ object Retrieval {
       val emb = read(s, dir, "embeddings")
         .withColumn("head16", slice(col("embedding"), 1, 16))
       Similarity.linearCka(emb, "embedding", "head16")
-        .select(col("n"), col("dim_a"), col("dim_b"),
-          (round(col("cka"), 6) + lit(0.0)).as("cka"))
+        .select(cols("n", "dim_a", "dim_b") ++ rounded(6)("cka"): _*)
     },
       // covariance blocks from raw pair moments over the upper triangle;
       // the rectangle/diagonal multiplicities fold the symmetric cells
@@ -1424,11 +1402,8 @@ object Retrieval {
         array(element_at(col("embedding"), 1),
           element_at(col("embedding"), 2)).as("v2"))
       Similarity.pcaComponents(e2, "v2", k = 2)
-        .select(col("component"), col("dim"),
-          (round(col("value"), 6) + lit(0.0)).as("value"),
-          (round(col("eigenvalue"), 6) + lit(0.0)).as("eigenvalue"),
-          (round(col("explained_var_ratio"), 6) + lit(0.0))
-            .as("explained_var_ratio"))
+        .select(cols("component", "dim") ++
+          rounded(6)("value", "eigenvalue", "explained_var_ratio"): _*)
         .gateOrdered(col("component"), col("dim"))
     },
       // closed-form 2×2 eigen replay: λ = (t ± √((cxx−cyy)² + 4cxy²))/2,
@@ -1485,9 +1460,9 @@ object Retrieval {
       Search.rankingMetrics(res, rel, "c", "b", "r", "rel", k = 10)
         .agg(count(lit(1)).as("n_queries"),
           count(col("ndcg")).as("n_judged"),
-          (round(avg(col("ndcg")), 6) + lit(0.0)).as("mean_ndcg"),
-          (round(avg(col("ap")), 6) + lit(0.0)).as("map"),
-          (round(avg(col("rr")), 6) + lit(0.0)).as("mrr"))
+          roundedExpr(avg(col("ndcg")), 6).as("mean_ndcg"),
+          roundedExpr(avg(col("ap")), 6).as("map"),
+          roundedExpr(avg(col("rr")), 6).as("mrr"))
     },
       (rankingEvalSql + """
          SELECT count(*)::BIGINT AS n_queries, count(ndcg)::BIGINT AS n_judged,
@@ -1522,7 +1497,7 @@ object Retrieval {
         .select(col("id").as("vec_id"), posexplode(col("znorm")).as(Seq("dim", "z")))
         // + 0.0 canonicalizes IEEE −0.0 (a tiny negative z rounds to −0.0
         // here but to 0 in DuckDB's formatter)
-        .select(col("vec_id"), col("dim"), (round(col("z"), 4) + lit(0.0)).as("z"))
+        .select(cols("vec_id", "dim") ++ rounded(4)("z"): _*)
         .gateOrdered(col("vec_id"), col("dim"))
     },
       // Same per-dim moments joined back: z = (v - mean)/std, 0 for constant

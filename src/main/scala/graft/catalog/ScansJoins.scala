@@ -630,11 +630,8 @@ object ScansJoins {
       val exact = li.filter(col("l_orderkey").isNotNull)
         .agg(count_distinct(col("l_orderkey")).as("exact"))
       sk.crossJoin(broadcast(exact))
-        .select(col("k"), col("n_kept"),
-          (round(col("estimate"), 6) + lit(0.0)).as("estimate"),
-          col("exact"),
-          (round(abs(col("estimate") - col("exact")) / col("exact"), 6)
-            + lit(0.0)).as("rel_error"))
+        .select(cols("k", "n_kept") ++ rounded(6)("estimate") ++ Seq(col("exact"),
+          roundedExpr(abs(col("estimate") - col("exact")) / col("exact"), 6).as("rel_error")): _*)
     },
       // replay the identical sketch: same md5-prefix hash, same k smallest
       // DISTINCT values, same closed-form estimator
@@ -724,10 +721,7 @@ object ScansJoins {
         .select(explode(sequence(col("lo"), col("hi"))).as("t"))
       val series = spine.join(daily, Seq("t"), "left").na.fill(0.0, Seq("y"))
       Temporal.classicalDecompose(series, "t", "y", period = 7)
-        .select(col("t"), col("y"),
-          (round(col("trend"), 6) + lit(0.0)).as("trend"),
-          (round(col("seasonal"), 6) + lit(0.0)).as("seasonal"),
-          (round(col("remainder"), 6) + lit(0.0)).as("remainder"))
+        .select(cols("t", "y") ++ rounded(6)("trend", "seasonal", "remainder"): _*)
         .gateOrdered(col("t"))
     },
       // the q301 day spine; trend via the bounded offsets join; weekday
@@ -760,9 +754,8 @@ object ScansJoins {
         .select(col("l_suppkey").as("supp"), col("l_partkey").as("part"))
       graft.operators.GraphFeatures
         .coOccurrencePairs(edges, "supp", "part", minCommon = 140)
-        .select(col("a"), col("b"), col("common"),
-          (round(col("adamic_adar"), 6) + lit(0.0)).as("adamic_adar"),
-          (round(col("jaccard"), 6) + lit(0.0)).as("jaccard"))
+        .select(cols("a", "b", "common") ++
+          rounded(6)("adamic_adar", "jaccard"): _*)
         .gateOrdered(col("a"), col("b"))
     },
       // the same distinct-edge self-join over parts; AA weight from the
@@ -788,8 +781,8 @@ object ScansJoins {
         .select(col("l_suppkey").as("supp"), col("l_partkey").as("part"))
       graft.operators.GraphFeatures
         .degreeAssortativity(edges, "supp", "part", directed = true)
-        .select(col("n_edges"), col("n_src"), col("n_dst"),
-          (round(col("assortativity"), 6) + lit(0.0)).as("assortativity"))
+        .select(cols("n_edges", "n_src", "n_dst") ++
+          rounded(6)("assortativity"): _*)
     },
       // endpoint-degree Pearson over the distinct directed edge list;
       // integer moments are exact on both engines

@@ -1,12 +1,75 @@
 package graft.catalog
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
 
-/** Helpers shared by more than one catalog family. */
+/** Helpers shared by more than one catalog family, and the catalog's
+  * output vocabulary: the rounded output columns and the normal p-value,
+  * on the Spark side as columns and on the oracle side as SQL fragments
+  * that reproduce the oracle strings byte for byte. */
 object Support {
+
+  /** The output columns `names`, each rounded to `k` decimal places under
+    * its own name. The `+ 0.0` folds IEEE `-0.0` into `0.0`: a tiny
+    * negative value (a flat trend, a near-zero mixed-sign sum) rounds to
+    * `-0.0`, which hashes apart from `0.0`; the oracles fold it the same
+    * way, writing `round(x, k) + 0.0`. */
+  private[catalog] def rounded(k: Int)(names: String*): Seq[Column] =
+    names.map(n => roundedExpr(col(n), k).as(n))
+
+  /** `c` rounded to `k` decimal places with `-0.0` folded into `0.0` (see
+    * [[rounded]]), for an output computed inside the projection. */
+  private[catalog] def roundedExpr(c: Column, k: Int): Column = round(c, k) + lit(0.0)
+
+  /** The columns `names` as they are: the unrounded part of an output
+    * list written with [[rounded]]. */
+  private[catalog] def cols(names: String*): Seq[Column] = names.map(col)
+
+  /** Two-sided normal p-value `2(1 - Φ(|z|))` by Abramowitz–Stegun 7.1.26:
+    * `erfc(a) ≈ t(a₁ + t(a₂ + t(a₃ + t(a₄ + t·a₅)))) e^(−a²)` with
+    * `a = |z|/√2` and `t = 1/(1 + p·a)`, absolute error below 1.5e-7. The
+    * oracle replays the same polynomial ([[asT]], [[asPoly]]), so both
+    * engines round the same double. */
+  private[catalog] def normalPValue(z: Column): Column = {
+    val az = abs(z) / math.sqrt(2.0)
+    val t = lit(1.0) / (lit(1.0) + lit(0.3275911) * az)
+    t * (lit(0.254829592) + t * (lit(-0.284496736) + t * (lit(1.421413741) + t *
+      (lit(-1.453152027) + t * 1.061405429)))) * exp(-az * az)
+  }
+
+  /** Oracle SQL for the A–S `t` of [[normalPValue]], where `a` is the SQL
+    * for `|z|` (or any non-negative statistic on the `|z|` scale). */
+  private[catalog] def asT(a: String): String =
+    s"1.0 / (1.0 + 0.3275911 * $a / sqrt(2.0))"
+
+  /** Oracle SQL for the A–S polynomial of [[normalPValue]] in `t` times
+    * `exp(-az * az)`, broken over three lines as the oracles write it: the
+    * two continuation lines start with `indent` spaces. */
+  private[catalog] def asPoly(t: String, az: String, indent: Int): String = {
+    val pad = "\n" + " " * indent
+    s"$t * (0.254829592 + $t * (-0.284496736$pad+ $t * (1.421413741" +
+      s" + $t * (-1.453152027$pad+ $t * 1.061405429)))) * exp(-$az * $az)"
+  }
+
+  /** Oracle CTEs `zz`, `pv` and `pp` of a two-coefficient Wald table: from
+    * `st`'s `b0, b1, se0, se1` they add `z0, z1` and the two-sided
+    * p-values `p0, p1` (NULL where `z` is), ending at `FROM pv)`. */
+  private[catalog] val waldCtes: String = {
+    val ps = Seq(0, 1).map { i =>
+      s"""CASE WHEN z$i IS NOT NULL THEN
+                   least(1.0, ${asPoly(s"t$i", s"az$i", 21)}) END p$i"""
+    }
+    s"""zz AS (SELECT *, b0 / se0 z0, b1 / se1 z1 FROM st),
+         pv AS (SELECT *, abs(z0) / sqrt(2.0) az0,
+                 ${asT("abs(z0)")} t0,
+                 abs(z1) / sqrt(2.0) az1,
+                 ${asT("abs(z1)")} t1 FROM zz),
+         pp AS (SELECT *,
+                 ${ps.mkString(",\n                 ")}
+               FROM pv)"""
+  }
 
   /** All catalog reads conform to [[graft.sources.CanonicalSchema]]: a
     * dataset regeneration that re-encodes a column (the round-5 events

@@ -1,5 +1,6 @@
 package graft.catalog
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Behavior, LinearModel}
@@ -13,6 +14,40 @@ import Support._
   * built on them. */
 object SurvivalGlm {
 
+  /** The GLM fits' covariate: a user's event count, centred at 66 and
+    * scaled by 10; [[xEventsSql]] is the same design in the oracles. */
+  private def xEvents: Column = ((count(lit(1)) - 66) / 10.0).as("x_events")
+  private val xEventsSql = "(count(*) - 66) / 10.0"
+
+  /** Hours from each user's first event to their first purchase, the input
+    * of the KM-family fits: `dur_h`, and `cens` when the user never buys
+    * and the clock stops at the corpus's last event; then `extra`, computed
+    * on the per-user row. [[purchaseLifetimesSql]] is its oracle twin. */
+  private def purchaseLifetimes(s: SparkSession, dir: String,
+      extra: Column*): DataFrame = {
+    val ev = EventsSource.read(s, s"$dir/events.parquet")
+    val perUser = ev.groupBy(col("user_id")).agg(
+      min(col("ts")).as("first_ts"),
+      min(when(col("event_type") === "purchase", col("ts"))).as("p_ts"))
+    val horizon = ev.agg(max(col("ts")).as("h_ts"))
+    perUser.crossJoin(broadcast(horizon)).select(Seq(
+      floor((unix_timestamp(coalesce(col("p_ts"), col("h_ts"))) -
+        unix_timestamp(col("first_ts"))) / 3600).cast("long").as("dur_h"),
+      col("p_ts").isNull.as("cens")) ++ extra: _*)
+  }
+
+  /** Oracle CTEs `pu`, `h` and `bl` of [[purchaseLifetimes]]: `bl` holds
+    * `life`, `cens` and the SQL columns in `extra`. */
+  private def purchaseLifetimesSql(extra: String*): String =
+    s"""pu AS (SELECT user_id, min(ts) AS f,
+                  min(CASE WHEN event_type = 'purchase' THEN ts END) AS p
+                FROM events GROUP BY 1),
+         h AS (SELECT max(ts) AS hm FROM events),
+         bl AS (SELECT floor((floor(epoch(coalesce(p, hm))) -
+                  floor(epoch(f))) / 3600)::BIGINT AS life,
+                  (p IS NULL) AS cens${extra.map(",\n                  " + _).mkString}
+                FROM pu, h)"""
+
   /** q356 oracle: the Poisson-GLM Newton loop replayed as chained CTEs —
     * the coxCtes shape without risk sets. Every moment (Σy, Σyx, Σμ,
     * Σμx, Σμx²) is an exact decimal/long sum; β re-rounds to 12 dp per
@@ -21,10 +56,10 @@ object SurvivalGlm {
     // du MATERIALIZED: referenced by every iteration's score pass (and
     // q375's NB chain on top) — inlining would recompute the per-user
     // groupby once per reference
-    val base = """du AS MATERIALIZED (SELECT
+    val base = s"""du AS MATERIALIZED (SELECT
              sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                ::BIGINT y,
-             CAST((count(*) - 66) / 10.0 AS DECIMAL(8,4)) x0
+             CAST($xEventsSql AS DECIMAL(8,4)) x0
            FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
            GROUP BY user_id),
          nn AS (SELECT count(*)::BIGINT n, CAST(sum(y) AS DOUBLE) sy,
@@ -68,7 +103,7 @@ object SurvivalGlm {
       extraCols: String = ""): String = {
     val base = s"""du AS (SELECT
              $yExpr::BIGINT y,
-             CAST((count(*) - 66) / 10.0 AS DECIMAL(8,4)) x0$extraCols
+             CAST($xEventsSql AS DECIMAL(8,4)) x0$extraCols
            FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
            GROUP BY user_id),
          nn AS (SELECT count(*)::BIGINT n, CAST(sum(y) AS DOUBLE) sy,
@@ -114,7 +149,7 @@ object SurvivalGlm {
              ELSE CAST(0 AS DECIMAL(12,2)) END)"""
     val base = s"""du AS MATERIALIZED (SELECT
              CAST($spend AS DECIMAL(18,6)) y,
-             CAST((count(*) - 66) / 10.0 AS DECIMAL(8,4)) x0
+             CAST($xEventsSql AS DECIMAL(8,4)) x0
            FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
            GROUP BY user_id
            HAVING $spend > 0),
@@ -157,10 +192,10 @@ object SurvivalGlm {
     * round₁₂(ln(Σd/Σt)); trailing no-step pass prices the SE at the
     * reported β. */
   private def expAftCtes(iterations: Int): String = {
-    val base = """pu AS (SELECT user_id,
+    val base = s"""pu AS (SELECT user_id,
              min(floor(epoch(ts) / 3600))::BIGINT f,
              max(floor(epoch(ts) / 3600))::BIGINT l,
-             CAST((count(*) - 66) / 10.0 AS DECIMAL(8,4)) x0
+             CAST($xEventsSql AS DECIMAL(8,4)) x0
            FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
            GROUP BY user_id),
          hz AS (SELECT max(l) hmax FROM pu),
@@ -248,10 +283,10 @@ object SurvivalGlm {
     * round-12 β — every expression mirrors
     * [[graft.operators.Behavior.coxPH]] verbatim. */
   private def coxCtes(iterations: Int): String = {
-    val base = """pu AS (SELECT user_id,
+    val base = s"""pu AS (SELECT user_id,
              min(floor(epoch(ts) / 3600))::BIGINT f,
              max(floor(epoch(ts) / 3600))::BIGINT l,
-             (count(*) - 66) / 10.0 xe,
+             $xEventsSql xe,
              (sum(CASE WHEN value > 50 THEN 1 ELSE 0 END) - 24) / 10.0 xt
            FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
            GROUP BY 1),
@@ -308,6 +343,13 @@ object SurvivalGlm {
     s"$base,\n         $iters"
   }
 
+  /** The last output column of the three ATE oracles: the rounded
+    * two-sided A–S p-value ([[Support.asPoly]]) from `zz`'s `t` and `az`,
+    * with the line breaks those oracles use. */
+  private val ateP = """round(least(1.0, t * (0.254829592 + t * (-0.284496736
+             + t * (1.421413741 + t * (-1.453152027 + t * 1.061405429))))
+             * exp(-az * az)), 6) + 0.0 AS p_value"""
+
   val cases: Seq[Case] = Seq(
     // ---- Kaplan-Meier time-to-first-purchase survival (Behavior) ---------
     // right-censored: a user with no purchase by corpus end contributes a
@@ -315,32 +357,17 @@ object SurvivalGlm {
     // survival product is exp of a fixed-point prefix sum, identical on
     // both engines (no float product-order ambiguity)
     Case("q235_km_survival", (s, dir) => {
-      val ev = EventsSource.read(s, s"$dir/events.parquet")
-      val perUser = ev.groupBy(col("user_id")).agg(
-        min(col("ts")).as("first_ts"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("p_ts"))
-      val horizon = ev.agg(max(col("ts")).as("h_ts"))
-      val durations = perUser.crossJoin(broadcast(horizon)).select(
-        floor((unix_timestamp(coalesce(col("p_ts"), col("h_ts"))) -
-          unix_timestamp(col("first_ts"))) / 3600).cast("long").as("dur_h"),
-        col("p_ts").isNull.as("cens"))
+      val durations = purchaseLifetimes(s, dir)
       Behavior.kmCurve(durations, "dur_h", "cens")
-        .select(col("duration").as("hours"), col("n_risk"), col("n_churned")
-            .as("n_events"), col("n_censored"),
-          (round(col("survival"), 6) + lit(0.0)).as("survival"))
+        .select(Seq(col("duration").as("hours"), col("n_risk"),
+          col("n_churned").as("n_events"), col("n_censored")) ++
+          rounded(6)("survival"): _*)
         .gateOrdered(col("hours"))
     },
       // Kaplan-Meier via two chained prefix sums; the survival product is
       // exp of a 1e-12 fixed-point running sum on BOTH engines, so float
       // product-order can never diverge
-      """WITH pu AS (SELECT user_id, min(ts) AS f,
-                  min(CASE WHEN event_type = 'purchase' THEN ts END) AS p
-                FROM events GROUP BY 1),
-         h AS (SELECT max(ts) AS hm FROM events),
-         bl AS (SELECT floor((floor(epoch(coalesce(p, hm))) -
-                  floor(epoch(f))) / 3600)::BIGINT AS life,
-                  (p IS NULL) AS cens
-                FROM pu, h),
+      s"""WITH ${purchaseLifetimesSql()},
          g AS (SELECT life,
                  sum(CASE WHEN cens THEN 0 ELSE 1 END)::BIGINT AS d,
                  sum(CASE WHEN cens THEN 1 ELSE 0 END)::BIGINT AS cns,
@@ -369,33 +396,15 @@ object SurvivalGlm {
     // the SAME fixed-point cumsum pass as the ln-survival prefix; the
     // exponential-Greenwood band stays inside [0,1]
     Case("q366_km_ci", (s, dir) => {
-      val ev = EventsSource.read(s, s"$dir/events.parquet")
-      val perUser = ev.groupBy(col("user_id")).agg(
-        min(col("ts")).as("first_ts"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("p_ts"))
-      val horizon = ev.agg(max(col("ts")).as("h_ts"))
-      val durations = perUser.crossJoin(broadcast(horizon)).select(
-        floor((unix_timestamp(coalesce(col("p_ts"), col("h_ts"))) -
-          unix_timestamp(col("first_ts"))) / 3600).cast("long").as("dur_h"),
-        col("p_ts").isNull.as("cens"))
+      val durations = purchaseLifetimes(s, dir)
       Behavior.kmCurveCI(durations, "dur_h", "cens")
-        .select(col("duration").as("hours"), col("n_risk"), col("n_events"),
-          (round(col("survival"), 6) + lit(0.0)).as("survival"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("ci_lo"), 6) + lit(0.0)).as("ci_lo"),
-          (round(col("ci_hi"), 6) + lit(0.0)).as("ci_hi"))
+        .select(Seq(col("duration").as("hours"), col("n_risk"), col("n_events")) ++
+          rounded(6)("survival", "se", "ci_lo", "ci_hi"): _*)
         .gateOrdered(col("hours"))
     },
       // the q235 fixed-point chain with the Greenwood increment as a second
       // quantized cumsum column; exponential-Greenwood band mirrored
-      """WITH pu AS (SELECT user_id, min(ts) AS f,
-                  min(CASE WHEN event_type = 'purchase' THEN ts END) AS p
-                FROM events GROUP BY 1),
-         h AS (SELECT max(ts) AS hm FROM events),
-         bl AS (SELECT floor((floor(epoch(coalesce(p, hm))) -
-                  floor(epoch(f))) / 3600)::BIGINT AS life,
-                  (p IS NULL) AS cens
-                FROM pu, h),
+      s"""WITH ${purchaseLifetimesSql()},
          g AS (SELECT life,
                  sum(CASE WHEN cens THEN 0 ELSE 1 END)::BIGINT AS d,
                  count(*)::BIGINT AS al
@@ -443,33 +452,17 @@ object SurvivalGlm {
     // q235's additive companion on the same censored durations; hazard and
     // variance ride one two-column fixed-point cumsum
     Case("q290_nelson_aalen", (s, dir) => {
-      val ev = EventsSource.read(s, s"$dir/events.parquet")
-      val perUser = ev.groupBy(col("user_id")).agg(
-        min(col("ts")).as("first_ts"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("p_ts"))
-      val horizon = ev.agg(max(col("ts")).as("h_ts"))
-      val durations = perUser.crossJoin(broadcast(horizon)).select(
-        floor((unix_timestamp(coalesce(col("p_ts"), col("h_ts"))) -
-          unix_timestamp(col("first_ts"))) / 3600).cast("long").as("dur_h"),
-        col("p_ts").isNull.as("cens"))
+      val durations = purchaseLifetimes(s, dir)
       Behavior.naCurve(durations, "dur_h", "cens")
-        .select(col("duration").as("hours"), col("n_risk"),
-          col("n_churned").as("n_events"), col("n_censored"),
-          (round(col("cum_hazard"), 6) + lit(0.0)).as("cum_hazard"),
-          (round(col("var_hazard"), 8) + lit(0.0)).as("var_hazard"),
-          (round(col("survival_na"), 6) + lit(0.0)).as("survival_na"))
+        .select(Seq(col("duration").as("hours"), col("n_risk"),
+          col("n_churned").as("n_events"), col("n_censored")) ++
+          rounded(6)("cum_hazard") ++ rounded(8)("var_hazard") ++
+          rounded(6)("survival_na"): _*)
         .gateOrdered(col("hours"))
     },
       // q235's duration construction; hazard + variance through the same
       // 1e12 fixed-point prefix sums
-      """WITH pu AS (SELECT user_id, min(ts) AS f,
-                  min(CASE WHEN event_type = 'purchase' THEN ts END) AS p
-                FROM events GROUP BY 1),
-         h AS (SELECT max(ts) AS hm FROM events),
-         bl AS (SELECT floor((floor(epoch(coalesce(p, hm))) -
-                  floor(epoch(f))) / 3600)::BIGINT AS life,
-                  (p IS NULL) AS cens
-                FROM pu, h),
+      s"""WITH ${purchaseLifetimesSql()},
          g AS (SELECT life,
                  sum(CASE WHEN cens THEN 0 ELSE 1 END)::BIGINT AS d,
                  sum(CASE WHEN cens THEN 1 ELSE 0 END)::BIGINT AS cns,
@@ -511,9 +504,8 @@ object SurvivalGlm {
           (col("__hmax") - col("__l") < 24).as("censored"),
           when(col("user_id") % 2 === 0, "even").otherwise("odd").as("grp"))
       Behavior.rmst(durations, "duration", "censored", "grp", tau = 700L)
-        .select(col("grp"), col("tau"), col("n"), col("events"),
-          (round(col("rmst"), 6) + lit(0.0)).as("rmst"),
-          (round(col("rmst_se"), 6) + lit(0.0)).as("rmst_se"))
+        .select(cols("grp", "tau", "n", "events") ++
+          rounded(6)("rmst", "rmst_se"): _*)
         .gateOrdered(col("grp"))
     },
       // the KM fixed-point ln cumsum (q235's 1e12 trick) per parity group,
@@ -600,13 +592,9 @@ object SurvivalGlm {
       val perUser = ev.groupBy(col("user_id"))
         .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
             .as("y"),
-          ((count(lit(1)) - 66) / 10.0).as("x_events"))
+          xEvents)
       LinearModel.poissonGlm(perUser, "y", Seq("x_events"))
-        .select(col("term"), col("n"),
-          (round(col("beta"), 6) + lit(0.0)).as("beta"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("term", "n") ++ rounded(6)("beta", "se", "z", "p_value"): _*)
         .gateOrdered(col("term"))
     },
       // the Poisson-Newton replay (poissonCtes): 4 unrolled iterations on
@@ -618,21 +606,7 @@ object SurvivalGlm {
                  h00 * h11 - h01 * h01 det FROM cb4, gt5),
          st AS (SELECT n, b0, b1, sqrt(h11 / det) se0,
                  sqrt(h00 / det) se1 FROM fin, nn),
-         zz AS (SELECT *, b0 / se0 z0, b1 / se1 z1 FROM st),
-         pv AS (SELECT *, abs(z0) / sqrt(2.0) az0,
-                 1.0 / (1.0 + 0.3275911 * abs(z0) / sqrt(2.0)) t0,
-                 abs(z1) / sqrt(2.0) az1,
-                 1.0 / (1.0 + 0.3275911 * abs(z1) / sqrt(2.0)) t1 FROM zz),
-         pp AS (SELECT *,
-                 CASE WHEN z0 IS NOT NULL THEN
-                   least(1.0, t0 * (0.254829592 + t0 * (-0.284496736
-                     + t0 * (1.421413741 + t0 * (-1.453152027
-                     + t0 * 1.061405429)))) * exp(-az0 * az0)) END p0,
-                 CASE WHEN z1 IS NOT NULL THEN
-                   least(1.0, t1 * (0.254829592 + t1 * (-0.284496736
-                     + t1 * (1.421413741 + t1 * (-1.453152027
-                     + t1 * 1.061405429)))) * exp(-az1 * az1)) END p1
-               FROM pv)
+         $waldCtes
          SELECT * FROM (
            SELECT 'intercept' AS term, n,
              round(b0, 6) + 0.0 AS beta, round(se0, 6) + 0.0 AS se,
@@ -651,14 +625,10 @@ object SurvivalGlm {
       val perUser = ev.groupBy(col("user_id"))
         .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
             .as("y"),
-          ((count(lit(1)) - 66) / 10.0).as("x_events"))
+          xEvents)
       LinearModel.quasiPoissonGlm(perUser, "y", Seq("x_events"))
-        .select(col("term"), col("n"),
-          (round(col("phi"), 6) + lit(0.0)).as("phi"),
-          (round(col("beta"), 6) + lit(0.0)).as("beta"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("term", "n") ++
+          rounded(6)("phi", "beta", "se", "z", "p_value"): _*)
         .gateOrdered(col("term"))
     },
       // poissonCtes (whose trailing no-step pass sc5/gt5 prices the SE at
@@ -675,21 +645,7 @@ object SurvivalGlm {
          st AS (SELECT n, b0, b1, phi,
                  sqrt(h11 / det) * sqrt(phi) se0,
                  sqrt(h00 / det) * sqrt(phi) se1 FROM fin, nn, ph),
-         zz AS (SELECT *, b0 / se0 z0, b1 / se1 z1 FROM st),
-         pv AS (SELECT *, abs(z0) / sqrt(2.0) az0,
-                 1.0 / (1.0 + 0.3275911 * abs(z0) / sqrt(2.0)) t0,
-                 abs(z1) / sqrt(2.0) az1,
-                 1.0 / (1.0 + 0.3275911 * abs(z1) / sqrt(2.0)) t1 FROM zz),
-         pp AS (SELECT *,
-                 CASE WHEN z0 IS NOT NULL THEN
-                   least(1.0, t0 * (0.254829592 + t0 * (-0.284496736
-                     + t0 * (1.421413741 + t0 * (-1.453152027
-                     + t0 * 1.061405429)))) * exp(-az0 * az0)) END p0,
-                 CASE WHEN z1 IS NOT NULL THEN
-                   least(1.0, t1 * (0.254829592 + t1 * (-0.284496736
-                     + t1 * (1.421413741 + t1 * (-1.453152027
-                     + t1 * 1.061405429)))) * exp(-az1 * az1)) END p1
-               FROM pv)
+         $waldCtes
          SELECT * FROM (
            SELECT 'intercept' AS term, n, round(phi, 6) + 0.0 AS phi,
              round(b0, 6) + 0.0 AS beta, round(se0, 6) + 0.0 AS se,
@@ -711,7 +667,7 @@ object SurvivalGlm {
       val perUser = ev.groupBy(col("user_id"))
         .agg(min(floor(unix_timestamp(col("ts")) / 3600)).as("__f"),
           max(floor(unix_timestamp(col("ts")) / 3600)).as("__l"),
-          ((count(lit(1)) - 66) / 10.0).as("x_events"),
+          xEvents,
           ((sum(when(col("value") > 50, 1L).otherwise(0L)) - 24) / 10.0)
             .as("x_highval"))
       val horizon = perUser.agg(max(col("__l")).as("__hmax"))
@@ -721,11 +677,8 @@ object SurvivalGlm {
           col("x_events"), col("x_highval"))
       Behavior.coxPH(durations, "duration", "censored",
           Seq("x_events", "x_highval"))
-        .select(col("covariate"), col("n"), col("n_events"),
-          (round(col("beta"), 6) + lit(0.0)).as("beta"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("covariate", "n", "n_events") ++
+          rounded(6)("beta", "se", "z", "p_value"): _*)
         .gateOrdered(col("covariate"))
     },
       s"""WITH ${coxCtes(iterations = 4)},
@@ -733,21 +686,7 @@ object SurvivalGlm {
                  h00 * h11 - h01 * h01 det FROM cb4, gt5),
          st AS (SELECT n, ne, b0, b1, sqrt(h11 / det) se0,
                  sqrt(h00 / det) se1 FROM fin, nn),
-         zz AS (SELECT *, b0 / se0 z0, b1 / se1 z1 FROM st),
-         pv AS (SELECT *, abs(z0) / sqrt(2.0) az0,
-                 1.0 / (1.0 + 0.3275911 * abs(z0) / sqrt(2.0)) t0,
-                 abs(z1) / sqrt(2.0) az1,
-                 1.0 / (1.0 + 0.3275911 * abs(z1) / sqrt(2.0)) t1 FROM zz),
-         pp AS (SELECT *,
-                 CASE WHEN z0 IS NOT NULL THEN
-                   least(1.0, t0 * (0.254829592 + t0 * (-0.284496736
-                     + t0 * (1.421413741 + t0 * (-1.453152027
-                     + t0 * 1.061405429)))) * exp(-az0 * az0)) END p0,
-                 CASE WHEN z1 IS NOT NULL THEN
-                   least(1.0, t1 * (0.254829592 + t1 * (-0.284496736
-                     + t1 * (1.421413741 + t1 * (-1.453152027
-                     + t1 * 1.061405429)))) * exp(-az1 * az1)) END p1
-               FROM pv)
+         $waldCtes
          SELECT * FROM (
            SELECT 'x_events' AS covariate, n, ne AS n_events,
              round(b0, 6) + 0.0 AS beta, round(se0, 6) + 0.0 AS se,
@@ -767,13 +706,9 @@ object SurvivalGlm {
       val perUser = ev.groupBy(col("user_id"))
         .agg(max(when(col("event_type") === "purchase" &&
             col("value") > 80, 1L).otherwise(0L)).as("y"),
-          ((count(lit(1)) - 66) / 10.0).as("x_events"))
+          xEvents)
       LinearModel.binomialGlm(perUser, "y", Seq("x_events"))
-        .select(col("term"), col("n"),
-          (round(col("beta"), 6) + lit(0.0)).as("beta"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("term", "n") ++ rounded(6)("beta", "se", "z", "p_value"): _*)
         .gateOrdered(col("term"))
     },
       // the logistic-Newton replay (binomialCtes): 4 unrolled iterations on
@@ -785,21 +720,7 @@ object SurvivalGlm {
                  h00 * h11 - h01 * h01 det FROM cb4, gt5),
          st AS (SELECT n, b0, b1, sqrt(h11 / det) se0,
                  sqrt(h00 / det) se1 FROM fin, nn),
-         zz AS (SELECT *, b0 / se0 z0, b1 / se1 z1 FROM st),
-         pv AS (SELECT *, abs(z0) / sqrt(2.0) az0,
-                 1.0 / (1.0 + 0.3275911 * abs(z0) / sqrt(2.0)) t0,
-                 abs(z1) / sqrt(2.0) az1,
-                 1.0 / (1.0 + 0.3275911 * abs(z1) / sqrt(2.0)) t1 FROM zz),
-         pp AS (SELECT *,
-                 CASE WHEN z0 IS NOT NULL THEN
-                   least(1.0, t0 * (0.254829592 + t0 * (-0.284496736
-                     + t0 * (1.421413741 + t0 * (-1.453152027
-                     + t0 * 1.061405429)))) * exp(-az0 * az0)) END p0,
-                 CASE WHEN z1 IS NOT NULL THEN
-                   least(1.0, t1 * (0.254829592 + t1 * (-0.284496736
-                     + t1 * (1.421413741 + t1 * (-1.453152027
-                     + t1 * 1.061405429)))) * exp(-az1 * az1)) END p1
-               FROM pv)
+         $waldCtes
          SELECT * FROM (
            SELECT 'intercept' AS term, n,
              round(b0, 6) + 0.0 AS beta, round(se0, 6) + 0.0 AS se,
@@ -819,16 +740,11 @@ object SurvivalGlm {
       val perUser = ev.groupBy(col("user_id"))
         .agg(max(when(col("event_type") === "purchase" &&
             col("value") > 80, 1L).otherwise(0L)).as("y"),
-          ((count(lit(1)) - 66) / 10.0).as("x_events"))
+          xEvents)
         .withColumn("t", (col("user_id") % 2 === 0).cast("long"))
       LinearModel.ipwAte(perUser, "t", "y", Seq("x_events"))
-        .select(col("n"), col("n_treated"),
-          (round(col("mu_treated"), 6) + lit(0.0)).as("mu_treated"),
-          (round(col("mu_control"), 6) + lit(0.0)).as("mu_control"),
-          (round(col("ate"), 6) + lit(0.0)).as("ate"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n", "n_treated") ++
+          rounded(6)("mu_treated", "mu_control", "ate", "se", "z", "p_value"): _*)
     },
       // the q370 logistic Newton refit with T = parity as the response
       // (binomialCtes yExpr), propensity = sc5's converged 12-dp mean,
@@ -866,14 +782,12 @@ object SurvivalGlm {
                FROM ec, m),
          f AS (SELECT n, nt, mu1, mu0, ate, sqrt(sphi) / n se FROM m, v),
          zz AS (SELECT *, ate / se z, abs(ate / se) / sqrt(2.0) az,
-                 1.0 / (1.0 + 0.3275911 * abs(ate / se) / sqrt(2.0)) t
+                 ${asT("abs(ate / se)")} t
                FROM f)
          SELECT n, nt AS n_treated, round(mu1, 6) + 0.0 AS mu_treated,
            round(mu0, 6) + 0.0 AS mu_control, round(ate, 6) + 0.0 AS ate,
            round(se, 6) + 0.0 AS se, round(z, 6) + 0.0 AS z,
-           round(least(1.0, t * (0.254829592 + t * (-0.284496736
-             + t * (1.421413741 + t * (-1.453152027 + t * 1.061405429))))
-             * exp(-az * az)), 6) + 0.0 AS p_value
+           $ateP
          FROM zz"""),
 
     // ---- Aalen-Johansen cumulative incidence: purchase vs error -----------
@@ -901,8 +815,7 @@ object SurvivalGlm {
           etype.as("first_event"))
       Behavior.cumulativeIncidence(durations, "duration", "first_event",
           tau = 700L)
-        .select(col("event_type"), col("tau"), col("n"), col("events"),
-          (round(col("cif"), 6) + lit(0.0)).as("cif"))
+        .select(cols("event_type", "tau", "n", "events") ++ rounded(6)("cif"): _*)
         .gateOrdered(col("event_type"))
     },
       // the rmst cumsum recipe with competing first events: all-cause KM
@@ -973,14 +886,10 @@ object SurvivalGlm {
       val perUser = ev.groupBy(col("user_id"))
         .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
             .as("y"),
-          ((count(lit(1)) - 66) / 10.0).as("x_events"))
+          xEvents)
       LinearModel.negativeBinomialGlm(perUser, "y", Seq("x_events"))
-        .select(col("term"), col("n"),
-          (round(col("alpha"), 6) + lit(0.0)).as("alpha"),
-          (round(col("beta"), 6) + lit(0.0)).as("beta"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("term", "n") ++
+          rounded(6)("alpha", "beta", "se", "z", "p_value"): _*)
         .gateOrdered(col("term"))
     },
       // poissonCtes warm-up -> moment alpha -> 4 unrolled NB2 Fisher
@@ -990,21 +899,7 @@ object SurvivalGlm {
                  h00 * h11 - h01 * h01 det FROM ncb4, ng5, al),
          st AS (SELECT n, a, b0, b1, sqrt(h11 / det) se0,
                  sqrt(h00 / det) se1 FROM fin, nn),
-         zz AS (SELECT *, b0 / se0 z0, b1 / se1 z1 FROM st),
-         pv AS (SELECT *, abs(z0) / sqrt(2.0) az0,
-                 1.0 / (1.0 + 0.3275911 * abs(z0) / sqrt(2.0)) t0,
-                 abs(z1) / sqrt(2.0) az1,
-                 1.0 / (1.0 + 0.3275911 * abs(z1) / sqrt(2.0)) t1 FROM zz),
-         pp AS (SELECT *,
-                 CASE WHEN z0 IS NOT NULL THEN
-                   least(1.0, t0 * (0.254829592 + t0 * (-0.284496736
-                     + t0 * (1.421413741 + t0 * (-1.453152027
-                     + t0 * 1.061405429)))) * exp(-az0 * az0)) END p0,
-                 CASE WHEN z1 IS NOT NULL THEN
-                   least(1.0, t1 * (0.254829592 + t1 * (-0.284496736
-                     + t1 * (1.421413741 + t1 * (-1.453152027
-                     + t1 * 1.061405429)))) * exp(-az1 * az1)) END p1
-               FROM pv)
+         $waldCtes
          SELECT * FROM (
            SELECT 'intercept' AS term, n, round(a, 6) + 0.0 AS alpha,
              round(b0, 6) + 0.0 AS beta, round(se0, 6) + 0.0 AS se,
@@ -1030,7 +925,7 @@ object SurvivalGlm {
       val perUser = ev.groupBy(col("user_id"))
         .agg(min(floor(unix_timestamp(col("ts")) / 3600)).as("__f"),
           max(floor(unix_timestamp(col("ts")) / 3600)).as("__l"),
-          ((count(lit(1)) - 66) / 10.0).as("x_events"),
+          xEvents,
           ((sum(when(col("value") > 50, 1L).otherwise(0L)) - 24) / 10.0)
             .as("x_highval"),
           ((sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -1087,15 +982,11 @@ object SurvivalGlm {
         .agg(sum(when(col("event_type") === "purchase" && col("value") > 0,
             round(col("value"), 2).cast("decimal(12,2)"))
           .otherwise(lit(0).cast("decimal(12,2)"))).as("spend"),
-          ((count(lit(1)) - 66) / 10.0).as("x_events"))
+          xEvents)
         .filter(col("spend") > 0)
       LinearModel.gammaGlm(perUser, "spend", Seq("x_events"))
-        .select(col("term"), col("n"),
-          (round(col("phi"), 6) + lit(0.0)).as("phi"),
-          (round(col("beta"), 6) + lit(0.0)).as("beta"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("term", "n") ++
+          rounded(6)("phi", "beta", "se", "z", "p_value"): _*)
         .gateOrdered(col("term"))
     },
       // gammaCtes: constant-XtX Fisher scoring, 4 unrolled score reduces,
@@ -1111,21 +1002,7 @@ object SurvivalGlm {
          st AS (SELECT n, b0, b1, phi,
                  sqrt(phi * s11 / det) se0,
                  sqrt(phi * s00 / det) se1 FROM cb4, dt, nn, ph),
-         zz AS (SELECT *, b0 / se0 z0, b1 / se1 z1 FROM st),
-         pv AS (SELECT *, abs(z0) / sqrt(2.0) az0,
-                 1.0 / (1.0 + 0.3275911 * abs(z0) / sqrt(2.0)) t0,
-                 abs(z1) / sqrt(2.0) az1,
-                 1.0 / (1.0 + 0.3275911 * abs(z1) / sqrt(2.0)) t1 FROM zz),
-         pp AS (SELECT *,
-                 CASE WHEN z0 IS NOT NULL THEN
-                   least(1.0, t0 * (0.254829592 + t0 * (-0.284496736
-                     + t0 * (1.421413741 + t0 * (-1.453152027
-                     + t0 * 1.061405429)))) * exp(-az0 * az0)) END p0,
-                 CASE WHEN z1 IS NOT NULL THEN
-                   least(1.0, t1 * (0.254829592 + t1 * (-0.284496736
-                     + t1 * (1.421413741 + t1 * (-1.453152027
-                     + t1 * 1.061405429)))) * exp(-az1 * az1)) END p1
-               FROM pv)
+         $waldCtes
          SELECT * FROM (
            SELECT 'intercept' AS term, n, round(phi, 6) + 0.0 AS phi,
              round(b0, 6) + 0.0 AS beta, round(se0, 6) + 0.0 AS se,
@@ -1146,14 +1023,11 @@ object SurvivalGlm {
       val perUser = ev.groupBy(col("user_id"))
         .agg(max(when(col("event_type") === "purchase" &&
             col("value") > 80, 1L).otherwise(0L)).as("y"),
-          ((count(lit(1)) - 66) / 10.0).as("x_events"))
+          xEvents)
         .withColumn("t", (col("user_id") % 2 === 0).cast("long"))
       LinearModel.aipwAte(perUser, "t", "y", "x_events")
-        .select(col("n"), col("n_treated"),
-          (round(col("ate"), 6) + lit(0.0)).as("ate"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n", "n_treated") ++
+          rounded(6)("ate", "se", "z", "p_value"): _*)
     },
       // the q371 propensity replay (binomialCtes with the parity response)
       // + per-arm closed-form OLS outcome models from exact moments + one
@@ -1211,13 +1085,11 @@ object SurvivalGlm {
                    / n se
                FROM f),
          zz AS (SELECT *, ate / se z, abs(ate / se) / sqrt(2.0) az,
-                 1.0 / (1.0 + 0.3275911 * abs(ate / se) / sqrt(2.0)) t
+                 ${asT("abs(ate / se)")} t
                FROM g)
          SELECT n, n1 AS n_treated, round(ate, 6) + 0.0 AS ate,
            round(se, 6) + 0.0 AS se, round(z, 6) + 0.0 AS z,
-           round(least(1.0, t * (0.254829592 + t * (-0.284496736
-             + t * (1.421413741 + t * (-1.453152027 + t * 1.061405429))))
-             * exp(-az * az)), 6) + 0.0 AS p_value
+           $ateP
          FROM zz"""),
 
     // ---- propensity stratification: compare like with like, then average --
@@ -1230,14 +1102,11 @@ object SurvivalGlm {
       val perUser = ev.groupBy(col("user_id"))
         .agg(max(when(col("event_type") === "purchase" &&
             col("value") > 80, 1L).otherwise(0L)).as("y"),
-          ((count(lit(1)) - 66) / 10.0).as("x_events"))
+          xEvents)
         .withColumn("t", (col("user_id") % 2 === 0).cast("long"))
       LinearModel.propensityStratifiedAtt(perUser, "t", "y", "x_events")
-        .select(col("n"), col("n_treated"), col("k_strata"), col("k_used"),
-          (round(col("att"), 6) + lit(0.0)).as("att"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n", "n_treated", "k_strata", "k_used") ++
+          rounded(6)("att", "se", "z", "p_value"): _*)
     },
       // the q371 propensity replay, the q344 rank-exact cutpoint idiom on
       // the 12-dp propensity (quintile ranks ceil(i*n/5)), per-stratum
@@ -1276,14 +1145,12 @@ object SurvivalGlm {
                      / (n0 - 1.0), 0.0) / n0))) sev
                FROM us, t1),
          zz AS (SELECT att, sev, att / sev z, abs(att / sev) / sqrt(2.0) az,
-                 1.0 / (1.0 + 0.3275911 * abs(att / sev) / sqrt(2.0)) t
+                 ${asT("abs(att / sev)")} t
                FROM at, sv)
          SELECT nq AS n, ntr AS n_treated, 5::BIGINT AS k_strata,
            ku AS k_used, round(att, 6) + 0.0 AS att,
            round(sev, 6) + 0.0 AS se, round(z, 6) + 0.0 AS z,
-           round(least(1.0, t * (0.254829592 + t * (-0.284496736
-             + t * (1.421413741 + t * (-1.453152027 + t * 1.061405429))))
-             * exp(-az * az)), 6) + 0.0 AS p_value
+           $ateP
          FROM zz, n2, nt, t1"""),
 
     // ---- exponential survival regression: the parametric Cox baseline -----
@@ -1296,7 +1163,7 @@ object SurvivalGlm {
       val perUser = ev.groupBy(col("user_id"))
         .agg(min(floor(unix_timestamp(col("ts")) / 3600)).as("__f"),
           max(floor(unix_timestamp(col("ts")) / 3600)).as("__l"),
-          ((count(lit(1)) - 66) / 10.0).as("x_events"))
+          xEvents)
       val horizon = perUser.agg(max(col("__l")).as("__hmax"))
       val durations = perUser.crossJoin(broadcast(horizon))
         .select((col("__l") - col("__f")).as("duration"),
@@ -1304,11 +1171,8 @@ object SurvivalGlm {
           col("x_events"))
       Behavior.exponentialAft(durations, "duration", "censored",
           Seq("x_events"))
-        .select(col("term"), col("n"), col("n_events"),
-          (round(col("beta"), 6) + lit(0.0)).as("beta"),
-          (round(col("se"), 6) + lit(0.0)).as("se"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("term", "n", "n_events") ++
+          rounded(6)("beta", "se", "z", "p_value"): _*)
         .gateOrdered(col("term"))
     },
       // expAftCtes: 4 unrolled weighted-moment reduces (w = t*e^eta),
@@ -1318,21 +1182,7 @@ object SurvivalGlm {
                  h00 * h11 - h01 * h01 det FROM cb4, gt5),
          st AS (SELECT n, sd, b0, b1, sqrt(h11 / det) se0,
                  sqrt(h00 / det) se1 FROM fin, nn),
-         zz AS (SELECT *, b0 / se0 z0, b1 / se1 z1 FROM st),
-         pv AS (SELECT *, abs(z0) / sqrt(2.0) az0,
-                 1.0 / (1.0 + 0.3275911 * abs(z0) / sqrt(2.0)) t0,
-                 abs(z1) / sqrt(2.0) az1,
-                 1.0 / (1.0 + 0.3275911 * abs(z1) / sqrt(2.0)) t1 FROM zz),
-         pp AS (SELECT *,
-                 CASE WHEN z0 IS NOT NULL THEN
-                   least(1.0, t0 * (0.254829592 + t0 * (-0.284496736
-                     + t0 * (1.421413741 + t0 * (-1.453152027
-                     + t0 * 1.061405429)))) * exp(-az0 * az0)) END p0,
-                 CASE WHEN z1 IS NOT NULL THEN
-                   least(1.0, t1 * (0.254829592 + t1 * (-0.284496736
-                     + t1 * (1.421413741 + t1 * (-1.453152027
-                     + t1 * 1.061405429)))) * exp(-az1 * az1)) END p1
-               FROM pv)
+         $waldCtes
          SELECT * FROM (
            SELECT 'intercept' AS term, n, sd AS n_events,
              round(b0, 6) + 0.0 AS beta, round(se0, 6) + 0.0 AS se,
@@ -1354,7 +1204,7 @@ object SurvivalGlm {
       val perUser = ev.groupBy(col("user_id"))
         .agg(min(floor(unix_timestamp(col("ts")) / 3600)).as("__f"),
           max(floor(unix_timestamp(col("ts")) / 3600)).as("__l"),
-          ((count(lit(1)) - 66) / 10.0).as("x_events"))
+          xEvents)
       val horizon = perUser.agg(max(col("__l")).as("__hmax"))
       val durations = perUser.crossJoin(broadcast(horizon))
         .select((col("__l") - col("__f")).as("duration"),
@@ -1405,34 +1255,16 @@ object SurvivalGlm {
     // do even- and odd-user time-to-first-purchase curves differ? the
     // Mantel-Cox companion of q235's KM curve, same duration construction
     Case("q274_log_rank", (s, dir) => {
-      val ev = EventsSource.read(s, s"$dir/events.parquet")
-      val perUser = ev.groupBy(col("user_id")).agg(
-        min(col("ts")).as("first_ts"),
-        min(when(col("event_type") === "purchase", col("ts"))).as("p_ts"))
-      val horizon = ev.agg(max(col("ts")).as("h_ts"))
-      val durations = perUser.crossJoin(broadcast(horizon)).select(
-        floor((unix_timestamp(coalesce(col("p_ts"), col("h_ts"))) -
-          unix_timestamp(col("first_ts"))) / 3600).cast("long").as("dur_h"),
-        col("p_ts").isNull.as("cens"),
+      val durations = purchaseLifetimes(s, dir,
         when(col("user_id") % 2 === 0, "even").otherwise("odd").as("grp"))
       Behavior.logRankTest(durations, "dur_h", "cens", "grp")
-        .select(col("group_a"), col("group_b"), col("n_a"), col("n_b"),
-          col("events_a"), col("events_b"),
-          (round(col("expected_a"), 6) + lit(0.0)).as("expected_a"),
-          (round(col("var_a"), 6) + lit(0.0)).as("var_a"),
-          (round(col("chi2"), 6) + lit(0.0)).as("chi2"))
+        .select(cols("group_a", "group_b", "n_a", "n_b", "events_a", "events_b") ++
+          rounded(6)("expected_a", "var_a", "chi2"): _*)
     },
       // the q235 duration construction split even/odd; at-risk prefixes via
       // exclusive cumulative exits, pooled hypergeometric O/E/V
-      """WITH pu AS (SELECT user_id, min(ts) AS f,
-                  min(CASE WHEN event_type = 'purchase' THEN ts END) AS p
-                FROM events GROUP BY 1),
-         h AS (SELECT max(ts) AS hm FROM events),
-         bl AS (SELECT floor((floor(epoch(coalesce(p, hm))) -
-                  floor(epoch(f))) / 3600)::BIGINT AS life,
-                  (p IS NULL) AS cens,
-                  CASE WHEN user_id % 2 = 0 THEN 'even' ELSE 'odd' END AS g
-                FROM pu, h),
+      s"""WITH ${purchaseLifetimesSql(
+             "CASE WHEN user_id % 2 = 0 THEN 'even' ELSE 'odd' END AS g")},
          gl AS (SELECT life,
                  sum(CASE WHEN g = 'even' AND NOT cens THEN 1 ELSE 0 END)::BIGINT da,
                  sum(CASE WHEN g = 'odd' AND NOT cens THEN 1 ELSE 0 END)::BIGINT db,

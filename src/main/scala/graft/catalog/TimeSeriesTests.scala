@@ -32,16 +32,48 @@ object TimeSeriesTests {
       .select((col("h") - col("lo")).as("t"), col("y"))
   }
 
+  /** q309/q329/q349: the Wald–Wolfowitz runs test of each event type's
+    * values above and below the type's mean, in (ts, event_id) order. */
+  private def runsByType(s: SparkSession, dir: String): DataFrame =
+    StatTests.runsTestByKey(EventsSource.read(s, s"$dir/events.parquet")
+        .filter(col("ts").isNotNull && col("event_id").isNotNull),
+      "event_type", Seq("ts", "event_id"), "value")
+
+  /** [[runsByType]] in the oracles: CTEs `b` to `r`, where `r` holds each
+    * type's `n1`, `n2` and `runs`. */
+  private val runsByTypeSql = """b AS (SELECT event_type kk, ts, event_id, value v FROM events
+                WHERE event_type IS NOT NULL AND value IS NOT NULL
+                  AND ts IS NOT NULL AND event_id IS NOT NULL),
+         m AS (SELECT kk, sum(v) / count(*) mu FROM b GROUP BY 1),
+         s AS (SELECT b.kk, ts, event_id,
+                 CASE WHEN v > mu THEN 1 ELSE 0 END s
+               FROM b JOIN m ON m.kk = b.kk WHERE v <> mu),
+         lg AS (SELECT kk, s,
+                 lag(s) OVER (PARTITION BY kk ORDER BY ts, event_id) p
+               FROM s),
+         r AS (SELECT kk, sum(s)::BIGINT n1, sum(1 - s)::BIGINT n2,
+                 sum(CASE WHEN p IS NULL OR p <> s THEN 1 ELSE 0
+                   END)::BIGINT runs
+               FROM lg GROUP BY 1)"""
+
+  /** The q329/q349 battery from [[runsByTypeSql]]'s `r`: CTEs `z`, `pv`
+    * and `pr`, where `pr` holds each type's two-sided A–S p-value. */
+  private val runsPSql = s"""z AS (SELECT kk, (runs - (2.0 * n1 * n2 / (n1 + n2) + 1))
+                 / sqrt(2.0 * n1 * n2 * (2.0 * n1 * n2 - (n1 + n2))
+                   / (pow((n1 + n2)::DOUBLE, 2) * (n1 + n2 - 1))) zz
+               FROM r),
+         pv AS (SELECT kk, abs(zz) / sqrt(2.0) az,
+                 ${asT("abs(zz)")} t FROM z),
+         pr AS (SELECT kk, ${asPoly("t", "az", 17)} p FROM pv)"""
+
   val cases: Seq[Case] = Seq(
     // ---- CUSUM changepoint in daily event rate (Drift) --------------------
     // the at-most-one-change level-shift estimator; integer-exact scaled
     // CUSUM so the argmax day can never flip on float noise
     Case("q254_cusum", (s, dir) => {
       StatTests.cusumChangepoint(EventsSource.read(s, s"$dir/events.parquet"), "ts")
-        .select(col("n_days"), col("change_day"),
-          (round(col("cusum_max"), 6) + lit(0.0)).as("cusum_max"),
-          (round(col("rate_before"), 6) + lit(0.0)).as("rate_before"),
-          (round(col("rate_after"), 6) + lit(0.0)).as("rate_after"))
+        .select(cols("n_days", "change_day") ++
+          rounded(6)("cusum_max", "rate_before", "rate_after"): _*)
     },
       // integer-exact scaled CUSUM D_t = n*S_t - t*S_total; argmax by
       // (|D| desc, day asc)
@@ -63,9 +95,8 @@ object TimeSeriesTests {
     // median of pairwise slopes over the calendar-bounded day table
     Case("q265_theil_sen", (s, dir) => {
       StatTests.theilSenTrend(EventsSource.read(s, s"$dir/events.parquet"), "ts")
-        .select(col("n_days"), col("n_pairs"),
-          (round(col("slope"), 6) + lit(0.0)).as("slope"),
-          (round(col("intercept"), 4) + lit(0.0)).as("intercept"))
+        .select(cols("n_days", "n_pairs") ++ rounded(6)("slope") ++
+          rounded(4)("intercept"): _*)
     },
       // median pairwise slope over the bounded day table; epoch-day x
       """WITH d AS (SELECT ts::DATE AS day, count(*)::DOUBLE y FROM events
@@ -84,10 +115,9 @@ object TimeSeriesTests {
     Case("q266_cusum_by_type", (s, dir) => {
       StatTests.cusumChangepointByKey(
           EventsSource.read(s, s"$dir/events.parquet"), "ts", "event_type")
-        .select(col("key").as("event_type"), col("n_days"), col("change_day"),
-          (round(col("cusum_max"), 6) + lit(0.0)).as("cusum_max"),
-          (round(col("rate_before"), 6) + lit(0.0)).as("rate_before"),
-          (round(col("rate_after"), 6) + lit(0.0)).as("rate_after"))
+        .select(
+          Seq(col("key").as("event_type"), col("n_days"), col("change_day")) ++
+          rounded(6)("cusum_max", "rate_before", "rate_after"): _*)
         .orderBy(col("event_type"))
     },
       // per-key integer-exact scaled CUSUM; earliest-day tie rule per key
@@ -124,10 +154,8 @@ object TimeSeriesTests {
         .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("c"))
         .withColumn("dow", dayofweek(col("day")))
       StatTests.anovaF(daily, "dow", "c")
-        .select(col("n"), col("k"),
-          (round(col("ss_between"), 4) + lit(0.0)).as("ss_between"),
-          (round(col("ss_within"), 4) + lit(0.0)).as("ss_within"),
-          (round(col("f"), 6) + lit(0.0)).as("f"))
+        .select(cols("n", "k") ++ rounded(4)("ss_between", "ss_within") ++
+          rounded(6)("f"): _*)
     },
       // weekday partition of the per-day count table -> the q248 moment
       // identities (group labels differ across engines; the partition and
@@ -163,10 +191,8 @@ object TimeSeriesTests {
       val series = spine.join(hourly, Seq("h"), "left")
         .na.fill(0L, Seq("y"))
       StatTests.changepointMean(series, "h", "y")
-        .select(col("n"), col("change_at"), col("k"),
-          (round(col("stat"), 6) + lit(0.0)).as("stat"),
-          (round(col("mean_before"), 6) + lit(0.0)).as("mean_before"),
-          (round(col("mean_after"), 6) + lit(0.0)).as("mean_after"))
+        .select(cols("n", "change_at", "k") ++
+          rounded(6)("stat", "mean_before", "mean_after"): _*)
     },
       // the purchase-rate hour spine; scaled-CUSUM argmax with the same
       // double expressions, earliest-hour tie-break on the unrounded stat
@@ -216,11 +242,8 @@ object TimeSeriesTests {
       val series = spine.join(hourly, Seq("h"), "left")
         .na.fill(0L, Seq("x", "y"))
       StatTests.grangerLag1(series, "h", "x", "y")
-        .select(col("n"),
-          (round(col("beta_own"), 6) + lit(0.0)).as("beta_own"),
-          (round(col("beta_cross"), 6) + lit(0.0)).as("beta_cross"),
-          (round(col("f"), 6) + lit(0.0)).as("f"),
-          col("df2"), col("granger_5pct"))
+        .select(cols("n") ++ rounded(6)("beta_own", "beta_cross", "f") ++
+          cols("df2", "granger_5pct"): _*)
     },
       // the two-rate hour spine; restricted vs unrestricted OLS from ten
       // exact BIGINT moments, centered/2x2/RSS arithmetic mirrored
@@ -288,11 +311,8 @@ object TimeSeriesTests {
       val series = spine.join(hourly, Seq("h"), "left")
         .na.fill(0L, Seq("y"))
       StatTests.dickeyFuller(series, "h", "y")
-        .select(col("n"),
-          (round(col("gamma"), 6) + lit(0.0)).as("gamma"),
-          (round(col("se_gamma"), 6) + lit(0.0)).as("se_gamma"),
-          (round(col("df_stat"), 6) + lit(0.0)).as("df_stat"),
-          col("stationary_5pct"))
+        .select(cols("n") ++ rounded(6)("gamma", "se_gamma", "df_stat") ++
+          cols("stationary_5pct"): _*)
     },
       // the same zero-filled hour spine; lag pairs via the t = t' + 1
       // self-join; all six OLS moments are exact BIGINT sums, the gamma/
@@ -340,10 +360,7 @@ object TimeSeriesTests {
       val series = spine.join(hourly, Seq("h"), "left")
         .na.fill(0.0, Seq("y"))
       StatTests.ljungBox(series, "h", "y", maxLag = 10)
-        .select(col("n"), col("lags"),
-          (round(col("r1"), 6) + lit(0.0)).as("r1"),
-          (round(col("q_stat"), 6) + lit(0.0)).as("q_stat"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n", "lags") ++ rounded(6)("r1", "q_stat", "p_value"): _*)
     },
       // zero-filled hour spine; r_k via the h = h' + k self-join; chi2(10)
       // survival = exp(-q/2) * sum_{j<5} (q/2)^j / j!
@@ -380,11 +397,8 @@ object TimeSeriesTests {
     Case("q303_periodogram", (s, dir) => {
       val series = rebasedHourlySeries(s, dir)
       StatTests.periodogramPower(series, "t", "y", Seq(24, 168))
-        .select(col("period"), col("n"),
-          (round(col("c"), 4) + lit(0.0)).as("c"),
-          (round(col("s"), 4) + lit(0.0)).as("s"),
-          (round(col("power"), 2) + lit(0.0)).as("power"),
-          (round(col("frac"), 6) + lit(0.0)).as("frac"))
+        .select(cols("period", "n") ++ rounded(4)("c", "s") ++
+          rounded(2)("power") ++ rounded(6)("frac"): _*)
         .gateOrdered(col("period"))
     },
       // rebased zero-filled hourly series; same cos/sin sums per period
@@ -417,10 +431,7 @@ object TimeSeriesTests {
     Case("q304_hurst", (s, dir) => {
       val series = rebasedHourlySeries(s, dir)
       StatTests.hurstRS(series, "t", "y", Seq(8, 16, 32, 64))
-        .select(col("b"), col("n_blocks"),
-          (round(col("mean_rs"), 6) + lit(0.0)).as("mean_rs"),
-          (round(col("hurst"), 6) + lit(0.0)).as("hurst"),
-          (round(col("r2"), 6) + lit(0.0)).as("r2"))
+        .select(cols("b", "n_blocks") ++ rounded(6)("mean_rs", "hurst", "r2"): _*)
         .gateOrdered(col("b"))
     },
       // same block partitioning, mean-adjusted cumulative ranges, and
@@ -470,29 +481,13 @@ object TimeSeriesTests {
     // ---- Wald-Wolfowitz runs test per event type (Drift) ------------------
     // keyed windows only; above/below the key mean over (ts, event_id)
     Case("q309_runs_test", (s, dir) => {
-      val ev = EventsSource.read(s, s"$dir/events.parquet")
-        .filter(col("ts").isNotNull && col("event_id").isNotNull)
-      StatTests.runsTestByKey(ev, "event_type", Seq("ts", "event_id"), "value")
-        .select(col("key"), col("n1"), col("n2"), col("runs"),
-          (round(col("z"), 6) + lit(0.0)).as("z"))
+      runsByType(s, dir)
+        .select(cols("key", "n1", "n2", "runs") ++ rounded(6)("z"): _*)
         .gateOrdered(col("key"))
     },
       // keyed lag window over (ts, event_id); the same mu_R / sigma_R
       // normal approximation
-      """WITH b AS (SELECT event_type kk, ts, event_id, value v FROM events
-                WHERE event_type IS NOT NULL AND value IS NOT NULL
-                  AND ts IS NOT NULL AND event_id IS NOT NULL),
-         m AS (SELECT kk, sum(v) / count(*) mu FROM b GROUP BY 1),
-         s AS (SELECT b.kk, ts, event_id,
-                 CASE WHEN v > mu THEN 1 ELSE 0 END s
-               FROM b JOIN m ON m.kk = b.kk WHERE v <> mu),
-         lg AS (SELECT kk, s,
-                 lag(s) OVER (PARTITION BY kk ORDER BY ts, event_id) p
-               FROM s),
-         r AS (SELECT kk, sum(s)::BIGINT n1, sum(1 - s)::BIGINT n2,
-                 sum(CASE WHEN p IS NULL OR p <> s THEN 1 ELSE 0
-                   END)::BIGINT runs
-               FROM lg GROUP BY 1)
+      s"""WITH $runsByTypeSql
          SELECT kk AS "key", n1, n2, runs,
            CASE WHEN n1 > 0 AND n2 > 0 AND n1 + n2 > 1
                AND 2.0 * n1 * n2 * (2.0 * n1 * n2 - (n1 + n2)) > 0
@@ -513,10 +508,7 @@ object TimeSeriesTests {
           (floor(unix_timestamp(col("ts")) / 3600) - lit(473702L)).cast("double"))
         .withColumn("yc", col("value") - 35.0)
       StatTests.durbinWatson(ev, "event_type", Seq("ts", "event_id"), "xh", "yc")
-        .select(col("key"), col("n"),
-          (round(col("slope"), 6) + lit(0.0)).as("slope"),
-          (round(col("intercept"), 6) + lit(0.0)).as("intercept"),
-          (round(col("dw"), 6) + lit(0.0)).as("dw"))
+        .select(cols("key", "n") ++ rounded(6)("slope", "intercept", "dw"): _*)
         .gateOrdered(col("key"))
     },
       // per-key closed-form OLS from raw moments (x centered at the same
@@ -555,12 +547,8 @@ object TimeSeriesTests {
           (floor(unix_timestamp(col("ts")) / 3600) - lit(473702L)).cast("double"))
         .withColumn("yc", col("value") - 35.0)
       StatTests.breuschPagan(ev, "xh", "yc")
-        .select(col("n"),
-          (round(col("slope"), 6) + lit(0.0)).as("slope"),
-          (round(col("intercept"), 6) + lit(0.0)).as("intercept"),
-          (round(col("lm"), 6) + lit(0.0)).as("lm"),
-          col("df"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n") ++ rounded(6)("slope", "intercept", "lm") ++ cols("df") ++
+          rounded(6)("p_value"): _*)
     },
       // the two-pass LM construction; p via the identical A&S erfc
       // polynomial (t in 1/(1 + 0.3275911*sqrt(lm/2)))
@@ -603,10 +591,8 @@ object TimeSeriesTests {
         .select(explode(sequence(col("lo"), col("hi"))).as("t"))
       val series = spine.join(daily, Seq("t"), "left").na.fill(0.0, Seq("y"))
       StatTests.ewmaBacktest(series, "t", "y", alpha = 0.3)
-        .select(col("n"), col("n_scored"),
-          (round(col("mae_ewma"), 6) + lit(0.0)).as("mae_ewma"),
-          (round(col("mae_naive1"), 6) + lit(0.0)).as("mae_naive1"),
-          (round(col("rel_mae"), 6) + lit(0.0)).as("rel_mae"))
+        .select(cols("n", "n_scored") ++
+          rounded(6)("mae_ewma", "mae_naive1", "rel_mae"): _*)
     },
       // identical scaled-prefix EWMA: cum of y*(1/(1-a))^k, first_value
       // y0, lag for the one-step forecast
@@ -645,10 +631,8 @@ object TimeSeriesTests {
           .cast("string").as("dow"))
       StatTests.chiSquareGof(ev, "dow",
           (0 to 6).map(i => (i.toString, 1.0 / 7.0)))
-        .select(col("n"), col("k"),
-          (round(col("chi2"), 6) + lit(0.0)).as("chi2"),
-          col("df"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n", "k") ++ rounded(6)("chi2") ++ cols("df") ++
+          rounded(6)("p_value"): _*)
     },
       // arithmetic day-of-epoch categories; uniform expectation; df = 6
       // closed survival exp(-x/2)(1 + x/2 + (x/2)^2/2)
@@ -669,48 +653,16 @@ object TimeSeriesTests {
     // per-type runs-test z -> two-sided A&S p -> Holm step-down; the
     // battery is 5 rows, so its sort windows are bounded by construction
     Case("q329_p_adjust", (s, dir) => {
-      val ev = EventsSource.read(s, s"$dir/events.parquet")
-        .filter(col("ts").isNotNull && col("event_id").isNotNull)
-      val battery = StatTests.runsTestByKey(ev, "event_type",
-          Seq("ts", "event_id"), "value")
-        .withColumn("_az", abs(col("z")) / math.sqrt(2.0))
-        .withColumn("_t", lit(1.0) / (lit(1.0) + lit(0.3275911) * col("_az")))
-        .withColumn("p", col("_t") * (lit(0.254829592) + col("_t") *
-          (lit(-0.284496736) + col("_t") * (lit(1.421413741) + col("_t") *
-            (lit(-1.453152027) + col("_t") * 1.061405429)))) *
-          exp(-col("_az") * col("_az")))
-        .select(col("key"), col("p"))
+      val battery = runsByType(s, dir)
+        .select(col("key"), normalPValue(col("z")).as("p"))
       StatTests.pAdjust(battery, "p", method = "holm")
-        .select(col("key"),
-          (round(col("p"), 6) + lit(0.0)).as("p"),
-          (round(col("p_adjusted"), 6) + lit(0.0)).as("p_adjusted"))
+        .select(cols("key") ++ rounded(6)("p", "p_adjusted"): _*)
         .gateOrdered(col("key"))
     },
       // the q309 battery, the shared A&S two-sided p, and the Holm
       // step-down (rank window + running max, both over 5 rows)
-      """WITH b AS (SELECT event_type kk, ts, event_id, value v FROM events
-                WHERE event_type IS NOT NULL AND value IS NOT NULL
-                  AND ts IS NOT NULL AND event_id IS NOT NULL),
-         m AS (SELECT kk, sum(v) / count(*) mu FROM b GROUP BY 1),
-         s AS (SELECT b.kk, ts, event_id,
-                 CASE WHEN v > mu THEN 1 ELSE 0 END s
-               FROM b JOIN m ON m.kk = b.kk WHERE v <> mu),
-         lg AS (SELECT kk, s,
-                 lag(s) OVER (PARTITION BY kk ORDER BY ts, event_id) p
-               FROM s),
-         r AS (SELECT kk, sum(s)::BIGINT n1, sum(1 - s)::BIGINT n2,
-                 sum(CASE WHEN p IS NULL OR p <> s THEN 1 ELSE 0
-                   END)::BIGINT runs
-               FROM lg GROUP BY 1),
-         z AS (SELECT kk, (runs - (2.0 * n1 * n2 / (n1 + n2) + 1))
-                 / sqrt(2.0 * n1 * n2 * (2.0 * n1 * n2 - (n1 + n2))
-                   / (pow((n1 + n2)::DOUBLE, 2) * (n1 + n2 - 1))) zz
-               FROM r),
-         pv AS (SELECT kk, abs(zz) / sqrt(2.0) az,
-                 1.0 / (1.0 + 0.3275911 * abs(zz) / sqrt(2.0)) t FROM z),
-         pr AS (SELECT kk, t * (0.254829592 + t * (-0.284496736
-                 + t * (1.421413741 + t * (-1.453152027
-                 + t * 1.061405429)))) * exp(-az * az) p FROM pv),
+      s"""WITH $runsByTypeSql,
+         $runsPSql,
          hm AS (SELECT kk, p,
                  p * (count(*) OVER () - row_number()
                    OVER (ORDER BY p ASC) + 1) raw
@@ -728,10 +680,8 @@ object TimeSeriesTests {
     Case("q343_seasonal_mk", (s, dir) => {
       val ev = EventsSource.read(s, s"$dir/events.parquet")
       StatTests.seasonalMannKendall(ev, "ts", period = 7)
-        .select(col("n_days"), col("period"), col("s"),
-          (round(col("var_s"), 6) + lit(0.0)).as("var_s"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          col("trend"))
+        .select(cols("n_days", "period", "s") ++ rounded(6)("var_s", "z") ++
+          cols("trend"): _*)
     },
       // the same phase-keyed pair join and per-phase tie algebra
       """WITH days AS (SELECT ts::DATE dd, count(*)::BIGINT y FROM events
@@ -767,48 +717,16 @@ object TimeSeriesTests {
     // accumulates as sum(1/rank) over the battery itself, so both engines
     // replay it exactly
     Case("q349_p_adjust_by", (s, dir) => {
-      val ev = EventsSource.read(s, s"$dir/events.parquet")
-        .filter(col("ts").isNotNull && col("event_id").isNotNull)
-      val battery = StatTests.runsTestByKey(ev, "event_type",
-          Seq("ts", "event_id"), "value")
-        .withColumn("_az", abs(col("z")) / math.sqrt(2.0))
-        .withColumn("_t", lit(1.0) / (lit(1.0) + lit(0.3275911) * col("_az")))
-        .withColumn("p", col("_t") * (lit(0.254829592) + col("_t") *
-          (lit(-0.284496736) + col("_t") * (lit(1.421413741) + col("_t") *
-            (lit(-1.453152027) + col("_t") * 1.061405429)))) *
-          exp(-col("_az") * col("_az")))
-        .select(col("key"), col("p"))
+      val battery = runsByType(s, dir)
+        .select(col("key"), normalPValue(col("z")).as("p"))
       StatTests.pAdjust(battery, "p", method = "by")
-        .select(col("key"),
-          (round(col("p"), 6) + lit(0.0)).as("p"),
-          (round(col("p_adjusted"), 6) + lit(0.0)).as("p_adjusted"))
+        .select(cols("key") ++ rounded(6)("p", "p_adjusted"): _*)
         .gateOrdered(col("key"))
     },
       // the q329 battery with the BY harmonic penalty: c(m) = sum(1/rank)
       // over the battery, running-min monotonicity down the descending p
-      """WITH b AS (SELECT event_type kk, ts, event_id, value v FROM events
-                WHERE event_type IS NOT NULL AND value IS NOT NULL
-                  AND ts IS NOT NULL AND event_id IS NOT NULL),
-         m AS (SELECT kk, sum(v) / count(*) mu FROM b GROUP BY 1),
-         s AS (SELECT b.kk, ts, event_id,
-                 CASE WHEN v > mu THEN 1 ELSE 0 END s
-               FROM b JOIN m ON m.kk = b.kk WHERE v <> mu),
-         lg AS (SELECT kk, s,
-                 lag(s) OVER (PARTITION BY kk ORDER BY ts, event_id) p
-               FROM s),
-         r AS (SELECT kk, sum(s)::BIGINT n1, sum(1 - s)::BIGINT n2,
-                 sum(CASE WHEN p IS NULL OR p <> s THEN 1 ELSE 0
-                   END)::BIGINT runs
-               FROM lg GROUP BY 1),
-         z AS (SELECT kk, (runs - (2.0 * n1 * n2 / (n1 + n2) + 1))
-                 / sqrt(2.0 * n1 * n2 * (2.0 * n1 * n2 - (n1 + n2))
-                   / (pow((n1 + n2)::DOUBLE, 2) * (n1 + n2 - 1))) zz
-               FROM r),
-         pv AS (SELECT kk, abs(zz) / sqrt(2.0) az,
-                 1.0 / (1.0 + 0.3275911 * abs(zz) / sqrt(2.0)) t FROM z),
-         pr AS (SELECT kk, t * (0.254829592 + t * (-0.284496736
-                 + t * (1.421413741 + t * (-1.453152027
-                 + t * 1.061405429)))) * exp(-az * az) p FROM pv),
+      s"""WITH $runsByTypeSql,
+         $runsPSql,
          rkd AS (SELECT kk, p, count(*) OVER () m,
                  count(*) OVER () - row_number() OVER (ORDER BY p DESC)
                    + 1 rnk
@@ -833,17 +751,13 @@ object TimeSeriesTests {
           floor(unix_timestamp(col("ts")) / 604800).as("wk"),
           lit(1L).as("one"))
       StatTests.pageTrend(ev, "user_id", "wk", "one")
-        .select(col("n_items"), col("k"),
-          (round(col("l_stat"), 6) + lit(0.0)).as("l_stat"),
-          (round(col("mean_l"), 6) + lit(0.0)).as("mean_l"),
-          (round(col("var_l"), 6) + lit(0.0)).as("var_l"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n_items", "k") ++
+          rounded(6)("l_stat", "mean_l", "var_l", "z", "p_value"): _*)
     },
       // generic mid-rank Page replay: item-keyed self-join for doubled
       // ranks (exact longs), row_number condition order, closed-form
       // moments, one-sided reflected A&S p
-      """WITH pv AS (SELECT user_id it,
+      s"""WITH pv AS (SELECT user_id it,
                  floor(epoch(ts) / 604800)::BIGINT c, count(*)::BIGINT v
                FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
                GROUP BY 1, 2),
@@ -867,10 +781,8 @@ object TimeSeriesTests {
                FROM ag, kk),
          zz AS (SELECT *, (l - ml) / sqrt(vl) z FROM st),
          sf AS (SELECT *, abs(z) / sqrt(2.0) az,
-                 1.0 / (1.0 + 0.3275911 * abs(z) / sqrt(2.0)) tt FROM zz),
-         pw AS (SELECT *, 0.5 * tt * (0.254829592 + tt * (-0.284496736
-                 + tt * (1.421413741 + tt * (-1.453152027
-                 + tt * 1.061405429)))) * exp(-az * az) half FROM sf)
+                 ${asT("abs(z)")} tt FROM zz),
+         pw AS (SELECT *, 0.5 * ${asPoly("tt", "az", 17)} half FROM sf)
          SELECT nb AS n_items, k, round(l, 6) + 0.0 AS l_stat,
            round(ml, 6) + 0.0 AS mean_l, round(vl, 6) + 0.0 AS var_l,
            round(z, 6) + 0.0 AS z,
@@ -888,17 +800,13 @@ object TimeSeriesTests {
         .select(floor(unix_timestamp(col("ts")) / 604800).cast("string")
           .as("wk"), floor(col("value")).as("vb"))
       StatTests.jonckheereTerpstra(ev, "wk", "vb")
-        .select(col("n"), col("k"),
-          (round(col("j_stat"), 4) + lit(0.0)).as("j_stat"),
-          (round(col("mean_j"), 4) + lit(0.0)).as("mean_j"),
-          (round(col("var_j"), 4) + lit(0.0)).as("var_j"),
-          (round(col("z"), 6) + lit(0.0)).as("z"),
-          (round(col("p_value"), 6) + lit(0.0)).as("p_value"))
+        .select(cols("n", "k") ++ rounded(4)("j_stat", "mean_j", "var_j") ++
+          rounded(6)("z", "p_value"): _*)
     },
       // naive pairwise J* over the (week, bucket) count cells (bounded by
       // buckets x weeks), tie-corrected Hollander-Wolfe variance, shared
       // A&S two-sided p — every ingredient half-integer-exact
-      """WITH gv AS (SELECT floor(epoch(ts) / 604800)::BIGINT::VARCHAR wk,
+      s"""WITH gv AS (SELECT floor(epoch(ts) / 604800)::BIGINT::VARCHAR wk,
                   floor(value) vb
                 FROM events WHERE ts IS NOT NULL AND value IS NOT NULL),
          pgv AS (SELECT wk, vb, count(*)::BIGINT c FROM gv GROUP BY 1, 2),
@@ -924,7 +832,7 @@ object TimeSeriesTests {
          zz AS (SELECT *, CASE WHEN k >= 2 AND varj > 0
                  THEN (j - meanj) / sqrt(varj) END z FROM st),
          pz AS (SELECT *, abs(z) / sqrt(2.0) az,
-                 1.0 / (1.0 + 0.3275911 * abs(z) / sqrt(2.0)) t FROM zz)
+                 ${asT("abs(z)")} t FROM zz)
          SELECT n, k, round(j, 4) + 0.0 AS j_stat,
            round(meanj, 4) + 0.0 AS mean_j, round(varj, 4) + 0.0 AS var_j,
            round(z, 6) + 0.0 AS z,
@@ -947,10 +855,8 @@ object TimeSeriesTests {
         .select(explode(sequence(col("lo"), col("hi"))).as("t"))
       val series = spine.join(daily, Seq("t"), "left").na.fill(0.0, Seq("y"))
       StatTests.maseBacktest(series, "t", "y", season = 7)
-        .select(col("n"), col("n_scored"),
-          (round(col("mae_seasonal"), 6) + lit(0.0)).as("mae_seasonal"),
-          (round(col("mae_naive1"), 6) + lit(0.0)).as("mae_naive1"),
-          (round(col("mase"), 6) + lit(0.0)).as("mase"))
+        .select(cols("n", "n_scored") ++
+          rounded(6)("mae_seasonal", "mae_naive1", "mase"): _*)
     },
       // zero-filled day spine; two shifted equi-joins, one reduce
       """WITH e AS (SELECT floor(epoch(ts) / 86400)::BIGINT d FROM events
@@ -978,9 +884,8 @@ object TimeSeriesTests {
     // S and tie mass
     Case("q272_mann_kendall", (s, dir) => {
       StatTests.mannKendall(EventsSource.read(s, s"$dir/events.parquet"), "ts")
-        .select(col("n_days"), col("s"),
-          (round(col("var_s"), 4) + lit(0.0)).as("var_s"),
-          (round(col("z"), 6) + lit(0.0)).as("z"), col("trend"))
+        .select(cols("n_days", "s") ++ rounded(4)("var_s") ++ rounded(6)("z") ++
+          cols("trend"): _*)
     },
       // integer-exact S and tie mass over the bounded day-pair join;
       // continuity-corrected z with the shared z-critical literal

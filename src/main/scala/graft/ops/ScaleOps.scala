@@ -23,10 +23,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * Durability rule: a [[cut]] is durable exactly when the SparkContext
   * has a checkpoint directory (`getCheckpointDir` is defined — the rule
   * of Spark's own periodic checkpointers): a reliable checkpoint whose
-  * files survive executor loss and need no release. Without one it is a
-  * local checkpoint — executor-memory blocks, registered so the release
-  * paths can free them, lost unrecoverably with an executor (fine for
-  * single-process runs and the bounded frames the estimators cut).
+  * files survive executor loss until the release paths delete them.
+  * Without one it is a local checkpoint — executor-memory blocks, freed
+  * by the release paths, lost unrecoverably with an executor (fine for
+  * single-process runs and the bounded frames the estimators cut). Both
+  * kinds are registered, so a release reaches only the library's own.
   */
 object ScaleOps {
 
@@ -123,7 +124,7 @@ object ScaleOps {
     java.util.Collections.synchronizedSet(java.util.Collections.newSetFromMap(
       new java.util.WeakHashMap[DataFrame, java.lang.Boolean]()))
 
-  /** RDD ids of the local checkpoints the LIBRARY created ([[cut]]) so
+  /** RDD ids of the checkpoints the LIBRARY created ([[cut]]) so
     * [[releaseCheckpointBlocks]] can scope its `LogicalRDD` sweep to them.
     * Unpersisting a CALLER's checkpoint would be worse than sweeping a
     * cache: checkpointed lineage is CUT, so the caller's frame would become
@@ -168,19 +169,18 @@ object ScaleOps {
     * deepening plan; it also freezes a nondeterministic plan so every
     * later job sees the same rows. Durable iff the SparkContext has a
     * checkpoint directory (the durability rule in the object scaladoc);
-    * otherwise a registered local checkpoint. */
-  private[graft] def cut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = true)
-    else {
-      val local = df.localCheckpoint(eager = true)
-      local.queryExecution.analyzed.collectLeaves().foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          internalCheckpointIds.add(lr.rdd.id)
-        case _ => ()
-      }
-      local
+    * otherwise a local checkpoint. Either way it is registered. */
+  private[graft] def cut(df: DataFrame): DataFrame = {
+    val frozen =
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
+      else df.localCheckpoint(eager = true)
+    frozen.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        internalCheckpointIds.add(lr.rdd.id)
+      case _ => ()
     }
+    frozen
+  }
 
   /** Run `body`, then release `frames` on EVERY exit (a throw or a
     * non-local return included). A frame [[persisted]] returned releases
@@ -189,14 +189,33 @@ object ScaleOps {
     * ([[releaseCheckpointBlocks]]). A chain step that frees its
     * predecessor as soon as the next link exists is
     * `releasing(prev) { … cut(next) }`. */
-  private[graft] def releasing[T](frames: DataFrame*)(body: => T): T =
+  private[graft] def releasing[T](frames: DataFrame*)(body: => T): T = {
+    adjustScope(frames, 1)
     try body
-    finally frames.foreach { df =>
-      if (persistedFrames.remove(df)) {
-        internalPersists.remove(df.queryExecution.analyzed)
-        df.unpersist(false)
-      } else releaseCheckpointBlocks(df)
+    finally {
+      adjustScope(frames, -1)
+      frames.foreach { df =>
+        if (persistedFrames.remove(df)) {
+          internalPersists.remove(df.queryExecution.analyzed)
+          df.unpersist(false)
+        } else releaseCheckpointBlocks(df)
+      }
     }
+  }
+
+  /** The frames an open [[releasing]] scope will release on exit, with how
+    * many open scopes hold each. A release inside the scope leaves the
+    * pins in their plans to the scope: a sweep of a plan over an
+    * enclosing scope's [[persisted]] frame would otherwise unpersist it
+    * while the scope still reads it, and every later job would recompute
+    * it from the input. */
+  private val scopedFrames = new java.util.IdentityHashMap[DataFrame, Integer]()
+
+  private def adjustScope(frames: Seq[DataFrame], delta: Int): Unit =
+    scopedFrames.synchronized(frames.foreach { df =>
+      val n = scopedFrames.getOrDefault(df, 0) + delta
+      if (n == 0) scopedFrames.remove(df) else scopedFrames.put(df, n)
+    })
 
   /** Release EVERY block a DataFrame's plan pinned by THIS LIBRARY, both
     * kinds: local-checkpoint leaves (`LogicalRDD` — registered with the
@@ -213,23 +232,39 @@ object ScaleOps {
     * once the result is consumed and the session is block-free again. Safe
     * on any DataFrame (no-op without pinned blocks); the frame must not be
     * re-executed afterwards (checkpointed lineage is cut; cached subtrees
-    * merely recompute). Durable checkpoints are files, not blocks, and are
-    * left alone. */
+    * merely recompute). A durable checkpoint's directory is deleted with
+    * it: Spark keeps reliable-checkpoint files for the life of the
+    * application unless `spark.cleaner.referenceTracking.cleanCheckpoints`
+    * is set. */
   def releaseCheckpointBlocks(df: DataFrame): Unit = {
+    // pins an open releasing scope owns stay for that scope to release
+    val owned = scopedFrames.synchronized(scopedFrames.keySet().toArray(Array.empty[DataFrame]))
+      .map(_.queryExecution.analyzed)
+    val ownedRdds = owned.flatMap(_.collectLeaves()).collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
     df.queryExecution.analyzed.collectLeaves().foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD
-          if internalCheckpointIds.remove(lr.rdd.id) =>
+          if !ownedRdds(lr.rdd.id) && internalCheckpointIds.remove(lr.rdd.id) =>
         lr.rdd.unpersist(false)
+        lr.rdd.getCheckpointFile.foreach { f =>
+          val path = new org.apache.hadoop.fs.Path(f)
+          path.getFileSystem(lr.rdd.sparkContext.hadoopConfiguration).delete(path, true)
+        }
       case _ => ()
     }
     // unpersist exactly the library-registered persists inside this plan
     val plan = df.queryExecution.analyzed
+    def ownedPin(pin: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+      owned.exists(_.exists(_.sameResult(pin)))
     val hits = Vector.newBuilder[DataFrame]
     internalPersists.synchronized {
       val it = internalPersists.entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
-        if (plan.exists(_.sameResult(e.getKey))) { hits += e.getValue; it.remove() }
+        if (plan.exists(_.sameResult(e.getKey)) && !ownedPin(e.getKey)) {
+          hits += e.getValue; it.remove()
+        }
       }
     }
     hits.result().foreach(_.unpersist(false))

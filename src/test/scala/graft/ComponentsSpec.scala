@@ -166,19 +166,35 @@ class ComponentsSpec extends SparkSpecBase {
       finally graft.ops.ScaleOps.releaseCheckpointBlocks(df)
     val local = ops.map { case (name, op) => name -> rows(op()) }.toMap
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toFile
-    def countFiles(f: java.io.File): Int =
-      if (f.isDirectory) f.listFiles.map(countFiles).sum else 1
+    def rddDirs(f: java.io.File): Int =
+      if (!f.isDirectory) 0
+      else f.listFiles.map(c => rddDirs(c) + (if (c.getName.startsWith("rdd-")) 1 else 0)).sum
+    // stages that read a reliable checkpoint: the release deletes its
+    // files, so the directory cannot show afterwards that one was made
+    val reliableReads = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "ReliableCheckpointRDD"))
+          reliableReads.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
     try {
       spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
+      val rddsBefore = rddDirs(dir)
       for ((name, op) <- ops) {
-        val before = countFiles(dir)
+        val before = reliableReads.get()
         assert(rows(op()) == local(name), s"$name: durable mode changed results")
-        assert(countFiles(dir) > before, s"$name wrote no checkpoint files")
+        org.apache.spark.ListenerBusHatch.drain(spark.sparkContext)
+        assert(reliableReads.get() > before, s"$name read no durable checkpoint")
       }
+      // a released durable cut takes its checkpoint directory with it
+      assert(rddDirs(dir) <= rddsBefore, s"checkpoint directories left: ${rddDirs(dir)}")
     } finally {
       // local mode: a null directory resets the context to no directory,
       // so later suites cut locally again
       spark.sparkContext.setCheckpointDir(null)
+      spark.sparkContext.removeSparkListener(listener)
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
       }

@@ -313,6 +313,24 @@ class RegressionSpec extends SparkSpecBase {
     assert(leaks.result().isEmpty, leaks.result().mkString("; "))
   }
 
+  test("a release inside a releasing scope leaves the scope's own pins") {
+    // numericMutualInfo's shape: both cutpoint passes read one persisted
+    // pair-count table; the first pass's release of its cumsum must not
+    // sweep that table out from under the scope that still reads it
+    import graft.ops.ScaleOps
+    import org.apache.spark.storage.StorageLevel
+    val pairCells = ScaleOps.persisted((1 to 60).map(i => ((i % 7).toDouble, 1L))
+      .toDF("v", "c").groupBy(col("v")).agg(sum(col("c")).as("c")))
+    ScaleOps.releasing(pairCells) {
+      val (n, cuts) = ScaleOps.rankCutpoints(pairCells, "v", "c", n => Seq(n / 2, n))
+      assert(n == 60L && cuts.nonEmpty)
+      assert(pairCells.storageLevel == StorageLevel.MEMORY_AND_DISK,
+        "the cutpoint pass released the enclosing scope's pair counts")
+    }
+    assert(pairCells.storageLevel == StorageLevel.NONE,
+      "the scope did not release its own pin on exit")
+  }
+
   test("releaseCheckpointBlocks leaves CALLER-created caches untouched") {
     // the release must unpersist exactly the library's own internal
     // persists — sweeping every cached subplan silently dropped a user's
